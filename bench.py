@@ -138,12 +138,9 @@ BENCH_QUERIES = [
     "mm_video_gif_frames",
     "mm_image_tiff_features",
     "mm_audio_containers",
-    "mm_audio_meta",
-    "mm_subtitles",
     "report_datacard",
     "fulltext_conv",
     "fulltext_searchset",
-    "mm_video_mkv_frames",
     "sim_kmeans",
     "dedup_semantic_kmeans",
     "sim_pq_topk",
@@ -151,9 +148,6 @@ BENCH_QUERIES = [
     "text_hash_embed",
     "dedup_semantic_text",
     "text_bpe_encode",
-    "mm_image_phash_dedup",
-    "mm_audio_afp_dedup",
-    "mm_video_neardup",
     "pipeline_pretrain",
     "sft_pairs",
     "dedup_conv_prefix",
@@ -201,14 +195,10 @@ BENCH_QUERIES = [
     "assist_convert",
     "assist_math_eval",
     "mm_frame_sample",
-    "mm_image_dhash",
-    "mm_audio_afp",
-    "mm_video_vfp",
     "mm_image_gif_features",
     "mm_image_gif_resize",
     "mm_image_png_resize",
     "mm_image_tiff_resize",
-    "mm_subtitle_stats",
 ]
 
 

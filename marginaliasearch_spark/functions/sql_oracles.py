@@ -2121,146 +2121,6 @@ SELECT media_id,
 FROM lagged GROUP BY media_id"""
 
 
-def mkv_frames_sql(n: int = 64) -> str:
-    """Exact oracle for ``multimodal.video_frame_stats`` over
-    ``synth_mkv_media`` — Matroska/EBML container rows. Even media carry
-    V_UNCOMPRESSED Y800 planes whose pixel ``p`` of frame ``f`` is
-    ``splitmix64(md5('mkv:'||id) + f*256 + p) & 255``; odd media carry
-    DC-only V_MJPEG frames where every decoded pixel is ``2k + 128``
-    (the AVI fixture's closed form). Lacing modes (none / Xiph / fixed /
-    EBML) never change decoded values, so this twin branches only on the
-    codec parity — hash equality certifies the EBML walk + lacing
-    reassembly."""
-    from ..operators.multimodal import MKV_H, MKV_W
-
-    n_px = MKV_H * MKV_W
-    return f"""WITH
-mm AS (SELECT unnest(range({n})) AS media_id),
-seed AS (
-  SELECT media_id, {sql64.md5_u64("'mkv:' || media_id")} AS s,
-         2 + media_id % 3 AS nf
-  FROM mm
-),
-upx AS (
-  SELECT media_id, p // {n_px} AS frame_idx,
-         {sql64.add64('s', 'p::UBIGINT')} AS x
-  FROM seed CROSS JOIN (SELECT unnest(range({4 * n_px})) AS p) pp
-  WHERE media_id % 2 = 0 AND p < nf * {n_px}
-),
-ufr AS (
-  SELECT media_id, frame_idx,
-         sum(({sql64.sm64('x')} & 255::UBIGINT)::BIGINT)::BIGINT AS y_sum
-  FROM upx GROUP BY media_id, frame_idx
-),
-jkb AS (
-  SELECT media_id, p // 4 AS frame_idx,
-         {sql64.add64('s', 'p::UBIGINT')} AS x
-  FROM seed CROSS JOIN (SELECT unnest(range(16)) AS p) pp
-  WHERE media_id % 2 = 1 AND p < nf * 4
-),
-jfr AS (
-  SELECT media_id, frame_idx,
-         sum(64 * (2 * (({sql64.sm64('x')} & 127::UBIGINT)::BIGINT - 64)
-                   + 128))::BIGINT AS y_sum
-  FROM jkb GROUP BY media_id, frame_idx
-),
-fr AS (SELECT * FROM ufr UNION ALL SELECT * FROM jfr)
-SELECT media_id, frame_idx::INT AS frame_idx, y_sum,
-       {n_px}::BIGINT AS n_px,
-       floor(y_sum::DOUBLE / {n_px} / 255.0 * 1000000 + 0.5) / 1000000
-         AS mean_y
-FROM fr"""
-
-
-def audio_meta_sql(n: int = 64) -> str:
-    """Exact oracle for ``multimodal.audio_container_meta`` over
-    ``synth_perceptual_media`` — MPEG-1 Layer III and Ogg-Opus container
-    rows. Every metadata column of the fixture is a closed form of
-    ``media_id`` (frame counts, bitrate schedule, packet sizes), so this
-    twin is pure arithmetic: the Spark side must walk real MPEG frame
-    headers (length = 144000*kbps // rate), skip ID3v2/ID3v1 tags and
-    reassemble CRC-checked Ogg pages (granule - pre_skip duration) to
-    reach values this SQL states directly."""
-    return f"""WITH mm AS (SELECT unnest(range({n})) AS i),
-base AS (
-  SELECT i,
-         40 + (i * 7) % 25 AS nf_mp3,
-         50 + (i * 11) % 40 AS nf_opus,
-         CASE (i // 2) % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-              ELSE 32000 END AS rate_mp3
-  FROM mm
-)
-SELECT i::BIGINT AS media_id,
-       CASE WHEN i % 2 = 0 THEN 'mp3' ELSE 'opus' END AS codec,
-       (CASE WHEN i % 2 = 0 THEN nf_mp3 ELSE nf_opus END)::BIGINT AS n_frames,
-       (CASE WHEN i % 2 = 0 THEN rate_mp3 ELSE 48000 END)::INT AS sample_rate,
-       (CASE WHEN i % 2 = 0
-             THEN CASE WHEN (i // 2) % 2 = 1 THEN 1 ELSE 2 END
-             ELSE 1 + (i // 2) % 2 END)::INT AS channels,
-       (CASE WHEN i % 2 = 0 THEN nf_mp3 * 1152 * 1000 // rate_mp3
-             ELSE nf_opus * 20 END)::BIGINT AS duration_ms,
-       (CASE WHEN i % 2 = 0
-             THEN CASE WHEN (i // 2) % 4 < 2 THEN 128
-                  ELSE (128 * ((nf_mp3 + 1) // 2) + 192 * (nf_mp3 // 2))
-                       // nf_mp3 END
-             ELSE list_sum([60 + (i * 31 + k * 13) % 100
-                            FOR k IN range(0, nf_opus)]) * 8 * 48000
-                  // (nf_opus * 960 * 1000)
-        END)::BIGINT AS avg_bitrate_kbps,
-       (CASE WHEN i % 2 = 0 THEN (i // 2) % 4 >= 2 ELSE true END) AS vbr,
-       'track ' || i AS title
-FROM base"""
-
-
-def _subtitle_cues_cte(n: int) -> str:
-    """Shared closed-form cue relation for the subtitle oracles — the
-    generator formulas of ``subtitles.synth_subtitle_tracks`` restated."""
-    return f"""mm AS (SELECT unnest(range({n})) AS i),
-cue AS (
-  SELECT i, k,
-         k * 2000 + (i * 37) % 500 AS start_ms,
-         k * 2000 + (i * 37) % 500 + 800 + (i * 977 + k * 641) % 2400 AS end_ms,
-         'cue ' || i || ' ' || k ||
-           CASE WHEN k % 3 = 0 THEN chr(10) || 'line2 ' || k ELSE '' END
-           AS text
-  FROM mm CROSS JOIN (SELECT unnest(range(17)) AS k) kk
-  WHERE k < 5 + (i * 3) % 12
-)"""
-
-
-def subtitles_sql(n: int = 64) -> str:
-    """Exact oracle for ``subtitles.parse_subtitles`` over
-    ``synth_subtitle_tracks`` — SRT (comma clocks, index lines) and
-    WebVTT (dot clocks, optional hours, NOTE blocks, cue identifiers,
-    cue settings) rows. The fixture's cue timings/bodies are closed
-    forms of (media_id, cue_idx), so this twin is pure arithmetic: the
-    Spark side must actually split blocks, locate timing lines and
-    decode both clock syntaxes to reach these values."""
-    return f"""WITH {_subtitle_cues_cte(n)}
-SELECT i::BIGINT AS media_id, k::INT AS cue_idx,
-       start_ms::BIGINT AS start_ms, end_ms::BIGINT AS end_ms, text
-FROM cue"""
-
-
-def subtitle_stats_sql(n: int = 64) -> str:
-    """Oracle for ``subtitles.cue_stats`` over the parsed fixture: cue
-    counts, captioned millis, char counts, overlap counts (cue starting
-    before its predecessor ended) — same closed-form cue relation."""
-    return f"""WITH {_subtitle_cues_cte(n)},
-lagged AS (
-  SELECT i, start_ms, end_ms, text,
-         lag(end_ms) OVER (PARTITION BY i ORDER BY k) AS prev_end
-  FROM cue
-)
-SELECT i::BIGINT AS media_id,
-       count(*)::BIGINT AS n_cues,
-       sum(end_ms - start_ms)::BIGINT AS captioned_ms,
-       sum(length(text))::BIGINT AS n_chars,
-       sum(CASE WHEN prev_end IS NOT NULL AND start_ms < prev_end
-                THEN 1 ELSE 0 END)::BIGINT AS overlaps
-FROM lagged GROUP BY i"""
-
-
 def datacard_sql() -> str:
     """Exact oracle for ``datacard.data_card`` over the driver's
     ``documents`` table: counts, exact-dup counts (count minus distinct
@@ -2661,237 +2521,3 @@ SELECT d.doc_id,
        COALESCE(p.bpe_tokens, 0) AS bpe_tokens,
        COALESCE(p.stream_md5, md5('')) AS stream_md5
 FROM documents d LEFT JOIN perdoc p USING (doc_id)"""
-
-
-def _phash_ctes(n: int) -> str:
-    """CTE chain ``... , phash(media_id, dhash)``: the perceptual-dedup
-    fixture's closed-form pixels (synth_phash_media: base half seeded by
-    md5('phd:'||id), dup half a perturbed copy of ``id - n/2`` at value
-    indices ``p % 101 == id % 101`` reseeded by md5('php:'||id)) reduced
-    to the equal-block wraparound dHash of ``multimodal.dhash_image``."""
-    from ..operators.multimodal import _N_PIX, DHASH_GRID, IMG_W
-
-    n2 = n // 2
-    n_vals = _N_PIX * 3
-    bw = IMG_W // DHASH_GRID
-    int64_min = "(-9223372036854775807 - 1)"
-    return f"""
-pmm AS (SELECT unnest(range({n})) AS media_id),
-pseed AS (
-  SELECT media_id,
-         {sql64.md5_u64(f"'phd:' || (CASE WHEN media_id < {n2} THEN media_id ELSE media_id - {n2} END)")} AS sb,
-         {sql64.md5_u64("'php:' || media_id")} AS sp
-  FROM pmm
-),
-px0 AS (
-  SELECT media_id, p,
-         CASE WHEN media_id >= {n2} AND p % 101 = media_id % 101
-              THEN {sql64.add64('sp', 'p::UBIGINT')}
-              ELSE {sql64.add64('sb', 'p::UBIGINT')} END AS x
-  FROM pseed CROSS JOIN (SELECT unnest(range({n_vals})) AS p) pp
-),
-px AS (
-  SELECT media_id, p // 3 AS pxl,
-         ({sql64.sm64('x')} & 255::UBIGINT)::BIGINT AS v
-  FROM px0
-),
-pgray AS (SELECT media_id, pxl, sum(v) AS gv FROM px GROUP BY 1, 2),
-pblk AS (
-  SELECT media_id, (pxl // {IMG_W}) // {bw} AS br, (pxl % {IMG_W}) // {bw} AS bc,
-         sum(gv) AS bs
-  FROM pgray GROUP BY 1, 2, 3
-),
-pbits AS (
-  SELECT b1.media_id, b1.br * {DHASH_GRID} + b1.bc AS k,
-         (b1.bs > b2.bs) AS bit
-  FROM pblk b1
-  JOIN pblk b2 ON b2.media_id = b1.media_id AND b2.br = b1.br
-              AND b2.bc = (b1.bc + 1) % {DHASH_GRID}
-),
-phash AS (
-  SELECT media_id,
-         SUM(CASE WHEN bit THEN
-               CASE WHEN k = 63 THEN {int64_min}
-                    ELSE (1::BIGINT << k) END
-             ELSE 0 END)::BIGINT AS dhash
-  FROM pbits GROUP BY media_id
-)"""
-
-
-def image_dhash_sql(n: int = 64) -> str:
-    """Exact oracle for ``multimodal.dhash_features`` over the
-    perceptual-dedup PNG fixture."""
-    return f"WITH {_phash_ctes(n)} SELECT media_id, dhash FROM phash"
-
-
-def phash_dedup_sql(n: int = 64, max_hamming: int = 7) -> str:
-    """Exact oracle for ``multimodal.phash_dedup`` — the all-pairs form;
-    the engine's banded join is exact by the simhash pigeonhole bound
-    (max_hamming+1 bands of 64/(max_hamming+1) bits: a pair within the
-    budget cannot differ in every band)."""
-    assert 64 % (max_hamming + 1) == 0
-    return f"""WITH {_phash_ctes(n)}
-SELECT a.media_id AS media_a, b.media_id AS media_b,
-       bit_count(xor(a.dhash, b.dhash))::INT AS hamming
-FROM phash a JOIN phash b ON a.media_id < b.media_id
-WHERE bit_count(xor(a.dhash, b.dhash)) <= {max_hamming}"""
-
-
-def _afp_ctes(n: int) -> str:
-    """CTE chain ``... , afp(media_id, afp)``: the audio-dedup fixture's
-    closed-form samples (synth_afp_media / afp_clip_samples: base half
-    seeded by md5('afd:'||id) over ns = 4000 + (id*37 % 1000) samples,
-    dup half a copy of ``id - n/2`` re-randomized at ``t % 331 == id %
-    331`` from md5('afp:'||id)) reduced to the 64-frame energy-envelope
-    fingerprint of ``multimodal.afp_fingerprint`` (frame of sample t is
-    ``(64t + 63) // ns``; mean comparison by exact HUGEINT
-    cross-multiplication)."""
-    from ..operators.multimodal import AFP_FRAMES
-
-    n2 = n // 2
-    g = AFP_FRAMES
-    int64_min = "(-9223372036854775807 - 1)"
-    return f"""
-amm AS (SELECT unnest(range({n})) AS media_id),
-aseed AS (
-  SELECT media_id,
-         4000 + ((CASE WHEN media_id < {n2} THEN media_id ELSE media_id - {n2} END) * 37) % 1000 AS ns,
-         {sql64.md5_u64(f"'afd:' || (CASE WHEN media_id < {n2} THEN media_id ELSE media_id - {n2} END)")} AS sb,
-         {sql64.md5_u64("'afp:' || media_id")} AS sp
-  FROM amm
-),
-as0 AS (
-  SELECT media_id, ns, t,
-         CASE WHEN media_id >= {n2} AND t % 331 = media_id % 331
-              THEN {sql64.add64('sp', 't::UBIGINT')}
-              ELSE {sql64.add64('sb', 't::UBIGINT')} END AS x
-  FROM aseed CROSS JOIN (SELECT unnest(range(5000)) AS t) tt
-  WHERE t < ns
-),
-asam AS (
-  SELECT media_id, ns, t,
-         abs(({sql64.sm64('x')} & 65535::UBIGINT)::BIGINT - 32768) AS a
-  FROM as0
-),
-afrm AS (
-  SELECT media_id, ({g} * t + {g - 1}) // ns AS k,
-         sum(a) AS e, count(*) AS c
-  FROM asam GROUP BY 1, 2
-),
-abits AS (
-  SELECT f1.media_id, f1.k,
-         (f1.e::HUGEINT * f2.c::HUGEINT > f2.e::HUGEINT * f1.c::HUGEINT) AS bit
-  FROM afrm f1
-  JOIN afrm f2 ON f2.media_id = f1.media_id AND f2.k = (f1.k + 1) % {g}
-),
-afp AS (
-  SELECT media_id,
-         SUM(CASE WHEN bit THEN
-               CASE WHEN k = 63 THEN {int64_min}
-                    ELSE (1::BIGINT << k) END
-             ELSE 0 END)::BIGINT AS afp
-  FROM abits GROUP BY media_id
-)"""
-
-
-def audio_afp_sql(n: int = 64) -> str:
-    """Exact oracle for ``multimodal.afp_features`` over the audio-dedup
-    PCM-WAV fixture."""
-    return f"WITH {_afp_ctes(n)} SELECT media_id, afp FROM afp"
-
-
-def afp_dedup_sql(n: int = 64, max_hamming: int = 7) -> str:
-    """Exact oracle for ``multimodal.afp_dedup`` — all-pairs form; the
-    engine's banded join is exact by the pigeonhole bound."""
-    assert 64 % (max_hamming + 1) == 0
-    return f"""WITH {_afp_ctes(n)}
-SELECT a.media_id AS media_a, b.media_id AS media_b,
-       bit_count(xor(a.afp, b.afp))::INT AS hamming
-FROM afp a JOIN afp b ON a.media_id < b.media_id
-WHERE bit_count(xor(a.afp, b.afp)) <= {max_hamming}"""
-
-
-def _vfp_ctes(n: int) -> str:
-    """CTE chain ``... , vfp(media_id, frame_idx, fhash)``: the
-    video-dedup fixture's closed-form lumas (synth_vfp_media /
-    vfp_clip_lumas: 8 frames of 32×32, base half seeded by
-    md5('vfd:'||id) over flat index q = frame*1024 + pixel, dup half a
-    copy of ``id - n/2`` re-randomized at ``q % 101 == id % 101`` from
-    md5('vfp:'||id)) reduced to the per-frame wraparound dHash of
-    ``multimodal.dhash_plane``."""
-    from ..operators.multimodal import (
-        _N_PIX,
-        DHASH_GRID,
-        IMG_W,
-        VFP_FRAMES,
-    )
-
-    n2 = n // 2
-    nq = VFP_FRAMES * _N_PIX
-    bw = IMG_W // DHASH_GRID
-    int64_min = "(-9223372036854775807 - 1)"
-    return f"""
-vmm AS (SELECT unnest(range({n})) AS media_id),
-vseed AS (
-  SELECT media_id,
-         {sql64.md5_u64(f"'vfd:' || (CASE WHEN media_id < {n2} THEN media_id ELSE media_id - {n2} END)")} AS sb,
-         {sql64.md5_u64("'vfp:' || media_id")} AS sp
-  FROM vmm
-),
-vq0 AS (
-  SELECT media_id, q,
-         CASE WHEN media_id >= {n2} AND q % 101 = media_id % 101
-              THEN {sql64.add64('sp', 'q::UBIGINT')}
-              ELSE {sql64.add64('sb', 'q::UBIGINT')} END AS x
-  FROM vseed CROSS JOIN (SELECT unnest(range({nq})) AS q) qq
-),
-vpx AS (
-  SELECT media_id, q // {_N_PIX} AS frame_idx, q % {_N_PIX} AS pxl,
-         ({sql64.sm64('x')} & 255::UBIGINT)::BIGINT AS v
-  FROM vq0
-),
-vblk AS (
-  SELECT media_id, frame_idx,
-         (pxl // {IMG_W}) // {bw} AS br, (pxl % {IMG_W}) // {bw} AS bc,
-         sum(v) AS bs
-  FROM vpx GROUP BY 1, 2, 3, 4
-),
-vbits AS (
-  SELECT b1.media_id, b1.frame_idx, b1.br * {DHASH_GRID} + b1.bc AS k,
-         (b1.bs > b2.bs) AS bit
-  FROM vblk b1
-  JOIN vblk b2 ON b2.media_id = b1.media_id
-              AND b2.frame_idx = b1.frame_idx AND b2.br = b1.br
-              AND b2.bc = (b1.bc + 1) % {DHASH_GRID}
-),
-vfp AS (
-  SELECT media_id, frame_idx::INT AS frame_idx,
-         SUM(CASE WHEN bit THEN
-               CASE WHEN k = 63 THEN {int64_min}
-                    ELSE (1::BIGINT << k) END
-             ELSE 0 END)::BIGINT AS fhash
-  FROM vbits GROUP BY media_id, frame_idx
-)"""
-
-
-def video_fp_sql(n: int = 32) -> str:
-    """Exact oracle for ``multimodal.video_fingerprints`` over the
-    video-dedup y4m fixture."""
-    return f"WITH {_vfp_ctes(n)} SELECT media_id, frame_idx, fhash FROM vfp"
-
-
-def video_neardup_sql(
-    n: int = 32, max_hamming: int = 7, min_frames: int = 6
-) -> str:
-    """Exact oracle for ``multimodal.video_neardup_pairs`` — all-pairs
-    per frame position; the engine's per-frame banded join finds the same
-    matched-frame set by the pigeonhole bound."""
-    assert 64 % (max_hamming + 1) == 0
-    return f"""WITH {_vfp_ctes(n)}
-SELECT a.media_id AS media_a, b.media_id AS media_b,
-       count(*)::BIGINT AS n_frames
-FROM vfp a
-JOIN vfp b ON a.media_id < b.media_id AND a.frame_idx = b.frame_idx
-WHERE bit_count(xor(a.fhash, b.fhash)) <= {max_hamming}
-GROUP BY 1, 2
-HAVING count(*) >= {min_frames}"""

@@ -605,7 +605,6 @@ def hamming_band_pairs(
     hash_col: str,
     max_hamming: int,
     out_prefix: str,
-    extra_keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Generic banded-hamming self-join over any (id, 64-bit hash)
     relation: pairs with ``hamming(hash) ≤ max_hamming``, never all-pairs.
@@ -613,28 +612,22 @@ def hamming_band_pairs(
     Pigeonhole: split 64 bits into max_hamming+1 bands; any pair within
     the hamming budget must agree exactly on ≥1 band, so candidates meet
     in band-value buckets. Exact hamming verified with bit_count on the
-    survivors. Shared kernel of ``simhash_pairs`` (text),
-    ``multimodal.phash_dedup`` / ``afp_dedup`` (image / audio), and
-    ``multimodal.video_neardup_pairs`` (``extra_keys=("frame_idx",)`` —
-    extra columns ride the join key, so candidates only meet when those
-    ALSO match; output carries them per pair row).
+    survivors. The join kernel of ``simhash_pairs``.
 
     The (id, hash) relation is eagerly materialized (localCheckpoint)
     before the self-join: Spark plans a self-join's lineage twice and
     exchange reuse does not fire across the a/b rename, so without the
-    barrier the upstream hash computation — a full corpus DECODE for the
-    multimodal callers — runs once per side (measured 5.2s → 1.4s on 256
-    real PNGs, decode-only floor 0.56s). The materialized relation is 16
-    bytes per row, the cheapest thing in the pipeline by far."""
+    barrier the upstream hash computation (for ``simhash_pairs``, a
+    tokenize-and-hash pass over the whole corpus) runs once per side.
+    The materialized relation is 16 bytes per row, the cheapest thing
+    in the pipeline by far."""
     nbands = max_hamming + 1
     width = 64 // nbands
-    ex = list(extra_keys)
-    hashed = hashed.select(id_col, hash_col, *ex).localCheckpoint(eager=True)
+    hashed = hashed.select(id_col, hash_col).localCheckpoint(eager=True)
     ka, kb = f"{out_prefix}_a", f"{out_prefix}_b"
     banded = hashed.select(
         id_col,
         hash_col,
-        *ex,
         F.posexplode(
             F.array(
                 *[
@@ -647,20 +640,18 @@ def hamming_band_pairs(
         ).alias("band", "band_val"),
     )
     a = banded.select(
-        F.col(id_col).alias(ka), F.col(hash_col).alias("sh_a"),
-        *ex, "band", "band_val"
+        F.col(id_col).alias(ka), F.col(hash_col).alias("sh_a"), "band", "band_val"
     )
     b = banded.select(
-        F.col(id_col).alias(kb), F.col(hash_col).alias("sh_b"),
-        *ex, "band", "band_val"
+        F.col(id_col).alias(kb), F.col(hash_col).alias("sh_b"), "band", "band_val"
     )
     return (
-        a.join(b, [*ex, "band", "band_val"])
+        a.join(b, ["band", "band_val"])
         .filter(F.col(ka) < F.col(kb))
-        .dropDuplicates([ka, kb, *ex])
+        .dropDuplicates([ka, kb])
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .filter(F.col("hamming") <= max_hamming)
-        .select(ka, kb, *ex, "hamming")
+        .select(ka, kb, "hamming")
     )
 
 

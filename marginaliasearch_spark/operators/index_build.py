@@ -659,14 +659,7 @@ def compact_index(
     # from the corpus without those conversations (pinned in test_merge)
     tomb = None
     if os.path.exists(os.path.join(src.tombstones, "_SUCCESS")):
-        try:
-            tomb = (
-                spark.read.parquet(src.tombstones)
-                .select("doc_id")
-                .distinct()
-            )
-        except Exception:
-            tomb = None
+        tomb = spark.read.parquet(src.tombstones).select("doc_id").distinct()
 
     def _pos_blob(it):
         import numpy as np

@@ -39,7 +39,7 @@ MEDIA_SCHEMA = (
 
 IMG_H = IMG_W = 32
 _N_PIX = IMG_H * IMG_W  # 1024 pixels, 3 channels
-# container walkers (RIFF LIST / Matroska BlockGroup) recurse per nesting
+# container walkers (RIFF LIST) recurse per nesting
 # level; real files nest a handful deep, so a generous cap converts a
 # malformed deeply-nested blob from RecursionError (NOT in the per-item
 # skip allowlist → kills the job after task retries) into the ValueError
@@ -54,8 +54,8 @@ def _malformed_to_valueerror(kind: str):
     UNTRUSTED: a flipped byte can surface as an out-of-range read
     (IndexError), an exhausted bit-stream (StopIteration), a corrupted
     Huffman/table lookup (KeyError), or absurd arithmetic
-    (OverflowError). The per-item error policy (see ``dhash_features``)
-    skips exactly (ValueError, NotImplementedError) — anything else
+    (OverflowError). A per-item skip policy over a media column can
+    only allowlist (ValueError, NotImplementedError) — anything else
     kills the whole job four task-retries at a time — so parsing
     ACCIDENTS are normalized to ValueError here, at the API boundary
     (mutation-fuzzed: tools/fuzz record in BASELINE.md). Genuine
@@ -1457,7 +1457,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
             w_img = int.from_bytes(body[3:5], "big")
             # decompression-bomb guard: corrupted SOF dimensions must be
             # the skippable ValueError, not a multi-GB allocation (also
-            # shields the MJPEG AVI/MKV per-frame path). The cap budgets
+            # shields the MJPEG AVI per-frame path). The cap budgets
             # the REAL footprint — coefficients are int64 × up to 3
             # components plus float64 dequant/IDCT temporaries (~30
             # bytes/pixel peak), so 2^24 px (e.g. 4096×4096) keeps peak
@@ -2993,9 +2993,9 @@ def decode_video(payload: bytes) -> tuple[np.ndarray, float]:
     standard uncompressed interchange format, Motion-JPEG AVI
     (per-frame baseline JPEG), and animated GIF89a (LZW frames composed
     with GCE disposal/transparency; luma = BT.601 integer
-    ``(299r + 587g + 114b + 500) // 1000``). Inter-frame-predicted
-    codecs (MP4/H.264/WebM/...) raise ``NotImplementedError`` — no
-    codec libs here.
+    ``(299r + 587g + 114b + 500) // 1000``). Other containers
+    (Matroska/WebM/MP4) and inter-frame-predicted codecs (H.264/VP9/...)
+    raise ``NotImplementedError`` — no codec libs here.
     """
     if payload[:9] == b"YUV4MPEG2":
         return _decode_y4m(bytes(payload))
@@ -3008,13 +3008,10 @@ def decode_video(payload: bytes) -> tuple[np.ndarray, float]:
             299 * rgb[..., 0] + 587 * rgb[..., 1] + 114 * rgb[..., 2] + 500
         ) // 1000
         return luma.astype(np.uint8), fps
-    if payload[:4] == _MKV_MAGIC:
-        return _decode_mkv(bytes(payload))
     raise NotImplementedError(
         "inter-frame-predicted video requires codec libraries not present "
         "in this container; supported real formats: YUV4MPEG2 (.y4m), "
-        "Motion-JPEG AVI, animated GIF, Matroska/WebM (V_UNCOMPRESSED "
-        "Y800 / V_MJPEG tracks)"
+        "Motion-JPEG AVI, animated GIF"
     )
 
 
@@ -3642,43 +3639,28 @@ def _ogg_write_pages(
     packets: list[tuple[bytes, int]],
     serial: int = 0x464C4143,
     max_segs: int = 255,
-    break_after: set[int] | None = None,
 ) -> bytes:
     """[(packet, granule_after_packet)] → Ogg pages. ``max_segs`` < 255
     forces page splits (continued packets) for framing tests. Granule of
-    a page = granule of the last packet that *completes* on it, else -1.
-    ``break_after``: packet indices whose final lace must flush the page
-    (RFC 7845 requires OpusHead / OpusTags to end their own pages)."""
-    # (lace, chunk, granule, flush-page-after)
-    laced: list[tuple[int, bytes, int | None, bool]] = []
-    for p_idx, (packet, granule) in enumerate(packets):
+    a page = granule of the last packet that *completes* on it, else -1."""
+    # (lace, chunk, granule)
+    laced: list[tuple[int, bytes, int | None]] = []
+    for packet, granule in packets:
         chunks = [packet[i : i + 255] for i in range(0, len(packet), 255)]
         if not chunks or len(chunks[-1]) == 255:
             chunks.append(b"")  # terminating lace for empty/255-multiple
         for j, c in enumerate(chunks):
             last = j == len(chunks) - 1
-            laced.append(
-                (
-                    len(c),
-                    c,
-                    granule if last else None,
-                    last and break_after is not None and p_idx in break_after,
-                )
-            )
+            laced.append((len(c), c, granule if last else None))
     pages = []
     seq = 0
     i = 0
     continued = False
     while i < len(laced):
-        group = []
-        while i < len(laced) and len(group) < max_segs:
-            item = laced[i]
-            group.append(item)
-            i += 1
-            if item[3]:
-                break
+        group = laced[i : i + max_segs]
+        i += len(group)
         granule = -1
-        for _, _, g, _ in group:
+        for _, _, g in group:
             if g is not None:
                 granule = g
         htype = (0x01 if continued else 0) | (0x02 if seq == 0 else 0)
@@ -3693,9 +3675,9 @@ def _ogg_write_pages(
             + seq.to_bytes(4, "little")
             + b"\x00\x00\x00\x00"  # CRC placeholder
             + bytes([len(group)])
-            + bytes(lace for lace, _, _, _ in group)
+            + bytes(lace for lace, _, _ in group)
         )
-        body = b"".join(c for _, c, _, _ in group)
+        body = b"".join(c for _, c, _ in group)
         crc = _ogg_crc(header + body)
         pages.append(header[:22] + crc.to_bytes(4, "little") + header[26:] + body)
         seq += 1
@@ -3968,1201 +3950,3 @@ def synth_container_audio_media(spark, n: int = 64) -> DataFrame:
         rows.append((i, "audio", bytearray(payload), mime, 0, 0, 0))
     return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
-
-# --- Matroska / WebM (EBML) video container ----------------------------------
-#
-# Pure-stdlib EBML parse: variable-length integers (IDs keep the marker
-# bit, sizes strip it), Segment → Info (TimestampScale) / Tracks
-# (TrackEntry: number, type, CodecID, Video dims, ColourSpace,
-# DefaultDuration) / Cluster (Timestamp, SimpleBlock) walk, and all four
-# SimpleBlock lacing modes (none / Xiph / fixed / EBML signed-delta).
-# Decodable codecs without external libs: V_UNCOMPRESSED with Y800
-# (grayscale 8-bit planes — a real Matroska codec id) and V_MJPEG
-# (reusing ``decode_jpeg``). Inter-frame codecs (V_VP8/V_VP9/V_MPEGH*)
-# raise — no codec libs in this container. Spec: RFC 8794 (EBML) +
-# the Matroska element registry.
-
-_MKV_MAGIC = b"\x1aE\xdf\xa3"
-
-
-def _ebml_vint(data: bytes, pos: int, strip: bool = True) -> tuple[int, int]:
-    """One EBML variable-length integer at ``pos`` → (value, new_pos).
-    ``strip`` removes the length-marker bit (sizes, lacing); element IDs
-    conventionally keep it (``strip=False``)."""
-    if pos >= len(data):
-        raise ValueError("truncated EBML stream (vint past end)")
-    first = data[pos]
-    if first == 0:
-        raise ValueError("invalid EBML vint (>8 byte width)")
-    w = 9 - first.bit_length()
-    if pos + w > len(data):
-        raise ValueError("truncated EBML vint")
-    val = int.from_bytes(data[pos : pos + w], "big")
-    if strip:
-        val &= (1 << (7 * w)) - 1
-    return val, pos + w
-
-
-def _ebml_svint(data: bytes, pos: int) -> tuple[int, int]:
-    """Signed EBML vint (EBML-lacing size deltas): unsigned value minus
-    ``2^(7w-1) - 1``."""
-    start = pos
-    val, pos = _ebml_vint(data, pos, strip=True)
-    return val - ((1 << (7 * (pos - start) - 1)) - 1), pos
-
-
-def _eb_id(eid: int) -> bytes:
-    return eid.to_bytes((eid.bit_length() + 7) // 8, "big")
-
-
-def _eb_size(n: int) -> bytes:
-    for w in range(1, 9):
-        if n < (1 << (7 * w)) - 1:  # all-ones is reserved (unknown size)
-            return ((1 << (7 * w)) | n).to_bytes(w, "big")
-    raise ValueError("EBML size too large")
-
-
-def _eb(eid: int, body: bytes) -> bytes:
-    return _eb_id(eid) + _eb_size(len(body)) + body
-
-
-def _eb_uint(eid: int, v: int) -> bytes:
-    return _eb(eid, v.to_bytes(max(1, (v.bit_length() + 7) // 8), "big"))
-
-
-def _ebml_children(data: bytes, pos: int, end: int):
-    """Yield (element_id, body_start, body_end) over one EBML level.
-    An unknown-size element (all-ones size vint) extends to ``end``."""
-    while pos < end:
-        eid, pos = _ebml_vint(data, pos, strip=False)
-        size_start = pos
-        size, pos = _ebml_vint(data, pos, strip=True)
-        w = pos - size_start
-        if size == (1 << (7 * w)) - 1:  # unknown size
-            yield eid, pos, end
-            return
-        yield eid, pos, pos + size
-        pos += size
-
-
-def _mkv_lace_sizes(
-    data: bytes, pos: int, flags: int, body_end: int
-) -> tuple[list[int], int]:
-    """SimpleBlock lacing → per-frame byte sizes (RFC 8794 §...; Matroska
-    'Block Structure'). Returns (sizes, data_start)."""
-    mode = flags & 0x06
-    if mode == 0x00:  # no lacing: one frame
-        return [body_end - pos], pos
-    n_frames = data[pos] + 1
-    pos += 1
-    if mode == 0x02:  # Xiph: 255-run sizes for all but the last frame
-        sizes = []
-        for _ in range(n_frames - 1):
-            s = 0
-            while data[pos] == 255:
-                s += 255
-                pos += 1
-            s += data[pos]
-            pos += 1
-            sizes.append(s)
-    elif mode == 0x04:  # fixed: equal split of the remainder
-        each = (body_end - pos) // n_frames
-        return [each] * n_frames, pos
-    else:  # 0x06 EBML: first size unsigned vint, then signed deltas —
-        # sizes are coded for all frames EXCEPT the last (RFC 9559 §10.4),
-        # so a single-frame lace carries no size field at all
-        sizes = []
-        if n_frames >= 2:
-            s, pos = _ebml_vint(data, pos, strip=True)
-            sizes.append(s)
-            for _ in range(n_frames - 2):
-                d, pos = _ebml_svint(data, pos)
-                s += d
-                sizes.append(s)
-    sizes.append(body_end - pos - sum(sizes))  # last frame: remainder
-    return sizes, pos
-
-
-def _decode_mkv(payload: bytes) -> tuple[np.ndarray, float]:
-    """Matroska / WebM → (luma planes ``(n_frames, h, w)`` uint8, fps).
-
-    Walks the EBML header (DocType must be matroska/webm), the first
-    video TrackEntry, and every Cluster's SimpleBlocks (all four lacing
-    modes), collecting frames of the selected track in timestamp order.
-    fps comes from the track DefaultDuration when present, else from the
-    first inter-frame timestamp delta. Codecs: V_UNCOMPRESSED (Y800
-    planes) and V_MJPEG (per-frame ``decode_jpeg``); others raise."""
-    if payload[:4] != _MKV_MAGIC:
-        raise ValueError("not an EBML/Matroska payload")
-    track_no = None
-    codec = ""
-    w = h = 0
-    colour = b""
-    default_dur_ns = 0
-    ts_scale = 1_000_000  # ns per timestamp tick (Matroska default)
-    frames: list[tuple[int, bytes]] = []  # (abs ts ticks, frame bytes)
-    cluster_spans: list[tuple[int, int]] = []  # walked after Tracks parse
-
-    def walk_cluster(
-        pos: int, end: int, cluster_ts: int = 0, depth: int = 0
-    ) -> None:
-        # BlockGroup nesting is recursion (real files: one level) with a
-        # sanity cap; nested Clusters go through a WORKLIST, not
-        # recursion — unknown-size clusters chain linearly in live-muxed
-        # streams (each following cluster parses as a child of the
-        # previous one), so recursing per cluster would RecursionError on
-        # a legitimate ~1000-cluster stream
-        if depth > _MAX_CONTAINER_DEPTH:
-            raise ValueError("Matroska BlockGroup nesting exceeds sanity cap")
-        pending: list[tuple[int, int, int]] = [(pos, end, cluster_ts)]
-        while pending:
-            pos, end, cluster_ts = pending.pop(0)
-            for eid, s, e in _ebml_children(payload, pos, end):
-                if eid == 0xE7:  # Timestamp
-                    cluster_ts = int.from_bytes(payload[s:e], "big")
-                elif eid in (0xA3, 0xA1):  # SimpleBlock / Block (in group)
-                    tno, p = _ebml_vint(payload, s, strip=True)
-                    if track_no is not None and tno != track_no:
-                        continue
-                    rel = int.from_bytes(
-                        payload[p : p + 2], "big", signed=True
-                    )
-                    flags = payload[p + 2]
-                    sizes, data_start = _mkv_lace_sizes(
-                        payload, p + 3, flags, e
-                    )
-                    fpos = data_start
-                    lace_dur = (
-                        default_dur_ns // ts_scale if default_dur_ns else 0
-                    )
-                    for j, sz in enumerate(sizes):
-                        frames.append(
-                            (
-                                cluster_ts + rel + j * lace_dur,
-                                payload[fpos : fpos + sz],
-                            )
-                        )
-                        fpos += sz
-                elif eid == 0xA0:  # BlockGroup: recurse for its Block —
-                    # CARRYING the cluster timestamp (a fresh 0 would strip
-                    # every Block-in-BlockGroup frame of its Cluster
-                    # Timestamp, the standard mkvmerge/ffmpeg layout with
-                    # BlockDuration)
-                    walk_cluster(s, e, cluster_ts, depth + 1)
-                elif eid == 0x1F43B675:  # nested Cluster: an UNKNOWN-SIZE
-                    # cluster extends to the segment end, so every
-                    # following cluster arrives as a "child" here
-                    # (live-muxed/streamed Matroska) — queue it with a
-                    # fresh timestamp scope; FIFO keeps stream order
-                    pending.append((s, e, 0))
-
-    for eid, s, e in _ebml_children(payload, 0, len(payload)):
-        if eid == 0x1A45DFA3:  # EBML header
-            for cid, cs, ce in _ebml_children(payload, s, e):
-                if cid == 0x4282 and payload[cs:ce].decode() not in (
-                    "matroska",
-                    "webm",
-                ):
-                    raise ValueError(
-                        f"unsupported EBML DocType {payload[cs:ce]!r}"
-                    )
-        elif eid == 0x18538067:  # Segment
-            for sid, ss, se in _ebml_children(payload, s, e):
-                if sid == 0x1549A966:  # Info
-                    for iid, is_, ie in _ebml_children(payload, ss, se):
-                        if iid == 0x2AD7B1:
-                            ts_scale = int.from_bytes(payload[is_:ie], "big")
-                elif sid == 0x1654AE6B:  # Tracks
-                    for tid, ts_, te in _ebml_children(payload, ss, se):
-                        if tid != 0xAE or track_no is not None:
-                            continue
-                        t_no = t_type = 0
-                        t_codec = ""
-                        t_dur = 0
-                        for aid, as_, ae in _ebml_children(
-                            payload, ts_, te
-                        ):
-                            if aid == 0xD7:
-                                t_no = int.from_bytes(payload[as_:ae], "big")
-                            elif aid == 0x83:
-                                t_type = int.from_bytes(
-                                    payload[as_:ae], "big"
-                                )
-                            elif aid == 0x86:
-                                t_codec = payload[as_:ae].decode()
-                            elif aid == 0x23E383:
-                                t_dur = int.from_bytes(payload[as_:ae], "big")
-                            elif aid == 0xE0:  # Video
-                                for vid, vs, ve in _ebml_children(
-                                    payload, as_, ae
-                                ):
-                                    if vid == 0xB0:
-                                        w = int.from_bytes(
-                                            payload[vs:ve], "big"
-                                        )
-                                    elif vid == 0xBA:
-                                        h = int.from_bytes(
-                                            payload[vs:ve], "big"
-                                        )
-                                    elif vid == 0x2EB524:
-                                        colour = payload[vs:ve]
-                        if t_type == 1:  # video track
-                            track_no = t_no
-                            codec = t_codec
-                            default_dur_ns = t_dur
-                elif sid == 0x1F43B675:  # Cluster: DEFER until the whole
-                    # segment header is parsed — a SeekHead-driven layout
-                    # may put Clusters before Tracks, and walking early
-                    # (track_no still None) would accept blocks from
-                    # audio/subtitle tracks as video frames
-                    cluster_spans.append((ss, se))
-    for ss, se in cluster_spans:
-        walk_cluster(ss, se)
-    if track_no is None or not frames:
-        raise ValueError("Matroska stream has no video frames")
-    frames.sort(key=lambda t: t[0])
-    if codec == "V_UNCOMPRESSED":
-        if colour != b"Y800":
-            raise NotImplementedError(
-                f"V_UNCOMPRESSED colour space {colour!r} not supported "
-                "(Y800 grayscale only)"
-            )
-        lumas = np.stack(
-            [
-                np.frombuffer(fb, dtype=np.uint8, count=w * h).reshape(h, w)
-                for _, fb in frames
-            ]
-        )
-    elif codec == "V_MJPEG":
-        lumas = np.stack([decode_jpeg(fb)[:, :, 0] for _, fb in frames])
-    else:
-        raise NotImplementedError(
-            f"Matroska codec {codec} requires codec libraries not present "
-            "in this container (supported: V_UNCOMPRESSED Y800, V_MJPEG)"
-        )
-    if default_dur_ns:
-        fps = 1e9 / default_dur_ns
-    elif len(frames) > 1 and frames[1][0] != frames[0][0]:
-        fps = 1000.0 / ((frames[1][0] - frames[0][0]) * ts_scale / 1e6)
-    else:
-        fps = 25.0
-    return lumas, fps
-
-
-def encode_mkv(
-    frames: list[bytes],
-    codec_id: str,
-    w: int,
-    h: int,
-    frame_ms: int = 40,
-    lacing: str = "none",
-    colour_space: bytes | None = None,
-    doctype: str = "matroska",
-) -> bytes:
-    """Already-encoded frame payloads → minimal Matroska container.
-
-    ``lacing='none'`` emits one Cluster per frame (exercises the
-    multi-cluster walk); the laced modes pack ALL frames into one
-    SimpleBlock using Xiph / fixed / EBML size coding. The TrackEntry
-    carries DefaultDuration = ``frame_ms`` so laced frames keep their
-    timing."""
-    header = _eb(
-        0x1A45DFA3,
-        _eb_uint(0x4286, 1)  # EBMLVersion
-        + _eb_uint(0x42F7, 1)  # EBMLReadVersion
-        + _eb_uint(0x42F2, 4)  # EBMLMaxIDLength
-        + _eb_uint(0x42F3, 8)  # EBMLMaxSizeLength
-        + _eb(0x4282, doctype.encode())
-        + _eb_uint(0x4287, 4)  # DocTypeVersion
-        + _eb_uint(0x4285, 2),  # DocTypeReadVersion
-    )
-    video = _eb_uint(0xB0, w) + _eb_uint(0xBA, h)
-    if colour_space is not None:
-        video += _eb(0x2EB524, colour_space)
-    track = _eb(
-        0xAE,
-        _eb_uint(0xD7, 1)
-        + _eb_uint(0x73C5, 1)
-        + _eb_uint(0x83, 1)  # TrackType video
-        + _eb_uint(0x23E383, frame_ms * 1_000_000)  # DefaultDuration ns
-        + _eb(0x86, codec_id.encode())
-        + _eb(0xE0, video),
-    )
-    info = _eb(0x1549A966, _eb_uint(0x2AD7B1, 1_000_000))
-    tracks = _eb(0x1654AE6B, track)
-    clusters = b""
-    if lacing == "none":
-        for f, fb in enumerate(frames):
-            block = b"\x81" + (0).to_bytes(2, "big", signed=True) + b"\x80" + fb
-            clusters += _eb(
-                0x1F43B675,
-                _eb_uint(0xE7, f * frame_ms) + _eb(0xA3, block),
-            )
-    else:
-        n = len(frames)
-        if lacing == "xiph":
-            flags, lace = 0x82, b""
-            for fb in frames[:-1]:
-                sz = len(fb)
-                lace += b"\xff" * (sz // 255) + bytes([sz % 255])
-        elif lacing == "fixed":
-            flags, lace = 0x84, b""
-            assert len({len(fb) for fb in frames}) == 1, "fixed lacing"
-        elif lacing == "ebml":
-            flags = 0x86
-            # sizes for all frames except the last (RFC 9559 §10.4):
-            # a single-frame lace codes no size field
-            lace = b""
-            if len(frames) >= 2:
-                first = len(frames[0])
-                lace = _eb_size(first)  # unsigned vint (same size coding)
-                prev = first
-                for fb in frames[1:-1]:
-                    d = len(fb) - prev
-                    prev = len(fb)
-                    # signed vint, 2-byte width is ample for fixture deltas
-                    lace += ((1 << 14) | (d + (1 << 13) - 1)).to_bytes(2, "big")
-        else:
-            raise ValueError(f"unknown lacing {lacing}")
-        block = (
-            b"\x81"
-            + (0).to_bytes(2, "big", signed=True)
-            + bytes([0x80 | flags])
-            + bytes([n - 1])
-            + lace
-            + b"".join(frames)
-        )
-        clusters = _eb(0x1F43B675, _eb_uint(0xE7, 0) + _eb(0xA3, block))
-    segment = _eb(0x18538067, info + tracks + clusters)
-    return header + segment
-
-
-def mkv_seed(media_id: int) -> np.uint64:
-    """Closed-form seed for the Matroska fixture — first 8 bytes of
-    ``md5('mkv:' || media_id)`` (SQL twin expression)."""
-    return np.uint64(
-        int(hashlib.md5(f"mkv:{media_id}".encode()).hexdigest()[:16], 16)
-    )
-
-
-MKV_W = MKV_H = 16
-
-
-def synth_mkv_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic REAL Matroska media table. Even ``media_id``:
-    V_UNCOMPRESSED Y800 frames — pixel ``p`` of frame ``f`` =
-    ``splitmix64(mkv_seed(i) + f*256 + p) & 255`` — with lacing cycling
-    none / fixed / EBML by ``(i // 2) % 3``. Odd: V_MJPEG DC-only
-    grayscale frames (same closed form as the AVI fixture: quantized DC
-    of frame ``f`` block ``b`` = ``(splitmix64(seed + f*4 + b) & 127) -
-    64``, every decoded pixel ``2k + 128``) with lacing cycling none /
-    Xiph by ``(i // 2) % 2``. Lacing never changes decoded values, so
-    the SQL twin branches only on the codec parity while the decoder
-    must parse every lacing mode for real. ``2 + i % 3`` frames each."""
-    q = np.full(64, JPEG_QDC, dtype=np.int64)
-    rows = []
-    for i in range(n):
-        nf = 2 + i % 3
-        seed = mkv_seed(i)
-        if i % 2 == 0:
-            frames = []
-            for f in range(nf):
-                idx = np.arange(256, dtype=np.uint64) + np.uint64(f * 256)
-                px = (_splitmix64(seed + idx) & np.uint64(255)).astype(
-                    np.uint8
-                )
-                frames.append(px.tobytes())
-            lacing = ("none", "fixed", "ebml")[(i // 2) % 3]
-            payload = encode_mkv(
-                frames, "V_UNCOMPRESSED", MKV_W, MKV_H,
-                lacing=lacing, colour_space=b"Y800",
-            )
-        else:
-            frames = []
-            for f in range(nf):
-                idx = np.arange(4, dtype=np.uint64) + np.uint64(f * 4)
-                ks = (
-                    (_splitmix64(seed + idx) & np.uint64(127)).astype(
-                        np.int64
-                    )
-                    - 64
-                )
-                coeffs = np.zeros((2, 2, 3, 64), dtype=np.int64)
-                coeffs[..., 0, 0] = ks.reshape(2, 2)
-                frames.append(encode_jpeg(coeffs, MKV_H, MKV_W, q))
-            lacing = ("none", "xiph")[(i // 2) % 2]
-            payload = encode_mkv(frames, "V_MJPEG", MKV_W, MKV_H, lacing=lacing)
-        rows.append(
-            (i, "video", bytearray(payload), "video/x-matroska", MKV_W,
-             MKV_H, nf * 40)
-        )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-# --- MPEG audio (MP3) / Ogg-Opus container metadata ---------------------------
-#
-# This container ships no perceptual-audio codec libraries, so MP3 / Opus
-# SAMPLE decode stays behind decode_audio's NotImplementedError: MPEG-1
-# Layer III sample reconstruction needs the normative Huffman code tables
-# (ISO 11172-3 Annex B Table B.7) and the 512-tap synthesis window (Table
-# B.3) — spec constants that cannot be re-derived from first principles,
-# and pairing our own encoder with our own decoder would only certify
-# itself. The CONTAINER layer, by contrast, is fully specified by
-# structure alone — frame-sync arithmetic, ID3 tags, Ogg granule
-# positions — and is what a 100-TB media-ingest pipeline needs first:
-# duration / bitrate / channel / tag metadata for partition pruning,
-# dedup keys and quality gates before any sample-level work is scheduled.
-#
-# MPEG frame walk: ISO 11172-3 §2.4.1.3 header fields; Layer III frame
-# length = 144000·kbps // rate + padding; 1152 samples per MPEG-1 frame.
-# Tags: ID3v2.3 (10-byte header, syncsafe size, TIT2/TPE1 text frames)
-# and the 128-byte ID3v1 'TAG' trailer. Ogg-Opus: RFC 7845 (OpusHead /
-# OpusTags on their own pages, 48 kHz granule clock, pre-skip
-# subtraction). Reference analogue: content-type sniffing before heavy
-# processing (`code/processes/converting-process/.../DocumentProcessor`
-# decides per-document work from cheap type probes the same way).
-
-_MPEG1_L3_KBPS = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-_MPEG1_RATES = (44100, 48000, 32000)
-
-
-def _id3v2(title: str, artist: str) -> bytes:
-    """Minimal ID3v2.3 tag: TIT2 + TPE1 latin-1 text frames."""
-
-    def frame(fid: bytes, text: str) -> bytes:
-        body = b"\x00" + text.encode("latin-1")  # encoding 0 = latin-1
-        return fid + len(body).to_bytes(4, "big") + b"\x00\x00" + body
-
-    body = frame(b"TIT2", title) + frame(b"TPE1", artist)
-    sz = len(body)
-    syncsafe = bytes(
-        [(sz >> 21) & 0x7F, (sz >> 14) & 0x7F, (sz >> 7) & 0x7F, sz & 0x7F]
-    )
-    return b"ID3\x03\x00\x00" + syncsafe + body
-
-
-def _id3v1(title: str, artist: str) -> bytes:
-    def pad30(s: str) -> bytes:
-        return s.encode("latin-1")[:30].ljust(30, b"\x00")
-
-    return (
-        b"TAG" + pad30(title) + pad30(artist) + pad30("")
-        + b"2026" + b"\x00" * 30 + b"\xff"
-    )
-
-
-def encode_mpeg_stream(
-    media_id: int,
-    n_frames: int,
-    rate_idx: int,
-    kbps_indices: list[int],
-    mono: bool,
-    title: str,
-) -> bytes:
-    """Valid MPEG-1 Layer III frame sequence with an ID3v2.3 front tag
-    and an ID3v1 trailer. Frame k cycles ``kbps_indices`` (len > 1 = a
-    VBR stream). Frame BODIES are deterministic splitmix64 filler: the
-    metadata walk computes every frame length from its 4-byte header and
-    never reads the body (sample decode stays NotImplementedError)."""
-    rate = _MPEG1_RATES[rate_idx]
-    out = bytearray(_id3v2(title, "synthcorp"))
-    h1 = 0xE0 | (0b11 << 3) | (0b01 << 1) | 1  # sync low, MPEG-1, Layer III
-    for k in range(n_frames):
-        bidx = kbps_indices[k % len(kbps_indices)]
-        kbps = _MPEG1_L3_KBPS[bidx]
-        flen = 144000 * kbps // rate  # padding bit 0
-        h2 = (bidx << 4) | (rate_idx << 2)
-        h3 = (0b11 if mono else 0b00) << 6
-        seed = np.uint64(
-            int(hashlib.md5(f"mp3:{media_id}:{k}".encode()).hexdigest()[:16], 16)
-        )
-        idx = np.arange(flen - 4, dtype=np.uint64)
-        body = (_splitmix64(seed + idx) & np.uint64(255)).astype(np.uint8)
-        out += bytes([0xFF, h1, h2, h3]) + body.tobytes()
-    out += _id3v1(title, "synthcorp")
-    return bytes(out)
-
-
-@_malformed_to_valueerror("MPEG audio")
-def mpeg_audio_meta(payload: bytes) -> dict:
-    """MPEG-1 Layer III elementary stream → container metadata (no sample
-    decode): frame count, rate, channels, floor-integer duration/bitrate,
-    VBR flag, title (ID3v2 TIT2, else ID3v1)."""
-    pos = 0
-    title = None
-    if payload[:3] == b"ID3":
-        sz = (
-            ((payload[6] & 0x7F) << 21) | ((payload[7] & 0x7F) << 14)
-            | ((payload[8] & 0x7F) << 7) | (payload[9] & 0x7F)
-        )
-        v24 = payload[3] == 4  # ID3v2.4 frame sizes are syncsafe too
-        flags = payload[5]
-        fpos, fend = 10, 10 + sz
-        if flags & 0x40 and fpos + 4 <= fend:  # extended header: skip it
-            ext_raw = payload[fpos : fpos + 4]
-            if v24:  # v2.4: syncsafe, INCLUDES its own size field
-                ext = (
-                    ((ext_raw[0] & 0x7F) << 21) | ((ext_raw[1] & 0x7F) << 14)
-                    | ((ext_raw[2] & 0x7F) << 7) | (ext_raw[3] & 0x7F)
-                )
-            else:  # v2.3: plain, EXCLUDES the 4 size bytes
-                ext = int.from_bytes(ext_raw, "big") + 4
-            fpos += ext
-        if flags & 0x80:
-            # whole-tag unsynchronisation: frame offsets shift under the
-            # 0xFF00 stuffing; skip title extraction (ID3v1 fallback
-            # below) rather than return a garbled string
-            fpos = fend
-        while fpos + 10 <= fend:
-            fid = payload[fpos : fpos + 4]
-            raw_sz = payload[fpos + 4 : fpos + 8]
-            if v24:
-                fsz = (
-                    ((raw_sz[0] & 0x7F) << 21) | ((raw_sz[1] & 0x7F) << 14)
-                    | ((raw_sz[2] & 0x7F) << 7) | (raw_sz[3] & 0x7F)
-                )
-            else:
-                fsz = int.from_bytes(raw_sz, "big")
-            if fid == b"\x00\x00\x00\x00" or fsz <= 0:
-                break
-            if fid == b"TIT2":
-                enc = payload[fpos + 10]
-                raw = payload[fpos + 11 : fpos + 10 + fsz]
-                codec = {
-                    0: "latin-1",
-                    1: "utf-16",  # BOM-led
-                    2: "utf-16-be",
-                    3: "utf-8",
-                }.get(enc, "latin-1")
-                title = raw.decode(codec, errors="replace").rstrip("\x00")
-            fpos += 10 + fsz
-        pos = 10 + sz
-        if flags & 0x10:  # v2.4 footer: 10 bytes not counted in sz
-            pos += 10
-    end = len(payload)
-    if end >= 128 and payload[end - 128 : end - 125] == b"TAG":
-        if title is None:
-            title = payload[end - 125 : end - 95].rstrip(b"\x00").decode("latin-1")
-        end -= 128
-    n = kbps_sum = 0
-    kset: set[int] = set()
-    rate = channels = None
-    while pos + 4 <= end:
-        h = payload[pos : pos + 4]
-        if h[0] != 0xFF or (h[1] & 0xE0) != 0xE0:
-            raise ValueError(f"lost MPEG frame sync at offset {pos}")
-        if (h[1] >> 3) & 0x3 != 0b11 or (h[1] >> 1) & 0x3 != 0b01:
-            raise NotImplementedError("only MPEG-1 Layer III framing supported")
-        bidx, ridx, padb = h[2] >> 4, (h[2] >> 2) & 0x3, (h[2] >> 1) & 1
-        if bidx in (0, 15) or ridx == 3:
-            raise ValueError("free-format or invalid MPEG header")
-        kbps, r = _MPEG1_L3_KBPS[bidx], _MPEG1_RATES[ridx]
-        if rate is None:
-            rate = r
-        elif r != rate:
-            raise ValueError("sample-rate change mid-stream")
-        ch = 1 if (h[3] >> 6) & 0x3 == 0b11 else 2
-        channels = ch if channels is None else channels
-        n += 1
-        kbps_sum += kbps
-        kset.add(kbps)
-        pos += 144000 * kbps // r + padb
-    if n == 0 or pos != end:
-        raise ValueError("no MPEG frames / trailing garbage")
-    return {
-        "codec": "mp3",
-        "n_frames": n,
-        "sample_rate": rate,
-        "channels": channels,
-        "duration_ms": n * 1152 * 1000 // rate,
-        "avg_bitrate_kbps": kbps_sum // n,
-        "vbr": len(kset) > 1,
-        "title": title or "",
-    }
-
-
-def encode_ogg_opus(
-    media_id: int,
-    n_packets: int,
-    channels: int,
-    pre_skip: int,
-    title: str,
-    sizes: list[int],
-) -> bytes:
-    """RFC 7845 Ogg-Opus stream: OpusHead / OpusTags each ending their
-    own page (``break_after``), then ``n_packets`` audio packets of the
-    given sizes at 960 samples (20 ms) per packet on the 48 kHz granule
-    clock. Packet bodies after the TOC byte are deterministic splitmix64
-    filler — CELT bit decode is out of scope (see section comment)."""
-    head = (
-        b"OpusHead" + bytes([1, channels]) + pre_skip.to_bytes(2, "little")
-        + (48000).to_bytes(4, "little") + b"\x00\x00" + b"\x00"
-    )
-    vendor = b"marginaliasearch_spark"
-    comment = f"TITLE={title}".encode()
-    tags = (
-        b"OpusTags" + len(vendor).to_bytes(4, "little") + vendor
-        + (1).to_bytes(4, "little")
-        + len(comment).to_bytes(4, "little") + comment
-    )
-    toc = (31 << 3) | ((1 if channels == 2 else 0) << 2)  # CELT FB 20ms, code 0
-    packets = [(head, 0), (tags, 0)]
-    gran = pre_skip
-    for k in range(n_packets):
-        seed = np.uint64(
-            int(hashlib.md5(f"opus:{media_id}:{k}".encode()).hexdigest()[:16], 16)
-        )
-        idx = np.arange(max(0, sizes[k] - 1), dtype=np.uint64)
-        body = (_splitmix64(seed + idx) & np.uint64(255)).astype(np.uint8)
-        gran += 960
-        packets.append((bytes([toc]) + body.tobytes(), gran))
-    return _ogg_write_pages(packets, serial=0x4F505553, break_after={0, 1})
-
-
-def _ogg_last_granule(payload: bytes) -> int:
-    """Last non-negative page granule position of the FIRST logical
-    bitstream (same serial-filter rule as ``_ogg_packets``, so a
-    multiplexed stream can't leak another track's clock; CRC
-    verification happens in ``_ogg_packets``)."""
-    pos, last, serial = 0, 0, None
-    while pos < len(payload):
-        if payload[pos : pos + 4] != b"OggS":
-            raise ValueError("bad Ogg capture pattern")
-        page_serial = int.from_bytes(payload[pos + 14 : pos + 18], "little")
-        if serial is None:
-            serial = page_serial
-        g = int.from_bytes(payload[pos + 6 : pos + 14], "little", signed=True)
-        if g >= 0 and page_serial == serial:
-            last = g
-        n_segs = payload[pos + 26]
-        pos += 27 + n_segs + sum(payload[pos + 27 : pos + 27 + n_segs])
-    return last
-
-
-@_malformed_to_valueerror("Ogg-Opus")
-def opus_meta(payload: bytes) -> dict:
-    """Ogg-Opus stream → container metadata: channel count and pre-skip
-    from OpusHead, TITLE from OpusTags, duration from the final granule
-    position minus pre-skip on the 48 kHz clock (RFC 7845 §4/§5), and
-    the floor-integer average bitrate over the audio packet bytes."""
-    packets = _ogg_packets(payload)  # CRC-verified, continuation-checked
-    if not packets or packets[0][:8] != b"OpusHead":
-        raise ValueError("not an Ogg-Opus stream")
-    head = packets[0]
-    if head[8] != 1:
-        raise NotImplementedError(f"OpusHead version {head[8]}")
-    channels = head[9]
-    pre_skip = int.from_bytes(head[10:12], "little")
-    title = ""
-    has_tags = len(packets) > 1 and packets[1][:8] == b"OpusTags"
-    if has_tags:
-        t, p = packets[1], 8
-        vlen = int.from_bytes(t[p : p + 4], "little")
-        p += 4 + vlen
-        ncom = int.from_bytes(t[p : p + 4], "little")
-        p += 4
-        for _ in range(ncom):
-            clen = int.from_bytes(t[p : p + 4], "little")
-            p += 4
-            c = t[p : p + clen].decode(errors="replace")
-            p += clen
-            if c.upper().startswith("TITLE="):
-                title = c[6:]
-    # tags are mandatory per RFC 7845 §5, but a tagless (spec-violating
-    # yet parseable) stream must not have its first audio packet silently
-    # dropped from the frame/bitrate stats
-    audio = packets[2:] if has_tags else packets[1:]
-    dur_samples = max(0, _ogg_last_granule(payload) - pre_skip)
-    abytes = sum(len(pk) for pk in audio)
-    return {
-        "codec": "opus",
-        "n_frames": len(audio),
-        "sample_rate": 48000,
-        "channels": channels,
-        "duration_ms": dur_samples * 1000 // 48000,
-        "avg_bitrate_kbps": (
-            (abytes * 8 * 48000) // (dur_samples * 1000) if dur_samples else 0
-        ),
-        "vbr": len({len(pk) for pk in audio}) > 1,
-        "title": title,
-    }
-
-
-AUDIO_META_SCHEMA = (
-    "media_id long, codec string, n_frames long, sample_rate int, "
-    "channels int, duration_ms long, avg_bitrate_kbps long, vbr boolean, "
-    "title string"
-)
-
-
-def audio_container_meta(
-    media: DataFrame,
-    payload_col: str = "payload",
-    on_error: str = "raise",
-) -> DataFrame:
-    """media_id → perceptual-audio container metadata, Arrow-batched
-    ``mapInPandas`` (MPEG/Layer III frame walk or Ogg-Opus page walk by
-    magic bytes). All outputs are exact integers/strings, so the DuckDB
-    twin (``sql_oracles.audio_meta_sql``) states them in closed form and
-    the hash equality certifies the container parse itself.
-
-    ``on_error``: ``"raise"`` (default — the oracle-gate contract: a
-    deterministic fixture must never fail), ``"skip"`` (drop unparseable
-    rows), or ``"null"`` (emit the row with codec='error' and zeroed
-    metrics). A web-scale sweep runs ``"skip"``/``"null"`` so one corrupt
-    file out of 10^9 can't kill a task after its retries.
-    """
-    if on_error not in ("raise", "skip", "null"):
-        raise ValueError(f"on_error={on_error!r}")
-    cols = [c.split(" ")[0] for c in AUDIO_META_SCHEMA.split(", ")]
-
-    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                b = bytes(payload)
-                try:
-                    if b[:4] == b"OggS":
-                        m = opus_meta(b)
-                    elif b[:3] == b"ID3" or (
-                        len(b) > 1 and b[0] == 0xFF and (b[1] & 0xE0) == 0xE0
-                    ):
-                        m = mpeg_audio_meta(b)
-                    else:
-                        raise NotImplementedError(
-                            "unknown perceptual-audio container"
-                        )
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    m = {
-                        "codec": "error", "n_frames": 0, "sample_rate": 0,
-                        "channels": 0, "duration_ms": 0,
-                        "avg_bitrate_kbps": 0, "vbr": False, "title": "",
-                    }
-                rows.append({"media_id": int(mid), **m})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.select("media_id", payload_col).mapInPandas(
-        batch, schema=AUDIO_META_SCHEMA
-    )
-
-
-def synth_perceptual_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic MP3 / Ogg-Opus container table by ``media_id % 2``
-    (0: MPEG-1 Layer III with ID3v2 + ID3v1, CBR-128 or VBR-128/192 by
-    ``(i//2) % 4``; 1: RFC 7845 Ogg-Opus, 20 ms packets, size
-    ``60 + (i*31 + k*13) % 100``). Every metadata column is a closed
-    form of ``media_id`` — see ``sql_oracles.audio_meta_sql``."""
-    rows = []
-    for i in range(n):
-        j = i // 2
-        title = f"track {i}"
-        if i % 2 == 0:
-            rate_idx = j % 3
-            nf = 40 + (i * 7) % 25
-            payload = encode_mpeg_stream(
-                i, nf, rate_idx,
-                [9] if j % 4 < 2 else [9, 11],  # 128 CBR / 128-192 VBR
-                mono=j % 2 == 1, title=title,
-            )
-            mime = "audio/mpeg"
-            dur = nf * 1152 * 1000 // _MPEG1_RATES[rate_idx]
-        else:
-            npk = 50 + (i * 11) % 40
-            sizes = [60 + ((i * 31 + k * 13) % 100) for k in range(npk)]
-            payload = encode_ogg_opus(i, npk, 1 + j % 2, 312, title, sizes)
-            mime = "audio/opus"
-            dur = npk * 20
-        rows.append((i, "audio", bytearray(payload), mime, 0, 0, int(dur)))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-# --- perceptual image hashing / near-duplicate image dedup ----------------
-#
-# The image-side analogue of text near-dup dedup (dedup.simhash_pairs):
-# a 64-bit difference hash per image, then the same banded-hamming LSH
-# self-join. At 100 TB the expensive part is the decode (embarrassingly
-# parallel mapInPandas); the pair join is bucketed by band value and never
-# all-pairs, with the identical pigeonhole exactness bound as simhash.
-
-DHASH_GRID = 8  # 8x8 blocks -> 64 comparison bits
-
-
-def dhash_image(img: np.ndarray) -> int:
-    """HxWx3 uint8 → 64-bit perceptual difference hash (signed int64).
-
-    Equal-block wraparound dHash: sum the three channels to an integer
-    gray plane, box-reduce to an 8×8 grid of exact integer block sums
-    (H and W must be multiples of 8 — true for every fixture and for any
-    pipeline that runs resize_images first), then bit ``k = r*8+c`` is 1
-    iff ``block(r,c) > block(r,(c+1) % 8)``. The wraparound variant keeps
-    every block the same exact integer size (classic 9×8 dHash needs
-    unequal column blocks at these dims), so the whole hash is
-    integer-exact and replayable in SQL. Concept: Krawetz's dHash
-    (hackerfactor 2013); adaptation documented in COVERAGE.md.
-    """
-    return dhash_plane(img.astype(np.int64).sum(axis=2))
-
-
-def dhash_features(
-    media: DataFrame, fake: bool = True, payload_col: str = "payload"
-) -> DataFrame:
-    """media_id → 64-bit perceptual dHash (one Arrow batch at a time).
-
-    Per-item error policy: an undecodable payload or a sub-8×8 image is
-    SKIPPED (row dropped), never fatal — at corpus scale one malformed
-    blob must not kill the dedup job four task-retries at a time. All
-    fixture payloads decode, so the oracle entries see every row."""
-
-    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, out = [], []
-            for mid, p in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    h = dhash_image(decode_image(bytes(p), fake=fake))
-                except (ValueError, NotImplementedError):
-                    continue
-                ids.append(mid)
-                out.append(h)
-            yield pd.DataFrame({"media_id": ids, "dhash": out})
-
-    return media.select("media_id", payload_col).mapInPandas(
-        batch, schema="media_id long, dhash long"
-    )
-
-
-def phash_dedup(hashes: DataFrame, max_hamming: int = 7) -> DataFrame:
-    """(media_id, dhash) → near-duplicate image pairs
-    (media_a, media_b, hamming ≤ max_hamming).
-
-    Banded-hamming LSH self-join (dedup.hamming_band_pairs): with
-    max_hamming+1 = 8 bands of 8 bits, any pair within the budget agrees
-    on ≥1 full band, so the banded join finds exactly the same pairs as
-    all-pairs — the oracle emits the all-pairs form, the engine keeps the
-    bucketed one (the 100-TB path)."""
-    from .dedup import hamming_band_pairs
-
-    return hamming_band_pairs(hashes, "media_id", "dhash", max_hamming, "media")
-
-
-def phash_pixel_seed(media_id: int, tag: str = "phd") -> np.uint64:
-    """Closed-form pixel seed for the perceptual-dedup fixture — first 8
-    bytes of ``md5(tag || ':' || media_id)``, the expression the SQL twin
-    uses verbatim."""
-    return np.uint64(
-        int(hashlib.md5(f"{tag}:{media_id}".encode()).hexdigest()[:16], 16)
-    )
-
-
-def synth_phash_media(spark, n: int = 64) -> DataFrame:
-    """REAL-PNG fixture with PLANTED near-duplicate pairs: image ``i`` of
-    the base half (``i < n/2``) has pixel values
-    ``splitmix64(md5('phd:'||i) + p) & 255``; image ``i`` of the dup half
-    is a perturbed copy of base ``i - n/2`` — value index ``p`` is
-    replaced by ``splitmix64(md5('php:'||i) + p) & 255`` where
-    ``p % 101 == i % 101`` (≈30 of 3072 values), so each planted pair
-    lands a few hamming bits apart while unrelated images stay ~32 apart.
-    Payloads are genuine PNGs (cycling scanline filters): entries decode
-    through the real zlib-inflate path while the oracle recomputes pixels
-    from the closed form."""
-    assert n % 2 == 0
-    n2 = n // 2
-    rows = []
-    idx = np.arange(_N_PIX * 3, dtype=np.uint64)
-    for i in range(n):
-        base = i if i < n2 else i - n2
-        vals = (
-            _splitmix64(phash_pixel_seed(base) + idx) & np.uint64(255)
-        ).astype(np.uint8)
-        if i >= n2:
-            mask = (np.arange(_N_PIX * 3) % 101) == (i % 101)
-            pert = (
-                _splitmix64(phash_pixel_seed(i, "php") + idx) & np.uint64(255)
-            ).astype(np.uint8)
-            vals = np.where(mask, pert, vals)
-        payload = encode_png(vals.reshape(IMG_H, IMG_W, 3), filters="cycle")
-        rows.append(
-            (i, "image", bytearray(payload), "image/png", IMG_W, IMG_H, 0)
-        )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-# --- audio fingerprinting / near-duplicate audio dedup ---------------------
-
-AFP_FRAMES = 64  # 64 energy frames -> 64 comparison bits
-
-
-def afp_fingerprint(samples: np.ndarray) -> int:
-    """int64 mono samples → 64-bit energy-envelope fingerprint (signed).
-
-    The audio twin of ``dhash_image``: split the clip into 64 frames at
-    integer boundaries ``k*n//64``, sum ``|sample|`` per frame, and set
-    bit ``k`` iff frame ``k``'s MEAN energy exceeds frame ``(k+1)%64``'s.
-    Frames are unequal by at most one sample, so the mean comparison is
-    done by exact integer cross-multiplication
-    (``e_k*c_{k+1} > e_{k+1}*c_k`` in Python ints — no overflow, no
-    floats), keeping the whole fingerprint SQL-replayable. Invariant to
-    uniform gain (any positive integer scale) by construction.
-    """
-    n = len(samples)
-    g = AFP_FRAMES
-    bounds = [(k * n) // g for k in range(g + 1)]
-    absam = np.abs(np.asarray(samples, dtype=np.int64))
-    e = [int(absam[bounds[k] : bounds[k + 1]].sum()) for k in range(g)]
-    c = [bounds[k + 1] - bounds[k] for k in range(g)]
-    val = 0
-    for k in range(g):
-        j = (k + 1) % g
-        if e[k] * c[j] > e[j] * c[k]:
-            val |= 1 << k
-    return val - (1 << 64) if val >= 1 << 63 else val
-
-
-def afp_features(
-    media: DataFrame, fake: bool = False, payload_col: str = "payload"
-) -> DataFrame:
-    """media_id → 64-bit audio fingerprint (one Arrow batch at a time).
-
-    Default is the REAL decode (every current caller's choice): fake mode
-    derives ``n_samples = duration_ms·RATE/1000`` like audio_features,
-    which quantizes to millisecond granularity — up to RATE/1000 − 1
-    trailing samples truncate, so a fake-mode fingerprint of a real WAV
-    clip whose length isn't a multiple of RATE/1000 differs from the real
-    decode's. Fake mode is for opaque placeholder payloads only."""
-
-    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for payload, dur in zip(pdf[payload_col], pdf["duration_ms"]):
-                if fake:
-                    n = int(dur or 0) * AUDIO_RATE // 1000
-                    s, _ = decode_audio(bytes(payload), fake=True, n_samples=n)
-                else:
-                    s, _ = decode_audio(bytes(payload))
-                out.append(afp_fingerprint(s))
-            yield pd.DataFrame({"media_id": pdf["media_id"], "afp": out})
-
-    return media.select("media_id", payload_col, "duration_ms").mapInPandas(
-        batch, schema="media_id long, afp long"
-    )
-
-
-def afp_dedup(hashes: DataFrame, max_hamming: int = 7) -> DataFrame:
-    """(media_id, afp) → near-duplicate audio pairs
-    (media_a, media_b, hamming ≤ max_hamming) via the same
-    pigeonhole-exact banded-hamming join as phash_dedup / simhash."""
-    from .dedup import hamming_band_pairs
-
-    return hamming_band_pairs(hashes, "media_id", "afp", max_hamming, "media")
-
-
-def afp_sample_seed(media_id: int, tag: str = "afd") -> np.uint64:
-    """Closed-form sample seed for the audio-dedup fixture — first 8
-    bytes of ``md5(tag || ':' || media_id)`` (SQL twin verbatim)."""
-    return np.uint64(
-        int(hashlib.md5(f"{tag}:{media_id}".encode()).hexdigest()[:16], 16)
-    )
-
-
-def afp_clip_samples(media_id: int, n: int) -> np.ndarray:
-    """Closed-form samples of fixture clip ``media_id`` (n images total):
-    base half ``i < n/2`` is ``(splitmix64(md5('afd:'||i) + t) & 0xFFFF)
-    - 32768`` over ``t < 4000 + (i*37 % 1000)``; dup half is a copy of
-    base ``i - n/2`` re-randomized (seed md5('afp:'||i)) at sample
-    indices ``t % 331 == i % 331``."""
-    n2 = n // 2
-    base = media_id if media_id < n2 else media_id - n2
-    ns = 4000 + (base * 37) % 1000
-    idx = np.arange(ns, dtype=np.uint64)
-    s = (_splitmix64(afp_sample_seed(base) + idx) & np.uint64(0xFFFF)).astype(
-        np.int64
-    ) - 32768
-    if media_id >= n2:
-        mask = (np.arange(ns) % 331) == (media_id % 331)
-        p = (
-            _splitmix64(afp_sample_seed(media_id, "afp") + idx)
-            & np.uint64(0xFFFF)
-        ).astype(np.int64) - 32768
-        s = np.where(mask, p, s)
-    return s
-
-
-def synth_afp_media(spark, n: int = 64) -> DataFrame:
-    """REAL 16-bit PCM WAV fixture with PLANTED near-duplicate clip pairs
-    (see afp_clip_samples): entries decode through the genuine RIFF/WAVE
-    path while the oracle recomputes samples from the closed form."""
-    assert n % 2 == 0
-    rows = []
-    for i in range(n):
-        s = afp_clip_samples(i, n)
-        payload = encode_wav_pcm(s, bits=16)
-        rows.append(
-            (
-                i,
-                "audio",
-                bytearray(payload),
-                "audio/wav",
-                0,
-                0,
-                len(s) * 1000 // AUDIO_RATE,
-            )
-        )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-# --- video fingerprinting / near-duplicate video dedup ---------------------
-#
-# Completes the near-dup story across all four modalities (text simhash,
-# image dHash, audio envelope, video): per-frame dHash over the decoded
-# luma planes, then the SAME banded-hamming kernel with frame_idx riding
-# the join key (positional alignment), then a per-pair matched-frame
-# count. Candidate generation stays pigeonhole-exact per frame.
-
-
-def dhash_plane(gray: np.ndarray) -> int:
-    """HxW integer plane → 64-bit wraparound difference hash (the kernel
-    ``dhash_image`` applies to its channel-sum plane; video callers pass
-    the decoded luma plane directly)."""
-    h, w = gray.shape
-    g = DHASH_GRID
-    if h < g or w < g:
-        raise ValueError(f"dhash needs at least {g}x{g} pixels")
-    if h % g or w % g:
-        # deterministic top-left crop to the largest multiple-of-8 dims:
-        # arbitrary real-world sizes hash instead of killing the job, and
-        # equal-size blocks keep the integer-exact property (fixtures are
-        # all multiples of 8, so every oracle is unaffected)
-        h, w = h - h % g, w - w % g
-        gray = gray[:h, :w]
-    blocks = gray.astype(np.int64).reshape(g, h // g, g, w // g).sum(axis=(1, 3))
-    bits = blocks > np.roll(blocks, -1, axis=1)
-    k = np.arange(63, dtype=np.uint64)
-    flat = bits.reshape(-1)
-    val = int((flat[:63].astype(np.uint64) << k).sum(dtype=np.uint64))
-    return val - (1 << 63) if flat[63] else val
-
-
-def video_fingerprints(
-    media: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
-    """video → one row per frame (media_id, frame_idx, fhash): real
-    container decode (y4m / MJPEG-AVI / GIF / MKV), per-frame luma dHash.
-    Same partition-local explode shape as frame_sample — no shuffle."""
-
-    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, hs = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                lumas, _ = decode_video(bytes(payload))
-                for i, frame in enumerate(lumas):
-                    ids.append(mid)
-                    idxs.append(i)
-                    hs.append(dhash_plane(frame))
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "fhash": hs}
-            )
-
-    return media.select("media_id", payload_col).mapInPandas(
-        batch, schema="media_id long, frame_idx int, fhash long"
-    )
-
-
-def video_neardup_pairs(
-    fingerprints: DataFrame, max_hamming: int = 7, min_frames: int = 6
-) -> DataFrame:
-    """(media_id, frame_idx, fhash) → (media_a, media_b, n_frames) video
-    pairs whose SAME-INDEX frames are within ``max_hamming`` dHash bits
-    for at least ``min_frames`` frame positions.
-
-    frame_idx rides the banded join key (the shared
-    ``dedup.hamming_band_pairs`` kernel's ``extra_keys``), so candidates
-    only meet when the same frame position collides — the
-    temporal-alignment analogue of the per-band bucket. Per frame the
-    banding is pigeonhole-exact (max_hamming+1 bands), so the
-    matched-frame COUNT equals the all-pairs count and the oracle can
-    emit the all-pairs form."""
-    from .dedup import hamming_band_pairs
-
-    matched = hamming_band_pairs(
-        fingerprints.select("media_id", "frame_idx", "fhash"),
-        "media_id",
-        "fhash",
-        max_hamming,
-        "media",
-        extra_keys=("frame_idx",),
-    )
-    return (
-        matched.groupBy("media_a", "media_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_frames"))
-        .filter(F.col("n_frames") >= min_frames)
-    )
-
-
-VFP_FRAMES = 8  # frames per fixture clip
-
-
-def encode_y4m_mono(frames: np.ndarray, fps: int = 25) -> bytes:
-    """(n, h, w) uint8 luma planes → YUV4MPEG2 ``Cmono`` stream (the
-    lossless interchange encoding ``_decode_y4m`` reads back verbatim)."""
-    n, h, w = frames.shape
-    out = [f"YUV4MPEG2 W{w} H{h} F{fps}:1 Ip A1:1 Cmono\n".encode()]
-    for f in range(n):
-        out.append(b"FRAME\n")
-        out.append(frames[f].tobytes())
-    return b"".join(out)
-
-
-def vfp_luma_seed(media_id: int, tag: str = "vfd") -> np.uint64:
-    """Closed-form luma seed for the video-dedup fixture — first 8 bytes
-    of ``md5(tag || ':' || media_id)`` (SQL twin verbatim)."""
-    return np.uint64(
-        int(hashlib.md5(f"{tag}:{media_id}".encode()).hexdigest()[:16], 16)
-    )
-
-
-def vfp_clip_lumas(media_id: int, n: int) -> np.ndarray:
-    """Closed-form luma planes of fixture clip ``media_id``: base half
-    ``i < n/2`` is ``splitmix64(md5('vfd:'||i) + q) & 255`` over flat
-    index ``q = frame*1024 + pixel`` (8 frames of 32×32); dup half copies
-    base ``i - n/2`` re-randomized (seed md5('vfp:'||i)) at
-    ``q % 101 == i % 101``."""
-    n2 = n // 2
-    base = media_id if media_id < n2 else media_id - n2
-    nq = VFP_FRAMES * _N_PIX
-    idx = np.arange(nq, dtype=np.uint64)
-    v = (_splitmix64(vfp_luma_seed(base) + idx) & np.uint64(255)).astype(
-        np.uint8
-    )
-    if media_id >= n2:
-        mask = (np.arange(nq) % 101) == (media_id % 101)
-        p = (
-            _splitmix64(vfp_luma_seed(media_id, "vfp") + idx) & np.uint64(255)
-        ).astype(np.uint8)
-        v = np.where(mask, p, v)
-    return v.reshape(VFP_FRAMES, IMG_H, IMG_W)
-
-
-def synth_vfp_media(spark, n: int = 32) -> DataFrame:
-    """REAL mono-y4m fixture with PLANTED near-duplicate clip pairs (see
-    vfp_clip_lumas): entries decode through the genuine YUV4MPEG2 path
-    while the oracle recomputes lumas from the closed form."""
-    assert n % 2 == 0
-    rows = []
-    for i in range(n):
-        lumas = vfp_clip_lumas(i, n)
-        payload = encode_y4m_mono(lumas)
-        rows.append(
-            (
-                i,
-                "video",
-                bytearray(payload),
-                "video/x-yuv4mpeg",
-                IMG_W,
-                IMG_H,
-                VFP_FRAMES * 40,
-            )
-        )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)

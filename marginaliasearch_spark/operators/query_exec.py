@@ -227,14 +227,9 @@ class IndexReader:
         self._year_range: tuple[int, int] | None = None
         self.tombstones = None
         if os.path.exists(os.path.join(paths.tombstones, "_SUCCESS")):
-            try:
-                self.tombstones = (
-                    spark.read.parquet(paths.tombstones)
-                    .select("doc_id")
-                    .distinct()
-                )
-            except Exception:
-                self.tombstones = None
+            self.tombstones = (
+                spark.read.parquet(paths.tombstones).select("doc_id").distinct()
+            )
         with open(paths.corpus_stats) as f:
             stats = json.load(f)
         self.n_docs = float(stats["doc_count"])

@@ -5,8 +5,8 @@ Deterministic slice of the full mutation fuzz (tools/fuzz_decoders.py —
 27k mutations, 0 escapes/0 slow on the round-5 tree): a fixed seed and
 ~40 mutations per format keep this fast enough for the suite while
 pinning the `_malformed_to_valueerror` boundary, the dimension/count
-bomb guards (TIFF IFD count, GIF screen/frame, JPEG SOF), the EBML
-truncation bounds, and the AVI size-past-payload clamp."""
+bomb guards (TIFF IFD count, GIF screen/frame, JPEG SOF) and the AVI
+size-past-payload clamp."""
 
 import random
 import signal
@@ -18,7 +18,6 @@ from marginaliasearch_spark.operators import multimodal as mm
 
 IMG = np.arange(16 * 16 * 3, dtype=np.uint8).reshape(16, 16, 3)
 PCM = (np.sin(np.arange(800) / 10) * 3000).astype(np.int16)
-FRAMES = [np.full((16, 16), i * 30, np.uint8) for i in range(3)]
 IDX = (np.arange(256, dtype=np.uint8).reshape(16, 16) % 8)
 PAL = (np.arange(24, dtype=np.uint8).reshape(8, 3) * 10)
 COEF = np.zeros((2, 2, 3, 64), np.int64)
@@ -37,11 +36,6 @@ def _seeds():
         ("au", mm.encode_au(PCM)),
         ("avi", mm.encode_avi_mjpeg(
             [mm.encode_jpeg(COEF, 16, 16, QT)] * 2, fps=10, w=16, h=16)),
-        ("mkv", mm.encode_mkv([f.tobytes() for f in FRAMES],
-                              "V_UNCOMPRESSED", 16, 16,
-                              colour_space=b"Y800")),
-        ("mpeg", mm.encode_mpeg_stream(1, 10, 0, [3] * 10, True, "t")),
-        ("opus", mm.encode_ogg_opus(1, 6, 2, 312, "t", [40] * 6)),
     ]
 
 
@@ -58,8 +52,7 @@ def test_mutated_payloads_stay_in_the_allowlist(name, payload):
 
     rng = random.Random(zlib.crc32(name.encode()))
     payload = bytes(payload)
-    decoders = ["decode_image", "decode_audio", "decode_video",
-                "mpeg_audio_meta", "opus_meta"]
+    decoders = ["decode_image", "decode_audio", "decode_video"]
     signal.signal(signal.SIGALRM,
                   lambda s, f: (_ for _ in ()).throw(_Watchdog()))
     try:
@@ -149,26 +142,3 @@ def test_gif_animation_pixel_budget():
 def test_aiff_ext80_exponent_guard():
     with pytest.raises(ValueError, match="unreasonable"):
         mm._read_ext80(bytes([0x7F, 0xFF] + [0x80] + [0] * 7))
-
-
-def test_query_parser_rejects_garbage_with_valueerror():
-    """Queries are user input: any garbage string must parse or raise
-    ValueError — never IndexError (truncated '(a') or AssertionError
-    (stray ')', which an `assert` would also skip under python -O)."""
-    import random
-
-    from marginaliasearch_spark.plans import parser as qp
-
-    for q in ["(a", "a)", "((", "(a | ", "|", "( | )", ")(", "(()"]:
-        try:
-            qp.parse_query(q)
-        except ValueError:
-            pass
-    rng = random.Random(3)
-    chars = "abz01 ()|?\"'-:<>=*^\\/{}"
-    for _ in range(500):
-        s = "".join(rng.choice(chars) for _ in range(rng.randint(0, 30)))
-        try:
-            qp.parse_query(s)
-        except ValueError:
-            pass

@@ -331,6 +331,42 @@ def test_minhash_between_consistent_with_self_join(spark):
     assert between[(0, 35)] == 1.0  # the identical doc is reported
 
 
+def _ham(a: int, b: int) -> int:
+    return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
+
+
+def test_banded_equals_allpairs(spark):
+    """hamming_band_pairs (the pigeonhole-banded join under simhash_pairs)
+    must return exactly the brute-force all-pairs set within the budget."""
+    rng = np.random.RandomState(3)
+    base = rng.randint(-(2**62), 2**62, size=40).tolist()
+    # plant close pairs at controlled hamming distances
+    rows = [(i, int(h)) for i, h in enumerate(base)]
+    for k, d in enumerate([0, 1, 7, 8, 12]):
+        h = base[k]
+        flipped = h ^ sum(1 << (5 * j + 2) for j in range(d))
+        flipped = flipped - (1 << 64) if flipped >= 1 << 63 else flipped
+        rows.append((100 + k, int(flipped)))
+    df = spark.createDataFrame(rows, "doc_id long, simhash long")
+    got = {
+        (r.doc_a, r.doc_b, r.hamming)
+        for r in dedup.hamming_band_pairs(
+            df, "doc_id", "simhash", 7, "doc"
+        ).collect()
+    }
+    want = {
+        (a, ha, b, hb)
+        for a, ha in rows
+        for b, hb in rows
+        if a < b and _ham(ha, hb) <= 7
+    }
+    want = {(a, b, _ham(ha, hb)) for a, ha, b, hb in want}
+    assert got == want
+    # the d=8 and d=12 plants must NOT appear (hamming > budget)
+    assert all(p[2] <= 7 for p in got)
+    assert (2, 102, 7) in got and not any(b == 103 for _, b, _ in got)
+
+
 class TestBoilerplateLineRemoval:
     """C4/RefinedWeb corpus-boilerplate line removal: lines repeated
     >= min_count corpus-wide are stripped everywhere; originals, order,

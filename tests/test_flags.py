@@ -139,3 +139,26 @@ def test_null_text_and_sentinel_keep_flags_aligned(spark):
     # NULs stripped → the sentinel degrades to the harmless word "turn"
     # (indexed as user text), NOT a turn-break marker
     assert j[("b", "turn")] == FLAG_USER
+
+
+def test_query_parser_rejects_garbage_with_valueerror():
+    """Queries are user input: any garbage string must parse or raise
+    ValueError — never IndexError (truncated '(a') or AssertionError
+    (stray ')', which an `assert` would also skip under python -O)."""
+    import random
+
+    from marginaliasearch_spark.plans import parser as qp
+
+    for q in ["(a", "a)", "((", "(a | ", "|", "( | )", ")(", "(()"]:
+        try:
+            qp.parse_query(q)
+        except ValueError:
+            pass
+    rng = random.Random(3)
+    chars = "abz01 ()|?\"'-:<>=*^\\/{}"
+    for _ in range(500):
+        s = "".join(rng.choice(chars) for _ in range(rng.randint(0, 30)))
+        try:
+            qp.parse_query(s)
+        except ValueError:
+            pass

@@ -271,3 +271,37 @@ class TestDeletion:
             r["conv_id"] for r in run_query(reader, "factor2", k=200).collect()
         }
         assert not got & set(self.DROP)
+
+
+def test_unreadable_tombstones_fail_closed(spark):
+    """A tombstone set that cannot be read must raise — in the reader AND
+    in compaction. Treating it as empty would return deleted
+    conversations again, and compact_index would make that permanent."""
+    import glob
+
+    from py4j.protocol import Py4JJavaError
+
+    from marginaliasearch_spark.operators.index_build import (
+        compact_index,
+        delete_convs,
+    )
+
+    root = tempfile.mkdtemp(prefix="tomb_bad_")
+    build_index(spark, factor_corpus(spark, 32), root, n_buckets=1)
+    assert delete_convs(spark, root, ["conv10"]) == 1
+    got = run_query(IndexReader(spark, IndexPaths(root)), "factor2", k=50)
+    assert "conv10" not in {r["conv_id"] for r in got.collect()}
+
+    tomb_dir = IndexPaths(root).tombstones
+    parts = glob.glob(os.path.join(tomb_dir, "part-*"))
+    assert parts
+    for p in parts:
+        with open(p, "wb") as f:
+            f.write(b"not a parquet file")
+    # drop the checksum sidecars so the parquet read itself is what fails
+    for crc in glob.glob(os.path.join(tomb_dir, ".part-*.crc")):
+        os.remove(crc)
+    with pytest.raises(Py4JJavaError):
+        IndexReader(spark, IndexPaths(root))
+    with pytest.raises(Py4JJavaError):
+        compact_index(spark, root, tempfile.mkdtemp(prefix="tomb_bad_cmp_"))

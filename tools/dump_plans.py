@@ -548,25 +548,8 @@ def main() -> None:
         )
     )
 
-    from marginaliasearch_spark.operators.subtitles import (
-        parse_subtitles,
-        synth_subtitle_tracks,
-    )
     from marginaliasearch_spark.operators.datacard import data_card
 
-    cues = parse_subtitles(synth_subtitle_tracks(spark, n=8))
-    sections.append(
-        (
-            "Subtitle parse (SRT/WebVTT → cue rows, JVM-only)",
-            "Things to check: NO `BatchEvalPython`/`ArrowEvalPython`/"
-            "`MapInPandas` anywhere — the whole parse (block split, "
-            "posexplode, regex clock decode, higher-order array body "
-            "reassembly) sits in `WholeStageCodegen` spans; the only "
-            "exchange is the per-track `Window` renumber partitioned by "
-            "media_id.",
-            fmt(cues),
-        )
-    )
     card = data_card(
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     )
@@ -656,34 +639,6 @@ def main() -> None:
             "LUT inside WholeStageCodegen, so a 100 TB scan is pure "
             "map-side work + the top-k heap); no Python operators.",
             fmt(pq_topk(pq_codes, pq_cents, qvec, k=10)),
-        )
-    )
-
-    from marginaliasearch_spark.operators.multimodal import (
-        dhash_features,
-        phash_dedup,
-        synth_phash_media,
-    )
-
-    ph = phash_dedup(
-        dhash_features(synth_phash_media(spark, 64), fake=False), max_hamming=7
-    )
-    sections.append(
-        (
-            "Perceptual image dedup (dHash + banded-hamming self-join)",
-            "Things to check: the decode `MapInPandas` runs ONCE — both "
-            "join sides read the checkpointed (media_id, dhash) relation "
-            "(`Scan ExistingRDD`, 16 B/row; without the barrier Spark "
-            "plans the self-join lineage twice and the corpus decodes "
-            "once per side — measured 5.2s → 1.4s on 256 real PNGs). Each "
-            "side explodes its 8 band values (`Generate posexplode`), the "
-            "candidate join is keyed on (band, band_val) — never "
-            "CartesianProduct — and the exact hamming verify "
-            "(`bit_count(xor)`) plus the `<= 7` cut run inside "
-            "WholeStageCodegen on survivors only. The identical kernel "
-            "serves the audio fingerprint (afp_dedup) and text simhash "
-            "paths — one kernel, three modalities.",
-            fmt(ph),
         )
     )
 
