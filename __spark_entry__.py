@@ -1952,36 +1952,6 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = multimodal.synth_media(spark, n=64)
-    return multimodal.audio_features(
-        media.filter(F.col("kind") == "audio"), fake=True
-    )
-
-
-def _q_audio_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-audio decode under the oracle gate: G.711 μ-law /
-    A-law table decode + IMA ADPCM quantizer recurrence (WAV format tags
-    7/6/0x11) over closed-form code streams, plus lossless FLAC (rice /
-    escape residuals + FIXED predictors, CRC-verified); the DuckDB twin
-    replays the g711.c bit math, the ADPCM recurrence (recursive CTE),
-    and the FLAC closed-form samples in SQL."""
-    media = multimodal.synth_compressed_audio_media(spark, n=64)
-    return multimodal.audio_features(media, fake=False)
-
-
-def _q_audio_containers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio-container demux under the oracle gate: Ogg page framing
-    (RFC 3533 CRC-32 + lacing reassembly incl. continued packets) around
-    FLAC (RFC 9639 §10.2 mapping), AIFF / AIFF-C ``sowt`` IFF chunk walk
-    with 80-bit extended sample rates, and Sun AU headers. Every
-    container wraps the same closed-form signal, so the DuckDB twin
-    (`sql_oracles.audio_containers_sql`) is branch-free — the hash
-    equality certifies the framing decode itself."""
-    media = multimodal.synth_container_audio_media(spark, n=64)
-    return multimodal.audio_features(media, fake=False)
-
-
 def _q_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus data-card report (Datasheets-for-Datasets shape) over the
     documents table: per-(lang, source) doc counts, exact-dup counts
@@ -2624,8 +2594,7 @@ _NEW_THIS_ROUND: list[str] = [
     "fulltext_searchset", "index_search_set",
     "mm_image_gif_features",
     "fulltext_qs_wand", "fulltext_qs_gate",
-    "mm_audio_containers",
-    "mm_audio_compressed", "mm_image_jpeg_features",
+    "mm_image_jpeg_features",
     "mm_image_jpeg_progressive", "mm_video_gif_frames",
     "fulltext_conv", "sim_kmeans", "dedup_semantic_kmeans",
     "sim_pq_topk", "sim_ivfpq_topk", "text_hash_embed", "dedup_semantic_text",
@@ -2685,7 +2654,7 @@ _JUDGE_VERIFIED_R3 = [
     "assist_convert", "assist_math_eval",
     "sample_pack", "dsir_weights", "lm_perplexity", "text_classify",
     "sim_knn_join", "rank_pagerank", "rank_conv_info", "browse_random",
-    "browse_similar", "mm_audio_features", "events_sessions",
+    "browse_similar", "events_sessions",
     "fulltext_serp_dedup", "assist_route",
 ]
 _STALE_SINCE_R02 = [
@@ -3008,12 +2977,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mm_image_tiff_features": _q_image_tiff_features,
         "mm_image_tiff_resize": _q_image_tiff_resize,
         "mm_frame_sample": _q_frame_sample,
-        "mm_audio_features": _q_audio_features,
-        # REAL compressed payloads (G.711 mu/A-law + IMA ADPCM + FLAC;
-        # Motion-JPEG AVI)
-        "mm_audio_compressed": _q_audio_compressed,
-        "mm_audio_containers": _q_audio_containers,
         "report_datacard": _q_datacard,
+        # REAL Motion-JPEG AVI payloads
         "mm_video_mjpeg_frames": _q_video_mjpeg,
         "mm_video_gif_frames": _q_video_gif,
         # --- windowed aggregation / sessionization ---
@@ -4047,9 +4012,6 @@ WHERE NOT EXISTS (
             n=64, prefix="tif:"
         ),
         "mm_frame_sample": sql_oracles.frame_sample_sql(n=64),
-        "mm_audio_features": sql_oracles.audio_features_sql(n=64),
-        "mm_audio_compressed": sql_oracles.audio_compressed_sql(n=64),
-        "mm_audio_containers": sql_oracles.audio_containers_sql(n=64),
         "report_datacard": sql_oracles.datacard_sql(),
         "mm_video_mjpeg_frames": sql_oracles.mjpeg_frames_sql(n=64),
         "mm_video_gif_frames": sql_oracles.gif_video_frames_sql(n=64),

@@ -84,7 +84,6 @@ BENCH_QUERIES = [
     "fulltext_decorated",
     "events_sessions",
     "index_ngram_stats",
-    "mm_audio_features",
     "index_spell_suggest",
     "dedup_substring",
     "text_repetition",
@@ -131,13 +130,11 @@ BENCH_QUERIES = [
     "mm_image_png_features",
     "streaming_dedup",
     "streaming_windows",
-    "mm_audio_compressed",
     "mm_image_jpeg_features",
     "mm_video_mjpeg_frames",
     "mm_image_jpeg_progressive",
     "mm_video_gif_frames",
     "mm_image_tiff_features",
-    "mm_audio_containers",
     "report_datacard",
     "fulltext_conv",
     "fulltext_searchset",

@@ -478,49 +478,6 @@ SELECT media_id, {mean_cols}, sum(v)::BIGINT AS px_sum
 FROM rval GROUP BY media_id"""
 
 
-def audio_features_sql(n: int = 64) -> str:
-    """Exact oracle for ``multimodal.audio_features`` over the synthetic
-    media table's audio rows (fake decoder: sample i = low 16 bits of
-    splitmix64(md5seed + i) − 32768; ``n_samples = duration_ms * RATE //
-    1000``). All aggregation is exact int64; RMS / mean-amp do one double
-    divide (+sqrt) then round(6) — the same op order as the numpy kernel.
-    """
-    from ..operators.multimodal import AUDIO_RATE
-
-    max_ns = 5000 * AUDIO_RATE // 1000  # synth duration_ms < 5000
-    return f"""WITH {media_ctes(n)},
-aud AS (
-  SELECT media_id,
-         ('0x' || substr(md5(payload_hex), 1, 16))::UBIGINT AS s,
-         (duration_ms * {AUDIO_RATE}) // 1000 AS ns
-  FROM m2 WHERE kind = 'audio'
-),
-samp0 AS (
-  SELECT media_id, p, {sql64.add64('s', 'p::UBIGINT')} AS x, ns
-  FROM aud CROSS JOIN (SELECT unnest(range({max_ns})) AS p) pp
-  WHERE p < ns
-),
-samp AS (
-  SELECT media_id, p,
-         ({sql64.sm64('x')} & 65535::UBIGINT)::BIGINT - 32768 AS v
-  FROM samp0
-),
-lagged AS (
-  SELECT media_id, v,
-         lag(v) OVER (PARTITION BY media_id ORDER BY p) AS pv
-  FROM samp
-)
-SELECT media_id,
-       count(*)::BIGINT AS n_samples,
-       {AUDIO_RATE}::INT AS sample_rate,
-       max(abs(v))::BIGINT AS peak,
-       sum(CASE WHEN pv IS NOT NULL AND (pv >= 0) <> (v >= 0)
-                THEN 1 ELSE 0 END)::BIGINT AS zero_crossings,
-       round(sqrt(sum(v * v)::DOUBLE / count(*)), 6) AS rms,
-       round(sum(abs(v))::DOUBLE / count(*), 6) AS mean_amp
-FROM lagged GROUP BY media_id"""
-
-
 def jpeg_features_sql(n: int = 64, prefix: str = "jpg:") -> str:
     """Exact oracle for ``multimodal.image_features(fake=False)`` over
     ``synth_jpeg_media`` (``prefix='jpg:'``, baseline SOF0) or
@@ -692,147 +649,6 @@ SELECT media_id, frame_idx::INT AS frame_idx, y_sum,
        floor(y_sum::DOUBLE / {n_px} / 255.0 * 1000000 + 0.5) / 1000000
          AS mean_y
 FROM fr"""
-
-
-def audio_compressed_sql(n: int = 64) -> str:
-    """Exact oracle for ``multimodal.audio_features(fake=False)`` over
-    ``synth_compressed_audio_media``: the fixture's *code streams* are
-    closed-form (splitmix64 of ``md5('aud:' || media_id)``), so this
-    replays decode-of-known-codes without any binary parsing —
-    G.711 μ-law/A-law as g711.c integer bit math, IMA ADPCM as a
-    recursive CTE stepping the quantizer state one 4-bit code at a time
-    (89-entry step table inlined as a list literal), mono AND
-    decorrelated-stereo FLAC directly from the closed-form (left)
-    samples (the codec is lossless, so the bitstream decode must
-    reproduce them bit-exactly), and 24/32-bit + float32 PCM from the
-    closed-form samples (each depth's narrowing is exact). Feature
-    aggregation tail is identical to ``audio_features_sql``."""
-    from ..operators.multimodal import _IMA_STEP, AUDIO_RATE
-
-    step_list = ", ".join(str(int(v)) for v in _IMA_STEP)
-    # g711.c ulaw2linear / alaw2linear over the staged code byte c
-    # (c = ~b for mu-law, b XOR 0x55 for A-law; staged in g1)
-    ulaw_mag = "((((c & 15) << 3) + 132) << ((c >> 4) & 7))"
-    alaw_mag = (
-        "(CASE WHEN (c >> 4) & 7 = 0 THEN ((c & 15) << 4) + 8"
-        f" ELSE (((c & 15) << 4) + 264) << (((c >> 4) & 7) - 1) END)"
-    )
-    return f"""WITH RECURSIVE
-mm AS (SELECT unnest(range({n})) AS media_id),
-seeds AS (
-  SELECT media_id,
-         {sql64.md5_u64("'aud:' || media_id")} AS s,
-         media_id % 6 AS codec,
-         (600 + (media_id * 37) % 300)::BIGINT AS nb,
-         (2 * (300 + (media_id * 29) % 150))::BIGINT AS nnib,
-         ((media_id * 9973) % 65536 - 32768)::BIGINT AS pred0,
-         ((media_id * 31) % 89)::BIGINT AS idx0,
-         (500 + (media_id * 13) % 200)::BIGINT AS nfs,
-         (400 + (media_id * 17) % 300)::BIGINT AS npc
-  FROM mm
-),
-steps AS (
-  SELECT k, [{step_list}][k + 1]::BIGINT AS step
-  FROM (SELECT unnest(range(89)) AS k)
-),
-g0 AS (
-  SELECT media_id, codec, j, {sql64.add64('s', 'j::UBIGINT')} AS x
-  FROM seeds CROSS JOIN (SELECT unnest(range(900)) AS j) jj
-  WHERE codec IN (0, 1) AND j < nb
-),
-gb AS (
-  SELECT media_id, codec, j,
-         ({sql64.sm64('x')} & 255::UBIGINT)::BIGINT AS b
-  FROM g0
-),
-g1 AS (
-  SELECT media_id, codec, j,
-         CASE WHEN codec = 0 THEN 255 - b ELSE xor(b, 85) END AS c
-  FROM gb
-),
-gsamp AS (
-  SELECT media_id, j AS ord,
-         CASE WHEN codec = 0 THEN
-           CASE WHEN c & 128 > 0 THEN 132 - {ulaw_mag}
-                ELSE {ulaw_mag} - 132 END
-         ELSE
-           CASE WHEN c & 128 > 0 THEN {alaw_mag} ELSE -{alaw_mag} END
-         END AS v
-  FROM g1
-),
-adp AS (SELECT media_id, s, nnib, pred0, idx0 FROM seeds WHERE codec = 2),
-dec(media_id, j, pred, idx) AS (
-  SELECT media_id, 0::BIGINT AS j, pred0 AS pred, idx0 AS idx FROM adp
-  UNION ALL
-  SELECT media_id, j,
-         CASE WHEN nib & 8 > 0 THEN greatest(pred - diff, -32768)
-              ELSE least(pred + diff, 32767) END AS pred,
-         least(greatest(idx + CASE nib & 7
-                 WHEN 4 THEN 2 WHEN 5 THEN 4 WHEN 6 THEN 6 WHEN 7 THEN 8
-                 ELSE -1 END, 0), 88) AS idx
-  FROM (
-    SELECT media_id, j, pred, idx, nib, step,
-           (step >> 3)
-           + CASE WHEN nib & 1 > 0 THEN step >> 2 ELSE 0 END
-           + CASE WHEN nib & 2 > 0 THEN step >> 1 ELSE 0 END
-           + CASE WHEN nib & 4 > 0 THEN step ELSE 0 END AS diff
-    FROM (
-      SELECT media_id, j, pred, idx, step,
-             ({sql64.sm64('x')} & 15::UBIGINT)::BIGINT AS nib
-      FROM (
-        SELECT d.media_id, d.j + 1 AS j, d.pred, d.idx, st.step,
-               {sql64.add64('a.s', 'd.j::UBIGINT')} AS x
-        FROM dec d
-        JOIN adp a ON a.media_id = d.media_id
-        JOIN steps st ON st.k = d.idx
-        WHERE d.j < a.nnib
-      ) p
-    ) q
-  ) r
-),
-f0 AS (
-  SELECT media_id, j, {sql64.add64('s', 'j::UBIGINT')} AS x
-  FROM seeds CROSS JOIN (SELECT unnest(range(700)) AS j) fj
-  WHERE codec IN (3, 4) AND j < nfs
-),
-fs AS (
-  SELECT media_id, j AS ord,
-         ({sql64.sm64('x')} & 2047::UBIGINT)::BIGINT - 1024 AS v
-  FROM f0
-),
-p0 AS (
-  SELECT media_id, j, {sql64.add64('s', 'j::UBIGINT')} AS x
-  FROM seeds CROSS JOIN (SELECT unnest(range(700)) AS j) pj
-  WHERE codec = 5 AND j < npc
-),
-ps AS (
-  SELECT media_id, j AS ord,
-         ({sql64.sm64('x')} & 32767::UBIGINT)::BIGINT - 16384 AS v
-  FROM p0
-),
-samp AS (
-  SELECT media_id, ord, v FROM gsamp
-  UNION ALL
-  SELECT media_id, j AS ord, pred AS v FROM dec
-  UNION ALL
-  SELECT media_id, ord, v FROM fs
-  UNION ALL
-  SELECT media_id, ord, v FROM ps
-),
-lagged AS (
-  SELECT media_id, v,
-         lag(v) OVER (PARTITION BY media_id ORDER BY ord) AS pv
-  FROM samp
-)
-SELECT media_id,
-       count(*)::BIGINT AS n_samples,
-       {AUDIO_RATE}::INT AS sample_rate,
-       max(abs(v))::BIGINT AS peak,
-       sum(CASE WHEN pv IS NOT NULL AND (pv >= 0) <> (v >= 0)
-                THEN 1 ELSE 0 END)::BIGINT AS zero_crossings,
-       round(sqrt(sum(v * v)::DOUBLE / count(*)), 6) AS rms,
-       round(sum(abs(v))::DOUBLE / count(*), 6) AS mean_amp
-FROM lagged GROUP BY media_id"""
 
 
 # --- similarity-search oracles ---------------------------------------------
@@ -2073,52 +1889,6 @@ chain AS (
 )
 SELECT doc_id AS rank, superficial, data_hash, grp, retained
 FROM chain WHERE rn >= 1"""
-
-
-def audio_containers_sql(n: int = 64) -> str:
-    """Exact oracle for ``multimodal.audio_features(fake=False)`` over
-    ``synth_container_audio_media`` — Ogg-FLAC / AIFF / AIFF-C sowt /
-    Sun AU rows. Containers only wrap sample streams and every row
-    carries the SAME closed-form signal (sample ``j`` =
-    ``(splitmix64(md5('cont:'||id) + j) & 8191) - 4096``), so this twin
-    is branch-free: the Spark side must demux real Ogg pages (CRC +
-    lacing, continued packets), IFF chunks (80-bit extended rates) and
-    AU headers to reach values this SQL states directly. Feature
-    aggregation tail is identical to ``audio_features_sql``."""
-    from ..operators.multimodal import AUDIO_RATE
-
-    return f"""WITH
-mm AS (SELECT unnest(range({n})) AS media_id),
-seeds AS (
-  SELECT media_id,
-         {sql64.md5_u64("'cont:' || media_id")} AS s,
-         (450 + (media_id * 23) % 350)::BIGINT AS nc
-  FROM mm
-),
-s0 AS (
-  SELECT media_id, j, {sql64.add64('s', 'j::UBIGINT')} AS x, nc
-  FROM seeds CROSS JOIN (SELECT unnest(range(800)) AS j) jj
-  WHERE j < nc
-),
-samp AS (
-  SELECT media_id, j AS ord,
-         ({sql64.sm64('x')} & 8191::UBIGINT)::BIGINT - 4096 AS v
-  FROM s0
-),
-lagged AS (
-  SELECT media_id, v,
-         lag(v) OVER (PARTITION BY media_id ORDER BY ord) AS pv
-  FROM samp
-)
-SELECT media_id,
-       count(*)::BIGINT AS n_samples,
-       {AUDIO_RATE}::INT AS sample_rate,
-       max(abs(v))::BIGINT AS peak,
-       sum(CASE WHEN pv IS NOT NULL AND (pv >= 0) <> (v >= 0)
-                THEN 1 ELSE 0 END)::BIGINT AS zero_crossings,
-       round(sqrt(sum(v * v)::DOUBLE / count(*)), 6) AS rms,
-       round(sum(abs(v))::DOUBLE / count(*), 6) AS mean_amp
-FROM lagged GROUP BY media_id"""
 
 
 def datacard_sql() -> str:

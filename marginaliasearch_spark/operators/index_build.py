@@ -103,16 +103,6 @@ def _stem_lexicon(batches):
         yield pdf
 
 
-_TIMING = os.environ.get("MSQ_BUILD_TIMING", "") == "1"
-
-
-def _mark(t0: float, label: str) -> float:
-    now = time.time()
-    if _TIMING:
-        print(f"[build_index] {label}: {now - t0:.1f}s", flush=True)
-    return now
-
-
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -141,7 +131,6 @@ def build_index(
     # tokenize+assembly shuffle is paid once and survives a crash; on a
     # cluster this is an Iceberg staging table / snapshot). The _SUCCESS
     # marker parquet leaves behind is the commit record.
-    tmark = time.time()
     journal_done = os.path.exists(os.path.join(paths.journal, "_SUCCESS"))
     if not journal_done:
         shutil.rmtree(paths.journal, ignore_errors=True)  # clear torn write
@@ -149,7 +138,6 @@ def build_index(
             "overwrite"
         ).parquet(paths.journal)
     journal = spark.read.parquet(paths.journal)
-    tmark = _mark(tmark, "journal")
 
     # Step 1 — forward index + lexicon + corpus stats
     stats_done = os.path.exists(paths.corpus_stats)
@@ -204,7 +192,7 @@ def build_index(
                 "lang_doc_counts": {r["lang"]: r["cnt"] for r in lang_rows},
             },
         )
-    tmark = _mark(tmark, "stats")
+
     # Step 2 — postings buckets (independently committed lineage units)
     lexicon_df = spark.read.parquet(paths.lexicon).select("term_id")
     terms = journal.filter(F.col("term").isNotNull())
@@ -265,7 +253,6 @@ def build_index(
                 "status": "committed",
             },
         )
-        tmark = _mark(tmark, f"bucket {b}")
         committed += 1
         if fail_after_bucket is not None and committed >= fail_after_bucket:
             raise RuntimeError(f"injected failure after {committed} buckets")
@@ -312,7 +299,6 @@ def build_index(
             .partitionBy("lang")
             .parquet(paths.prio)
         )
-    tmark = _mark(tmark, "prio tier")
 
     # Step 3 — per-term score bounds for block-max WAND pruning: the global
     # max tf-norm per term (score ub = idf * max_tf_norm). Tiny aggregation
@@ -323,7 +309,6 @@ def build_index(
             F.max("max_tf_norm").alias("max_tf_norm"),
             F.count("*").alias("n_blocks"),
         ).coalesce(1).write.mode("overwrite").parquet(paths.term_bounds)
-    tmark = _mark(tmark, "term_bounds")
     return paths
 
 
@@ -730,15 +715,11 @@ def compact_index(
         ("full", None, True),
         ("prio", out.prio, False),
     ):
-        if tier == "full":
-            source = read_postings(spark, src)
-        else:
-            if not os.path.exists(os.path.join(src.prio, "_SUCCESS")):
-                continue
-            try:
-                source = spark.read.parquet(src.prio)
-            except Exception:
-                continue
+        source = (
+            read_postings(spark, src) if tier == "full" else read_prio(spark, src)
+        )
+        if source is None:
+            continue
         langs = [r["lang"] for r in source.select("lang").distinct().collect()]
         parts = [
             _rows(source.filter(F.col("lang") == L), L, with_positions)
@@ -874,3 +855,22 @@ def read_postings(spark: SparkSession, paths: IndexPaths) -> DataFrame:
     return spark.read.option("basePath", paths.postings).parquet(
         *[paths.bucket_dir(m["partition_id"]) for m in read_manifest(paths)]
     )
+
+
+def read_prio(spark: SparkSession, paths: IndexPaths) -> DataFrame | None:
+    """The priority tier, or None when the index has none.
+
+    Absent means no committed tier (no ``_SUCCESS``) or a committed tier
+    with no parquet file, which is what a corpus with no flagged turns
+    writes. Any other read error propagates: silently dropping an
+    unreadable tier would lose every flag-gated hit, and ``compact_index``
+    would then write an index with no tier at all."""
+    if not os.path.exists(os.path.join(paths.prio, "_SUCCESS")):
+        return None
+    if not any(
+        fn.endswith(".parquet")
+        for _dir, _subdirs, files in os.walk(paths.prio, followlinks=True)
+        for fn in files
+    ):
+        return None
+    return spark.read.parquet(paths.prio)

@@ -1,14 +1,14 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Image/audio/video payloads are carried as ``binary`` columns with typed
+Image and video payloads are carried as ``binary`` columns with typed
 metadata; decode / feature-extraction / frame-sample run as Arrow-batched
 ``mapInPandas`` kernels. Real decoders (pure numpy + stdlib, no codec
 libs): binary PPM, uncompressed 24-bit BMP, PNG (zlib inflate +
 full scanline-filter reconstruction), GIF87a/89a (variable-width LZW,
-interlace, local color tables), PCM WAV, G.711 μ-law/A-law WAV, mono
-IMA ADPCM WAV, and y4m. Perceptually-coded formats (JPEG/MP3/H.264/...)
-raise ``NotImplementedError`` — this container ships no codec libs;
-``fake=True`` selects a deterministic
+interlace, local color tables), baseline + progressive JPEG, baseline
+TIFF, and the y4m, AVI-MJPEG and animated-GIF video containers. Other
+formats raise ``NotImplementedError`` — this container ships no codec
+libs; ``fake=True`` selects a deterministic
 fake decoder (content-hash-seeded splitmix64 pixels) that exercises the
 full Spark plumbing — schema, batching, partitioning.
 
@@ -2047,810 +2047,6 @@ def resize_summary(resized: DataFrame) -> DataFrame:
     )
 
 
-AUDIO_RATE = 8000  # fake-decoder sample rate (Hz)
-
-
-def _build_ulaw_table() -> np.ndarray:
-    """256-entry μ-law → linear int16 table (Sun g711.c ``ulaw2linear``:
-    t = ((mantissa << 3) + BIAS) << exponent with BIAS 0x84; sign bit
-    selects BIAS − t). Byte 0xFF decodes to 0, byte 0x00 to −32124."""
-    u = (~np.arange(256, dtype=np.int64)) & 0xFF
-    t = (((u & 0x0F) << 3) + 0x84) << ((u >> 4) & 7)
-    return np.where(u & 0x80, 0x84 - t, t - 0x84)
-
-
-def _build_alaw_table() -> np.ndarray:
-    """256-entry A-law → linear int16 table (Sun g711.c ``alaw2linear``:
-    XOR 0x55, segment 0 → (mant << 4) + 8, else ((mant << 4) + 0x108) <<
-    (seg − 1); sign bit SET means positive). Byte 0x55 decodes to −8,
-    byte 0xAA to +8, extremes reach ±32256."""
-    a = np.arange(256, dtype=np.int64) ^ 0x55
-    seg = (a >> 4) & 7
-    t = (a & 0x0F) << 4
-    mag = np.where(seg == 0, t + 8, (t + 0x108) << np.maximum(seg - 1, 0))
-    return np.where(a & 0x80, mag, -mag)
-
-
-_ULAW_TABLE = _build_ulaw_table()
-_ALAW_TABLE = _build_alaw_table()
-
-# IMA/DVI ADPCM quantizer step table (89 entries) and index-adjust table —
-# constants from the IMA Digital Audio Compatibility spec (public).
-_IMA_STEP = np.array(
-    [7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-     41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-     190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-     724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-     2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-     6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-     16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767],
-    dtype=np.int64,
-)
-_IMA_INDEX_ADJ = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int64)
-
-
-def _ima_adpcm_decode_block(
-    nibbles: np.ndarray, pred: int, idx: int
-) -> list[int]:
-    """One mono IMA ADPCM block: header predictor is emitted as sample 0,
-    then one sample per 4-bit code. Sequential by construction (each
-    step's quantizer state depends on the previous) — the per-payload
-    loop is linear and payloads parallelize across rows in mapInPandas."""
-    out = [pred]
-    for n in nibbles:
-        step = int(_IMA_STEP[idx])
-        diff = step >> 3
-        if n & 1:
-            diff += step >> 2
-        if n & 2:
-            diff += step >> 1
-        if n & 4:
-            diff += step
-        pred = pred - diff if n & 8 else pred + diff
-        pred = max(-32768, min(32767, pred))
-        idx = max(0, min(88, idx + int(_IMA_INDEX_ADJ[n & 7])))
-        out.append(pred)
-    return out
-
-
-def _ima_adpcm_decode(data: bytes, block_align: int) -> np.ndarray:
-    """Mono IMA ADPCM data chunk → int64 samples. Each ``block_align``-byte
-    block: int16 LE initial predictor, uint8 step index, reserved byte,
-    then two 4-bit codes per byte (LOW nibble first, per RIFF spec)."""
-    if block_align < 4:
-        raise ValueError("IMA ADPCM block_align must be >= 4")
-    out: list[int] = []
-    for off in range(0, len(data), block_align):
-        block = data[off : off + block_align]
-        if len(block) < 4:
-            break
-        pred = int.from_bytes(block[0:2], "little", signed=True)
-        idx = min(88, block[2])
-        body = np.frombuffer(block[4:], dtype=np.uint8).astype(np.int64)
-        nibbles = np.empty(2 * len(body), dtype=np.int64)
-        nibbles[0::2] = body & 0x0F
-        nibbles[1::2] = body >> 4
-        out.extend(_ima_adpcm_decode_block(nibbles, pred, idx))
-    return np.asarray(out, dtype=np.int64)
-
-
-def _wav_header(
-    fmt_tag: int,
-    bits: int,
-    block_align: int,
-    data_len: int,
-    sample_rate: int,
-    fact_samples: int | None = None,
-) -> bytes:
-    """RIFF/WAVE header for a mono stream (fmt + optional fact chunk)."""
-    fmt = (
-        fmt_tag.to_bytes(2, "little")
-        + (1).to_bytes(2, "little")  # channels
-        + sample_rate.to_bytes(4, "little")
-        + (sample_rate * block_align).to_bytes(4, "little")  # byte rate
-        + block_align.to_bytes(2, "little")
-        + bits.to_bytes(2, "little")
-    )
-    chunks = b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-    if fact_samples is not None:
-        chunks += b"fact" + (4).to_bytes(4, "little") + fact_samples.to_bytes(
-            4, "little"
-        )
-    riff_len = 4 + len(chunks) + 8 + data_len + (data_len & 1)
-    return (
-        b"RIFF" + riff_len.to_bytes(4, "little") + b"WAVE" + chunks
-        + b"data" + data_len.to_bytes(4, "little")
-    )
-
-
-def encode_wav_g711(
-    codes: np.ndarray | bytes, law: str, sample_rate: int = AUDIO_RATE
-) -> bytes:
-    """G.711 code bytes → mono WAV payload (format tag 7 μ-law / 6 A-law,
-    8 bits per sample). The codes are stored verbatim — G.711 WAV *is*
-    the code stream, so decode(encode(codes)) == table[codes] exactly."""
-    data = bytes(np.asarray(codes, dtype=np.uint8).tobytes()) if not isinstance(
-        codes, bytes
-    ) else codes
-    tag = {"ulaw": 7, "alaw": 6}[law]
-    payload = _wav_header(tag, 8, 1, len(data), sample_rate) + data
-    return payload + (b"\x00" if len(data) & 1 else b"")
-
-
-def encode_wav_ima_adpcm(
-    nibbles: np.ndarray,
-    pred0: int,
-    idx0: int,
-    sample_rate: int = AUDIO_RATE,
-) -> bytes:
-    """4-bit IMA ADPCM codes → single-block mono WAV payload (format tag
-    0x11). ``nibbles`` must have even length; the block header carries
-    ``(pred0, idx0)`` and the fact chunk pins ``len(nibbles) + 1``
-    samples (header sample + one per code)."""
-    nib = np.asarray(nibbles, dtype=np.int64)
-    if len(nib) % 2:
-        raise ValueError("IMA ADPCM nibble count must be even")
-    body = (nib[0::2] & 0x0F) | ((nib[1::2] & 0x0F) << 4)
-    data = (
-        int(pred0).to_bytes(2, "little", signed=True)
-        + bytes([int(idx0) & 0xFF, 0])
-        + body.astype(np.uint8).tobytes()
-    )
-    block_align = len(data)
-    payload = (
-        _wav_header(
-            0x11, 4, block_align, len(data), sample_rate,
-            fact_samples=len(nib) + 1,
-        )
-        + data
-    )
-    return payload + (b"\x00" if len(data) & 1 else b"")
-
-
-def encode_wav_pcm(
-    samples: np.ndarray, bits: int = 16, sample_rate: int = AUDIO_RATE
-) -> bytes:
-    """int16-range mono samples → PCM WAV at 16/24/32-bit integer or
-    ``bits='f32'`` IEEE-float depth. Widening shifts left so the
-    decoder's narrowing (``>> 8`` / ``>> 16``) round-trips exactly;
-    float samples are ``v / 32767`` so round-to-nearest round-trips too."""
-    s = np.asarray(samples, dtype=np.int64)
-    if bits == "f32":
-        data = (s.astype(np.float64) / 32767.0).astype("<f4").tobytes()
-        return _wav_header(3, 32, 4, len(data), sample_rate) + data
-    if bits == 16:
-        data = s.astype("<i2").tobytes()
-    elif bits == 24:
-        v = (s << 8) & 0xFFFFFF
-        b3 = np.stack([v & 255, (v >> 8) & 255, (v >> 16) & 255], axis=1)
-        data = b3.astype(np.uint8).tobytes()
-    elif bits == 32:
-        data = (s << 16).astype("<i4").tobytes()
-    else:
-        raise ValueError(f"unsupported PCM depth {bits}")
-    payload = _wav_header(1, int(bits), int(bits) // 8, len(data), sample_rate)
-    return payload + data + (b"\x00" if len(data) & 1 else b"")
-
-
-def _decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """RIFF/WAVE → (int16-range mono samples as int64, sample_rate).
-
-    Walks the chunk list (``fmt ``/``fact``/``data``; other chunks
-    skipped). Supported format tags — all pure numpy/stdlib:
-
-    * 1 (PCM), 8/16/24/32-bit, any channel count (channel 0 is taken —
-      deterministic, no resample/mix; 24/32-bit keep the top 16 bits)
-    * 3 (IEEE float32) — scaled to int16 range, rounded to nearest
-    * 6 (G.711 A-law) and 7 (G.711 μ-law), mono — table decode with the
-      Sun ``g711.c`` reference semantics (public domain)
-    * 0x11 (IMA/DVI ADPCM), mono, 4-bit — block-structured decode per the
-      IMA ADPCM spec, truncated to the ``fact`` sample count when present
-
-    Perceptually-coded tags (MP3/float/extensible) raise
-    ``NotImplementedError`` — this container ships no codec libs.
-    """
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos, fmt, data, fact = 12, None, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        elif cid == b"fact":
-            fact = int.from_bytes(body[0:4], "little")
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    audio_format = int.from_bytes(fmt[0:2], "little")
-    channels = int.from_bytes(fmt[2:4], "little")
-    sample_rate = int.from_bytes(fmt[4:8], "little")
-    block_align = int.from_bytes(fmt[12:14], "little")
-    bits = int.from_bytes(fmt[14:16], "little")
-    if audio_format in (6, 7):  # G.711 A-law / μ-law
-        if channels != 1:
-            raise NotImplementedError("G.711 WAV: mono only")
-        table = _ALAW_TABLE if audio_format == 6 else _ULAW_TABLE
-        return table[np.frombuffer(data, dtype=np.uint8)], sample_rate
-    if audio_format == 0x11:  # IMA/DVI ADPCM
-        if channels != 1 or bits != 4:
-            raise NotImplementedError("IMA ADPCM WAV: mono 4-bit only")
-        samples = _ima_adpcm_decode(data, block_align)
-        if fact is not None:
-            samples = samples[:fact]
-        return samples, sample_rate
-    if audio_format not in (1, 3):
-        raise NotImplementedError(
-            f"WAV format tag {audio_format} not supported; perceptual "
-            "codecs require codec libraries not present in this container"
-        )
-    if audio_format == 3:  # IEEE float32, rounded to nearest
-        if bits != 32:
-            raise NotImplementedError(f"{bits}-bit float WAV not supported")
-        f = np.frombuffer(data, dtype="<f4", count=len(data) // 4)
-        samples = np.clip(f.astype(np.float64) * 32767.0, -32768, 32767)
-        samples = np.rint(samples).astype(np.int64)
-    elif bits == 16:
-        samples = np.frombuffer(data, dtype="<i2", count=len(data) // 2)
-    elif bits == 8:  # 8-bit WAV is unsigned, midpoint 128
-        samples = (
-            np.frombuffer(data, dtype=np.uint8).astype(np.int16) - 128
-        ) * 256
-    elif bits == 24:  # 3-byte little-endian signed → 16-bit scale
-        b3 = np.frombuffer(data, dtype=np.uint8, count=len(data) // 3 * 3)
-        b3 = b3.reshape(-1, 3).astype(np.int64)
-        v = b3[:, 0] | (b3[:, 1] << 8) | (b3[:, 2] << 16)
-        samples = (v - ((v >> 23) & 1) * (1 << 24)) >> 8
-    elif bits == 32:  # 32-bit int → 16-bit scale
-        samples = np.frombuffer(data, dtype="<i4").astype(np.int64) >> 16
-    else:
-        raise NotImplementedError(f"{bits}-bit PCM WAV not supported")
-    if channels > 1:
-        samples = samples[: len(samples) // channels * channels]
-        samples = samples.reshape(-1, channels)[:, 0]
-    return samples.astype(np.int64), sample_rate
-
-
-@_malformed_to_valueerror("audio")
-def decode_audio(
-    payload: bytes, fake: bool = False, n_samples: int | None = None
-) -> tuple[np.ndarray, int]:
-    """payload → (int64 mono samples in [-32768, 32767], sample_rate).
-
-    Real decoder (pure numpy, no external libs): RIFF/WAVE PCM 8/16-bit,
-    G.711 μ-law/A-law (tags 7/6), and mono IMA ADPCM (tag 0x11).
-    Perceptual codecs raise ``NotImplementedError``. ``fake=True`` is the
-    deterministic content-hash decoder used by the SQL-twinned oracles:
-    sample ``i`` = low 16 bits of ``splitmix64(md5seed + i)`` minus 32768,
-    ``n_samples`` supplied by the caller (duration-derived).
-    """
-    if fake:
-        if n_samples is None:
-            raise ValueError("fake decode needs n_samples")
-        seed = _seed_from_payload(payload)
-        idx = np.arange(n_samples, dtype=np.uint64)
-        vals = (_splitmix64(seed + idx) & np.uint64(0xFFFF)).astype(np.int64)
-        return vals - 32768, AUDIO_RATE
-    if payload[:4] == b"RIFF":
-        return _decode_wav(bytes(payload))
-    if payload[:4] == b"fLaC":
-        return decode_flac(bytes(payload))
-    if payload[:4] == b"OggS":
-        return _decode_ogg(bytes(payload))
-    if payload[:4] == b"FORM":
-        return _decode_aiff(bytes(payload))
-    if payload[:4] == b".snd":
-        return _decode_au(bytes(payload))
-    raise NotImplementedError(
-        "perceptually-coded audio requires codec libraries not present in "
-        "this container; supported real formats: RIFF/WAVE PCM "
-        "(8/16/24/32-bit int + float32), G.711 mu-law/A-law, mono IMA "
-        "ADPCM, FLAC (native or Ogg-encapsulated), AIFF/AIFF-C, Sun AU"
-    )
-
-
-AUDIO_SCHEMA = (
-    "media_id long, n_samples long, sample_rate int, peak long, "
-    "zero_crossings long, rms double, mean_amp double"
-)
-
-
-def audio_features(
-    media: DataFrame, fake: bool = True, payload_col: str = "payload"
-) -> DataFrame:
-    """media_id → scalar audio features (sample count, peak, zero-crossing
-    count, RMS, mean |amplitude|), Arrow-batched ``mapInPandas``.
-
-    Float discipline matches the image twin: all accumulation is exact
-    int64 (sum of squares / abs / crossing flags), with a single
-    double-divide (+sqrt) and round(6) at the end — so the DuckDB oracle
-    (``sql_oracles.audio_features_sql``) reproduces values bit-exactly.
-    In fake mode ``n_samples = duration_ms * AUDIO_RATE // 1000``.
-    """
-
-    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                k.split(" ")[0]: []
-                for k in AUDIO_SCHEMA.split(", ")[1:]  # all but media_id
-            }
-            for payload, dur in zip(pdf[payload_col], pdf["duration_ms"]):
-                if fake:
-                    n = int(dur or 0) * AUDIO_RATE // 1000
-                    s, rate = decode_audio(
-                        bytes(payload), fake=True, n_samples=n
-                    )
-                else:
-                    s, rate = decode_audio(bytes(payload))
-                n = len(s)
-                nonneg = s >= 0
-                out["n_samples"].append(n)
-                out["sample_rate"].append(rate)
-                out["peak"].append(int(np.abs(s).max()) if n else 0)
-                out["zero_crossings"].append(
-                    int((nonneg[:-1] != nonneg[1:]).sum()) if n > 1 else 0
-                )
-                out["rms"].append(
-                    round(float(np.sqrt(float((s * s).sum()) / n)), 6)
-                    if n
-                    else 0.0
-                )
-                out["mean_amp"].append(
-                    round(float(np.abs(s).sum()) / n, 6) if n else 0.0
-                )
-            yield pd.DataFrame({"media_id": pdf["media_id"], **out})
-
-    return media.select("media_id", payload_col, "duration_ms").mapInPandas(
-        batch, schema=AUDIO_SCHEMA
-    )
-
-
-# --- FLAC (free lossless audio codec, RFC 9639) -----------------------------
-#
-# Pure Python/numpy bitstream decode: STREAMINFO parse, frame headers
-# (UTF-8 frame numbers, CRC-8/CRC-16 verified), subframes CONSTANT /
-# VERBATIM / FIXED 0-4 / LPC, rice-coded and escape (raw) residual
-# partitions. Lossless integer reconstruction — decode(encode(s)) == s
-# exactly, which is what lets the compressed-audio oracle stay
-# hash-exact. Mono and independent-stereo; mid/side raises.
-
-
-def _crc8(data: bytes) -> int:
-    """CRC-8 poly 0x07 init 0 (FLAC frame-header CRC)."""
-    crc = 0
-    for b in data:
-        crc ^= b
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 else (crc << 1) & 0xFF
-    return crc
-
-
-def _crc16(data: bytes) -> int:
-    """CRC-16 poly 0x8005 init 0 (FLAC frame CRC)."""
-    crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005) & 0xFFFF if crc & 0x8000 else (crc << 1) & 0xFFFF
-    return crc
-
-
-class _FlacBitWriter:
-    """MSB-first bit writer, no byte stuffing (unlike the JPEG writer)."""
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.nbits += nbits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-
-    def write_unary(self, q: int) -> None:
-        """FLAC unary: q zero bits then a one bit."""
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0, "writer not byte-aligned"
-        return bytes(self.buf)
-
-
-class _FlacBitReader:
-    """MSB-first bit reader with byte-position tracking for CRC spans."""
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos  # byte position of the next unread byte
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, nbits: int) -> int:
-        while self.nbits < nbits:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated FLAC bitstream")
-            self.acc = (self.acc << 8) | self.data[self.pos]
-            self.pos += 1
-            self.nbits += 8
-        self.nbits -= nbits
-        v = (self.acc >> self.nbits) & ((1 << nbits) - 1)
-        self.acc &= (1 << self.nbits) - 1
-        return v
-
-    def read_signed(self, nbits: int) -> int:
-        v = self.read(nbits)
-        return v - (1 << nbits) if v >> (nbits - 1) else v
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-        return q
-
-    def align(self) -> None:
-        self.nbits = 0
-        self.acc = 0
-
-
-_FLAC_FIXED_COEFS = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
-
-
-def _flac_residual_read(
-    br: _FlacBitReader, blocksize: int, pred_order: int
-) -> list[int]:
-    """Rice/escape residual section (both 4- and 5-bit param methods)."""
-    method = br.read(2)
-    if method > 1:
-        raise ValueError("reserved FLAC residual coding method")
-    pbits = 4 + method
-    escape = (1 << pbits) - 1
-    porder = br.read(4)
-    nparts = 1 << porder
-    out: list[int] = []
-    for p in range(nparts):
-        count = blocksize >> porder
-        if p == 0:
-            count -= pred_order
-        param = br.read(pbits)
-        if param == escape:
-            raw = br.read(5)
-            for _ in range(count):
-                out.append(br.read_signed(raw) if raw else 0)
-        else:
-            for _ in range(count):
-                zz = (br.read_unary() << param) | br.read(param)
-                out.append((zz >> 1) ^ -(zz & 1))
-    return out
-
-
-def _flac_subframe(
-    br: _FlacBitReader, blocksize: int, bps: int
-) -> np.ndarray:
-    pad = br.read(1)
-    if pad:
-        raise ValueError("invalid FLAC subframe padding bit")
-    stype = br.read(6)
-    wasted = 0
-    if br.read(1):  # wasted-bits flag: unary count - 1
-        wasted = br.read_unary() + 1
-        bps -= wasted
-    if stype == 0:  # CONSTANT
-        samples = [br.read_signed(bps)] * blocksize
-    elif stype == 1:  # VERBATIM
-        samples = [br.read_signed(bps) for _ in range(blocksize)]
-    elif 8 <= stype <= 12:  # FIXED order 0-4
-        order = stype - 8
-        samples = [br.read_signed(bps) for _ in range(order)]
-        res = _flac_residual_read(br, blocksize, order)
-        coefs = _FLAC_FIXED_COEFS[order]
-        for r in res:
-            pred = sum(
-                c * samples[-(j + 1)] for j, c in enumerate(coefs)
-            )
-            samples.append(r + pred)
-    elif stype >= 32:  # LPC order (stype & 31) + 1
-        order = (stype & 31) + 1
-        samples = [br.read_signed(bps) for _ in range(order)]
-        precision = br.read(4) + 1
-        if precision == 16:
-            raise ValueError("invalid FLAC LPC precision escape")
-        shift = br.read_signed(5)
-        coefs = [br.read_signed(precision) for _ in range(order)]
-        res = _flac_residual_read(br, blocksize, order)
-        for r in res:
-            pred = sum(
-                c * samples[-(j + 1)] for j, c in enumerate(coefs)
-            ) >> shift
-            samples.append(r + pred)
-    else:
-        raise ValueError(f"reserved FLAC subframe type {stype}")
-    return np.asarray(samples, dtype=np.int64) << wasted
-
-
-_FLAC_BPS_CODES = {8: 1, 12: 2, 16: 4, 20: 5, 24: 6}
-
-
-def decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
-    """FLAC stream → (int64 mono samples, sample_rate).
-
-    Verifies frame-header CRC-8 and frame CRC-16. Returns the LEFT
-    channel: channel 0 of independent-channel streams, and the
-    reconstructed left of the left/side, right/side and mid/side
-    decorrelated stereo assignments (RFC 9639 §9.1.3; the side
-    subframe carries one extra bit).
-    """
-    if payload[:4] != b"fLaC":
-        raise ValueError("not a FLAC payload")
-    pos = 4
-    sample_rate = bps = 0
-    total = -1
-    while True:  # metadata blocks
-        hdr = payload[pos]
-        length = int.from_bytes(payload[pos + 1 : pos + 4], "big")
-        body = payload[pos + 4 : pos + 4 + length]
-        if hdr & 0x7F == 0:  # STREAMINFO
-            sr_bits = int.from_bytes(body[10:13], "big")
-            sample_rate = sr_bits >> 4
-            bps = (int.from_bytes(body[12:14], "big") >> 4 & 0x1F) + 1
-            total = int.from_bytes(body[13:18], "big") & ((1 << 36) - 1)
-        pos += 4 + length
-        if hdr & 0x80:
-            break
-    out: list[np.ndarray] = []
-    got = 0
-    while (total < 0 or got < total) and pos < len(payload) - 1:
-        frame_start = pos
-        br = _FlacBitReader(payload, pos)
-        sync = br.read(14)
-        if sync != 0b11111111111110:
-            raise ValueError("bad FLAC frame sync")
-        br.read(1)  # reserved
-        br.read(1)  # blocking strategy
-        bs_code = br.read(4)
-        sr_code = br.read(4)
-        chan = br.read(4)
-        bps_code = br.read(3)
-        br.read(1)  # reserved
-        if chan >= 11:
-            raise ValueError(f"reserved FLAC channel assignment {chan}")
-        nchan = 2 if chan >= 8 else chan + 1
-        # UTF-8 coded frame/sample number
-        lead = br.read(8)
-        nfollow = 0
-        while (lead << nfollow) & 0x80 and nfollow < 7:
-            if nfollow == 0 and not lead & 0x80:
-                break
-            nfollow += 1
-        if lead & 0x80:
-            nfollow -= 1  # first 1-bit run counts the total bytes
-            for _ in range(nfollow):
-                br.read(8)
-        if bs_code == 0b0110:
-            blocksize = br.read(8) + 1
-        elif bs_code == 0b0111:
-            blocksize = br.read(16) + 1
-        elif bs_code == 0b0001:
-            blocksize = 192
-        elif 2 <= bs_code <= 5:
-            blocksize = 576 << (bs_code - 2)
-        else:
-            blocksize = 256 << (bs_code - 8)
-        if sr_code in (0b1100, 0b1101, 0b1110):
-            br.read(8 if sr_code == 0b1100 else 16)
-        frame_bps = bps
-        for k, v in _FLAC_BPS_CODES.items():
-            if v == bps_code:
-                frame_bps = k
-        hdr_crc = br.read(8)
-        if _crc8(payload[frame_start : br.pos - 1]) != hdr_crc:
-            raise ValueError("FLAC frame header CRC mismatch")
-        # stereo decorrelation (RFC 9639 §9.1.3): the side channel
-        # carries one extra bit — left/side (8) ch1, right/side (9) ch0,
-        # mid/side (10) ch1
-        side_ch = {8: 1, 9: 0, 10: 1}.get(chan)
-        chans = [
-            _flac_subframe(
-                br, blocksize, frame_bps + (1 if c == side_ch else 0)
-            )
-            for c in range(nchan)
-        ]
-        br.align()
-        frame_crc = br.read(16)
-        if _crc16(payload[frame_start : br.pos - 2]) != frame_crc:
-            raise ValueError("FLAC frame CRC mismatch")
-        if chan == 9:  # right/side: left = right + side
-            out.append(chans[1] + chans[0])
-        elif chan == 10:  # mid/side: mid stored as (l+r)>>1, side = l-r
-            mid2 = (chans[0] << 1) | (chans[1] & 1)
-            out.append((mid2 + chans[1]) >> 1)
-        else:  # independent or left/side: channel 0 IS left
-            out.append(chans[0])
-        got += blocksize
-        pos = br.pos
-    samples = np.concatenate(out) if out else np.zeros(0, dtype=np.int64)
-    if total >= 0:
-        samples = samples[:total]
-    return samples, sample_rate
-
-
-def encode_flac(
-    samples: np.ndarray,
-    order: int,
-    sample_rate: int = AUDIO_RATE,
-    escape_raw: bool | None = None,
-    lpc: tuple[list[int], int] | None = None,
-) -> bytes:
-    """int16 mono samples → single-frame FLAC (FIXED order 0-4 subframe,
-    or an LPC subframe when ``lpc=(coefs, shift)`` is given). Residuals
-    go rice-coded (one partition, tight param) or — when ``escape_raw``
-    (default for order >= 2, where residual range can exceed a sane rice
-    quotient) — as an escape partition of raw signed values. Lossless:
-    ``decode_flac(encode_flac(s, o))[0] == s`` for any order."""
-    s = [int(v) for v in samples]
-    n = len(s)
-    if lpc is not None:
-        coefs, shift = lpc
-        order = len(coefs)
-        res = [
-            s[i]
-            - (sum(c * s[i - 1 - j] for j, c in enumerate(coefs)) >> shift)
-            for i in range(order, n)
-        ]
-    else:
-        coefs = _FLAC_FIXED_COEFS[order]
-        res = [
-            s[i] - sum(c * s[i - 1 - j] for j, c in enumerate(coefs))
-            for i in range(order, n)
-        ]
-    if escape_raw is None:
-        escape_raw = lpc is None and order >= 2
-
-    si = _FlacBitWriter()  # STREAMINFO body
-    si.write(n, 16)  # min blocksize
-    si.write(n, 16)  # max blocksize
-    si.write(0, 24)
-    si.write(0, 24)
-    si.write(sample_rate, 20)
-    si.write(0, 3)  # channels - 1
-    si.write(15, 5)  # bps - 1 = 16-bit
-    si.write(n, 36)
-    info = si.bytes() + b"\x00" * 16  # md5 unset (all zero = unknown)
-    head = b"fLaC" + bytes([0x80, 0, 0, len(info)]) + info
-
-    fw = _FlacBitWriter()
-    fw.write(0b11111111111110, 14)
-    fw.write(0, 1)
-    fw.write(0, 1)  # fixed blocksize strategy
-    fw.write(0b0111, 4)  # blocksize: 16 bit at end of header
-    fw.write(0b0000, 4)  # sample rate: from STREAMINFO
-    fw.write(0, 4)  # mono
-    fw.write(_FLAC_BPS_CODES[16], 3)
-    fw.write(0, 1)
-    fw.write(0, 8)  # frame number 0 (UTF-8 single byte)
-    fw.write(n - 1, 16)
-    hdr = fw.buf + bytearray()  # snapshot for CRC-8 (byte-aligned here)
-    fw.write(_crc8(bytes(hdr)), 8)
-    # subframe header
-    if lpc is not None:
-        fw.write(0, 1)
-        fw.write(32 | (order - 1), 6)
-        fw.write(0, 1)
-    else:
-        fw.write(0, 1)
-        fw.write(8 + order, 6)
-        fw.write(0, 1)
-    for v in s[:order]:  # warmup
-        fw.write(v & 0xFFFF, 16)
-    if lpc is not None:
-        precision = 15
-        fw.write(precision - 1, 4)
-        fw.write(shift & 0x1F, 5)
-        for c in coefs:
-            fw.write(c & ((1 << precision) - 1), precision)
-    fw.write(0, 2)  # rice method: 4-bit params
-    fw.write(0, 4)  # partition order 0
-    if escape_raw:
-        raw = max(
-            (abs(r) + (r >= 0)).bit_length() + 1 for r in res
-        ) if res else 1
-        fw.write(0b1111, 4)
-        fw.write(raw, 5)
-        for r in res:
-            fw.write(r & ((1 << raw) - 1), raw)
-    else:
-        zz = [(r << 1) if r >= 0 else (-(r << 1) - 1) for r in res]
-        param = max((max(zz).bit_length() - 3) if zz and max(zz) else 0, 0)
-        param = min(param, 14)
-        fw.write(param, 4)
-        for z in zz:
-            fw.write_unary(z >> param)
-            if param:
-                fw.write(z & ((1 << param) - 1), param)
-    fw.align()
-    frame = bytes(fw.buf)
-    return head + frame + _crc16(frame).to_bytes(2, "big")
-
-
-def encode_flac_stereo(
-    left: np.ndarray,
-    right: np.ndarray,
-    mode: str = "mid_side",
-    sample_rate: int = AUDIO_RATE,
-) -> bytes:
-    """int16 L/R samples → single-frame stereo FLAC using a decorrelated
-    channel assignment (``left_side`` / ``right_side`` / ``mid_side``,
-    RFC 9639 §9.1.3) with VERBATIM subframes — the fixture writer for
-    ``decode_flac``'s stereo-reconstruction path. Lossless:
-    ``decode_flac(...)[0]`` equals ``left`` exactly."""
-    l = [int(v) for v in left]
-    r = [int(v) for v in right]
-    n = len(l)
-    assert len(r) == n
-    chan_code = {"left_side": 8, "right_side": 9, "mid_side": 10}[mode]
-    if mode == "left_side":
-        chans = [(l, 16), ([a - b for a, b in zip(l, r)], 17)]
-    elif mode == "right_side":
-        chans = [([a - b for a, b in zip(l, r)], 17), (r, 16)]
-    else:
-        chans = [
-            ([(a + b) >> 1 for a, b in zip(l, r)], 16),
-            ([a - b for a, b in zip(l, r)], 17),
-        ]
-
-    si = _FlacBitWriter()  # STREAMINFO body
-    si.write(n, 16)
-    si.write(n, 16)
-    si.write(0, 24)
-    si.write(0, 24)
-    si.write(sample_rate, 20)
-    si.write(1, 3)  # channels - 1
-    si.write(15, 5)  # bps - 1 = 16-bit
-    si.write(n, 36)
-    info = si.bytes() + b"\x00" * 16
-    head = b"fLaC" + bytes([0x80, 0, 0, len(info)]) + info
-
-    fw = _FlacBitWriter()
-    fw.write(0b11111111111110, 14)
-    fw.write(0, 1)
-    fw.write(0, 1)
-    fw.write(0b0111, 4)  # blocksize: 16 bit at end of header
-    fw.write(0b0000, 4)  # sample rate: from STREAMINFO
-    fw.write(chan_code, 4)
-    fw.write(_FLAC_BPS_CODES[16], 3)
-    fw.write(0, 1)
-    fw.write(0, 8)  # frame number 0
-    fw.write(n - 1, 16)
-    fw.write(_crc8(bytes(fw.buf)), 8)
-    for samples, bps in chans:
-        fw.write(0, 1)
-        fw.write(1, 6)  # VERBATIM
-        fw.write(0, 1)
-        for v in samples:
-            fw.write(v & ((1 << bps) - 1), bps)
-    fw.align()
-    frame = bytes(fw.buf)
-    return head + frame + _crc16(frame).to_bytes(2, "big")
-
-
 def _decode_y4m(payload: bytes) -> tuple[np.ndarray, float]:
     """YUV4MPEG2 (.y4m) → (Y planes as ``(n_frames, h, w)`` uint8, fps).
 
@@ -3419,113 +2615,6 @@ def synth_gif_video_media(spark, n: int = 64) -> DataFrame:
     return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
 
-def audio_codec_seed(media_id: int) -> np.uint64:
-    """Closed-form code-stream seed for the compressed-audio fixture —
-    first 8 bytes of ``md5('aud:' || media_id)`` (the SQL twin's
-    ``('0x' || substr(md5('aud:' || media_id), 1, 16))::UBIGINT``)."""
-    return np.uint64(
-        int(hashlib.md5(f"aud:{media_id}".encode()).hexdigest()[:16], 16)
-    )
-
-
-def synth_compressed_audio_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic REAL compressed-audio media table cycling the six
-    supported non-trivial codec paths by ``media_id % 6`` (0 μ-law,
-    1 A-law, 2 IMA ADPCM, 3 mono FLAC, 4 decorrelated-stereo FLAC,
-    5 deep-PCM WAV). For the lossy WAV codecs the *code stream* —
-    not the linear signal — is the closed form, so no encoder pass is
-    needed; for lossless FLAC the samples themselves are closed-form and
-    the encoder derives the fixed-predictor residuals (decode must
-    reproduce them exactly). Either way the SQL twin replays known
-    values without a decoder:
-
-    * G.711: code byte ``j`` = ``splitmix64(audio_codec_seed(i) + j) &
-      255`` over ``600 + (i * 37) % 300`` bytes; decoded sample =
-      g711.c table entry (pure integer bit math in SQL).
-    * IMA ADPCM: 4-bit code ``j`` = ``splitmix64(seed + j) & 15`` over
-      ``2 * (300 + (i * 29) % 150)`` nibbles, block header predictor
-      ``(i * 9973) % 65536 - 32768`` and step index ``(i * 31) % 89``;
-      the SQL twin replays the quantizer recurrence with a recursive CTE.
-    * FLAC: sample ``j`` = ``(splitmix64(seed + j) & 2047) - 1024`` over
-      ``500 + (i * 13) % 200`` samples, FIXED predictor order
-      ``(i // 4) % 5`` (rice residuals for orders 0-1, escape/raw for
-      2-4) — the decoder runs the real rice/escape + predictor path and
-      losslessness makes the closed-form samples the oracle.
-    * Stereo FLAC: LEFT sample ``j`` = the mono-FLAC closed form; right
-      = same form at ``seed + 2^32 + j`` (only left reaches the output);
-      decorrelation mode cycles left/right/mid-side by ``(i // 6) % 3``,
-      so the decoder runs the real side-channel (bps+1) reconstruction.
-    * Deep PCM: sample ``j`` = ``(splitmix64(seed + j) & 32767) - 16384``
-      over ``400 + (i * 17) % 300`` samples at depth 24 / 32 / float32
-      by ``(i // 6) % 3`` — each depth's narrowing back to the 16-bit
-      scale is exact, so the closed-form samples are the oracle.
-
-    Entries running ``fake=False`` over this table exercise the genuine
-    chunk-walk + table/recurrence/bitstream decode paths while staying
-    hash-exact against DuckDB (``sql_oracles.audio_compressed_sql``).
-    """
-    rows = []
-    for i in range(n):
-        seed = audio_codec_seed(i)
-        codec = i % 6
-        if codec in (0, 1):
-            nb = 600 + (i * 37) % 300
-            idx = np.arange(nb, dtype=np.uint64)
-            codes = (_splitmix64(seed + idx) & np.uint64(255)).astype(
-                np.uint8
-            )
-            payload = encode_wav_g711(
-                codes, "ulaw" if codec == 0 else "alaw"
-            )
-            mime = "audio/basic" if codec == 0 else "audio/x-alaw"
-        elif codec == 2:
-            nnib = 2 * (300 + (i * 29) % 150)
-            idx = np.arange(nnib, dtype=np.uint64)
-            nibbles = (_splitmix64(seed + idx) & np.uint64(15)).astype(
-                np.int64
-            )
-            payload = encode_wav_ima_adpcm(
-                nibbles, (i * 9973) % 65536 - 32768, (i * 31) % 89
-            )
-            mime = "audio/x-adpcm"
-        elif codec == 3:
-            nfs = 500 + (i * 13) % 200
-            idx = np.arange(nfs, dtype=np.uint64)
-            samples = (
-                (_splitmix64(seed + idx) & np.uint64(2047)).astype(np.int64)
-                - 1024
-            )
-            payload = encode_flac(samples, (i // 4) % 5)
-            mime = "audio/flac"
-        elif codec == 4:
-            nfs = 500 + (i * 13) % 200
-            idx = np.arange(nfs, dtype=np.uint64)
-            left = (
-                (_splitmix64(seed + idx) & np.uint64(2047)).astype(np.int64)
-                - 1024
-            )
-            right = (
-                (_splitmix64(seed + np.uint64(1 << 32) + idx)
-                 & np.uint64(2047)).astype(np.int64)
-                - 1024
-            )
-            mode = ("left_side", "right_side", "mid_side")[(i // 6) % 3]
-            payload = encode_flac_stereo(left, right, mode)
-            mime = "audio/flac"
-        else:
-            npc = 400 + (i * 17) % 300
-            idx = np.arange(npc, dtype=np.uint64)
-            samples = (
-                (_splitmix64(seed + idx) & np.uint64(32767)).astype(np.int64)
-                - 16384
-            )
-            bits = (24, 32, "f32")[(i // 6) % 3]
-            payload = encode_wav_pcm(samples, bits)
-            mime = "audio/wav"
-        rows.append((i, "audio", bytearray(payload), mime, 0, 0, 0))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
 def synth_media(spark, n: int = 64) -> DataFrame:
     """Deterministic fake media table, regenerable in pure SQL
     (sql_oracles.media_ctes): payload = 64 md5-chained bytes, metadata
@@ -3550,403 +2639,3 @@ def synth_media(spark, n: int = 64) -> DataFrame:
             )
         )
     return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-# --- audio container formats (Ogg-FLAC, AIFF / AIFF-C, Sun AU) --------------
-#
-# Pure-stdlib/numpy container demux around the existing sample decoders:
-# Ogg page framing (RFC 3533: capture pattern, lacing values, CRC-32,
-# continued-packet reassembly) with the FLAC-in-Ogg mapping (RFC 9639
-# §10.2), EA-IFF-85 chunk walking for AIFF and AIFF-C (80-bit extended
-# sample rate per Apple's AIFF-C 1.3 spec; ``sowt``/``twos`` byte-order
-# compression types), and the Sun/NeXT ``.au`` header (encodings 1 μ-law,
-# 2 linear-8, 3 linear-16 BE). Containers only *wrap* sample streams, so
-# the fixture's closed-form sample law is container-independent and the
-# decode path under test is the framing itself. Reference treats media as
-# opaque binary (SURVEY §2 multimodal brief); no codec libs required.
-
-
-def _build_ogg_crc_table() -> list[int]:
-    """CRC-32 table, poly 0x04C11DB7, MSB-first, init 0, xorout 0 —
-    the Ogg page checksum variant (NOT zlib's reflected CRC-32)."""
-    table = []
-    for i in range(256):
-        r = i << 24
-        for _ in range(8):
-            r = ((r << 1) ^ 0x04C11DB7 if r & 0x80000000 else r << 1) & 0xFFFFFFFF
-        table.append(r)
-    return table
-
-
-_OGG_CRC_TABLE = _build_ogg_crc_table()
-
-
-def _ogg_crc(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _OGG_CRC_TABLE[((crc >> 24) & 0xFF) ^ b]
-    return crc
-
-
-def _ogg_packets(payload: bytes) -> list[bytes]:
-    """Ogg stream → packets of the first logical bitstream, with
-    continued-packet reassembly across pages and per-page CRC verify."""
-    packets: list[bytes] = []
-    partial = bytearray()
-    open_packet = False
-    serial = None
-    pos = 0
-    while pos < len(payload):
-        if payload[pos : pos + 4] != b"OggS":
-            raise ValueError("bad Ogg capture pattern")
-        if payload[pos + 4] != 0:
-            raise NotImplementedError("Ogg stream structure version != 0")
-        htype = payload[pos + 5]
-        page_serial = int.from_bytes(payload[pos + 14 : pos + 18], "little")
-        n_segs = payload[pos + 26]
-        laces = payload[pos + 27 : pos + 27 + n_segs]
-        body_len = sum(laces)
-        page_end = pos + 27 + n_segs + body_len
-        page = bytearray(payload[pos:page_end])
-        want = int.from_bytes(page[22:26], "little")
-        page[22:26] = b"\x00\x00\x00\x00"
-        if _ogg_crc(bytes(page)) != want:
-            raise ValueError("Ogg page CRC mismatch")
-        if serial is None:
-            serial = page_serial
-        if page_serial != serial:  # multiplexed stream: keep the first only
-            pos = page_end
-            continue
-        if bool(htype & 0x01) != open_packet:
-            raise ValueError("Ogg continuation flag inconsistent")
-        body_pos = pos + 27 + n_segs
-        for lace in laces:
-            partial += payload[body_pos : body_pos + lace]
-            body_pos += lace
-            if lace < 255:
-                packets.append(bytes(partial))
-                partial.clear()
-                open_packet = False
-            else:
-                open_packet = True
-        pos = page_end
-    if open_packet:
-        raise ValueError("Ogg stream truncated mid-packet")
-    return packets
-
-
-def _ogg_write_pages(
-    packets: list[tuple[bytes, int]],
-    serial: int = 0x464C4143,
-    max_segs: int = 255,
-) -> bytes:
-    """[(packet, granule_after_packet)] → Ogg pages. ``max_segs`` < 255
-    forces page splits (continued packets) for framing tests. Granule of
-    a page = granule of the last packet that *completes* on it, else -1."""
-    # (lace, chunk, granule)
-    laced: list[tuple[int, bytes, int | None]] = []
-    for packet, granule in packets:
-        chunks = [packet[i : i + 255] for i in range(0, len(packet), 255)]
-        if not chunks or len(chunks[-1]) == 255:
-            chunks.append(b"")  # terminating lace for empty/255-multiple
-        for j, c in enumerate(chunks):
-            last = j == len(chunks) - 1
-            laced.append((len(c), c, granule if last else None))
-    pages = []
-    seq = 0
-    i = 0
-    continued = False
-    while i < len(laced):
-        group = laced[i : i + max_segs]
-        i += len(group)
-        granule = -1
-        for _, _, g in group:
-            if g is not None:
-                granule = g
-        htype = (0x01 if continued else 0) | (0x02 if seq == 0 else 0)
-        if i >= len(laced):
-            htype |= 0x04  # EOS
-        continued = group[-1][0] == 255
-        header = (
-            b"OggS\x00"
-            + bytes([htype])
-            + (granule & 0xFFFFFFFFFFFFFFFF).to_bytes(8, "little")
-            + serial.to_bytes(4, "little")
-            + seq.to_bytes(4, "little")
-            + b"\x00\x00\x00\x00"  # CRC placeholder
-            + bytes([len(group)])
-            + bytes(lace for lace, _, _ in group)
-        )
-        body = b"".join(c for _, c, _ in group)
-        crc = _ogg_crc(header + body)
-        pages.append(header[:22] + crc.to_bytes(4, "little") + header[26:] + body)
-        seq += 1
-    return b"".join(pages)
-
-
-def _decode_ogg(payload: bytes) -> tuple[np.ndarray, int]:
-    """Ogg container → (int64 mono samples, rate). Only the FLAC mapping
-    (RFC 9639 §10.2) is decodable without codec libs: packet 0 is
-    ``0x7F 'FLAC' maj min nheader`` + the native ``fLaC`` signature and
-    STREAMINFO block; ``nheader`` metadata packets follow; every later
-    packet is one native FLAC frame. Reassembles a native stream (forcing
-    the STREAMINFO last-metadata-block flag) and reuses ``decode_flac``."""
-    packets = _ogg_packets(payload)
-    if not packets or packets[0][:5] != b"\x7fFLAC":
-        raise NotImplementedError(
-            "Ogg stream is not FLAC-mapped; Vorbis/Opus require codec "
-            "libraries not present in this container"
-        )
-    first = packets[0]
-    nheader = int.from_bytes(first[7:9], "big")
-    embedded = first[9:]
-    if embedded[:4] != b"fLaC":
-        raise ValueError("Ogg-FLAC first packet lacks fLaC signature")
-    block = embedded[4:]
-    native = (
-        b"fLaC"
-        + bytes([block[0] | 0x80])  # force last-metadata-block
-        + block[1:]
-        + b"".join(packets[1 + nheader :])
-    )
-    return decode_flac(native)
-
-
-def encode_ogg_flac(
-    samples: np.ndarray,
-    order: int = 0,
-    sample_rate: int = AUDIO_RATE,
-    max_segs: int = 255,
-) -> bytes:
-    """int16 mono samples → Ogg-encapsulated FLAC (RFC 9639 §10.2 mapping
-    over the single-frame ``encode_flac`` stream). ``max_segs`` < 255
-    forces multi-page/continued-packet framing for tests. Lossless."""
-    native = encode_flac(samples, order, sample_rate)
-    block = native[4:42]  # STREAMINFO incl. 4-byte block header
-    frames = native[42:]
-    first = (
-        b"\x7fFLAC\x01\x00"
-        + (0).to_bytes(2, "big")  # no extra header packets
-        + b"fLaC"
-        + bytes([block[0] & 0x7F])
-        + block[1:]
-    )
-    n = len(samples)
-    return _ogg_write_pages([(first, 0), (frames, n)], max_segs=max_segs)
-
-
-def _read_ext80(b: bytes) -> int:
-    """80-bit IEEE 754 extended float (AIFF sample rate) → int Hz."""
-    exp = ((b[0] & 0x7F) << 8 | b[1]) - 16383
-    mant = int.from_bytes(b[2:10], "big")
-    if exp == -16383 and mant == 0:
-        return 0
-    # a real sample rate fits comfortably in 32 bits; a corrupted
-    # exponent otherwise overflows the float multiply (OverflowError —
-    # not in the skip allowlist) or yields a nonsense multi-GHz rate
-    if not (-63 <= exp <= 63):
-        raise ValueError(f"AIFF sample-rate exponent unreasonable: {exp}")
-    val = mant * 2.0 ** (exp - 63)
-    return int(round(-val if b[0] & 0x80 else val))
-
-
-def _write_ext80(rate: int) -> bytes:
-    if rate == 0:
-        return b"\x00" * 10
-    k = rate.bit_length() - 1
-    exp = 16383 + k
-    mant = rate << (63 - k)
-    return bytes([(exp >> 8) & 0x7F, exp & 0xFF]) + mant.to_bytes(8, "big")
-
-
-def _decode_aiff(payload: bytes) -> tuple[np.ndarray, int]:
-    """AIFF / AIFF-C → (int64 mono samples at 16-bit scale, rate).
-
-    EA-IFF-85 chunk walk: COMM (channels, frame count, bits, 80-bit
-    extended rate, AIFF-C compression type) + SSND (offset/blockSize then
-    interleaved frames). Supported: uncompressed big-endian (plain AIFF
-    or AIFF-C ``NONE``/``twos``) and little-endian ``sowt``, 8- or 16-bit
-    (AIFF 8-bit is signed, unlike WAV). Channel 0 taken, frame count
-    trims trailing pad."""
-    if payload[:4] != b"FORM" or payload[8:12] not in (b"AIFF", b"AIFC"):
-        raise ValueError("not an AIFF payload")
-    is_aifc = payload[8:12] == b"AIFC"
-    pos = 12
-    comm = ssnd = None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        clen = int.from_bytes(payload[pos + 4 : pos + 8], "big")
-        data = payload[pos + 8 : pos + 8 + clen]
-        if cid == b"COMM":
-            comm = data
-        elif cid == b"SSND":
-            ssnd = data
-        pos += 8 + clen + (clen & 1)
-    if comm is None or ssnd is None:
-        raise ValueError("AIFF missing COMM or SSND chunk")
-    channels = int.from_bytes(comm[0:2], "big", signed=True)
-    n_frames = int.from_bytes(comm[2:6], "big")
-    bits = int.from_bytes(comm[6:8], "big", signed=True)
-    rate = _read_ext80(comm[8:18])
-    comp = comm[18:22] if is_aifc else b"NONE"
-    if comp not in (b"NONE", b"twos", b"sowt"):
-        raise NotImplementedError(
-            f"AIFF-C compression {comp!r} requires codec libraries not "
-            "present in this container"
-        )
-    offset = int.from_bytes(ssnd[0:4], "big")
-    frames = ssnd[8 + offset :]
-    if bits == 16:
-        dt = "<i2" if comp == b"sowt" else ">i2"
-        samples = np.frombuffer(
-            frames, dtype=dt, count=len(frames) // 2
-        ).astype(np.int64)
-    elif bits == 8:  # AIFF 8-bit PCM is SIGNED (WAV's is unsigned)
-        samples = np.frombuffer(frames, dtype=np.int8).astype(np.int64) * 256
-    else:
-        raise NotImplementedError(f"{bits}-bit AIFF not supported")
-    if channels > 1:
-        samples = samples[::channels]
-    return samples[:n_frames], rate
-
-
-def encode_aiff(
-    samples: np.ndarray,
-    compression: bytes | None = None,
-    sample_rate: int = AUDIO_RATE,
-) -> bytes:
-    """int16 samples (1-D mono, or 2-D ``(n_frames, channels)``) → AIFF
-    (``compression=None``) or AIFF-C (``b"NONE"`` / ``b"twos"`` big-endian,
-    ``b"sowt"`` little-endian) payload."""
-    s = np.asarray(samples, dtype=np.int64)
-    if s.ndim == 1:
-        s = s[:, None]
-    n_frames, channels = s.shape
-    inter = s.reshape(-1)
-    data = inter.astype("<i2" if compression == b"sowt" else ">i2").tobytes()
-    comm = (
-        channels.to_bytes(2, "big")
-        + n_frames.to_bytes(4, "big")
-        + (16).to_bytes(2, "big")
-        + _write_ext80(sample_rate)
-    )
-    if compression is not None:
-        comm += compression + b"\x00\x00"  # empty pstring, padded even
-    chunks = b"COMM" + len(comm).to_bytes(4, "big") + comm
-    ssnd = (0).to_bytes(4, "big") + (0).to_bytes(4, "big") + data
-    chunks += b"SSND" + len(ssnd).to_bytes(4, "big") + ssnd
-    if len(ssnd) & 1:
-        chunks += b"\x00"
-    form = (b"AIFC" if compression is not None else b"AIFF") + chunks
-    return b"FORM" + len(form).to_bytes(4, "big") + form
-
-
-def _decode_au(payload: bytes) -> tuple[np.ndarray, int]:
-    """Sun/NeXT ``.au`` → (int64 mono samples at 16-bit scale, rate).
-    Encodings: 1 G.711 μ-law (shared ``_ULAW_TABLE``), 2 linear PCM-8
-    (signed), 3 linear PCM-16 big-endian. Channel 0 taken."""
-    if payload[:4] != b".snd":
-        raise ValueError("not a Sun AU payload")
-    offset = int.from_bytes(payload[4:8], "big")
-    size = int.from_bytes(payload[8:12], "big")
-    enc = int.from_bytes(payload[12:16], "big")
-    rate = int.from_bytes(payload[16:20], "big")
-    channels = int.from_bytes(payload[20:24], "big")
-    end = len(payload) if size == 0xFFFFFFFF else offset + size
-    data = payload[offset:end]
-    if enc == 1:
-        samples = _ULAW_TABLE[np.frombuffer(data, dtype=np.uint8)].astype(
-            np.int64
-        )
-    elif enc == 2:  # 8-bit linear AU is signed
-        samples = np.frombuffer(data, dtype=np.int8).astype(np.int64) * 256
-    elif enc == 3:
-        samples = np.frombuffer(
-            data, dtype=">i2", count=len(data) // 2
-        ).astype(np.int64)
-    else:
-        raise NotImplementedError(
-            f"AU encoding {enc} requires codec libraries not present in "
-            "this container"
-        )
-    if channels > 1:
-        samples = samples[::channels]
-    return samples, rate
-
-
-def encode_au(
-    data: np.ndarray | bytes,
-    encoding: int = 3,
-    sample_rate: int = AUDIO_RATE,
-    channels: int = 1,
-) -> bytes:
-    """Sun AU writer. ``encoding`` 3 takes int16 samples; 1 takes μ-law
-    code bytes verbatim (AU μ-law *is* the code stream); 2 takes int8."""
-    if encoding == 3:
-        body = np.asarray(data, dtype=np.int64).astype(">i2").tobytes()
-    elif encoding == 2:
-        body = np.asarray(data, dtype=np.int8).tobytes()
-    elif encoding == 1:
-        body = bytes(data) if isinstance(data, (bytes, bytearray)) else bytes(
-            np.asarray(data, dtype=np.uint8).tobytes()
-        )
-    else:
-        raise ValueError(f"unsupported AU encoding {encoding}")
-    header = (
-        b".snd"
-        + (28).to_bytes(4, "big")  # header + 4-byte annotation pad
-        + len(body).to_bytes(4, "big")
-        + encoding.to_bytes(4, "big")
-        + sample_rate.to_bytes(4, "big")
-        + channels.to_bytes(4, "big")
-        + b"\x00\x00\x00\x00"
-    )
-    return header + body
-
-
-def container_seed(media_id: int) -> np.uint64:
-    """Closed-form sample seed for the container fixture — first 8 bytes
-    of ``md5('cont:' || media_id)`` (SQL twin:
-    ``('0x' || substr(md5('cont:' || media_id), 1, 16))::UBIGINT``)."""
-    return np.uint64(
-        int(hashlib.md5(f"cont:{media_id}".encode()).hexdigest()[:16], 16)
-    )
-
-
-def synth_container_audio_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic REAL container-format audio table cycling the four
-    supported containers by ``media_id % 4`` (0 Ogg-FLAC, 1 AIFF
-    big-endian, 2 AIFF-C ``sowt`` little-endian, 3 Sun AU PCM-16 BE).
-
-    Every container wraps the SAME closed-form signal — sample ``j`` =
-    ``(splitmix64(container_seed(i) + j) & 8191) - 4096`` over
-    ``450 + (i * 23) % 350`` samples — so the SQL twin
-    (``sql_oracles.audio_containers_sql``) has ONE branch-free closed
-    form and the decode path under test is purely the container framing:
-    Ogg page CRC + lacing reassembly (FLAC predictor order cycles 0-2 by
-    ``(i // 4) % 3``; every third Ogg row uses ``max_segs=3`` to force
-    continued packets across pages), IFF chunk walk + 80-bit extended
-    rate, and the AU header."""
-    rows = []
-    for i in range(n):
-        seed = container_seed(i)
-        nc = 450 + (i * 23) % 350
-        idx = np.arange(nc, dtype=np.uint64)
-        v = (_splitmix64(seed + idx) & np.uint64(8191)).astype(np.int64) - 4096
-        kind = i % 4
-        if kind == 0:
-            segs = 3 if (i // 4) % 3 == 2 else 255
-            payload = encode_ogg_flac(v, order=(i // 4) % 3, max_segs=segs)
-            mime = "audio/ogg"
-        elif kind == 1:
-            payload = encode_aiff(v)
-            mime = "audio/aiff"
-        elif kind == 2:
-            payload = encode_aiff(v, compression=b"sowt")
-            mime = "audio/aiff"
-        else:
-            payload = encode_au(v)
-            mime = "audio/basic"
-        rows.append((i, "audio", bytearray(payload), mime, 0, 0, 0))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-

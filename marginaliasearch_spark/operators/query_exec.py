@@ -52,7 +52,7 @@ from ..functions.scoring import (
     verbatim_bonus,
 )
 from ..plans.parser import ParsedQuery, parse_query
-from .index_build import IndexPaths, read_postings
+from .index_build import IndexPaths, read_postings, read_prio
 from .ingest import PRIORITY_FLAGS, ROLE_FLAG
 
 
@@ -193,11 +193,7 @@ def _collect_ids_u64(df: DataFrame, col: str = "doc_id") -> np.ndarray:
     per-row ``Row`` objects. At the 2M-id ``MAX_DRIVER_CANDIDATES`` cap the
     Row path burned seconds of driver CPU per query; this is the same plan
     with a ~10x cheaper driver step (measured in BASELINE.md)."""
-    try:
-        tbl = df.toArrow()
-        arr = tbl.column(col).to_numpy(zero_copy_only=False)
-    except Exception:  # pragma: no cover - non-Arrow fallback
-        arr = np.fromiter((r[col] for r in df.collect()), dtype=np.int64)
+    arr = df.toArrow().column(col).to_numpy(zero_copy_only=False)
     return np.asarray(arr, dtype=np.int64).astype(np.uint64)
 
 
@@ -211,15 +207,9 @@ class IndexReader:
         self.lexicon = spark.read.parquet(paths.lexicon)
         self.doc_stats = spark.read.parquet(paths.doc_stats)
         # optional priority tier (flagged occurrences only, much smaller);
-        # a corpus with no flagged turns writes an EMPTY lang-partitioned
-        # dir (no parquet files at all), which can't be read — treat as
-        # absent and fall back to the full tier
-        self.prio = None
-        if os.path.exists(os.path.join(paths.prio, "_SUCCESS")):
-            try:
-                self.prio = spark.read.parquet(paths.prio)
-            except Exception:
-                self.prio = None
+        # None when the corpus had no flagged turns — queries then fall
+        # back to the full tier
+        self.prio = read_prio(spark, paths)
         # deletion tombstones (index_build.delete_convs): results must
         # never contain these docs; stats stay pre-deletion until
         # compact_index absorbs them (stale-until-reconstruction, as the

@@ -99,6 +99,53 @@ def test_prio_tier_exists_and_is_smaller(spark, built):
     assert 0 < prio_docs < full_docs
 
 
+def test_unreadable_prio_tier_fails_closed(spark, tmp_path):
+    """A priority tier that cannot be read must raise — in the reader AND
+    in compaction. Treating it as absent would drop every flag-gated hit,
+    and compact_index would write an index with no tier at all."""
+    import glob
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    from marginaliasearch_spark.operators.index_build import compact_index
+
+    root = str(tmp_path / "idx")
+    build_index(spark, bm25_corpus(spark, 40), root, n_buckets=1)
+    prio_dir = IndexPaths(root).prio
+    parts = glob.glob(os.path.join(prio_dir, "**", "part-*"), recursive=True)
+    assert parts
+    for p in parts:
+        with open(p, "wb") as f:
+            f.write(b"not a parquet file")
+    # drop the checksum sidecars so the parquet read itself is what fails
+    for crc in glob.glob(
+        os.path.join(prio_dir, "**", ".part-*.crc"), recursive=True
+    ):
+        os.remove(crc)
+    with pytest.raises(Py4JJavaError):
+        IndexReader(spark, IndexPaths(root))
+    with pytest.raises(Py4JJavaError):
+        compact_index(spark, root, str(tmp_path / "cmp"))
+
+
+def test_no_flagged_turns_means_no_prio_tier(spark, tmp_path):
+    """A corpus without system/tool turns commits an empty tier: the
+    reader treats it as absent and a system gate matches nothing."""
+    import os
+
+    corpus = bm25_corpus(spark, 40).filter(
+        F.col("role").isin("user", "assistant")
+    )
+    root = str(tmp_path / "idx")
+    build_index(spark, corpus, root, n_buckets=1)
+    assert os.path.exists(os.path.join(IndexPaths(root).prio, "_SUCCESS"))
+    reader = IndexReader(spark, IndexPaths(root))
+    assert reader.prio is None
+    assert run_query(reader, "word01 in:system", k=10).collect() == []
+    assert run_query(reader, "word01 in:user", k=10).collect()
+
+
 def test_unknown_gate_raises(spark, built):
     _, reader = built
     with pytest.raises(ValueError, match="unknown role gate"):

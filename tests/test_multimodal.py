@@ -99,6 +99,15 @@ def test_decode_ppm_roundtrip():
     assert np.array_equal(decode_image(_ppm_bytes(img, comment=True)), img)
 
 
+def test_ppm_16bit_floor_scaled():
+    img = np.array(
+        [[[0, 1, 257], [65535, 32768, 999]]], np.uint64
+    )  # 1x2 RGB
+    payload = b"P6 2 1 65535\n" + img.astype(">u2").tobytes()
+    want = (img.astype(np.int64) * 255 // 65535).astype(np.uint8)
+    assert np.array_equal(multimodal.decode_image(payload), want)
+
+
 def test_decode_bmp_roundtrip_with_padding():
     import numpy as np
 
@@ -148,119 +157,6 @@ def test_image_features_over_real_ppm(spark):
     assert got[0]["mean_r"] == got[0]["mean_g"] == got[0]["mean_b"] == 1.0
     assert got[0]["h7"] == 1.0  # 765 // 96 capped at bin 7
     assert got[1]["mean_r"] == 0.0 and got[1]["h0"] == 1.0
-
-
-def _wav_bytes(
-    samples, rate=8000, bits=16, channels=1, fmt=1, extra_chunk=False
-):
-    """Minimal RIFF/WAVE writer (struct-level, no libs) for decoder tests."""
-    import struct
-
-    import numpy as np
-
-    if bits == 16:
-        data = np.asarray(samples, dtype="<i2").tobytes()
-    else:  # 8-bit unsigned
-        data = (np.asarray(samples, dtype=np.int64) // 256 + 128).astype(
-            np.uint8
-        ).tobytes()
-    block = channels * bits // 8
-    fmt_body = struct.pack(
-        "<HHIIHH", fmt, channels, rate, rate * block, block, bits
-    )
-    chunks = b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
-    if extra_chunk:  # odd-length chunk exercises word alignment
-        chunks += b"LIST" + struct.pack("<I", 3) + b"abc\x00"
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def test_decode_wav_roundtrip():
-    import numpy as np
-
-    from marginaliasearch_spark.operators.multimodal import decode_audio
-
-    ramp = np.arange(-500, 500, dtype=np.int64) * 7
-    got, rate = decode_audio(_wav_bytes(ramp, rate=44100))
-    assert rate == 44100
-    assert np.array_equal(got, ramp)
-    # odd-sized chunk before data must be skipped with word alignment
-    got2, _ = decode_audio(_wav_bytes(ramp, extra_chunk=True))
-    assert np.array_equal(got2, ramp)
-
-
-def test_decode_wav_stereo_and_8bit():
-    import numpy as np
-
-    from marginaliasearch_spark.operators.multimodal import decode_audio
-
-    left = np.array([100, -200, 300, -400], dtype=np.int64)
-    right = np.array([1, 2, 3, 4], dtype=np.int64)
-    inter = np.empty(8, dtype=np.int64)
-    inter[0::2], inter[1::2] = left, right
-    got, _ = decode_audio(_wav_bytes(inter, channels=2))
-    assert np.array_equal(got, left)  # channel 0 taken
-    s8 = np.array([0, 256, -256, 32512], dtype=np.int64)
-    got8, _ = decode_audio(_wav_bytes(s8, bits=8))
-    assert np.array_equal(got8, s8)  # 8-bit midpoint-128 scaled back
-
-
-def test_decode_compressed_wav_raises():
-    import numpy as np
-    import pytest as _pytest
-
-    from marginaliasearch_spark.operators.multimodal import decode_audio
-
-    mp3ish = _wav_bytes(np.zeros(4, dtype=np.int64), fmt=85)  # MPEG layer 3
-    with _pytest.raises(NotImplementedError):
-        decode_audio(mp3ish)
-    with _pytest.raises(NotImplementedError):
-        decode_audio(b"\x00\x01not-riff")
-
-
-def test_audio_features_over_real_wav(spark):
-    """audio_features with fake=False over a real PCM WAV payload — same
-    mapInPandas plumbing, real decoder; features checked against numpy."""
-    import numpy as np
-
-    from marginaliasearch_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        audio_features,
-    )
-
-    rng = np.random.default_rng(11)
-    s = rng.integers(-32768, 32768, size=4001, dtype=np.int64)
-    rows = [(0, "audio", bytearray(_wav_bytes(s, rate=16000)),
-             "audio/wav", 0, 0, 0)]
-    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-    r = audio_features(media, fake=False).collect()[0]
-    nonneg = s >= 0
-    assert r["n_samples"] == 4001 and r["sample_rate"] == 16000
-    assert r["peak"] == int(np.abs(s).max())
-    assert r["zero_crossings"] == int((nonneg[:-1] != nonneg[1:]).sum())
-    assert r["rms"] == round(float(np.sqrt(float((s * s).sum()) / 4001)), 6)
-    assert r["mean_amp"] == round(float(np.abs(s).sum()) / 4001, 6)
-
-
-def test_audio_features_fake_matches_duckdb_oracle(spark):
-    """Engine (numpy kernel) vs DuckDB SQL twin, value-exact."""
-    import duckdb
-
-    from marginaliasearch_spark.functions.sql_oracles import audio_features_sql
-    from marginaliasearch_spark.operators import multimodal as mm
-
-    media = mm.synth_media(spark, n=12).filter("kind = 'audio'")
-    got = {
-        r["media_id"]: r
-        for r in mm.audio_features(media, fake=True).collect()
-    }
-    want = duckdb.sql(audio_features_sql(n=12)).fetchall()
-    assert len(want) == len(got) == 4
-    for mid, ns, rate, peak, zc, rms, mean_amp in want:
-        r = got[mid]
-        assert (r["n_samples"], r["sample_rate"], r["peak"],
-                r["zero_crossings"]) == (ns, rate, peak, zc)
-        assert r["rms"] == rms and r["mean_amp"] == mean_amp
 
 
 # --- real (pure-numpy) video decoder: YUV4MPEG2 (.y4m) ----------------------
