@@ -228,14 +228,21 @@ def decode_blocks(
             else None
         )
         if with_positions:
-            flat = decode_positions(b"".join(pdf["positions"].tolist()), tfs)
+            # a block with null positions (a term that needs none) decodes
+            # no position list; its docs get null positions
+            has = pdf["positions"].notna().to_numpy()
+            doc_has = np.repeat(has, n_docs)
+            ptfs = tfs[doc_has].astype(np.int64)
+            flat = decode_positions(b"".join(pdf["positions"][has].tolist()), ptfs)
             if mask is not None:
-                flat = flat[np.repeat(mask, tfs.astype(np.int64))]
+                flat = flat[np.repeat(mask[doc_has], ptfs)]
         if mask is not None:
             doc_ids, tfs, flags = doc_ids[mask], tfs[mask], flags[mask]
             term_ids = term_ids[mask]
             if with_wtf:
                 wtfs = wtfs[mask]
+            if with_positions:
+                doc_has = doc_has[mask]
         if doc_ids.size == 0:
             continue
         data = {
@@ -247,8 +254,12 @@ def decode_blocks(
         if with_wtf:
             data["wtf_q4"] = wtfs.astype(np.int32)
         if with_positions:
-            splits = np.cumsum(tfs.astype(np.int64))[:-1]
-            data["positions"] = np.split(flat.astype(np.int64), splits)
+            splits = np.cumsum(tfs[doc_has].astype(np.int64))[:-1]
+            lists = np.split(flat.astype(np.int64), splits)
+            if not doc_has.all():
+                it = iter(lists)
+                lists = [next(it) if h else None for h in doc_has]
+            data["positions"] = lists
         yield pd.DataFrame(data)
 
 

@@ -635,6 +635,12 @@ def compact_index(
         block_docs = int(stats.get("block_docs", 4096))
     if partitions is None:
         partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # both tiers are opened before anything is written: an unreadable tier
+    # fails here, not after the full tier has been re-encoded into out_root
+    sources = (
+        ("full", read_postings(spark, src), None, True),
+        ("prio", read_prio(spark, src), out.prio, False),
+    )
     os.makedirs(out.root, exist_ok=True)
     doc_len = spark.read.parquet(src.doc_stats).select("doc_id", "doc_len")
     # deletion tombstones are ABSORBED here: tombstoned docs drop out of
@@ -711,13 +717,7 @@ def compact_index(
             .drop("doc_len")
         )
 
-    for tier, out_dir, with_positions in (
-        ("full", None, True),
-        ("prio", out.prio, False),
-    ):
-        source = (
-            read_postings(spark, src) if tier == "full" else read_prio(spark, src)
-        )
+    for tier, source, out_dir, with_positions in sources:
         if source is None:
             continue
         langs = [r["lang"] for r in source.select("lang").distinct().collect()]

@@ -5,15 +5,21 @@ Re-expresses the reference's 4-stage query pipeline
 Ranking) as one DataFrame DAG:
 
 - **plan** (driver, = ``SearchContext`` + ``CombinedIndexReader.createQueries``):
-  look up per-term document frequencies in the lexicon, order include terms
-  rarest-first (``CombinedIndexReader.java:94-97,119-130`` — selectivity
-  ordering is OURS to do; Catalyst cannot reorder a semi-join chain);
-- **lookup** (= EntrySource + ReverseIndexRetainFilter): decode the rarest
-  term's posting blocks into candidates, then for each further term decode
-  *pruned* blocks — the candidate doc-id set is shipped to executors and
-  blocks whose [min_doc, max_doc] window misses all candidates are skipped
-  undecoded (skip-list forward pointers; ``SkipListReader.tryRetainData``);
-- **exclusion** (= ReverseIndexRejectFilter): ``left_anti`` join;
+  look up per-term document frequencies in the lexicon and pick each OR
+  path's rarest term as its driver (``CombinedIndexReader.java:94-97,
+  119-130`` — selectivity ordering is OURS to do);
+- **lookup** (= EntrySource + ReverseIndexRetainFilter): ONE filtered scan
+  and ONE ``mapInPandas`` decode per posting tier reads every term the
+  query names, then a ``groupBy(doc_id)`` pivot lays each term out as
+  columns and keeps the docs where some OR path matched in full. When the
+  other terms' lists are big, the rarest terms' doc ids are collected
+  first and shipped to the decode, which skips blocks whose
+  [min_doc, max_doc] window misses all of them (skip-list forward
+  pointers; ``SkipListReader.tryRetainData``). A lone term with nothing
+  else to read skips the pivot;
+- **exclusion** (= ReverseIndexRejectFilter): an exclusion term is a pivot
+  column of the same scan, kept only where it IS NULL; advisory and
+  ``?priority`` terms are pivot columns too (IS NOT NULL, indicator);
 - **ranking**: per-term BM25 partials as JVM column expressions, aggregated
   over the compiled query's OR-tree as max-over-paths of sum-along-path
   (``CompiledQueryAggregates.intMaxSumAggregateOfIndexes``), then the
@@ -252,6 +258,7 @@ class IndexReader:
         # lexicon three times: wrapper + both phases)
         self._stats_cache: dict[tuple, tuple[int, int] | None] = {}
         self._bounds_cache: dict[int, float | None] = {}
+        self._term_bounds: DataFrame | None = None
         self._searchset_cache: dict[str, DataFrame | None] = {}
 
     def search_set(self, name: str) -> DataFrame | None:
@@ -298,8 +305,11 @@ class IndexReader:
             return {}
         missing = [t for t in term_ids if t not in self._bounds_cache]
         if missing:
-            tb = self.spark.read.parquet(self.paths.term_bounds)
-            rows = tb.filter(F.col("term_id").isin(missing)).collect()
+            # opened on first use and kept: each open is a schema-inference
+            # job, and only AND-shaped WAND queries ever need the table
+            if self._term_bounds is None:
+                self._term_bounds = self.spark.read.parquet(self.paths.term_bounds)
+            rows = self._term_bounds.filter(F.col("term_id").isin(missing)).collect()
             found = {r["term_id"]: float(r["max_tf_norm"]) for r in rows}
             for t in missing:
                 self._bounds_cache[t] = found.get(t)
@@ -348,57 +358,123 @@ class IndexReader:
         term_id: int,
         candidates: np.ndarray | None = None,
         with_positions: bool = False,
-        with_wtf: bool = False,
-        min_tf_norm: float | None = None,
-        top_blocks: int | None = None,
-        first_blocks: int | None = None,
-        tier: str = "full",
         lang: str | None = None,
     ) -> DataFrame:
-        """One term's postings → (doc_id, tf, flags[, positions]).
+        """One term's postings → (doc_id, tf, flags[, positions]); the
+        single-term form of :meth:`decode_terms`."""
+        return self.decode_terms(
+            [term_id],
+            candidates=candidates,
+            positions=[term_id] if with_positions else (),
+            lang=lang,
+        ).drop("term_id")
 
-        The term_id equality predicate prunes parquet row groups via min/max
-        stats (postings files are written sorted by term_id); the candidate
-        array prunes blocks before decode. ``min_tf_norm`` is the block-max
-        WAND cut: blocks whose score upper bound (idf * max_tf_norm) cannot
-        reach the current top-k threshold are skipped at the parquet scan
-        (predicate on the max_tf_norm column → row-group stats pruning).
-        ``top_blocks`` restricts to the N highest-max_tf_norm blocks (the
-        threshold-estimation phase of two-phase top-k). ``first_blocks``
-        restricts to the N lowest-doc-id blocks — with rank-stamped ids
-        (functions/ids.py) those hold the best-quality documents, which is
-        the reference's budgeted-scan semantics (IndexSearchBudget: a
-        truncated scan is sound BECAUSE docID order is quality order).
-        """
+    def _blocks(
+        self,
+        term_ids: list[int],
+        block_filter: dict[int, F.Column] | None,
+        tier: str,
+        lang: str | None,
+    ) -> DataFrame:
+        """The block rows of ``term_ids`` in one tier. The term_id predicate
+        prunes parquet row groups via min/max stats (postings files are
+        written sorted by term_id); a term in ``block_filter`` keeps only
+        the blocks where its predicate holds — one ``term_id = t AND ...``
+        disjunct each, so a ``max_tf_norm`` cut still reaches the scan's
+        pushed filters."""
         source = self.prio if (tier == "prio" and self.prio is not None) else self.postings
-        blocks = source.filter(F.col("term_id") == term_id)
+        cut = sorted(t for t in (block_filter or {}) if t in term_ids)
+        uncut = sorted(set(term_ids) - set(cut))
+        tid = F.col("term_id")
+        pred = [tid.isin(uncut)] if uncut else []
+        pred += [(tid == t) & block_filter[t] for t in cut]
+        blocks = source.filter(reduce(lambda a, b: a | b, pred))
         if lang is not None and "lang" in source.columns:
             # postings are written partitioned by the doc's language, so a
             # lang-scoped query prunes whole lang=... directories at the
             # scan (PartitionFilters) instead of filtering after the join —
             # the per-language reverse index of the reference
             blocks = blocks.filter(F.col("lang") == lang)
-        if min_tf_norm is not None:
-            blocks = blocks.filter(F.col("max_tf_norm") >= min_tf_norm)
-        if top_blocks is not None:
-            blocks = blocks.orderBy(F.desc("max_tf_norm")).limit(top_blocks)
-        if first_blocks is not None:
-            blocks = blocks.orderBy("min_doc").limit(first_blocks)
+        return blocks
+
+    def block_budget(
+        self,
+        term_ids: list[int],
+        top_blocks: int | None = None,
+        first_blocks: int | None = None,
+        block_filter: dict[int, F.Column] | None = None,
+        tier: str = "full",
+        lang: str | None = None,
+    ) -> dict[int, F.Column]:
+        """Each term's block budget as a ``block_filter`` predicate for
+        :meth:`decode_terms`: ``top_blocks`` keeps its N highest-max_tf_norm
+        blocks (the threshold-estimation phase of two-phase top-k),
+        ``first_blocks`` its N lowest-doc-id blocks — with rank-stamped ids
+        (functions/ids.py) those hold the best-quality documents, which is
+        the reference's budgeted-scan semantics (IndexSearchBudget: a
+        truncated scan is sound BECAUSE docID order is quality order).
+
+        One driver-side probe per term ranks its block metadata only
+        (max_tf_norm, min_doc — never the payload; a root-level top-N is a
+        single JVM job) and names each kept block by its ``min_doc``, so
+        the decode stays one plain scan at full parallelism. Blocks already
+        cut by ``block_filter`` are ranked out first, and its predicates
+        are kept.
+        """
+        out = {}
+        for t in term_ids:
+            meta = self._blocks([t], block_filter, tier, lang).select(
+                "max_tf_norm", "min_doc"
+            )
+            if top_blocks is not None:
+                meta = meta.orderBy(F.desc("max_tf_norm"), "min_doc").limit(top_blocks)
+            if first_blocks is not None:
+                meta = meta.orderBy("min_doc").limit(first_blocks)
+            keep = F.col("min_doc").isin(sorted(r["min_doc"] for r in meta.collect()))
+            out[t] = block_filter[t] & keep if t in (block_filter or {}) else keep
+        return out
+
+    def decode_terms(
+        self,
+        term_ids: list[int],
+        candidates: np.ndarray | None = None,
+        positions: tuple[int, ...] | list[int] = (),
+        with_wtf: bool = False,
+        block_filter: dict[int, F.Column] | None = None,
+        tier: str = "full",
+        lang: str | None = None,
+    ) -> DataFrame:
+        """Several terms' postings in ONE scan and ONE decode →
+        (term_id, doc_id, tf, flags[, wtf_q4][, positions]).
+
+        The candidate array prunes blocks before decode. ``block_filter``
+        maps term_id → block predicate (a block-max WAND cut such as
+        ``max_tf_norm >= c``, whose score upper bound idf * max_tf_norm
+        cannot reach the current top-k threshold below it, or a
+        :meth:`block_budget`). Only the ``positions`` terms decode their
+        position lists; the other terms' rows carry null positions.
+        """
+        blocks = self._blocks(term_ids, block_filter, tier, lang)
+        pos = sorted(set(positions) & set(term_ids))
         # column pruning into the parquet scan: the positions payload (the
-        # widest column) is only read when the query needs positions
+        # widest column) is only read when the query needs positions, and
+        # only the positions terms ship it to the decode
         cols = ["term_id", "n_docs", "doc_ids", "tfs", "flags", "min_doc", "max_doc"]
         if with_wtf:
             cols.insert(4, "wtfs")
-        if with_positions:
-            cols.insert(4, "positions")
+        if pos:
+            pcol = F.col("positions")
+            if len(pos) < len(set(term_ids)):
+                pcol = F.when(F.col("term_id").isin(pos), pcol).alias("positions")
+            cols.insert(4, pcol)
         fn = partial(
             decode_blocks,
-            with_positions=with_positions,
+            with_positions=bool(pos),
             with_wtf=with_wtf,
             candidates=candidates,
         )
-        schema = decoded_schema(with_positions, with_wtf)
-        return blocks.select(*cols).mapInPandas(fn, schema=schema).drop("term_id")
+        schema = decoded_schema(bool(pos), with_wtf)
+        return blocks.select(*cols).mapInPandas(fn, schema=schema)
 
 
 def _safe(word: str) -> str:
@@ -452,10 +528,10 @@ def run_query(
     our hash-based doc ids).
 
     ``budget_blocks``: opt-in approximate mode — only the driver term's
-    first N blocks in doc-id order are scanned. With rank-stamped ids this
-    is the reference's budgeted scan (IndexSearchBudget): truncation is
-    sound because docID order is quality order, so the scanned prefix holds
-    the best documents.
+    first N blocks in doc-id order are scanned (ignored on OR queries).
+    With rank-stamped ids this is the reference's budgeted scan
+    (IndexSearchBudget): truncation is sound because docID order is quality
+    order, so the scanned prefix holds the best documents.
     """
     pq = parse_query(query) if isinstance(query, str) else query
     if lang is None:
@@ -492,9 +568,6 @@ def run_query(
     if any(w not in stats for w in pq.advice):
         return empty()
 
-    # ---- candidate generation: rarest term drives, per OR-path union ----
-    # For the common single-path (pure AND) case this is one retain chain;
-    # multi-path queries union per-path candidate sets (U1) then dedup (A6).
     positional = ranking is not None and ranking.positional
     flag_score = ranking is not None and ranking.flag_score
     penalties = ranking is not None and ranking.penalties
@@ -516,37 +589,10 @@ def run_query(
         and reader.prio is not None
     )
 
-    def term_df(
-        word: str, candidates: np.ndarray | None, is_driver: bool = False
-    ) -> DataFrame:
-        tid = stats[word][0]
-        # min_tf_norm cuts apply to EVERY term's scan (block-max pruning on
-        # each leg of an intersection, SkipListReader.java:87 tryRetainData
-        # + block max); top/first-block budgets stay driver-only
-        out = reader.decode_term(
-            tid,
-            candidates=candidates,
-            with_positions=word in need_pos,
-            with_wtf=weighted,
-            min_tf_norm=(_driver_min_tf_norm or {}).get(word),
-            top_blocks=_driver_top_blocks if is_driver else None,
-            first_blocks=budget_blocks if is_driver else None,
-            tier="prio" if (prio_ok and word not in need_pos) else "full",
-            lang=lang,
-        )
-        cols = [F.col("doc_id"), F.col("tf").alias(f"tf_{_safe(word)}")]
-        if weighted:
-            cols.append(F.col("wtf_q4").alias(f"wtf_{_safe(word)}"))
-        if gate_mask or flag_score:
-            cols.append(F.col("flags").alias(f"flags_{_safe(word)}"))
-        if word in need_pos:
-            cols.append(F.col("positions").alias(f"pos_{_safe(word)}"))
-        return out.select(*cols)
-
     # conv: restrictions (F5 doc-range analogue): resolve conversation ids
     # to doc ids via the forward index (tiny driver probe) and seed the
-    # driver term's decode with them — blocks outside the doc-id windows
-    # are skipped undecoded (ReverseIndexRetainDocumentRangeFilter)
+    # postings decode with them — blocks outside the doc-id windows are
+    # skipped undecoded (ReverseIndexRetainDocumentRangeFilter)
     conv_doc_ids: np.ndarray | None = None
     if pq.convs:
         conv_doc_ids = np.sort(
@@ -591,132 +637,130 @@ def run_query(
         if conv_doc_ids.size == 0:
             return empty()
 
-    # the candidate-superset broadcast, if one is made during candidate
-    # generation — reused to prune the exclusion / priority term decodes
-    # below (those joins only care about docs already in the candidate set,
-    # so a head-term ?priority word must not scan its full posting list)
-    cand_bc = None
+    # ---- candidate generation: ONE postings scan per tier, then a pivot ----
+    # Every term the query reads (include, phrase, exclusion, advisory and
+    # priority) comes out of its tier in one filtered scan and one decode;
+    # a groupBy(doc_id) pivot lays each term out as columns, so retain
+    # (ReverseIndexRetainFilter), reject (ReverseIndexRejectFilter), advice
+    # and priority lookups are IS NOT NULL / IS NULL tests on those columns
+    # instead of one decode job and one join per term.
+    excl = sorted({w for w in pq.exclude if w in stats})
+    advice = sorted(set(pq.advice))
+    prio_present = sorted({w for w in pq.priority if w in stats})
+    lookups = set(excl) | set(advice) | set(prio_present)
+    # a gated include term without positions reads the priority tier;
+    # lookups always read the full tier
+    live_tier = {
+        w: "prio" if (prio_ok and w not in need_pos) else "full" for w in live_terms
+    }
+    legs: dict[str, set[str]] = {}
+    for w in live_terms:
+        legs.setdefault(live_tier[w], set()).add(w)
+    if lookups:
+        legs.setdefault("full", set()).update(lookups)
+    # a live term whose rows a lookup also reads keeps all its blocks: a
+    # block-max cut or a block budget would hide rows the lookup must see
+    shared = {w for w in lookups if live_tier.get(w) == "full"}
+    # a doc matching path p contains p's rarest term, so the drivers' doc
+    # ids are a superset of every result; block budgets restrict only them
+    drivers = sorted(
+        {
+            min(sorted(set(p) | need_pos), key=lambda w: (stats[w][1], w))
+            for p in live_paths
+        }
+    )
 
-    def path_candidates(path_terms: list[str]) -> DataFrame:
-        nonlocal cand_bc
-        ordered = sorted(path_terms, key=lambda w: (stats[w][1], w))
-        driver_word = ordered[0]
-        cand = term_df(driver_word, conv_doc_ids, is_driver=True)
-        cand_ids: np.ndarray | None = None
-        # ship the driver's doc ids to the other terms' decode kernels only
-        # when those terms' posting lists are big enough that block skipping
-        # pays for the extra collect job (at small df a plain join is
-        # cheaper; at head-term scale the pruning is the whole ballgame)
-        rest_df = sum(stats[w][1] for w in ordered[1:])
-        if (
-            len(ordered) > 1
-            and stats[driver_word][1] <= MAX_DRIVER_CANDIDATES
-            and rest_df > PRUNE_DF_THRESHOLD
-        ):
-            arr = np.sort(_collect_ids_u64(cand.select("doc_id")))
-            # a broadcast, not a closure capture: at the 2M-id cap this is
-            # 16 MB shipped once per executor (torrent) instead of once per
-            # task of every subsequent term scan
-            cand_ids = reader.spark.sparkContext.broadcast(arr)
-            cand_bc = cand_ids
-        for word in ordered[1:]:
-            cand = cand.join(term_df(word, cand_ids), "doc_id", "inner")
-        return cand
+    # per-tier block filters of the include terms whose blocks may be cut
+    # or budgeted: min_tf_norm cuts apply to EVERY such term (block-max
+    # pruning on each leg of an intersection, SkipListReader.java:87
+    # tryRetainData + block max); block budgets only to the drivers, and
+    # budget_blocks only on single-path queries
+    first_blocks = budget_blocks if len(live_paths) == 1 else None
+    cuts: dict[str, dict[int, F.Column]] = {}
+    for tier, words in legs.items():
+        prunable = {w for w in words if live_tier.get(w) == tier and w not in shared}
+        cuts[tier] = {
+            stats[w][0]: F.col("max_tf_norm") >= c
+            for w, c in (_driver_min_tf_norm or {}).items()
+            if w in prunable
+        }
+        budgeted = [stats[w][0] for w in drivers if w in prunable]
+        if budgeted and (_driver_top_blocks is not None or first_blocks is not None):
+            cuts[tier].update(
+                reader.block_budget(
+                    budgeted, _driver_top_blocks, first_blocks, cuts[tier], tier, lang
+                )
+            )
 
-    if len(live_paths) == 1:
-        path_set = sorted(set(live_paths[0]) | need_pos)
-        cand = path_candidates(path_set)
-    else:
-        # multi-path (OR): decode each DISTINCT term exactly once — a term
-        # shared by several paths gets one postings scan, not one per path —
-        # and fold everything through a single union + pivot aggregation
-        # (one shuffle on doc_id replaces the per-path join chains plus the
-        # old union+groupBy(max) dedup)
-        #
-        # candidate pruning: a doc matching path p contains p's rarest term,
-        # so the union of per-path rarest-term doc ids is a superset of all
-        # results — collected once (one job) and broadcast into every
-        # distinct term's decode, which prunes the head terms' block scans
-        # exactly as the single-path retain chain does
-        cand_ids = None
-        drivers = sorted(
-            {
-                min(sorted(set(p) | need_pos), key=lambda w: (stats[w][1], w))
-                for p in live_paths
-            }
-        )
-        drv_df = sum(stats[w][1] for w in drivers)
-        rest_df = sum(stats[w][1] for w in live_terms) - drv_df
-        if drv_df <= MAX_DRIVER_CANDIDATES and rest_df > PRUNE_DF_THRESHOLD:
-            id_frames = [
-                reader.decode_term(
-                    stats[w][0],
-                    candidates=conv_doc_ids,
-                    tier="prio" if (prio_ok and w not in need_pos) else "full",
-                    lang=lang,
-                ).select("doc_id")
-                for w in drivers
-            ]
-            ids = reduce(lambda a, b: a.unionByName(b), id_frames)
-            arr = np.unique(_collect_ids_u64(ids))
-            cand_ids = reader.spark.sparkContext.broadcast(arr)
-            cand_bc = cand_ids
-        elif conv_doc_ids is not None:
-            cand_ids = reader.spark.sparkContext.broadcast(conv_doc_ids)
-            cand_bc = cand_ids
+    def scan(words_by_tier: dict[str, set[str]], candidates, ids_only=False) -> DataFrame:
         frames = []
-        for i, w in enumerate(live_terms):
-            tdf = reader.decode_term(
-                stats[w][0],
-                candidates=cand_ids,
-                with_positions=w in need_pos,
-                with_wtf=weighted,
-                min_tf_norm=(_driver_min_tf_norm or {}).get(w),
-                top_blocks=_driver_top_blocks,
-                tier="prio" if (prio_ok and w not in need_pos) else "full",
+        for tier, words in sorted(words_by_tier.items()):
+            dec = reader.decode_terms(
+                sorted({stats[w][0] for w in words}),
+                candidates=candidates,
+                positions=[] if ids_only else [stats[w][0] for w in need_pos & words],
+                with_wtf=weighted and not ids_only,
+                block_filter=cuts[tier],
+                tier=tier,
                 lang=lang,
             )
-            sel = [
-                F.col("doc_id"),
-                F.lit(i).alias("ti"),
-                F.col("tf"),
-                (F.col("wtf_q4") if weighted else F.lit(None).cast("int")).alias(
-                    "wtf_q4"
-                ),
-                F.col("flags"),
-                (
-                    F.col("positions")
-                    if w in need_pos
-                    else F.lit(None).cast("array<int>")
-                ).alias("positions"),
+            if len(words_by_tier) > 1:
+                dec = dec.withColumn("_tier", F.lit(tier))
+            frames.append(dec)
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+    # ship the drivers' doc ids to the decode kernel only when the other
+    # terms' posting lists are big enough that block skipping pays for the
+    # extra collect job (at small df the pivot is cheaper; at head-term
+    # scale the pruning is the whole ballgame). A broadcast, not a closure
+    # capture: at the 2M-id cap this is 16 MB shipped once per executor
+    # (torrent) instead of once per task.
+    cand_ids = None
+    drv_df = sum(stats[w][1] for w in drivers)
+    rest_df = sum(stats[w][1] for w in (set(live_terms) | lookups) - set(drivers))
+    if drv_df <= MAX_DRIVER_CANDIDATES and rest_df > PRUNE_DF_THRESHOLD:
+        by_tier: dict[str, set[str]] = {}
+        for w in drivers:
+            by_tier.setdefault(live_tier[w], set()).add(w)
+        ids = scan(by_tier, conv_doc_ids, ids_only=True).select("doc_id")
+        cand_ids = reader.spark.sparkContext.broadcast(np.unique(_collect_ids_u64(ids)))
+    elif conv_doc_ids is not None:
+        cand_ids = reader.spark.sparkContext.broadcast(conv_doc_ids)
+    dec = scan(legs, cand_ids)
+
+    # one live term and nothing else scanned: its rows ARE the candidates
+    direct = len(live_terms) == 1 and not lookups
+
+    def hit(w: str, tier: str) -> F.Column:
+        on = F.col("term_id") == stats[w][0]
+        return on & (F.col("_tier") == tier) if len(legs) > 1 else on
+
+    def pick(w: str, col: str, tier: str) -> F.Column:
+        return F.col(col) if direct else F.max(F.when(hit(w, tier), F.col(col)))
+
+    cols = []
+    for w in live_terms:
+        t = live_tier[w]
+        cols.append(pick(w, "tf", t).alias(f"tf_{_safe(w)}"))
+        if weighted:
+            cols.append(pick(w, "wtf_q4", t).alias(f"wtf_{_safe(w)}"))
+        if gate_mask or flag_score:
+            cols.append(pick(w, "flags", t).alias(f"flags_{_safe(w)}"))
+        if w in need_pos:
+            cols.append(pick(w, "positions", t).alias(f"pos_{_safe(w)}"))
+    if direct:
+        cand = dec.select("doc_id", *cols)
+    else:
+        for role, words in (("ex", excl), ("adv", advice), ("prio", prio_present)):
+            cols += [
+                F.max(F.when(hit(w, "full"), 1)).alias(f"{role}_{_safe(w)}")
+                for w in words
             ]
-            frames.append(tdf.select(*sel))
-        allt = reduce(lambda a, b: a.unionByName(b), frames)
-        aggs = []
-        for i, w in enumerate(live_terms):
-            tfi = F.when(F.col("ti") == i, F.col("tf"))
-            aggs.append(F.max(tfi).alias(f"tf_{_safe(w)}"))
-            if weighted:
-                aggs.append(
-                    F.max(F.when(F.col("ti") == i, F.col("wtf_q4"))).alias(
-                        f"wtf_{_safe(w)}"
-                    )
-                )
-            if gate_mask or flag_score:
-                aggs.append(
-                    F.max(F.when(F.col("ti") == i, F.col("flags"))).alias(
-                        f"flags_{_safe(w)}"
-                    )
-                )
-            if w in need_pos:
-                aggs.append(
-                    F.max(F.when(F.col("ti") == i, F.col("positions"))).alias(
-                        f"pos_{_safe(w)}"
-                    )
-                )
-        cand = allt.groupBy("doc_id").agg(*aggs)
-        # retain docs where at least one path matched in full (mirrors the
-        # old per-path inner-join chains: need_pos terms are mandatory)
+        cand = dec.groupBy("doc_id").agg(*cols)
+
+        # retain docs where at least one path matched in full (need_pos
+        # terms are mandatory), no exclusion term and every advisory term
+        # (AdviceTerm: required to match, excluded from ranking) matched
         def _path_present(p: list[str]) -> F.Column:
             return reduce(
                 lambda a, w: a & F.col(f"tf_{_safe(w)}").isNotNull(),
@@ -724,9 +768,12 @@ def run_query(
                 F.lit(True),
             )
 
-        cand = cand.filter(
-            reduce(lambda a, p: a | _path_present(p), live_paths, F.lit(False))
-        )
+        keep = reduce(lambda a, p: a | _path_present(p), live_paths, F.lit(False))
+        for w in excl:
+            keep = keep & F.col(f"ex_{_safe(w)}").isNull()
+        for w in advice:
+            keep = keep & F.col(f"adv_{_safe(w)}").isNotNull()
+        cand = cand.filter(keep)
 
     # ---- role gate (F8): every matched include term must carry the flags ----
     if gate_mask:
@@ -736,71 +783,6 @@ def run_query(
                 fc.isNull()
                 | (fc.bitwiseAND(F.lit(gate_mask)) == F.lit(gate_mask))
             )
-
-    # ---- exclusion: anti-join (ReverseIndexRejectFilter) ----
-    # the anti/left joins below only care about docs already in the
-    # candidate set, so a head-term exclusion/priority word prunes its
-    # decode against the candidate-superset broadcast instead of scanning
-    # the full posting list (tryRejectData's skip-list walk is likewise
-    # driven by the candidate buffer, SkipListReader.java:248)
-    def _lazy_cand_bc():
-        """Build the candidate broadcast on demand when candidate
-        generation didn't need one (e.g. a single small include term) but
-        a big exclusion/priority term would scan unpruned without it."""
-        nonlocal cand_bc
-        if cand_bc is None:
-            drivers = {
-                min(sorted(set(p) | need_pos), key=lambda w: (stats[w][1], w))
-                for p in live_paths
-            }
-            if sum(stats[w][1] for w in drivers) <= MAX_DRIVER_CANDIDATES:
-                frames = [
-                    reader.decode_term(
-                        stats[w][0], candidates=conv_doc_ids, lang=lang
-                    ).select("doc_id")
-                    for w in sorted(drivers)
-                ]
-                arr = np.unique(
-                    _collect_ids_u64(
-                        reduce(lambda a, b: a.unionByName(b), frames)
-                    )
-                )
-                cand_bc = reader.spark.sparkContext.broadcast(arr)
-        return cand_bc
-
-    for word in pq.exclude:
-        if word in stats:
-            prune = (
-                _lazy_cand_bc()
-                if stats[word][1] > PRUNE_DF_THRESHOLD
-                else cand_bc
-            )
-            cand = cand.join(
-                reader.decode_term(
-                    stats[word][0], candidates=prune, lang=lang
-                ).select("doc_id"),
-                "doc_id",
-                "left_anti",
-            )
-
-    # ---- advisory terms: semi-join retain (AdviceTerm — required to
-    # match, excluded from ranking; QueryParser.java:25, the advice terms
-    # become retain filters but never enter the compiled score). Same
-    # candidate-pruned decode as exclusions: a head advice term skips
-    # blocks outside the candidate superset instead of scanning unpruned.
-    for word in pq.advice:
-        prune = (
-            _lazy_cand_bc()
-            if stats[word][1] > PRUNE_DF_THRESHOLD
-            else cand_bc
-        )
-        cand = cand.join(
-            reader.decode_term(
-                stats[word][0], candidates=prune, lang=lang
-            ).select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
 
     # ---- phrase constraints ----
     for ph in pq.phrases:
@@ -975,20 +957,7 @@ def run_query(
     # priority terms: score bonus when present (reference multiplies by
     # exp(priorityTermAdjustment/5); our transcript analogue gives each
     # matched priority term a 1/5 exponent step)
-    prio_present = [w for w in pq.priority if w in stats]
     if prio_present:
-        for w in prio_present:
-            prune = (
-                _lazy_cand_bc()
-                if stats[w][1] > PRUNE_DF_THRESHOLD
-                else cand_bc
-            )
-            cand = cand.join(
-                reader.decode_term(stats[w][0], candidates=prune, lang=lang)
-                .select("doc_id", F.lit(1).alias(f"prio_{_safe(w)}")),
-                "doc_id",
-                "left",
-            )
         n_prio = reduce(
             lambda a, w: a
             + F.when(F.col(f"prio_{_safe(w)}").isNotNull(), 1.0).otherwise(0.0),

@@ -264,3 +264,45 @@ def test_encode_sorted_tagged_picks_smaller():
         assert len(auto) == min(len(b) for b in forced)
     assert encode_sorted_tagged(dense, "auto")[0] == 1  # gamma
     assert encode_sorted_tagged(sparse, "auto")[0] == 0  # varbyte
+
+
+def test_decode_blocks_null_positions_rows_skip_position_decode():
+    """Blocks whose positions are null (terms that need none, in a scan
+    shared with terms that do) decode to null position lists, and every
+    other row decodes exactly as in an all-positions decode — with and
+    without a candidate mask."""
+    import pandas as pd
+
+    from marginaliasearch_spark.functions.blocks import (
+        decode_blocks,
+        encode_blocks,
+    )
+    from marginaliasearch_spark.functions.codecs import varbyte_encode
+
+    rng = np.random.default_rng(7)
+    rows = []
+    for term in (3, 5, 9):
+        for d in np.unique(rng.integers(0, 1 << 20, size=30, dtype=np.uint64)):
+            tf = 1 + int(d) % 4
+            pos = np.sort(rng.choice(200, size=tf, replace=False)).astype(np.uint64)
+            rows.append((term, int(d), tf, tf * 4,
+                         varbyte_encode(np.diff(pos, prepend=np.uint64(0))), 1, 0.5))
+    pdf = pd.DataFrame(
+        rows,
+        columns=["term_id", "doc_id", "tf", "wtf_q4", "positions", "flags",
+                 "tf_norm"],
+    ).sort_values(["term_id", "doc_id"], ignore_index=True)
+    blocks = pd.concat(list(encode_blocks(iter([pdf]), block_docs=8)))
+    mixed = blocks.copy()
+    mixed["positions"] = mixed["positions"].where(mixed["term_id"] != 5, None)
+    cands = np.sort(pdf["doc_id"].to_numpy().astype(np.uint64)[::3])
+    for c in (None, cands):
+        full = pd.concat(list(decode_blocks(iter([blocks]), True, candidates=c)))
+        got = pd.concat(list(decode_blocks(iter([mixed]), True, candidates=c)))
+        assert len(got) == len(full)
+        for f, g in zip(full.itertuples(), got.itertuples()):
+            assert (f.term_id, f.doc_id, f.tf) == (g.term_id, g.doc_id, g.tf)
+            if f.term_id == 5:
+                assert g.positions is None
+            else:
+                assert list(g.positions) == list(f.positions)

@@ -101,8 +101,9 @@ def test_prio_tier_exists_and_is_smaller(spark, built):
 
 def test_unreadable_prio_tier_fails_closed(spark, tmp_path):
     """A priority tier that cannot be read must raise — in the reader AND
-    in compaction. Treating it as absent would drop every flag-gated hit,
-    and compact_index would write an index with no tier at all."""
+    in compaction, before compaction writes anything. Treating it as
+    absent would drop every flag-gated hit, and compact_index would write
+    an index with no tier at all."""
     import glob
     import os
 
@@ -125,8 +126,13 @@ def test_unreadable_prio_tier_fails_closed(spark, tmp_path):
         os.remove(crc)
     with pytest.raises(Py4JJavaError):
         IndexReader(spark, IndexPaths(root))
+    out_root = str(tmp_path / "cmp")
     with pytest.raises(Py4JJavaError):
-        compact_index(spark, root, str(tmp_path / "cmp"))
+        compact_index(spark, root, out_root)
+    # the failed compaction wrote nothing: no postings, no manifest
+    out = IndexPaths(out_root)
+    assert not os.path.exists(out.postings)
+    assert not os.path.exists(out.manifest_dir)
 
 
 def test_no_flagged_turns_means_no_prio_tier(spark, tmp_path):

@@ -4,9 +4,9 @@ The reference drives its reject filter and priority lookups from the
 candidate buffer (``SkipListReader.tryRejectData``,
 ``SkipListReader.java:248``) — it never walks an exclusion term's full
 posting list. Our batch analogue must do the same: when a candidate
-broadcast exists (or can be built from the rarest include term), the
-exclusion / ``?priority`` term decodes receive it and skip blocks outside
-the candidate id range.
+broadcast is built from the rarest include term, the fused decode that
+reads the exclusion / ``?priority`` term receives it and skips blocks
+outside the candidate id range.
 """
 
 import numpy as np
@@ -26,25 +26,26 @@ def reader(spark, tmp_path_factory):
 
 
 class _Recorder:
-    """Wraps IndexReader.decode_term and records (term_id, pruned?)."""
+    """Wraps IndexReader.decode_terms (the fused decode) and records
+    (term_ids decoded, pruned?)."""
 
     def __init__(self, reader):
         self.reader = reader
-        self.calls: list[tuple[int, bool]] = []
-        self._orig = IndexReader.decode_term
+        self.calls: list[tuple[tuple[int, ...], bool]] = []
+        self._orig = IndexReader.decode_terms
 
     def __enter__(self):
         rec = self
 
-        def spy(r, term_id, candidates=None, **kw):
-            rec.calls.append((term_id, candidates is not None))
-            return rec._orig(r, term_id, candidates=candidates, **kw)
+        def spy(r, term_ids, candidates=None, **kw):
+            rec.calls.append((tuple(term_ids), candidates is not None))
+            return rec._orig(r, term_ids, candidates=candidates, **kw)
 
-        IndexReader.decode_term = spy
+        IndexReader.decode_terms = spy
         return self
 
     def __exit__(self, *a):
-        IndexReader.decode_term = self._orig
+        IndexReader.decode_terms = self._orig
 
 
 def _tid(reader, word):
@@ -57,7 +58,7 @@ def test_exclude_decode_receives_candidates(spark, reader, monkeypatch):
     with _Recorder(reader) as rec:
         rows = run_query(reader, "factor5 -factor2", k=100).collect()
     exc_id = _tid(reader, "factor2")
-    assert any(tid == exc_id and pruned for tid, pruned in rec.calls), rec.calls
+    assert any(exc_id in tids and pruned for tids, pruned in rec.calls), rec.calls
     # factor oracle: multiples of 5, not of 2
     got = sorted(int(r["conv_id"][4:]) for r in rows)
     assert got == [i for i in range(1, 257) if i % 5 == 0 and i % 2 != 0]
@@ -68,7 +69,7 @@ def test_priority_decode_receives_candidates(spark, reader, monkeypatch):
     with _Recorder(reader) as rec:
         rows = run_query(reader, "?factor2 factor7", k=100).collect()
     pri_id = _tid(reader, "factor2")
-    assert any(tid == pri_id and pruned for tid, pruned in rec.calls), rec.calls
+    assert any(pri_id in tids and pruned for tids, pruned in rec.calls), rec.calls
     got = sorted(int(r["conv_id"][4:]) for r in rows)
     assert got == [i for i in range(1, 257) if i % 7 == 0]
 

@@ -102,3 +102,9 @@ def test_budgeted_scan_returns_best_rank_prefix(spark, tmp_path_factory, built):
     }
     assert 0 < len(got) < len(full)
     assert all(c.startswith("good") for c in got)  # best-rank prefix only
+    # an OR query has no single driver to truncate: the budget is ignored
+    def ranked(**kw):
+        res = run_query(reader, "( common | topic )", k=100, **kw).collect()
+        return [(r["conv_id"], r["score"]) for r in res]
+
+    assert ranked(budget_blocks=2) == ranked()

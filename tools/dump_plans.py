@@ -46,11 +46,15 @@ def main() -> None:
     sections.append(
         (
             "Top-k BM25 query (`customer query -slow len>20`, k=10)",
-            "Things to check: `PushedFilters: [IsNotNull(term_id), EqualTo(term_id, ...)]` "
-            "on every postings scan (row-group pruning via min/max stats on the "
-            "term_id-sorted files); `ReadSchema` carrying only the block columns each "
-            "stage needs; the final `TakeOrderedAndProject` (= the reference's top-k "
-            "heap); BM25 arithmetic inside `WholeStageCodegen` ranges.",
+            "Things to check: ONE postings `Scan parquet` + ONE `MapInPandas` "
+            "for all three terms, the exclusion `slow` included, with "
+            "`PushedFilters: [In(term_id, [...])]` (row-group pruning via "
+            "min/max stats on the term_id-sorted files); a single "
+            "`HashAggregate`/`Exchange hashpartitioning(doc_id)` pivot whose "
+            "`Filter` keeps `isnull(ex_...)` — no anti-join; `ReadSchema` "
+            "carrying only the block columns the decode needs; the final "
+            "`TakeOrderedAndProject` (= the reference's top-k heap); BM25 "
+            "arithmetic inside `WholeStageCodegen` ranges.",
             fmt(q),
         )
     )
@@ -58,10 +62,11 @@ def main() -> None:
     sections.append(
         (
             "OR query (`( customer | batch ) query`, k=10)",
-            "Things to check: exactly ONE `Scan parquet` + `MapInPandas` per "
-            "DISTINCT term (the shared term `query` is decoded once, not once "
-            "per OR path), all folded through a single `HashAggregate`/"
-            "`Exchange hashpartitioning(doc_id)` pivot — one shuffle replaces "
+            "Things to check: exactly ONE postings `Scan parquet` + "
+            "`MapInPandas` for all distinct terms (the shared term `query` "
+            "is decoded once, not once per OR path), folded through a single "
+            "`HashAggregate`/`Exchange hashpartitioning(doc_id)` pivot whose "
+            "`Filter` ORs the per-path presence tests — one shuffle replaces "
             "the per-path join chains.",
             fmt(q_or),
         )
@@ -77,11 +82,12 @@ def main() -> None:
         (
             "Block-max AND pruning (`customer query`, per-term θ-cuts)",
             "The residual per-term cut (θ − Σ other-terms' UB, "
-            "run_query_wand phase 2) reaches `PushedFilters` as "
-            "`GreaterThanOrEqual(max_tf_norm, ...)` on BOTH terms' postings "
-            "scans — every leg of the intersection skips blocks whose score "
-            "upper bound cannot reach the phase-1 threshold, undecoded "
-            "(SkipListReader block-max retain).",
+            "run_query_wand phase 2) reaches `PushedFilters` of the ONE "
+            "postings scan as an `Or` of `And(EqualTo(term_id, t), "
+            "GreaterThanOrEqual(max_tf_norm, c_t))` disjuncts — every leg "
+            "of the intersection skips blocks whose score upper bound "
+            "cannot reach the phase-1 threshold, undecoded (SkipListReader "
+            "block-max retain).",
             fmt(q_wand_and),
         )
     )
@@ -95,13 +101,14 @@ def main() -> None:
     sections.append(
         (
             "Block-max mixed AND-of-OR pruning (`( customer | batch ) query`, per-path residual θ-cuts)",
-            "run_query_wand's general shape: every term's scan gets the "
-            "block-max cut of its most forgiving containing path "
-            "(θ − max over paths ∋ t of (UB(path) − UB_t)) — check "
-            "`GreaterThanOrEqual(max_tf_norm, ...)` inside `PushedFilters` "
-            "on ALL THREE distinct term scans (the reference applies "
-            "skip-list block maxima to every enumerated OR-path's retain "
-            "chain, CombinedIndexReader.createQueries).",
+            "run_query_wand's general shape: every term gets the block-max "
+            "cut of its most forgiving containing path "
+            "(θ − max over paths ∋ t of (UB(path) − UB_t)) — check one "
+            "`GreaterThanOrEqual(max_tf_norm, ...)` per term, each ANDed "
+            "with its term_id, inside the `PushedFilters` of the single "
+            "postings scan (the reference applies skip-list block maxima "
+            "to every enumerated OR-path's retain chain, "
+            "CombinedIndexReader.createQueries).",
             fmt(q_wand_mixed),
         )
     )
