@@ -132,9 +132,7 @@ BENCH_QUERIES = [
     "streaming_windows",
     "mm_image_jpeg_features",
     "mm_video_mjpeg_frames",
-    "mm_image_jpeg_progressive",
     "mm_video_gif_frames",
-    "mm_image_tiff_features",
     "report_datacard",
     "fulltext_conv",
     "fulltext_searchset",
@@ -195,7 +193,6 @@ BENCH_QUERIES = [
     "mm_image_gif_features",
     "mm_image_gif_resize",
     "mm_image_png_resize",
-    "mm_image_tiff_resize",
 ]
 
 

@@ -247,19 +247,19 @@ m2 AS (
 )"""
 
 
-def _image_seed_ctes(n: int, prefix: str | None) -> str:
-    """``... , seed(media_id, s)``: the pixel-seed relation. ``prefix=None``
-    is the fake decoder (seed = md5 of the synthetic payload hex); a
-    prefix like ``'png:'`` / ``'tif:'`` is the real-codec fixture's
-    closed form (seed = md5(prefix || media_id)) — those entries decode
-    REAL payloads on the Spark side, but the pixels they reconstruct are
-    this closed form, so the oracle never needs a decoder."""
-    if prefix:
+def _image_seed_ctes(n: int, png: bool) -> str:
+    """``... , seed(media_id, s)``: the pixel-seed relation. ``png=False``
+    is the fake decoder (seed = md5 of the synthetic payload hex);
+    ``png=True`` is the real-PNG fixture's closed form (seed =
+    md5('png:' || media_id)) — those entries decode REAL payloads on the
+    Spark side, but the pixels they reconstruct are this closed form, so
+    the oracle never needs a decoder."""
+    if png:
         return f"""
 mm AS (SELECT unnest(range({n})) AS media_id),
 seed AS (
   SELECT media_id,
-         ('0x' || substr(md5('{prefix}' || media_id), 1, 16))::UBIGINT AS s
+         ('0x' || substr(md5('png:' || media_id), 1, 16))::UBIGINT AS s
   FROM mm
 )"""
     return f"""{media_ctes(n)},
@@ -269,15 +269,10 @@ seed AS (
 )"""
 
 
-def image_features_sql(
-    n: int = 64, png: bool = False, prefix: str | None = None
-) -> str:
+def image_features_sql(n: int = 64, png: bool = False) -> str:
     """Exact oracle for ``multimodal.image_features`` over the synthetic
     media table (fake decoder: splitmix64 pixels seeded by md5(payload);
-    ``png=True`` / ``prefix='tif:'``: a real-codec fixture's
-    media_id-seeded pixels)."""
-    if png:
-        prefix = "png:"
+    ``png=True``: the real-PNG fixture's media_id-seeded pixels)."""
     from ..operators.multimodal import _BIN_DIV, _N_PIX, HIST_BINS
 
     n_vals = _N_PIX * 3
@@ -291,7 +286,7 @@ def image_features_sql(
         f" / {_N_PIX}.0, 6) AS h{b}"
         for b in range(HIST_BINS)
     )
-    return f"""WITH {_image_seed_ctes(n, prefix)},
+    return f"""WITH {_image_seed_ctes(n, png)},
 pix0 AS (
   SELECT media_id, p, {sql64.add64('s', 'p::UBIGINT')} AS x
   FROM seed CROSS JOIN (SELECT unnest(range({n_vals})) AS p) pp
@@ -440,15 +435,13 @@ def image_resize_sql(
     out_h: int = 8,
     out_w: int = 8,
     png: bool = False,
-    prefix: str | None = None,
 ) -> str:
     """Exact oracle for ``multimodal.resize_images(method='nearest')`` +
     ``resize_summary`` over the synthetic media table: the nearest-resized
     pixel (i, j, c) is the fake-decoded value at flat index
     ``((i*H//oh)*W + (j*W//ow))*3 + c`` — pure integer index math, so the
-    per-channel means and the integer checksum replay bit-exactly."""
-    if png:
-        prefix = "png:"
+    per-channel means and the integer checksum replay bit-exactly.
+    ``png=True`` seeds the pixels like :func:`image_features_sql`."""
     from ..operators.multimodal import IMG_H, IMG_W
 
     n_out = out_h * out_w
@@ -457,7 +450,7 @@ def image_resize_sql(
         f" AS mean_{name}"
         for c, name in enumerate("rgb")
     )
-    return f"""WITH {_image_seed_ctes(n, prefix)},
+    return f"""WITH {_image_seed_ctes(n, png)},
 grid AS (
   SELECT i, j, ch,
          (((i * {IMG_H}) // {out_h}) * {IMG_W}
@@ -478,12 +471,10 @@ SELECT media_id, {mean_cols}, sum(v)::BIGINT AS px_sum
 FROM rval GROUP BY media_id"""
 
 
-def jpeg_features_sql(n: int = 64, prefix: str = "jpg:") -> str:
+def jpeg_features_sql(n: int = 64) -> str:
     """Exact oracle for ``multimodal.image_features(fake=False)`` over
-    ``synth_jpeg_media`` (``prefix='jpg:'``, baseline SOF0) or
-    ``synth_jpeg_progressive_media`` (``prefix='jpgp:'``, SOF2 — the
-    progressive decode reassembles the identical coefficient array, so
-    only the seed differs): blocks are DC-only with quant step 16, so the
+    ``synth_jpeg_media`` (baseline SOF0, seeded by md5('jpg:' ||
+    media_id)): blocks are DC-only with quant step 16, so the
     decoded plane value is the integer ``2k + 128`` and the YCbCr→RGB
     transform is the decoder's own fixed-literal double math
     (``floor(x + 0.5)``, left-associated sums, clamp after floor) —
@@ -511,7 +502,7 @@ def jpeg_features_sql(n: int = 64, prefix: str = "jpg:") -> str:
     return f"""WITH
 mm AS (SELECT unnest(range({n})) AS media_id),
 seed AS (
-  SELECT media_id, {sql64.md5_u64(f"'{prefix}' || media_id")} AS s FROM mm
+  SELECT media_id, {sql64.md5_u64("'jpg:' || media_id")} AS s FROM mm
 ),
 k0 AS (
   SELECT media_id, p // 3 AS blk, p % 3 AS comp,

@@ -306,8 +306,7 @@ def build_index(
     if not os.path.exists(os.path.join(paths.term_bounds, "_SUCCESS")):
         shutil.rmtree(paths.term_bounds, ignore_errors=True)
         read_postings(spark, paths).groupBy("term_id").agg(
-            F.max("max_tf_norm").alias("max_tf_norm"),
-            F.count("*").alias("n_blocks"),
+            F.max("max_tf_norm").alias("max_tf_norm")
         ).coalesce(1).write.mode("overwrite").parquet(paths.term_bounds)
     return paths
 
@@ -466,7 +465,7 @@ def merge_indexes(
       union of block rows IS the merged posting list; the reader's
       rarest-first/df-ordered plans never assumed one file per term.
     - **statistics re-aggregate additively** over vocab-sized tables:
-      lexicon df/ctf add per (term, lang), term_bounds take max/sum,
+      lexicon df/ctf add per (term, lang), term_bounds take the max,
       corpus stats add (BM25 needs the merged N and df — adding them gives
       bit-identical scores to a from-scratch build, which the merge
       equality test pins).
@@ -531,14 +530,17 @@ def merge_indexes(
         .write.mode("overwrite")
         .parquet(out.lexicon)
     )
+    # select the bound explicitly: an index written before term_bounds lost
+    # its n_blocks column still merges
+    bounds = [
+        spark.read.parquet(p.term_bounds).select("term_id", "max_tf_norm")
+        for p in (base, delta)
+    ]
     (
-        spark.read.parquet(base.term_bounds)
-        .unionByName(spark.read.parquet(delta.term_bounds))
+        bounds[0]
+        .unionByName(bounds[1])
         .groupBy("term_id")
-        .agg(
-            F.max("max_tf_norm").alias("max_tf_norm"),
-            F.sum("n_blocks").alias("n_blocks"),
-        )
+        .agg(F.max("max_tf_norm").alias("max_tf_norm"))
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(out.term_bounds)
@@ -814,8 +816,7 @@ def compact_index(
         )
     # block geometry changed: regenerate term_bounds from the NEW blocks
     read_postings(spark, out).groupBy("term_id").agg(
-        F.max("max_tf_norm").alias("max_tf_norm"),
-        F.count("*").alias("n_blocks"),
+        F.max("max_tf_norm").alias("max_tf_norm")
     ).coalesce(1).write.mode("overwrite").parquet(out.term_bounds)
     new_stats = dict(stats)
     if tomb is not None:

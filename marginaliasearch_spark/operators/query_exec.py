@@ -1342,7 +1342,6 @@ def run_query_page(
     page: int = 1,
     page_size: int = 10,
     total_limit: int = 100,
-    use_wand: bool = False,
     **kw,
 ) -> DataFrame:
     """Result pagination — the reference's ``IndexClient.executeQueries``
@@ -1355,10 +1354,9 @@ def run_query_page(
     Spark shape: the gather is the usual ``TakeOrderedAndProject``; the
     slice is ``GlobalLimit``+``Offset`` over the already-``total_limit``-
     sized relation — no extra shuffle, and deeper pages reuse the same
-    plan (pass ``use_wand=True`` to let block-max pruning serve the
-    gather for eligible shapes)."""
-    runner = run_query_wand if use_wand else run_query
-    res = runner(reader, query, k=total_limit, **kw)
+    plan. The gather goes through :func:`run_search`, so ``qs=wand`` in
+    the query lets block-max pruning serve it for eligible shapes."""
+    res = run_search(reader, query, k=total_limit, **kw)
     start = max(0, (page - 1) * page_size)
     return res.offset(start).limit(page_size)
 

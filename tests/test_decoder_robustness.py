@@ -5,7 +5,7 @@ Deterministic slice of the full mutation fuzz (tools/fuzz_decoders.py —
 27k mutations, 0 escapes/0 slow on the round-5 tree): a fixed seed and
 ~40 mutations per format keep this fast enough for the suite while
 pinning the `_malformed_to_valueerror` boundary, the dimension/count
-bomb guards (TIFF IFD count, GIF screen/frame, JPEG SOF) and the AVI
+bomb guards (GIF screen/frame, JPEG SOF) and the AVI
 size-past-payload clamp."""
 
 import random
@@ -27,7 +27,6 @@ QT = np.ones(64, np.int64) * 4
 def _seeds():
     return [
         ("png", mm.encode_png(IMG)),
-        ("tiff", mm.encode_tiff(IMG)),
         ("gif", mm.encode_gif(IDX, PAL)),
         ("jpeg", mm.encode_jpeg(COEF, 16, 16, QT)),
         ("avi", mm.encode_avi_mjpeg(
@@ -80,32 +79,6 @@ def test_mutated_payloads_stay_in_the_allowlist(name, payload):
                     signal.alarm(0)
     finally:
         signal.alarm(0)
-
-
-def _tiff_ifd(entries, extra=b""):
-    """Minimal little-endian TIFF: header + one IFD + trailing bytes."""
-    out = bytearray(b"II*\x00" + (8).to_bytes(4, "little"))
-    out += len(entries).to_bytes(2, "little")
-    for tag, typ, count, value in entries:
-        out += tag.to_bytes(2, "little") + typ.to_bytes(2, "little")
-        out += count.to_bytes(4, "little") + value.to_bytes(4, "little")
-    out += (0).to_bytes(4, "little") + extra
-    return bytes(out)
-
-
-def test_tiff_count_bomb_raises_valueerror():
-    """A corrupted 32-bit IFD count must raise, not drive a
-    multi-billion-element value-read loop (the fuzz-found DoS)."""
-    p = _tiff_ifd([(256, 3, 1, 16), (257, 3, 1, 16),
-                   (258, 3, 0x0FFF_FFFF, 200)])
-    with pytest.raises(ValueError, match="past end"):
-        mm.decode_image(p)
-
-
-def test_tiff_dimension_bomb_raises_valueerror():
-    p = _tiff_ifd([(256, 4, 1, 1 << 19), (257, 4, 1, 1 << 19)])
-    with pytest.raises(ValueError, match="unreasonable"):
-        mm.decode_image(p)
 
 
 def test_gif_screen_bomb_raises_valueerror():

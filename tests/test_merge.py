@@ -15,6 +15,7 @@ from marginaliasearch_spark.operators.index_build import (
     build_index,
     merge_indexes,
     read_manifest,
+    read_postings,
 )
 from marginaliasearch_spark.operators.query_exec import (
     IndexReader,
@@ -147,22 +148,27 @@ def test_compaction_equals_merged(spark, roots):
     # term set, bit-identical score bounds, and every term's block count
     # within the overhead bound of one partial block per range partition
     tb_m = {
-        r["term_id"]: (r["n_blocks"], r["max_tf_norm"])
+        r["term_id"]: r["max_tf_norm"]
         for r in spark.read.parquet(IndexPaths(out_root).term_bounds).collect()
     }
     tb_c = {
-        r["term_id"]: (r["n_blocks"], r["max_tf_norm"])
+        r["term_id"]: r["max_tf_norm"]
         for r in spark.read.parquet(out.term_bounds).collect()
     }
     assert set(tb_m) == set(tb_c)
-    assert all(abs(tb_c[t][1] - tb_m[t][1]) < 1e-12 for t in tb_m)
+    assert all(abs(tb_c[t] - tb_m[t]) < 1e-12 for t in tb_m)
+    n_blocks = {
+        r["term_id"]: r["count"]
+        for r in read_postings(spark, out).groupBy("term_id").count().collect()
+    }
+    assert set(n_blocks) == set(tb_c)
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     df_by_tid = {
         r["term_id"]: r["df"]
         for r in IndexReader(spark, out).lexicon.select("term_id", "df").collect()
     }
     bd = compacted.block_docs
-    for t, (nb, _) in tb_c.items():
+    for t, nb in n_blocks.items():
         assert nb <= -(-df_by_tid[t] // bd) + parts, t
 
 

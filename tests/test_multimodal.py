@@ -127,6 +127,10 @@ def test_decode_compressed_still_raises():
     # WebP (VP8 entropy coding) genuinely needs codec libs
     with _pytest.raises(NotImplementedError):
         decode_image(b"RIFF\x10\x00\x00\x00WEBPVP8 fake")
+    # TIFF has no decoder: a minimal little-endian header is an
+    # unsupported format, not a parse error
+    with _pytest.raises(NotImplementedError):
+        decode_image(b"II*\x00\x08\x00\x00\x00")
     # JPEG now dispatches to the real decoder; a truncated stream is a
     # parse error, not a missing-codec stub
     with _pytest.raises(ValueError):
