@@ -1872,6 +1872,22 @@ def _q_image_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _q_image_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL progressive-JPEG decode (SOF2 scan ladder: first/refinement
+    DC scans, split-band AC scans with cross-block EOB runs —
+    `multimodal.decode_jpeg` multi-scan path) through the distributed
+    feature kernel. The fixture's DC-only blocks have the same closed
+    decoded form as the baseline fixture (progressive reassembles the
+    identical coefficient array), so the oracle is the baseline SQL twin
+    with the `jpgp:` seed prefix."""
+    media = multimodal.synth_jpeg_progressive_media(spark, n=64)
+    feats = multimodal.image_features(media, fake=False)
+    return feats.select(
+        "media_id",
+        *[F.round(F.col(c), 6).alias(c) for c in multimodal.FEATURE_COLS],
+    )
+
+
 def _q_image_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL GIF decode (pure-Python variable-width LZW + interlace
     reorder + palette mapping, `multimodal._decode_gif`) through the
@@ -2549,7 +2565,8 @@ _NEW_THIS_ROUND: list[str] = [
     "fulltext_searchset", "index_search_set",
     "mm_image_gif_features",
     "fulltext_qs_wand", "fulltext_qs_gate",
-    "mm_image_jpeg_features", "mm_video_gif_frames",
+    "mm_image_jpeg_features",
+    "mm_image_jpeg_progressive", "mm_video_gif_frames",
     "fulltext_conv", "sim_kmeans", "dedup_semantic_kmeans",
     "sim_pq_topk", "sim_ivfpq_topk", "text_hash_embed", "dedup_semantic_text",
     "text_bpe_encode",
@@ -2919,6 +2936,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mm_image_png_resize": _q_image_png_resize,
         # REAL baseline-JPEG payloads (Huffman + IDCT + YCbCr)
         "mm_image_jpeg_features": _q_image_jpeg_features,
+        "mm_image_jpeg_progressive": _q_image_jpeg_progressive,
         "mm_image_gif_features": _q_image_gif_features,
         "mm_image_gif_resize": _q_image_gif_resize,
         "mm_frame_sample": _q_frame_sample,
@@ -3945,6 +3963,9 @@ WHERE NOT EXISTS (
             n=64, png=True
         ),
         "mm_image_jpeg_features": sql_oracles.jpeg_features_sql(n=64),
+        "mm_image_jpeg_progressive": sql_oracles.jpeg_features_sql(
+            n=64, prefix="jpgp:"
+        ),
         "mm_image_gif_features": sql_oracles.gif_features_sql(n=64),
         "mm_image_gif_resize": sql_oracles.gif_resize_sql(n=64),
         "mm_frame_sample": sql_oracles.frame_sample_sql(n=64),

@@ -132,6 +132,7 @@ BENCH_QUERIES = [
     "streaming_windows",
     "mm_image_jpeg_features",
     "mm_video_mjpeg_frames",
+    "mm_image_jpeg_progressive",
     "mm_video_gif_frames",
     "report_datacard",
     "fulltext_conv",

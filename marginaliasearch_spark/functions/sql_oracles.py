@@ -471,10 +471,12 @@ SELECT media_id, {mean_cols}, sum(v)::BIGINT AS px_sum
 FROM rval GROUP BY media_id"""
 
 
-def jpeg_features_sql(n: int = 64) -> str:
+def jpeg_features_sql(n: int = 64, prefix: str = "jpg:") -> str:
     """Exact oracle for ``multimodal.image_features(fake=False)`` over
-    ``synth_jpeg_media`` (baseline SOF0, seeded by md5('jpg:' ||
-    media_id)): blocks are DC-only with quant step 16, so the
+    ``synth_jpeg_media`` (``prefix='jpg:'``, baseline SOF0) or
+    ``synth_jpeg_progressive_media`` (``prefix='jpgp:'``, SOF2 — the
+    progressive decode reassembles the identical coefficient array, so
+    only the seed differs): blocks are DC-only with quant step 16, so the
     decoded plane value is the integer ``2k + 128`` and the YCbCr→RGB
     transform is the decoder's own fixed-literal double math
     (``floor(x + 0.5)``, left-associated sums, clamp after floor) —
@@ -502,7 +504,7 @@ def jpeg_features_sql(n: int = 64) -> str:
     return f"""WITH
 mm AS (SELECT unnest(range({n})) AS media_id),
 seed AS (
-  SELECT media_id, {sql64.md5_u64("'jpg:' || media_id")} AS s FROM mm
+  SELECT media_id, {sql64.md5_u64(f"'{prefix}' || media_id")} AS s FROM mm
 ),
 k0 AS (
   SELECT media_id, p // 3 AS blk, p % 3 AS comp,

@@ -5,9 +5,9 @@ metadata; decode / feature-extraction / frame-sample run as Arrow-batched
 ``mapInPandas`` kernels. Real decoders (pure numpy + stdlib, no codec
 libs): binary PPM, uncompressed 24-bit BMP, PNG (zlib inflate +
 full scanline-filter reconstruction), GIF87a/89a (variable-width LZW,
-interlace, local color tables), baseline JPEG, and the y4m, AVI-MJPEG
-and animated-GIF video containers. Other formats (TIFF, progressive
-JPEG, ...) raise ``NotImplementedError`` — the package ships no codec
+interlace, local color tables), baseline + progressive JPEG, and the
+y4m, AVI-MJPEG and animated-GIF video containers. Other formats (TIFF,
+...) raise ``NotImplementedError`` — the package ships no codec
 libs; ``fake=True`` selects a deterministic
 fake decoder (content-hash-seeded splitmix64 pixels) that exercises the
 full Spark plumbing — schema, batching, partitioning.
@@ -712,8 +712,8 @@ def encode_gif_animation(
 # Pure numpy + stdlib: marker parse, table-driven canonical Huffman (any
 # DHT, including Annex K tables), dequantize + inverse zigzag, matrix
 # IDCT, deterministic floor(x + 0.5) rounding, nearest chroma upsample,
-# restart markers. Progressive / arithmetic / hierarchical / 12-bit
-# streams raise NotImplementedError. Rounding discipline: uint8 planes are produced
+# restart markers. Progressive / arithmetic / 12-bit scans raise
+# NotImplementedError. Rounding discipline: uint8 planes are produced
 # with floor(idct + 128 + 0.5) and the YCbCr→RGB transform uses
 # floor(x + 0.5) on IEEE doubles with fixed literal coefficients and
 # left-associated sums — the exact op order the SQL twin replays.
@@ -829,9 +829,78 @@ def _extend(v: int, t: int) -> int:
     return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
+def _jpeg_ac_first(br, table, coef, ss, se, al, eobrun) -> int:
+    """First AC scan of a band (T.81 G.1.2.2): (run, size) pairs with
+    EOBn run codes; delivered values are shifted left by the scan's
+    successive-approximation low bit Al. ``coef`` is the block's 64-long
+    zigzag-order view; returns the updated EOB run counter."""
+    if eobrun > 0:
+        return eobrun - 1
+    k = ss
+    while k <= se:
+        rs = _huff_decode(br, table)
+        r, s = rs >> 4, rs & 15
+        if s == 0:
+            if r != 15:  # EOBn: run of 2^r + appended-bits blocks
+                eobrun = 1 << r
+                if r:
+                    eobrun += br.read_bits(r)
+                return eobrun - 1  # current block is a member of the run
+            k += 16  # ZRL
+            continue
+        k += r
+        coef[k] = _extend(br.read_bits(s), s) << al
+        k += 1
+    return 0
+
+
+def _jpeg_ac_refine(br, table, coef, ss, se, al, eobrun) -> int:
+    """AC successive-approximation refinement (T.81 G.1.2.3). Zero-run
+    counts cover only zero-history coefficients; every already-nonzero
+    coefficient traversed — including the tail of an EOB run — consumes
+    one correction bit. Mirrors the control flow of the spec's Figures
+    G.7/G.10 (the same structure libjpeg's decode_mcu_AC_refine uses)."""
+    p1, m1 = 1 << al, -1 << al
+    k = ss
+    if eobrun == 0:
+        while k <= se:
+            rs = _huff_decode(br, table)
+            r, s = rs >> 4, rs & 15
+            newval = 0
+            if s == 0:
+                if r != 15:  # EOBn — rest of band is correction bits only
+                    eobrun = 1 << r
+                    if r:
+                        eobrun += br.read_bits(r)
+                    break
+                # ZRL: skip 16 zero-history coefficients below
+            else:
+                # s is always 1 in a refinement scan (one new bit)
+                newval = p1 if br.read_bit() else m1
+            while k <= se:
+                if coef[k] != 0:
+                    if br.read_bit() and (coef[k] & p1) == 0:
+                        coef[k] += p1 if coef[k] >= 0 else m1
+                else:
+                    if r == 0:
+                        if s:
+                            coef[k] = newval
+                        k += 1
+                        break
+                    r -= 1
+                k += 1
+    if eobrun > 0:
+        while k <= se:
+            if coef[k] != 0 and br.read_bit() and (coef[k] & p1) == 0:
+                coef[k] += p1 if coef[k] >= 0 else m1
+            k += 1
+        eobrun -= 1
+    return eobrun
+
+
 def _jpeg_scan(
-    data, pos, comps, scomps, huff, coefs,
-    restart_interval, mcux, mcuy, hmax, vmax, h_img, w_img,
+    data, pos, comps, scomps, ss, se, ah, al, huff, coefs,
+    restart_interval, mcux, mcuy, hmax, vmax, h_img, w_img, progressive,
 ) -> int:
     """Decode one entropy-coded scan into the per-component coefficient
     arrays and return the position of the next marker.
@@ -839,10 +908,11 @@ def _jpeg_scan(
     ``scomps`` is ``[(comp_index, dc_table, ac_table), ...]``. A
     single-component scan is non-interleaved (data units in raster order
     over the component's own ceil-divided block grid, T.81 A.2.2); a
-    multi-component scan walks MCUs. Restart markers reset DC
-    predictors."""
+    multi-component scan walks MCUs. Restart markers reset DC predictors
+    and the EOB run."""
     br = _BitReader(data, pos)
     preds = [0] * len(comps)
+    eobrun = 0
 
     if len(scomps) == 1:
         ci, td, ta = scomps[0]
@@ -871,23 +941,40 @@ def _jpeg_scan(
         if restart_interval and m and m % restart_interval == 0:
             br.align_restart()
             preds = [0] * len(comps)
+            eobrun = 0
         for ci, td, ta, by, bx in units(m):
             coef = coefs[ci][by, bx]
-            t = _huff_decode(br, huff[(0, td)])
-            preds[ci] += _extend(br.read_bits(t), t)
-            coef[0] = preds[ci]
-            k = 1
-            while k < 64:
-                rs = _huff_decode(br, huff[(1, ta)])
-                r, s = rs >> 4, rs & 15
-                if rs == 0x00:  # EOB
-                    break
-                if rs == 0xF0:  # ZRL
-                    k += 16
-                    continue
-                k += r
-                coef[k] = _extend(br.read_bits(s), s)
-                k += 1
+            if not progressive:
+                t = _huff_decode(br, huff[(0, td)])
+                preds[ci] += _extend(br.read_bits(t), t)
+                coef[0] = preds[ci]
+                k = 1
+                while k < 64:
+                    rs = _huff_decode(br, huff[(1, ta)])
+                    r, s = rs >> 4, rs & 15
+                    if rs == 0x00:  # EOB
+                        break
+                    if rs == 0xF0:  # ZRL
+                        k += 16
+                        continue
+                    k += r
+                    coef[k] = _extend(br.read_bits(s), s)
+                    k += 1
+            elif ss == 0:
+                if ah == 0:  # first DC scan (T.81 G.1.2.1)
+                    t = _huff_decode(br, huff[(0, td)])
+                    preds[ci] += _extend(br.read_bits(t), t)
+                    coef[0] = preds[ci] << al
+                elif br.read_bit():  # DC refinement: one raw bit
+                    coef[0] |= 1 << al
+            elif ah == 0:
+                eobrun = _jpeg_ac_first(
+                    br, huff[(1, ta)], coef, ss, se, al, eobrun
+                )
+            else:
+                eobrun = _jpeg_ac_refine(
+                    br, huff[(1, ta)], coef, ss, se, al, eobrun
+                )
 
     p = br.pos
     while p < len(data) - 1 and not (
@@ -900,16 +987,19 @@ def _jpeg_scan(
 
 
 def decode_jpeg(payload: bytes) -> np.ndarray:
-    """Baseline (SOF0) and extended sequential (SOF1) Huffman JPEG →
-    HxWx3 uint8 RGB (grayscale replicated).
+    """Baseline (SOF0) and progressive (SOF2) JPEG → HxWx3 uint8 RGB
+    (grayscale replicated).
 
     General table-driven decode — any DQT/DHT (Annex K or custom),
     1 or 3 components, sampling factors up to 2x2 (nearest upsample),
-    DRI/RSTn. Quantized coefficients accumulate per component, then one
-    vectorized dequantize + IDCT + upsample + YCbCr finish runs per
-    image. Deterministic rounding as described in the section header.
-    Progressive, arithmetic-coded and hierarchical modes (SOF2,
-    SOF9/SOF10/SOF13/SOF14, SOF3/5/6/7/11/15) raise
+    DRI/RSTn, and for progressive streams any scan script (spectral
+    selection + successive approximation, interleaved DC scans,
+    non-interleaved AC scans, EOB runs). Both modes accumulate quantized
+    coefficients per component and share one vectorized dequantize +
+    IDCT + upsample + YCbCr finish, so a progressive stream decodes to
+    exactly the pixels of its baseline re-encoding. Deterministic
+    rounding as described in the section header. Arithmetic-coded and
+    hierarchical modes (SOF9/SOF10/SOF13/SOF14, SOF3/5/6/7/11/15) raise
     ``NotImplementedError``.
     """
     data = bytes(payload)
@@ -922,6 +1012,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     coefs: list[np.ndarray] = []
     h_img = w_img = 0
     restart_interval = 0
+    progressive = False
     hmax = vmax = mcux = mcuy = 0
     while pos < len(data) - 1:
         if data[pos] != 0xFF:
@@ -958,9 +1049,10 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                     counts, body[p + 17 : p + 17 + nval]
                 )
                 p += 17 + nval
-        elif marker in (0xC0, 0xC1):
+        elif marker in (0xC0, 0xC1, 0xC2):
             # SOF0 baseline / SOF1 extended sequential (identical
-            # Huffman decoding at 8-bit precision)
+            # Huffman decoding at 8-bit precision) / SOF2 progressive
+            progressive = marker == 0xC2
             if body[0] != 8:
                 raise NotImplementedError("only 8-bit sample precision")
             h_img = int.from_bytes(body[1:3], "big")
@@ -993,11 +1085,11 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 np.zeros((mcuy * c["v"], mcux * c["h"], 64), dtype=np.int64)
                 for c in comps
             ]
-        elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
+        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
                         0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
-                "only baseline (SOF0) and extended sequential (SOF1) "
-                "Huffman JPEG are supported"
+                "only baseline (SOF0), extended sequential (SOF1) and "
+                "progressive (SOF2) Huffman JPEG are supported"
             )
         elif marker == 0xDD:  # DRI
             restart_interval = int.from_bytes(body[0:2], "big")
@@ -1010,9 +1102,15 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                     i for i, comp in enumerate(comps) if comp["id"] == cid
                 )
                 scomps.append((ci, tabs >> 4, tabs & 15))
+            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
+            ahal = body[3 + 2 * ns]
+            ah, al = ahal >> 4, ahal & 15
+            if not progressive:
+                ss, se, ah, al = 0, 63, 0, 0
             pos = _jpeg_scan(
-                data, pos + seglen, comps, scomps, huff, coefs,
-                restart_interval, mcux, mcuy, hmax, vmax, h_img, w_img,
+                data, pos + seglen, comps, scomps, ss, se, ah, al, huff,
+                coefs, restart_interval, mcux, mcuy, hmax, vmax,
+                h_img, w_img, progressive,
             )
             continue
         pos += seglen
@@ -1162,17 +1260,233 @@ def encode_jpeg(
     return head + bw.flush() + b"\xff\xd9"
 
 
+# progressive fixture AC table: the baseline AC symbols plus the EOBn
+# run codes 0x10..0xE0 (r = 1..14), all at length 8 — Kraft 176/256.
+# Kept separate so the baseline fixture byte streams are unchanged.
+_ENC_AC_VALUES_P = bytes(
+    [0x00, 0xF0]
+    + [r << 4 for r in range(1, 15)]
+    + [(r << 4) | s for r in range(16) for s in range(1, 11)]
+)
+_ENC_AC_COUNTS_P = [0] * 7 + [len(_ENC_AC_VALUES_P)] + [0] * 8
+
+
+class _ProgACState:
+    """Cross-block AC-scan state for the progressive encoder: a pending
+    EOB run plus the correction bits buffered with it (T.81 G.1.2.3 —
+    refinement bits for already-nonzero coefficients traversed while the
+    run was open are emitted right after the EOBn code)."""
+
+    def __init__(self, bw: _BitWriter, codes: dict) -> None:
+        self.bw = bw
+        self.codes = codes
+        self.eobrun = 0
+        self.bits: list[int] = []
+
+    def flush(self) -> None:
+        if self.eobrun:
+            r = self.eobrun.bit_length() - 1
+            code, ln = self.codes[r << 4]
+            self.bw.write(code, ln)
+            if r:
+                self.bw.write(self.eobrun - (1 << r), r)
+            self.eobrun = 0
+        for b in self.bits:
+            self.bw.write(b, 1)
+        self.bits = []
+
+    def add_eob(self, bits: list[int]) -> None:
+        self.eobrun += 1
+        self.bits.extend(bits)
+        if self.eobrun == 0x7FFF:  # EOB14 ceiling
+            self.flush()
+
+
+def _prog_ac_first_block(st: _ProgACState, zz, ss, se, al) -> None:
+    """Encode one block of a first AC scan (values coded at precision
+    ``abs(v) >> al`` with v's sign, T.81 G.1.2.2)."""
+    r = 0
+    for k in range(ss, se + 1):
+        v = int(zz[k])
+        t = abs(v) >> al
+        if t == 0:
+            r += 1
+            continue
+        st.flush()
+        while r > 15:
+            code, ln = st.codes[0xF0]
+            st.bw.write(code, ln)
+            r -= 16
+        s = t.bit_length()
+        code, ln = st.codes[(r << 4) | s]
+        st.bw.write(code, ln)
+        sv = t if v >= 0 else -t
+        st.bw.write(sv if sv >= 0 else sv + (1 << s) - 1, s)
+        r = 0
+    if r > 0:
+        st.add_eob([])
+
+
+def _prog_ac_refine_block(st: _ProgACState, zz, ss, se, al) -> None:
+    """Encode one block of an AC refinement scan: newly-nonzero
+    coefficients (``abs(v) >> al == 1``) as (zero-history-run, 1) + sign,
+    already-nonzero ones as buffered correction bits (T.81 G.1.2.3)."""
+    absv = [abs(int(zz[k])) >> al for k in range(ss, se + 1)]
+    eob_idx = -1  # band index of the last newly-nonzero coefficient
+    for i, t in enumerate(absv):
+        if t == 1:
+            eob_idx = i
+    r = 0
+    br_bits: list[int] = []
+    for i, t in enumerate(absv):
+        if t == 0:
+            r += 1
+            continue
+        while r > 15 and i <= eob_idx:
+            st.flush()
+            code, ln = st.codes[0xF0]
+            st.bw.write(code, ln)
+            r -= 16
+            for b in br_bits:
+                st.bw.write(b, 1)
+            br_bits = []
+        if t > 1:  # already nonzero at coarser precision: correction bit
+            br_bits.append(t & 1)
+            continue
+        st.flush()
+        code, ln = st.codes[(r << 4) | 1]
+        st.bw.write(code, ln)
+        st.bw.write(1 if int(zz[ss + i]) > 0 else 0, 1)
+        for b in br_bits:
+            st.bw.write(b, 1)
+        br_bits = []
+        r = 0
+    if r > 0 or br_bits:
+        st.add_eob(br_bits)
+
+
+def encode_jpeg_progressive(
+    coeff_blocks: np.ndarray,
+    h: int,
+    w: int,
+    qtable: np.ndarray,
+    dc_al: int = 1,
+    ac_split: int = 5,
+) -> bytes:
+    """Quantized coefficient blocks → progressive JPEG (SOF2; 3
+    components, 4:4:4, one shared quant table).
+
+    Same input contract as ``encode_jpeg`` — the scan script is the
+    classic spectral-selection + successive-approximation ladder:
+
+    1. interleaved first DC scan (Ah=0, Al=``dc_al``),
+    2. per component, first AC scans split at ``ac_split``
+       (Ss=1..split and split+1..63, Ah=0, Al=1),
+    3. interleaved DC refinement scans down to Al=0 (raw bits),
+    4. per component, AC refinement scans for the same two bands
+       (Ah=1, Al=0) with cross-block EOB runs and buffered correction
+       bits.
+
+    ``decode_jpeg`` of the result equals ``decode_jpeg`` of
+    ``encode_jpeg`` over the same blocks exactly (both reconstruct the
+    identical coefficient array). This is the fixture writer — the
+    decoder above is the general artifact.
+    """
+    nby, nbx = coeff_blocks.shape[:2]
+    if (nby * 8, nbx * 8) != (h, w):
+        raise ValueError("block grid does not cover image")
+    dc_codes = _huff_canonical_codes(_ENC_DC_COUNTS, _ENC_DC_VALUES)
+    ac_codes = _huff_canonical_codes(_ENC_AC_COUNTS_P, _ENC_AC_VALUES_P)
+
+    def marker(m: int, body: bytes) -> bytes:
+        return bytes([0xFF, m]) + (len(body) + 2).to_bytes(2, "big") + body
+
+    qzig = qtable[_ZIGZAG]
+    head = b"\xff\xd8"
+    head += marker(0xDB, bytes([0]) + qzig.astype(np.uint8).tobytes())
+    sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes(
+        [3, 1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]
+    )
+    head += marker(0xC2, sof)
+    head += marker(
+        0xC4, bytes([0x00]) + bytes(_ENC_DC_COUNTS) + _ENC_DC_VALUES
+    )
+    head += marker(
+        0xC4, bytes([0x10]) + bytes(_ENC_AC_COUNTS_P) + _ENC_AC_VALUES_P
+    )
+
+    def sos(comp_ids: list[int], ss: int, se: int, ah: int, al: int,
+            payload: bytes) -> bytes:
+        body = bytes([len(comp_ids)])
+        for cid in comp_ids:
+            body += bytes([cid, 0x00])
+        body += bytes([ss, se, (ah << 4) | al])
+        return marker(0xDA, body) + payload
+
+    out = head
+    zz_all = coeff_blocks[..., _ZIGZAG]  # (nby, nbx, 3, 64) zigzag order
+
+    # 1. interleaved first DC scan at Al=dc_al (arithmetic shift, G.1.1.1)
+    bw = _BitWriter()
+    pred = [0, 0, 0]
+    for m in range(nby * nbx):
+        my, mx = divmod(m, nbx)
+        for c in range(3):
+            v = int(zz_all[my, mx, c, 0]) >> dc_al
+            diff = v - pred[c]
+            pred[c] = v
+            t = abs(diff).bit_length()
+            code, ln = dc_codes[t]
+            bw.write(code, ln)
+            if t:
+                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+    out += sos([1, 2, 3], 0, 0, 0, dc_al, bw.flush())
+
+    # 2. per-component first AC scans, two spectral bands at Al=1
+    bands = [(1, ac_split), (ac_split + 1, 63)]
+    for c in range(3):
+        for ss_b, se_b in bands:
+            bw = _BitWriter()
+            st = _ProgACState(bw, ac_codes)
+            for m in range(nby * nbx):
+                my, mx = divmod(m, nbx)
+                _prog_ac_first_block(st, zz_all[my, mx, c], ss_b, se_b, 1)
+            st.flush()
+            out += sos([c + 1], ss_b, se_b, 0, 1, bw.flush())
+
+    # 3. interleaved DC refinement scans down to Al=0 (one raw bit each)
+    for al in range(dc_al - 1, -1, -1):
+        bw = _BitWriter()
+        for m in range(nby * nbx):
+            my, mx = divmod(m, nbx)
+            for c in range(3):
+                bw.write((int(zz_all[my, mx, c, 0]) >> al) & 1, 1)
+        out += sos([1, 2, 3], 0, 0, al + 1, al, bw.flush())
+
+    # 4. per-component AC refinement scans (Ah=1 → Al=0)
+    for c in range(3):
+        for ss_b, se_b in bands:
+            bw = _BitWriter()
+            st = _ProgACState(bw, ac_codes)
+            for m in range(nby * nbx):
+                my, mx = divmod(m, nbx)
+                _prog_ac_refine_block(st, zz_all[my, mx, c], ss_b, se_b, 0)
+            st.flush()
+            out += sos([c + 1], ss_b, se_b, 1, 0, bw.flush())
+
+    return out + b"\xff\xd9"
+
+
 @_malformed_to_valueerror("image")
 def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
     """payload → HxWx3 uint8 array.
 
     Real decoders (pure numpy, no external libs): binary PPM (``P6``),
     uncompressed 24-bit BMP (``BM``), PNG (stdlib zlib inflate +
-    full filter reconstruction), GIF87a/89a, and baseline (SOF0/SOF1)
-    JPEG (table-driven Huffman + matrix IDCT; progressive,
-    arithmetic-coded and hierarchical modes raise
-    ``NotImplementedError``). Any other format, TIFF included, raises
-    ``NotImplementedError``.
+    full filter reconstruction), GIF87a/89a, and baseline (SOF0) +
+    progressive (SOF2) JPEG (table-driven Huffman + matrix IDCT;
+    arithmetic-coded/hierarchical modes raise ``NotImplementedError``).
+    Any other format, TIFF included, raises ``NotImplementedError``.
     ``fake=True`` keeps the deterministic
     content-hash decoder used by the SQL-twinned correctness oracles."""
     if fake:
@@ -1193,7 +1507,7 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
     raise NotImplementedError(
         "unsupported image format: other formats require codec libraries "
         "this package does not ship; supported real formats: PPM (P6), "
-        "24-bit BMP, PNG, GIF87a/89a, baseline JPEG"
+        "24-bit BMP, PNG, GIF87a/89a, baseline + progressive JPEG"
     )
 
 
@@ -1760,6 +2074,41 @@ def synth_jpeg_media(spark, n: int = 64) -> DataFrame:
         coeffs = np.zeros((IMG_H // 8, IMG_W // 8, 3, 64), dtype=np.int64)
         coeffs[..., 0] = ks.reshape(IMG_H // 8, IMG_W // 8, 3)
         payload = encode_jpeg(coeffs, IMG_H, IMG_W, q)
+        rows.append(
+            (i, "image", bytearray(payload), "image/jpeg", IMG_W, IMG_H, 0)
+        )
+    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
+
+
+def synth_jpeg_progressive_media(spark, n: int = 64) -> DataFrame:
+    """Deterministic REAL progressive-JPEG media table: the same
+    DC-only 32x32 4:4:4 construction as ``synth_jpeg_media`` (quantized
+    DC of block ``b`` / component ``c`` = ``(splitmix64(seed + (b*3 +
+    c)) & 127) - 64`` with quant step 16) but seeded from
+    ``md5('jpgp:' || media_id)`` and written by
+    ``encode_jpeg_progressive`` — a genuine SOF2 scan ladder (first DC
+    scan at Al=1, split-band first AC scans, raw-bit DC refinement,
+    EOB-run AC refinement). The decoder reassembles the identical
+    coefficient array, so the SQL twin is ``jpeg_features_sql`` with the
+    ``jpgp:`` seed prefix; the all-zero AC bands make every AC scan a
+    pure cross-block EOB run, exercising the EOBn decode path under the
+    oracle gate (nonzero-AC refinement is pinned by the round-trip
+    pytest suite — its IDCT has no closed SQL form)."""
+    q = np.full(64, JPEG_QDC, dtype=np.int64)
+    nb = (IMG_H // 8) * (IMG_W // 8)
+    rows = []
+    for i in range(n):
+        seed = np.uint64(
+            int(hashlib.md5(f"jpgp:{i}".encode()).hexdigest()[:16], 16)
+        )
+        idx = np.arange(nb * 3, dtype=np.uint64)
+        ks = (
+            (_splitmix64(seed + idx) & np.uint64(127)).astype(np.int64)
+            - 64
+        )
+        coeffs = np.zeros((IMG_H // 8, IMG_W // 8, 3, 64), dtype=np.int64)
+        coeffs[..., 0] = ks.reshape(IMG_H // 8, IMG_W // 8, 3)
+        payload = encode_jpeg_progressive(coeffs, IMG_H, IMG_W, q)
         rows.append(
             (i, "image", bytearray(payload), "image/jpeg", IMG_W, IMG_H, 0)
         )

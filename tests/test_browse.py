@@ -1,4 +1,5 @@
-"""Browse/domain-info surface (features-search/random-websites, domain-info)."""
+"""Browse/domain-info surface (features-search/random-websites, domain-info)
+and the tiered query-time safety blocklist (nsfw-filter's NsfwDomainFilter)."""
 
 import hashlib
 from fractions import Fraction
@@ -11,6 +12,13 @@ from marginaliasearch_spark.operators.browse import (
     random_browse,
     similar_browse,
 )
+from marginaliasearch_spark.operators.index_build import IndexPaths, build_index
+from marginaliasearch_spark.operators.query_exec import (
+    IndexReader,
+    run_query,
+    run_query_wand,
+)
+from marginaliasearch_spark.sources.transcripts import factor_corpus
 
 
 def _py_hash60(val: int, salt: str = "browse-v1") -> int:
@@ -150,3 +158,146 @@ def test_domain_info_single_domain(spark):
     scores = spark.createDataFrame([(7, 10)], "id long, score long")
     [row] = domain_info(meta, edges, scores).collect()
     assert row["ranking"] == 100
+
+
+# ---------------------------------------------------------------------------
+# tiered safety blocklist (NsfwDomainFilter.isBlocked)
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def built(spark, tmp_path_factory):
+    corpus = factor_corpus(spark, 128).cache()
+    root = str(tmp_path_factory.mktemp("safeidx"))
+    build_index(spark, corpus, root, n_buckets=1)
+    return IndexReader(spark, IndexPaths(root))
+
+
+def _blocklist(spark, reader, tier1_convs, tier2_convs):
+    ds = reader.doc_stats
+    t1 = ds.where(F.col("conv_id").isin(tier1_convs)).select(
+        "doc_id", F.lit(1).alias("tier")
+    )
+    t2 = ds.where(F.col("conv_id").isin(tier2_convs)).select(
+        "doc_id", F.lit(2).alias("tier")
+    )
+    return t1.unionByName(t2)
+
+
+def test_blocklist_tier_semantics(spark, built):
+    reader = built
+    base = {r["conv_id"] for r in run_query(reader, "factor2", k=100).collect()}
+    assert {"conv2", "conv4", "conv6"} <= base
+    bl = _blocklist(spark, reader, ["conv2"], ["conv4"])
+    got0 = {
+        r["conv_id"]
+        for r in run_query(
+            reader, "factor2", k=100, blocklist=bl, safe_tier=0
+        ).collect()
+    }
+    assert got0 == base  # NSFW_DISABLE
+    got1 = {
+        r["conv_id"]
+        for r in run_query(
+            reader, "factor2", k=100, blocklist=bl, safe_tier=1
+        ).collect()
+    }
+    assert got1 == base - {"conv2"}  # NSFW_BLOCK_DANGER: tier 1 only
+    got2 = {
+        r["conv_id"]
+        for r in run_query(
+            reader, "factor2", k=100, blocklist=bl, safe_tier=2
+        ).collect()
+    }
+    assert got2 == base - {"conv2", "conv4"}  # NSFW_BLOCK_SMUT: both tiers
+
+
+def test_blocklist_wand_matches_plain(spark, built):
+    reader = built
+    bl = _blocklist(spark, reader, ["conv2", "conv6"], ["conv12"])
+    plain = [
+        (r["conv_id"], r["score"])
+        for r in run_query(
+            reader, "factor2", k=10, round_score_to=6, blocklist=bl, safe_tier=2
+        ).collect()
+    ]
+    wand = [
+        (r["conv_id"], r["score"])
+        for r in run_query_wand(
+            reader, "factor2", k=10, round_score_to=6, blocklist=bl, safe_tier=2
+        ).collect()
+    ]
+    assert plain == wand
+    blocked = {"conv2", "conv6", "conv12"}
+    assert not blocked & {c for c, _ in plain}
+
+
+# ---------------------------------------------------------------------------
+# pagination (IndexClient.executeQueries subList slice)
+# ---------------------------------------------------------------------------
+
+
+def test_pagination_slices_cover_topk(spark, built):
+    from marginaliasearch_spark.operators.query_exec import run_query_page
+
+    reader = built
+    top = [
+        (r["conv_id"], r["score"])
+        for r in run_query(
+            reader, "factor2", k=12, round_score_to=6
+        ).collect()
+    ]
+    pages = []
+    for p in (1, 2, 3):
+        pages += [
+            (r["conv_id"], r["score"])
+            for r in run_query_page(
+                reader,
+                "factor2",
+                page=p,
+                page_size=4,
+                total_limit=12,
+                round_score_to=6,
+            ).collect()
+        ]
+    assert pages == top  # concatenated pages == the single gather
+
+
+def test_pagination_edges(spark, built):
+    from marginaliasearch_spark.operators.query_exec import run_query_page
+
+    reader = built
+    # page past the end of the gather → empty, reference subList semantics
+    assert (
+        run_query_page(
+            reader, "factor2", page=9, page_size=10, total_limit=12
+        ).count()
+        == 0
+    )
+    # page <= 1 starts at row 0 (Math.max(0, ...))
+    p0 = run_query_page(
+        reader, "factor2", page=0, page_size=3, total_limit=12,
+        round_score_to=6,
+    ).collect()
+    p1 = run_query_page(
+        reader, "factor2", page=1, page_size=3, total_limit=12,
+        round_score_to=6,
+    ).collect()
+    assert [r["conv_id"] for r in p0] == [r["conv_id"] for r in p1]
+
+
+def test_pagination_wand_gather(spark, built):
+    from marginaliasearch_spark.operators.query_exec import run_query_page
+
+    reader = built
+    plain = run_query_page(
+        reader, "factor2", page=2, page_size=4, total_limit=12,
+        round_score_to=6,
+    ).collect()
+    wand = run_query_page(
+        reader, "qs=wand factor2", page=2, page_size=4, total_limit=12,
+        round_score_to=6,
+    ).collect()
+    assert [(r["conv_id"], r["score"]) for r in plain] == [
+        (r["conv_id"], r["score"]) for r in wand
+    ]

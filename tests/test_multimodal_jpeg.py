@@ -213,15 +213,79 @@ def test_arithmetic_coding_raises():
     data = b"\xff\xd8" + _marker(0xC9, bytes([8, 0, 8, 0, 8, 1, 1, 0x11, 0]))
     with pytest.raises(NotImplementedError):
         mm.decode_jpeg(data)
-    # so is SOF2 (progressive): a baseline stream relabelled as
-    # progressive must be refused, not decoded as a sequential scan
+
+
+def test_progressive_equals_baseline_dc_only():
+    rng = np.random.default_rng(3)
+    coeffs = np.zeros((4, 4, 3, 64), dtype=np.int64)
+    coeffs[..., 0] = rng.integers(-64, 64, size=(4, 4, 3))
+    base = mm.decode_jpeg(mm.encode_jpeg(coeffs, 32, 32, Q16))
+    prog = mm.decode_jpeg(mm.encode_jpeg_progressive(coeffs, 32, 32, Q16))
+    assert np.array_equal(base, prog)
+
+
+def test_progressive_equals_baseline_with_ac():
+    # sparse AC: newly-nonzero refinement placements + cross-block EOB
+    # runs; dense small values: +-1 coefficients are invisible in the
+    # Al=1 first scan and must appear via refinement (run, 1) codes
+    rng = np.random.default_rng(17)
+    for dens, lo, hi in ((0.2, -40, 41), (1.0, -5, 6)):
+        coeffs = np.zeros((4, 4, 3, 64), dtype=np.int64)
+        coeffs[..., 0] = rng.integers(-100, 100, size=(4, 4, 3))
+        mask = rng.random((4, 4, 3, 63)) < dens
+        acs = rng.integers(lo, hi, size=(4, 4, 3, 63))
+        acs[acs == 0] = 1
+        coeffs[..., 1:] = np.where(mask, acs, 0)
+        base = mm.decode_jpeg(mm.encode_jpeg(coeffs, 32, 32, Q16))
+        prog = mm.decode_jpeg(
+            mm.encode_jpeg_progressive(coeffs, 32, 32, Q16)
+        )
+        assert np.array_equal(base, prog)
+
+
+def test_progressive_fuzz_scan_scripts():
+    # randomized densities, spectral split points, and DC point
+    # transforms: the progressive stream must reassemble the exact
+    # coefficient array of its baseline twin in every configuration
+    for trial in range(20):
+        rng = np.random.default_rng(100 + trial)
+        coeffs = np.zeros((2, 3, 3, 64), dtype=np.int64)
+        coeffs[..., 0] = rng.integers(-128, 128, size=(2, 3, 3))
+        mask = rng.random((2, 3, 3, 63)) < rng.random()
+        acs = rng.integers(-60, 61, size=(2, 3, 3, 63))
+        coeffs[..., 1:] = np.where(mask, acs, 0)
+        split = int(rng.integers(1, 63))
+        dal = int(rng.integers(1, 3))
+        base = mm.decode_jpeg(mm.encode_jpeg(coeffs, 16, 24, Q16))
+        prog = mm.decode_jpeg(
+            mm.encode_jpeg_progressive(
+                coeffs, 16, 24, Q16, dc_al=dal, ac_split=split
+            )
+        )
+        assert np.array_equal(base, prog), (trial, split, dal)
+
+
+def test_progressive_stream_is_genuinely_sof2():
     coeffs = np.zeros((1, 1, 3, 64), dtype=np.int64)
-    sof2 = mm.encode_jpeg(coeffs, 8, 8, Q16).replace(b"\xff\xc0", b"\xff\xc2", 1)
-    assert b"\xff\xc2" in sof2
-    with pytest.raises(NotImplementedError):
-        mm.decode_jpeg(sof2)
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(sof2)
+    payload = mm.encode_jpeg_progressive(coeffs, 8, 8, Q16)
+    assert b"\xff\xc2" in payload and b"\xff\xc0" not in payload
+    assert payload.count(b"\xff\xda") >= 6  # multi-scan ladder
+
+
+def test_progressive_fixture_matches_duckdb_oracle(spark):
+    media = mm.synth_jpeg_progressive_media(spark, n=6)
+    feats = mm.image_features(media, fake=False).collect()
+    got = {
+        r.media_id: tuple(
+            round(float(getattr(r, c)), 6) for c in mm.FEATURE_COLS
+        )
+        for r in feats
+    }
+    exp = {
+        row[0]: tuple(row[1:])
+        for row in duckdb.sql(jpeg_features_sql(6, prefix="jpgp:")).fetchall()
+    }
+    assert got == exp
 
 
 def test_decode_image_dispatches_jpeg():

@@ -17,7 +17,7 @@ deletes from a slice copy) — with real truncation mutations enabled and
 the GIF aggregate-pixel budget + tightened JPEG/TIFF caps in place, the
 final record is 27,000 mutations across the format seeds, 0 escapes,
 0 slow (that run also covered the since-removed MP3/Opus metadata
-walkers, audio decoders, TIFF and progressive-JPEG decoders).
+walkers, audio decoders and the TIFF decoder).
 
 Run: python tools/fuzz_decoders.py   (~8 min)
 """
@@ -43,6 +43,7 @@ S = []
 S += mk("gif", lambda: mm.encode_gif(idx, pal))
 S += mk("gif_anim", lambda: mm.encode_gif_animation([(0,0,idx)]*3, pal, (16,16), delays=[10]*3))
 S += mk("jpeg", lambda: mm.encode_jpeg(coeffs, 16, 16, qt))
+S += mk("jpeg_prog", lambda: mm.encode_jpeg_progressive(coeffs, 16, 16, qt))
 S += mk("avi", lambda: mm.encode_avi_mjpeg([mm.encode_jpeg(coeffs, 16, 16, qt)]*3, fps=10, w=16, h=16))
 S += mk("ppm", lambda: mm.encode_ppm(img) if hasattr(mm, "encode_ppm") else (_ for _ in ()).throw(AttributeError()))
 S += mk("bmp", lambda: mm.encode_bmp(img) if hasattr(mm, "encode_bmp") else (_ for _ in ()).throw(AttributeError()))
