@@ -169,6 +169,7 @@ def decode_blocks(
     with_positions: bool = False,
     with_wtf: bool = False,
     candidates: np.ndarray | None = None,
+    reject: np.ndarray | None = None,
 ) -> Iterator[pd.DataFrame]:
     """Block rows → exploded (term_id, doc_id, tf[, positions]) rows.
 
@@ -188,11 +189,20 @@ def decode_blocks(
     window contains no candidate are dropped before any payload is touched
     (skip-list forward-pointer semantics), and decoded ids are intersected
     (ReverseIndexRetainFilter / tryRetainData).
+
+    ``reject``: optional sorted uint64 doc-id array (or ``Broadcast``) of
+    documents that must never come out — the index's deletion tombstones.
+    Decoded ids found in it are dropped beside the candidate mask; no
+    block is skipped for it, since a block rarely holds deleted docs only.
     """
     from .codecs import segmented_undelta
 
     if candidates is not None and hasattr(candidates, "value"):
         candidates = candidates.value
+    if reject is not None and hasattr(reject, "value"):
+        reject = reject.value
+    if reject is not None and not reject.size:
+        reject = None
     for pdf in batches:
         if not len(pdf):
             continue
@@ -227,6 +237,9 @@ def decode_blocks(
             if candidates is not None
             else None
         )
+        if reject is not None:
+            live = ~_member_mask(reject, doc_ids)
+            mask = live if mask is None else mask & live
         if with_positions:
             # a block with null positions (a term that needs none) decodes
             # no position list; its docs get null positions

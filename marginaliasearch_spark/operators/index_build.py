@@ -424,7 +424,7 @@ def delete_convs(
     so tombstones + compaction is the online analogue).
 
     Appends (doc_id, conv_id) rows to ``<root>/tombstones``; the reader
-    masks tombstoned documents with a broadcast anti-join (results never
+    drops tombstoned documents inside its postings decode (results never
     contain them from the moment the append commits), while corpus/df
     statistics intentionally stay pre-deletion until ``compact_index``
     absorbs the tombstones — the same stale-ranking-until-reconstruction

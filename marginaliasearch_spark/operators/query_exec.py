@@ -9,11 +9,15 @@ Ranking) as one DataFrame DAG:
   path's rarest term as its driver (``CombinedIndexReader.java:94-97,
   119-130`` — selectivity ordering is OURS to do);
 - **lookup** (= EntrySource + ReverseIndexRetainFilter): ONE filtered scan
-  and ONE ``mapInPandas`` decode per posting tier reads every term the
-  query names, then a ``groupBy(doc_id)`` pivot lays each term out as
-  columns and keeps the docs where some OR path matched in full. When the
-  other terms' lists are big, the rarest terms' doc ids are collected
-  first and shipped to the decode, which skips blocks whose
+  and ONE decode per posting tier reads every term the query names, then a
+  ``groupBy(doc_id)`` pivot lays each term out as columns and keeps the
+  docs where some OR path matched in full. The decode site follows the
+  scan's summed lexicon df: a small scan's block rows are fetched through
+  Arrow and decoded on the driver (the reference decodes in the process
+  that plans the query), a big one runs as a ``mapInPandas`` stage. Either
+  way the kernel drops the index's deletion tombstones, collected once per
+  reader. When the other terms' lists are big, the rarest terms' doc ids
+  are collected first and shipped to the decode, which skips blocks whose
   [min_doc, max_doc] window misses all of them (skip-list forward
   pointers; ``SkipListReader.tryRetainData``). A lone term with nothing
   else to read skips the pivot;
@@ -38,10 +42,11 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
-from functools import partial, reduce
+from functools import cached_property, partial, reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -191,6 +196,16 @@ MAX_DRIVER_CANDIDATES = 2_000_000
 # driver-collect job that block pruning costs; above it, pruning pays.
 PRUNE_DF_THRESHOLD = 50_000
 
+# A tier scan whose terms' summed lexicon df is at most this is decoded on
+# the driver: its block rows come back through one JVM-only Arrow fetch and
+# ``decode_blocks`` runs in-process, instead of in a ``mapInPandas`` stage
+# whose Python worker start-up (~130 ms per task) outweighs a small decode.
+# Measured crossover (4 vCPUs, local[4], 250k-doc index; decode + count,
+# median of 5): at summed df 10k / 50k / 200k / 1M the driver took
+# 0.26 / 0.32 / 0.80 / 3.61 s and mapInPandas 0.40 / 0.41 / 0.42 / 0.62 s;
+# at 60k mapInPandas already won (0.43 against 0.54 s).
+DRIVER_DECODE_MAX_DF = 50_000
+
 
 def _collect_ids_u64(df: DataFrame, col: str = "doc_id") -> np.ndarray:
     """One long column → uint64 numpy array via an Arrow batch transfer.
@@ -223,9 +238,9 @@ class IndexReader:
         self._year_range: tuple[int, int] | None = None
         self.tombstones = None
         if os.path.exists(os.path.join(paths.tombstones, "_SUCCESS")):
-            self.tombstones = (
-                spark.read.parquet(paths.tombstones).select("doc_id").distinct()
-            )
+            # opened here, so an unreadable set fails the reader; its ids
+            # are collected on first query (``deleted_ids``)
+            self.tombstones = spark.read.parquet(paths.tombstones).select("doc_id")
         with open(paths.corpus_stats) as f:
             stats = json.load(f)
         self.n_docs = float(stats["doc_count"])
@@ -257,6 +272,7 @@ class IndexReader:
         # pages hot in its buffer pool (a WAND query alone probes the
         # lexicon three times: wrapper + both phases)
         self._stats_cache: dict[tuple, tuple[int, int] | None] = {}
+        self._df_cache: dict[tuple[str | None, int], int] = {}
         self._bounds_cache: dict[int, float | None] = {}
         self._term_bounds: DataFrame | None = None
         self._searchset_cache: dict[str, DataFrame | None] = {}
@@ -278,6 +294,28 @@ class IndexReader:
                 # reference treats those as no-constraint, never an error
                 self._searchset_cache[name] = None
         return self._searchset_cache[name]
+
+    @cached_property
+    def deleted_ids(self) -> np.ndarray | None:
+        """The tombstoned doc ids as a sorted uint64 array (the
+        ``_collect_ids_u64`` contract), collected on first use and kept —
+        the snapshot is immutable. Every decode drops them (the reject mask
+        of ``decode_blocks``), so no query re-reads or re-joins the set.
+        Empty without tombstones; None when more than
+        ``MAX_DRIVER_CANDIDATES`` ids are deleted, in which case
+        ``run_query`` anti-joins ``tombstones`` instead."""
+        if self.tombstones is None:
+            return np.empty(0, dtype=np.uint64)
+        ids = _collect_ids_u64(self.tombstones.limit(MAX_DRIVER_CANDIDATES + 1))
+        if ids.size > MAX_DRIVER_CANDIDATES:
+            return None
+        return np.unique(ids)
+
+    @cached_property
+    def _deleted_bc(self):
+        """``deleted_ids`` as one Spark broadcast per reader, for the
+        executor-side decodes."""
+        return self.spark.sparkContext.broadcast(self.deleted_ids)
 
     @property
     def year_range(self) -> tuple[int, int]:
@@ -346,11 +384,30 @@ class IndexReader:
             found = {r["term"]: (r["term_id"], r["df"]) for r in rows}
             for w in missing:
                 self._stats_cache[(lang, w)] = found.get(w)
+            for tid, df in found.values():
+                self._df_cache[(lang, tid)] = df
         return {
             w: self._stats_cache[(lang, w)]
             for w in want
             if self._stats_cache[(lang, w)] is not None
         }
+
+    def _scan_df(self, term_ids: list[int], lang: str | None) -> int:
+        """Summed lexicon df of ``term_ids`` — the postings a scan of them
+        can read at most. Usually memoized by :meth:`term_stats`; ids it
+        never saw cost one pushed-IN lexicon probe."""
+        if self.lexicon_lang is None:
+            lang = None
+        missing = [t for t in term_ids if (lang, t) not in self._df_cache]
+        if missing:
+            src = self.lexicon
+            if lang is not None:
+                src = self.lexicon_lang.filter(F.col("lang") == lang)
+            rows = src.filter(F.col("term_id").isin(missing)).select("term_id", "df")
+            found = {r["term_id"]: r["df"] for r in rows.collect()}
+            for t in missing:
+                self._df_cache[(lang, t)] = found.get(t, 0)
+        return sum(self._df_cache[(lang, t)] for t in term_ids)
 
     # --- posting access ------------------------------------------------
     def decode_term(
@@ -445,15 +502,62 @@ class IndexReader:
         lang: str | None = None,
     ) -> DataFrame:
         """Several terms' postings in ONE scan and ONE decode →
-        (term_id, doc_id, tf, flags[, wtf_q4][, positions]).
+        (term_id, doc_id, tf, flags[, wtf_q4][, positions]), with the
+        deleted docs dropped (unless there are too many to collect; see
+        :attr:`deleted_ids`).
 
-        The candidate array prunes blocks before decode. ``block_filter``
-        maps term_id → block predicate (a block-max WAND cut such as
-        ``max_tf_norm >= c``, whose score upper bound idf * max_tf_norm
-        cannot reach the current top-k threshold below it, or a
-        :meth:`block_budget`). Only the ``positions`` terms decode their
-        position lists; the other terms' rows carry null positions.
+        The candidate array (sorted uint64) prunes blocks before decode.
+        ``block_filter`` maps term_id → block predicate (a block-max WAND
+        cut such as ``max_tf_norm >= c``, whose score upper bound
+        idf * max_tf_norm cannot reach the current top-k threshold below
+        it, or a :meth:`block_budget`). Only the ``positions`` terms decode
+        their position lists; the other terms' rows carry null positions.
+
+        The decode site follows the scan's size: up to
+        ``DRIVER_DECODE_MAX_DF`` summed df, the block rows are fetched and
+        decoded on the driver, and the result is a local relation; above
+        it, a ``mapInPandas`` stage decodes on the executors.
         """
+        decoded = self._decode(
+            term_ids, candidates, positions, with_wtf, block_filter, tier, lang
+        )
+        if isinstance(decoded, DataFrame):
+            return decoded
+        schema = decoded_schema(bool(set(positions) & set(term_ids)), with_wtf)
+        if not decoded:
+            return self.spark.createDataFrame([], schema)
+        table = pa.Table.from_pandas(pd.concat(decoded), preserve_index=False)
+        return self.spark.createDataFrame(table, schema)
+
+    def decoded_ids(
+        self,
+        term_ids: list[int],
+        candidates: np.ndarray | None = None,
+        block_filter: dict[int, F.Column] | None = None,
+        tier: str = "full",
+        lang: str | None = None,
+    ) -> np.ndarray:
+        """The doc ids of :meth:`decode_terms`' rows as a uint64 array (one
+        entry per row). A driver-side decode hands its numpy output over
+        directly; an executor-side one is collected through Arrow."""
+        decoded = self._decode(term_ids, candidates, (), False, block_filter, tier, lang)
+        if isinstance(decoded, DataFrame):
+            return _collect_ids_u64(decoded.select("doc_id"))
+        ids = [f["doc_id"].to_numpy() for f in decoded]
+        return np.concatenate(ids).astype(np.uint64) if ids else np.empty(0, np.uint64)
+
+    def _decode(
+        self,
+        term_ids: list[int],
+        candidates: np.ndarray | None,
+        positions: tuple[int, ...] | list[int],
+        with_wtf: bool,
+        block_filter: dict[int, F.Column] | None,
+        tier: str,
+        lang: str | None,
+    ) -> DataFrame | list[pd.DataFrame]:
+        """The decode behind :meth:`decode_terms`: a ``mapInPandas``
+        DataFrame (executor site), or the decoded frames (driver site)."""
         blocks = self._blocks(term_ids, block_filter, tier, lang)
         pos = sorted(set(positions) & set(term_ids))
         # column pruning into the parquet scan: the positions payload (the
@@ -467,14 +571,21 @@ class IndexReader:
             if len(pos) < len(set(term_ids)):
                 pcol = F.when(F.col("term_id").isin(pos), pcol).alias("positions")
             cols.insert(4, pcol)
+        blocks = blocks.select(*cols)
+        deleted = self.deleted_ids
+        kernel = partial(decode_blocks, with_positions=bool(pos), with_wtf=with_wtf)
+        if self._scan_df(term_ids, lang) <= DRIVER_DECODE_MAX_DF:
+            batch = blocks.toArrow().to_pandas()
+            return list(kernel(iter([batch]), candidates=candidates, reject=deleted))
+        sc = self.spark.sparkContext
         fn = partial(
-            decode_blocks,
-            with_positions=bool(pos),
-            with_wtf=with_wtf,
-            candidates=candidates,
+            kernel,
+            # broadcasts, not closure captures: at the 2M-id cap an array
+            # is 16 MB, shipped once per executor instead of once per task
+            candidates=None if candidates is None else sc.broadcast(candidates),
+            reject=self._deleted_bc if deleted is not None and deleted.size else None,
         )
-        schema = decoded_schema(bool(pos), with_wtf)
-        return blocks.select(*cols).mapInPandas(fn, schema=schema)
+        return blocks.mapInPandas(fn, schema=decoded_schema(bool(pos), with_wtf))
 
 
 def _safe(word: str) -> str:
@@ -692,41 +803,43 @@ def run_query(
                 )
             )
 
-    def scan(words_by_tier: dict[str, set[str]], candidates, ids_only=False) -> DataFrame:
-        frames = []
-        for tier, words in sorted(words_by_tier.items()):
-            dec = reader.decode_terms(
-                sorted({stats[w][0] for w in words}),
-                candidates=candidates,
-                positions=[] if ids_only else [stats[w][0] for w in need_pos & words],
-                with_wtf=weighted and not ids_only,
-                block_filter=cuts[tier],
-                tier=tier,
-                lang=lang,
-            )
-            if len(words_by_tier) > 1:
-                dec = dec.withColumn("_tier", F.lit(tier))
-            frames.append(dec)
-        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
-
     # ship the drivers' doc ids to the decode kernel only when the other
     # terms' posting lists are big enough that block skipping pays for the
-    # extra collect job (at small df the pivot is cheaper; at head-term
-    # scale the pruning is the whole ballgame). A broadcast, not a closure
-    # capture: at the 2M-id cap this is 16 MB shipped once per executor
-    # (torrent) instead of once per task.
-    cand_ids = None
+    # extra scan of the drivers (at small df the pivot is cheaper; at
+    # head-term scale the pruning is the whole ballgame)
+    cand_ids = conv_doc_ids
     drv_df = sum(stats[w][1] for w in drivers)
     rest_df = sum(stats[w][1] for w in (set(live_terms) | lookups) - set(drivers))
     if drv_df <= MAX_DRIVER_CANDIDATES and rest_df > PRUNE_DF_THRESHOLD:
         by_tier: dict[str, set[str]] = {}
         for w in drivers:
             by_tier.setdefault(live_tier[w], set()).add(w)
-        ids = scan(by_tier, conv_doc_ids, ids_only=True).select("doc_id")
-        cand_ids = reader.spark.sparkContext.broadcast(np.unique(_collect_ids_u64(ids)))
-    elif conv_doc_ids is not None:
-        cand_ids = reader.spark.sparkContext.broadcast(conv_doc_ids)
-    dec = scan(legs, cand_ids)
+        ids = [
+            reader.decoded_ids(
+                sorted({stats[w][0] for w in words}),
+                candidates=conv_doc_ids,
+                block_filter=cuts[tier],
+                tier=tier,
+                lang=lang,
+            )
+            for tier, words in sorted(by_tier.items())
+        ]
+        cand_ids = np.unique(np.concatenate(ids))
+    frames = []
+    for tier, words in sorted(legs.items()):
+        dec = reader.decode_terms(
+            sorted({stats[w][0] for w in words}),
+            candidates=cand_ids,
+            positions=[stats[w][0] for w in need_pos & words],
+            with_wtf=weighted,
+            block_filter=cuts[tier],
+            tier=tier,
+            lang=lang,
+        )
+        if len(legs) > 1:
+            dec = dec.withColumn("_tier", F.lit(tier))
+        frames.append(dec)
+    dec = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
     # one live term and nothing else scanned: its rows ARE the candidates
     direct = len(live_terms) == 1 and not lookups
@@ -795,11 +908,12 @@ def run_query(
         # any set size; the common dimension-sized case was already folded
         # into the decode seed above
         cand = cand.join(members, "doc_id", "left_semi")
-    if reader.tombstones is not None:
-        # deleted docs are masked in BOTH WAND phases (each runs through
-        # here), so the phase-1 θ never counts a tombstoned doc — the cut
-        # stays sound after deletions
-        cand = cand.join(F.broadcast(reader.tombstones), "doc_id", "left_anti")
+    if reader.deleted_ids is None:
+        # deleted docs are dropped inside every decode (BOTH WAND phases
+        # run through here, so the phase-1 θ never counts one and the cut
+        # stays sound after deletions); only a set too big to collect is
+        # anti-joined instead
+        cand = cand.join(reader.tombstones, "doc_id", "left_anti")
     if blocklist is not None and safe_tier >= 1:
         # tiered safety blocklist (NsfwDomainFilter.isBlocked, nsfw-filter/
         # .../domain/NsfwDomainFilter.java:64-74): filter level t blocks

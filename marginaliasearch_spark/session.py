@@ -47,6 +47,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # no per-Column call-site capture: each Column op otherwise walks
+        # the Python stack and pays extra py4j round trips while a query
+        # is planned. Query syntax errors are ValueErrors raised before
+        # Spark runs, so they keep their message.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

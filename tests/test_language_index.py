@@ -9,6 +9,7 @@ import math
 
 import pytest
 
+from marginaliasearch_spark.operators import query_exec
 from marginaliasearch_spark.operators.index_build import IndexPaths, build_index
 from marginaliasearch_spark.operators.query_exec import IndexReader, run_query
 
@@ -88,11 +89,13 @@ def test_lang_with_unknown_language_is_empty(spark, built):
     assert run_query(built, "rare", k=5, lang="fr").count() == 0
 
 
-def test_lang_prunes_postings_scan(spark, built):
+def test_lang_prunes_postings_scan(spark, built, monkeypatch):
     """Postings are lang-partitioned at rest; a lang-scoped decode must
     push the language to the scan as a PARTITION filter (directory
     pruning), not filter after the join (reference: one reverse index per
-    language, WordLexicon.java:34-41)."""
+    language, WordLexicon.java:34-41). The executor-site decode keeps the
+    scan in its plan; the driver-site twin is below."""
+    monkeypatch.setattr(query_exec, "DRIVER_DECODE_MAX_DF", -1)
     tid = built.term_stats(["shared"])["shared"][0]
     plan = built.decode_term(
         tid, lang="es"
@@ -101,6 +104,26 @@ def test_lang_prunes_postings_scan(spark, built):
     assert "lang" in plan.split("PartitionFilters")[1][:200]
     # the full set of decoded docs must be the es docs only
     df = built.decode_term(tid, lang="es").select("doc_id")
+    assert df.count() == 4
+
+
+def test_lang_prunes_driver_fetch_scan(spark, built, monkeypatch):
+    """A driver-site decode fetches its block rows with the same scan, so
+    the language still reaches it as a partition filter."""
+    frame = type(built.postings)
+    fetched = []
+    to_arrow = frame.toArrow
+
+    def spy(df):
+        fetched.append(df._jdf.queryExecution().executedPlan().toString())
+        return to_arrow(df)
+
+    monkeypatch.setattr(frame, "toArrow", spy)
+    tid = built.term_stats(["shared"])["shared"][0]
+    df = built.decode_term(tid, lang="es").select("doc_id")
+    assert len(fetched) == 1
+    assert "PartitionFilters" in fetched[0]
+    assert "lang" in fetched[0].split("PartitionFilters")[1][:200]
     assert df.count() == 4
 
 

@@ -66,6 +66,9 @@ def main() -> int:
         SparkSession.builder.master("local[8]")
         .appName("check_entry")
         .config("spark.ui.enabled", "false")
+        # the \r-terminated [Stage N:...] bars would swallow ok/FAIL lines
+        # in a captured log
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "8g")
         .getOrCreate()
     )

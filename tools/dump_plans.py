@@ -14,6 +14,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from marginaliasearch_spark.operators import query_exec
 from marginaliasearch_spark.session import get_spark
 from marginaliasearch_spark.sources.transcripts import documents_as_transcripts
 from marginaliasearch_spark.operators.index_build import build_index, IndexPaths
@@ -42,10 +43,17 @@ def main() -> None:
     reader = IndexReader(spark, IndexPaths(root))
 
     sections = []
+    # every scan of this small index would decode on the driver, which
+    # leaves only a LocalTableScan in the plan; the query sections force the
+    # executor-site decode, whose plan carries the postings scan itself
+    driver_max_df = query_exec.DRIVER_DECODE_MAX_DF
+    query_exec.DRIVER_DECODE_MAX_DF = -1
     q = run_query(reader, "customer query -slow len>20", k=10)
     sections.append(
         (
             "Top-k BM25 query (`customer query -slow len>20`, k=10)",
+            "Executor-site decode (a scan over `DRIVER_DECODE_MAX_DF` "
+            "summed df). "
             "Things to check: ONE postings `Scan parquet` + ONE `MapInPandas` "
             "for all three terms, the exclusion `slow` included, with "
             "`PushedFilters: [In(term_id, [...])]` (row-group pruning via "
@@ -56,6 +64,23 @@ def main() -> None:
             "`TakeOrderedAndProject` (= the reference's top-k heap); BM25 "
             "arithmetic inside `WholeStageCodegen` ranges.",
             fmt(q),
+        )
+    )
+    query_exec.DRIVER_DECODE_MAX_DF = driver_max_df
+    q_drv = run_query(reader, "customer query -slow len>20", k=10)
+    query_exec.DRIVER_DECODE_MAX_DF = -1
+    sections.append(
+        (
+            "Driver-site decode (`customer query -slow len>20`, k=10)",
+            "The same query as it runs on this index: a scan of at most "
+            "`DRIVER_DECODE_MAX_DF` summed df fetches its block rows "
+            "through Arrow (one JVM-only job, while the query is planned) "
+            "and decodes them on the driver. Things to check: the plan "
+            "starts at a `LocalTableScan` of the decoded rows — no "
+            "`MapInPandas`, no Python stage; the pivot, filters, doc-stats "
+            "join and `TakeOrderedAndProject` are those of the "
+            "executor-site plan above.",
+            fmt(q_drv),
         )
     )
     q_or = run_query(reader, "( customer | batch ) query", k=10)
