@@ -20,8 +20,6 @@ Query families (SURVEY.md §2 operator references in each entry):
   fingerprinting (all JVM-side column expressions).
 - ``sim_*``       — embedding similarity search (brute-force cosine oracle;
   LSH / IVF variants recorded rows-only).
-- ``mm_*``        — multimodal binary-column plumbing (deterministic fake
-  decoder; rows-only).
 - ``events_*``    — time-windowed aggregation over the events table.
 
 Float columns are rounded to 6 decimals on BOTH sides so value-hashes match;
@@ -47,7 +45,6 @@ from marginaliasearch_spark.operators import (
     dedup,
     dsir,
     lm,
-    multimodal,
     ranking,
     redact,
     sampling,
@@ -1807,123 +1804,6 @@ def _q_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.quantized_cosine_topk(qemb, _QVEC, k=10)
 
 
-def _q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image downsample (nearest, 32→8): binary in / binary out resize
-    stage plus a scalar audit — per-channel means + exact pixel checksum
-    (`multimodal.resize_images` + `resize_summary`)."""
-    media = multimodal.synth_media(spark, n=64)
-    resized = multimodal.resize_images(media, out_h=8, out_w=8, fake=True)
-    s = multimodal.resize_summary(resized)
-    return s.select(
-        "media_id",
-        *[F.round(F.col(c), 6).alias(c) for c in ("mean_r", "mean_g", "mean_b")],
-        "px_sum",
-    )
-
-
-def _q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = multimodal.synth_media(spark, n=64)
-    feats = multimodal.image_features(media, fake=True)
-    return feats.select(
-        "media_id",
-        *[F.round(F.col(c), 6).alias(c) for c in multimodal.FEATURE_COLS],
-    )
-
-
-def _q_image_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG decode (stdlib zlib + full filter reconstruction) through
-    the distributed feature kernel: the fixture's payloads are genuine
-    PNGs with cycling scanline filters, fake=False decodes them in
-    mapInPandas, and the oracle recomputes features from the closed-form
-    pixels the fixture encoded."""
-    media = multimodal.synth_png_media(spark, n=64)
-    feats = multimodal.image_features(media, fake=False)
-    return feats.select(
-        "media_id",
-        *[F.round(F.col(c), 6).alias(c) for c in multimodal.FEATURE_COLS],
-    )
-
-
-def _q_image_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG decode + nearest resize (32→8) + scalar audit, same
-    fixture/oracle scheme as mm_image_png_features."""
-    media = multimodal.synth_png_media(spark, n=64)
-    resized = multimodal.resize_images(media, out_h=8, out_w=8, fake=False)
-    s = multimodal.resize_summary(resized)
-    return s.select(
-        "media_id",
-        *[F.round(F.col(c), 6).alias(c) for c in ("mean_r", "mean_g", "mean_b")],
-        "px_sum",
-    )
-
-
-def _q_image_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG decode (entropy-coded scan → table-driven
-    Huffman → dequantize → IDCT → YCbCr, `multimodal.decode_jpeg`)
-    through the distributed feature kernel: the fixture's payloads are
-    genuine JPEG streams whose DC-only blocks have a closed decoded
-    form, so the oracle replays pixels as integer + fixed-literal double
-    math without a decoder."""
-    media = multimodal.synth_jpeg_media(spark, n=64)
-    feats = multimodal.image_features(media, fake=False)
-    return feats.select(
-        "media_id",
-        *[F.round(F.col(c), 6).alias(c) for c in multimodal.FEATURE_COLS],
-    )
-
-
-def _q_image_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL progressive-JPEG decode (SOF2 scan ladder: first/refinement
-    DC scans, split-band AC scans with cross-block EOB runs —
-    `multimodal.decode_jpeg` multi-scan path) through the distributed
-    feature kernel. The fixture's DC-only blocks have the same closed
-    decoded form as the baseline fixture (progressive reassembles the
-    identical coefficient array), so the oracle is the baseline SQL twin
-    with the `jpgp:` seed prefix."""
-    media = multimodal.synth_jpeg_progressive_media(spark, n=64)
-    feats = multimodal.image_features(media, fake=False)
-    return feats.select(
-        "media_id",
-        *[F.round(F.col(c), 6).alias(c) for c in multimodal.FEATURE_COLS],
-    )
-
-
-def _q_image_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL GIF decode (pure-Python variable-width LZW + interlace
-    reorder + palette mapping, `multimodal._decode_gif`) through the
-    distributed feature kernel: the fixture's payloads are genuine GIF89a
-    streams (every other image interlaced), fake=False decodes them in
-    mapInPandas, and the oracle recomputes features from the closed-form
-    palette indices the fixture encoded."""
-    media = multimodal.synth_gif_media(spark, n=64)
-    feats = multimodal.image_features(media, fake=False)
-    return feats.select(
-        "media_id",
-        *[F.round(F.col(c), 6).alias(c) for c in multimodal.FEATURE_COLS],
-    )
-
-
-def _q_image_gif_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL GIF decode + nearest resize (32→8) + scalar audit, same
-    fixture/oracle scheme as mm_image_gif_features."""
-    media = multimodal.synth_gif_media(spark, n=64)
-    resized = multimodal.resize_images(media, out_h=8, out_w=8, fake=False)
-    s = multimodal.resize_summary(resized)
-    return s.select(
-        "media_id",
-        *[F.round(F.col(c), 6).alias(c) for c in ("mean_r", "mean_g", "mean_b")],
-        "px_sum",
-    )
-
-
-def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = multimodal.synth_media(spark, n=64)
-    out = multimodal.frame_sample(media.filter(F.col("kind") == "video"))
-    return out.select(
-        "media_id", F.col("frame_idx").cast("long").alias("frame_idx"), "frame_hex"
-    )
-
-
 def _q_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus data-card report (Datasheets-for-Datasets shape) over the
     documents table: per-(lang, source) doc counts, exact-dup counts
@@ -1935,27 +1815,6 @@ def _q_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from marginaliasearch_spark.operators.datacard import data_card
 
     return data_card(_docs(spark, sf_dir))
-
-
-def _q_video_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-video decode under the oracle gate: Motion-JPEG
-    AVI container walk + per-frame baseline-JPEG decode
-    (`multimodal._decode_avi_mjpeg`), exploded to per-frame luma stats;
-    the DC-only grayscale fixture gives the DuckDB twin a closed
-    integer form per frame."""
-    media = multimodal.synth_mjpeg_media(spark, n=64)
-    return multimodal.video_frame_stats(media)
-
-
-def _q_video_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL animated-GIF decode under the oracle gate: LZW frames
-    composed with GIF89a Graphic Control semantics — transparency index
-    skips, last-opaque-write-wins canvas, delay-derived fps
-    (`multimodal._decode_gif_frames`) — exploded to per-frame luma
-    stats; the grayscale-palette fixture makes luma == palette index so
-    the DuckDB twin replays composition with a max_by join."""
-    media = multimodal.synth_gif_video_media(spark, n=64)
-    return multimodal.video_frame_stats(media)
 
 
 def _q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2561,12 +2420,8 @@ _NEW_THIS_ROUND: list[str] = [
     "fulltext_resumed",
     "report_datacard",
     "index_subject_keywords", "streaming_dedup", "streaming_windows",
-    "mm_image_png_features", "mm_image_png_resize",
     "fulltext_searchset", "index_search_set",
-    "mm_image_gif_features",
     "fulltext_qs_wand", "fulltext_qs_gate",
-    "mm_image_jpeg_features",
-    "mm_image_jpeg_progressive", "mm_video_gif_frames",
     "fulltext_conv", "sim_kmeans", "dedup_semantic_kmeans",
     "sim_pq_topk", "sim_ivfpq_topk", "text_hash_embed", "dedup_semantic_text",
     "text_bpe_encode",
@@ -2585,16 +2440,14 @@ _NEVER_DRIVER_VERIFIED = [
     # Tail of this tier: whatever the driver's ~50-entry window truncates
     # lands here, so these are deliberately the entries with a same-module
     # sibling INSIDE the window (pq/ivfpq cover the quantized scan,
-    # semantic_kmeans/text cover the composite, png/gif resize cover
-    # the resize kernel, gif frames cover video framing, topic_once
-    # covers the topics.py scoring path that _decay only re-weights,
-    # judge-verified lm_perplexity / text_classify / dsir_weights cover
-    # the modules whose ppl_buckets / counted-mode / resample variants sit
-    # here, and driver-green text_filter_chain shares text_repetition's
-    # signal builders).
+    # semantic_kmeans/text cover the composite, topic_once covers the
+    # topics.py scoring path that _decay only re-weights, judge-verified
+    # lm_perplexity / text_classify / dsir_weights cover the modules whose
+    # ppl_buckets / counted-mode / resample variants sit here, and
+    # driver-green text_filter_chain shares text_repetition's signal
+    # builders).
     "sim_quantized_topk",
-    "dedup_semantic", "mm_image_resize",
-    "mm_video_mjpeg_frames", "text_topic_decay",
+    "dedup_semantic", "text_topic_decay",
     "lm_ppl_buckets", "text_classify_counted",
     "dsir_resample", "text_repetition",
     # text_bpe_vocab's driver check is rows-only by design (its real pin
@@ -2602,9 +2455,6 @@ _NEVER_DRIVER_VERIFIED = [
     # pass); text_question_spam shares topics.py with in-window
     # text_topic_once.
     "text_bpe_vocab", "text_question_spam",
-    # round-4-continuation demotion (the resize kernel is in-window via
-    # png resize; gif resize itself sits in this tier)
-    "mm_image_gif_resize",
 ]
 # Tier 2: never driver-verified, but the round-3 judge (VERDICT.md /
 # ADVICE.md) ran tools/check_entry.py on each and recorded a pass —
@@ -2624,9 +2474,8 @@ _JUDGE_VERIFIED_R3 = [
     "fulltext_serp_dedup", "assist_route",
 ]
 _STALE_SINCE_R02 = [
-    "events_hourly", "mm_frame_sample", "mm_image_features",
-    "sim_cosine_topk", "sim_ivf_topk", "sim_lsh_topk", "sim_neardup",
-    "text_fingerprint", "text_language_id", "text_quality",
+    "events_hourly", "sim_cosine_topk", "sim_ivf_topk", "sim_lsh_topk",
+    "sim_neardup", "text_fingerprint", "text_language_id", "text_quality",
     "text_token_counts",
 ]
 
@@ -2928,22 +2777,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_semantic": _q_semantic_dedup,
         # SemDeDup with the paper's k-means clustering bounding the pairs
         "dedup_semantic_kmeans": _q_semantic_kmeans,
-        # --- multimodal plumbing ---
-        "mm_image_features": _q_image_features,
-        "mm_image_resize": _q_image_resize,
-        # REAL PNG payloads (zlib decode, all five scanline filters)
-        "mm_image_png_features": _q_image_png_features,
-        "mm_image_png_resize": _q_image_png_resize,
-        # REAL baseline-JPEG payloads (Huffman + IDCT + YCbCr)
-        "mm_image_jpeg_features": _q_image_jpeg_features,
-        "mm_image_jpeg_progressive": _q_image_jpeg_progressive,
-        "mm_image_gif_features": _q_image_gif_features,
-        "mm_image_gif_resize": _q_image_gif_resize,
-        "mm_frame_sample": _q_frame_sample,
         "report_datacard": _q_datacard,
-        # REAL Motion-JPEG AVI payloads
-        "mm_video_mjpeg_frames": _q_video_mjpeg,
-        "mm_video_gif_frames": _q_video_gif,
         # --- windowed aggregation / sessionization ---
         "events_hourly": _q_events_hourly,
         "events_sessions": _q_events_sessions,
@@ -3954,24 +3788,7 @@ SELECT e.vec_id FROM embeddings e
 WHERE NOT EXISTS (
   SELECT 1 FROM comp c
   WHERE c.doc_id = e.vec_id AND c.component <> c.doc_id)""",
-        "mm_image_features": sql_oracles.image_features_sql(n=64),
-        "mm_image_resize": sql_oracles.image_resize_sql(n=64),
-        "mm_image_png_features": sql_oracles.image_features_sql(
-            n=64, png=True
-        ),
-        "mm_image_png_resize": sql_oracles.image_resize_sql(
-            n=64, png=True
-        ),
-        "mm_image_jpeg_features": sql_oracles.jpeg_features_sql(n=64),
-        "mm_image_jpeg_progressive": sql_oracles.jpeg_features_sql(
-            n=64, prefix="jpgp:"
-        ),
-        "mm_image_gif_features": sql_oracles.gif_features_sql(n=64),
-        "mm_image_gif_resize": sql_oracles.gif_resize_sql(n=64),
-        "mm_frame_sample": sql_oracles.frame_sample_sql(n=64),
         "report_datacard": sql_oracles.datacard_sql(),
-        "mm_video_mjpeg_frames": sql_oracles.mjpeg_frames_sql(n=64),
-        "mm_video_gif_frames": sql_oracles.gif_video_frames_sql(n=64),
         "events_hourly": """
 SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
        event_type, count(*)::BIGINT AS n, round(sum(value), 6) AS sum_value

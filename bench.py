@@ -76,7 +76,6 @@ BENCH_QUERIES = [
     "fulltext_bm25_weighted",
     "fulltext_bm25_lang",
     "sim_ivf_topk",
-    "mm_image_features",
     # round-3 additions
     "fulltext_wand_or_and",
     "fulltext_expanded",
@@ -97,7 +96,6 @@ BENCH_QUERIES = [
     "sample_pack",
     "dedup_cross_corpus",
     "dedup_canonical",
-    "mm_image_resize",
     "fulltext_keywords",
     "text_pii_redact",
     "sim_knn_join",
@@ -127,13 +125,8 @@ BENCH_QUERIES = [
     "fulltext_page",
     # round-4 additions
     "index_subject_keywords",
-    "mm_image_png_features",
     "streaming_dedup",
     "streaming_windows",
-    "mm_image_jpeg_features",
-    "mm_video_mjpeg_frames",
-    "mm_image_jpeg_progressive",
-    "mm_video_gif_frames",
     "report_datacard",
     "fulltext_conv",
     "fulltext_searchset",
@@ -154,7 +147,7 @@ BENCH_QUERIES = [
     # round-5 completion: every remaining entry, so the per-round trend
     # line covers the WHOLE surface instead of silently sampling it
     # (r04 verdict item 4). Mostly cheap variants (gate/limit/priority
-    # query shapes, *_resize kernels, keyword extractors); order appends
+    # query shapes, keyword extractors); order appends
     # after the stable core to keep cross-round deltas comparable.
     "fulltext_bm25_limit",
     "fulltext_bm25_priority",
@@ -190,10 +183,6 @@ BENCH_QUERIES = [
     "text_bpe_vocab",
     "assist_convert",
     "assist_math_eval",
-    "mm_frame_sample",
-    "mm_image_gif_features",
-    "mm_image_gif_resize",
-    "mm_image_png_resize",
 ]
 
 
@@ -356,13 +345,6 @@ def run_queries(spark, sf_dir: str) -> dict[str, float]:
     entry_mod._get_merged_reader(spark, sf_dir)
     entry_mod._get_resumed_reader(spark, sf_dir)
     entry_mod._get_deleted_roots(spark, sf_dir)
-    # ... and one tiny binary-payload mapInPandas: the FIRST Arrow
-    # transfer of a binary column pays a one-off setup cost (~3s)
-    # that a long-lived cluster amortizes, so it isn't billed to the
-    # first mm_* query either
-    from marginaliasearch_spark.operators import multimodal
-
-    multimodal.image_features(multimodal.synth_media(spark, n=4)).count()
     out: dict[str, float] = {}
     for name in BENCH_QUERIES:
         t0 = time.time()

@@ -244,9 +244,14 @@ def decode_blocks(
             # a block with null positions (a term that needs none) decodes
             # no position list; its docs get null positions
             has = pdf["positions"].notna().to_numpy()
+            payload = b"".join(pdf["positions"][has].tolist())
+            if not payload:
+                # the prio tier stores b"" in every block: decode that
+                # like null positions
+                has[:] = False
             doc_has = np.repeat(has, n_docs)
             ptfs = tfs[doc_has].astype(np.int64)
-            flat = decode_positions(b"".join(pdf["positions"][has].tolist()), ptfs)
+            flat = decode_positions(payload, ptfs)
             if mask is not None:
                 flat = flat[np.repeat(mask[doc_has], ptfs)]
         if mask is not None:

@@ -1,6 +1,6 @@
 """64-bit wrapping arithmetic as DuckDB SQL expression text.
 
-The dedup / multimodal operators hash with splitmix64 (wrapping uint64
+The dedup operators hash with splitmix64 (wrapping uint64
 add/mul/xor/shift). DuckDB's BIGINT/UBIGINT arithmetic *raises* on overflow,
 so the DuckDB correctness oracles re-express each wrapping op through
 HUGEINT (int128) intermediates and an explicit ``% 2^64``. These helpers

@@ -227,423 +227,6 @@ JOIN msz sb ON sb.doc_id = doc_b
 WHERE n_common / (sa.set_size + sb.set_size - n_common) >= {threshold!r}"""
 
 
-# --- multimodal oracles -----------------------------------------------------
-
-
-def media_ctes(n: int = 64) -> str:
-    """CTE ``m2``: regenerate operators/multimodal.synth_media in SQL
-    (media_id, payload_hex, kind, duration_ms)."""
-    blocks = " || ".join(
-        f"md5('media:' || media_id || ':{b}')" for b in range(4)
-    )
-    return f"""
-mm AS (SELECT unnest(range({n})) AS media_id),
-m2 AS (
-  SELECT media_id, {blocks} AS payload_hex,
-         CASE media_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-              ELSE 'video' END AS kind,
-         (500 + (media_id * 3589) % 4500)::BIGINT AS duration_ms
-  FROM mm
-)"""
-
-
-def _image_seed_ctes(n: int, png: bool) -> str:
-    """``... , seed(media_id, s)``: the pixel-seed relation. ``png=False``
-    is the fake decoder (seed = md5 of the synthetic payload hex);
-    ``png=True`` is the real-PNG fixture's closed form (seed =
-    md5('png:' || media_id)) — those entries decode REAL payloads on the
-    Spark side, but the pixels they reconstruct are this closed form, so
-    the oracle never needs a decoder."""
-    if png:
-        return f"""
-mm AS (SELECT unnest(range({n})) AS media_id),
-seed AS (
-  SELECT media_id,
-         ('0x' || substr(md5('png:' || media_id), 1, 16))::UBIGINT AS s
-  FROM mm
-)"""
-    return f"""{media_ctes(n)},
-seed AS (
-  SELECT media_id, ('0x' || substr(md5(payload_hex), 1, 16))::UBIGINT AS s
-  FROM m2
-)"""
-
-
-def image_features_sql(n: int = 64, png: bool = False) -> str:
-    """Exact oracle for ``multimodal.image_features`` over the synthetic
-    media table (fake decoder: splitmix64 pixels seeded by md5(payload);
-    ``png=True``: the real-PNG fixture's media_id-seeded pixels)."""
-    from ..operators.multimodal import _BIN_DIV, _N_PIX, HIST_BINS
-
-    n_vals = _N_PIX * 3
-    mean_cols = ", ".join(
-        f"round(sum(CASE WHEN ch = {c} THEN v END)::DOUBLE / {_N_PIX}.0 / 255.0, 6)"
-        f" AS mean_{name}"
-        for c, name in enumerate("rgb")
-    )
-    hist_cols = ", ".join(
-        f"round(coalesce(sum(CASE WHEN bin = {b} THEN cnt END), 0)::DOUBLE"
-        f" / {_N_PIX}.0, 6) AS h{b}"
-        for b in range(HIST_BINS)
-    )
-    return f"""WITH {_image_seed_ctes(n, png)},
-pix0 AS (
-  SELECT media_id, p, {sql64.add64('s', 'p::UBIGINT')} AS x
-  FROM seed CROSS JOIN (SELECT unnest(range({n_vals})) AS p) pp
-),
-pix AS (
-  SELECT media_id, p // 3 AS pxl, p % 3 AS ch,
-         ({sql64.sm64('x')} & 255::UBIGINT)::BIGINT AS v
-  FROM pix0
-),
-chans AS (SELECT media_id, {mean_cols} FROM pix GROUP BY media_id),
-inten AS (
-  SELECT media_id, pxl, least(sum(v) // {_BIN_DIV}, {HIST_BINS - 1}) AS bin
-  FROM pix GROUP BY media_id, pxl
-),
-hist0 AS (SELECT media_id, bin, count(*)::BIGINT AS cnt FROM inten GROUP BY 1, 2),
-hist AS (SELECT media_id, {hist_cols} FROM hist0 GROUP BY media_id)
-SELECT c.* , h.h0, h.h1, h.h2, h.h3, h.h4, h.h5, h.h6, h.h7
-FROM chans c JOIN hist h USING (media_id)"""
-
-
-def _gif_pix_ctes(n: int) -> str:
-    """``... , pix(media_id, pxl, ch, v)``: the GIF fixture's closed-form
-    pixels — palette index ``splitmix64(md5('gif:'||id) + pxl) & 255``,
-    channel ``c`` = ``(mul_c * idx + add_c) & 255`` (synth_gif_media)."""
-    from ..operators.multimodal import _N_PIX, GIF_PAL_ADDS, GIF_PAL_MULS
-
-    chan = " ".join(
-        f"WHEN ch = {c} THEN ({m} * idx + {a}) & 255"
-        for c, (m, a) in enumerate(zip(GIF_PAL_MULS, GIF_PAL_ADDS))
-    )
-    return f"""
-mm AS (SELECT unnest(range({n})) AS media_id),
-gseed AS (
-  SELECT media_id,
-         ('0x' || substr(md5('gif:' || media_id), 1, 16))::UBIGINT AS s
-  FROM mm
-),
-gidx0 AS (
-  SELECT media_id, pxl, {sql64.add64('s', 'pxl::UBIGINT')} AS x
-  FROM gseed CROSS JOIN (SELECT unnest(range({_N_PIX})) AS pxl) pp
-),
-gidx AS (
-  SELECT media_id, pxl, ({sql64.sm64('x')} & 255::UBIGINT)::BIGINT AS idx
-  FROM gidx0
-),
-pix AS (
-  SELECT media_id, pxl, ch, (CASE {chan} END)::BIGINT AS v
-  FROM gidx CROSS JOIN (SELECT unnest(range(3)) AS ch) cc
-)"""
-
-
-def gif_features_sql(n: int = 64) -> str:
-    """Exact oracle for ``multimodal.image_features(fake=False)`` over the
-    real-GIF fixture (`synth_gif_media`): same mean/histogram aggregates
-    as :func:`image_features_sql`, pixels from the palette closed form."""
-    from ..operators.multimodal import _BIN_DIV, _N_PIX, HIST_BINS
-
-    mean_cols = ", ".join(
-        f"round(sum(CASE WHEN ch = {c} THEN v END)::DOUBLE / {_N_PIX}.0 / 255.0, 6)"
-        f" AS mean_{name}"
-        for c, name in enumerate("rgb")
-    )
-    hist_cols = ", ".join(
-        f"round(coalesce(sum(CASE WHEN bin = {b} THEN cnt END), 0)::DOUBLE"
-        f" / {_N_PIX}.0, 6) AS h{b}"
-        for b in range(HIST_BINS)
-    )
-    return f"""WITH {_gif_pix_ctes(n)},
-chans AS (SELECT media_id, {mean_cols} FROM pix GROUP BY media_id),
-inten AS (
-  SELECT media_id, pxl, least(sum(v) // {_BIN_DIV}, {HIST_BINS - 1}) AS bin
-  FROM pix GROUP BY media_id, pxl
-),
-hist0 AS (SELECT media_id, bin, count(*)::BIGINT AS cnt FROM inten GROUP BY 1, 2),
-hist AS (SELECT media_id, {hist_cols} FROM hist0 GROUP BY media_id)
-SELECT c.* , h.h0, h.h1, h.h2, h.h3, h.h4, h.h5, h.h6, h.h7
-FROM chans c JOIN hist h USING (media_id)"""
-
-
-def gif_resize_sql(n: int = 64, out_h: int = 8, out_w: int = 8) -> str:
-    """Exact oracle for nearest resize + ``resize_summary`` over the
-    real-GIF fixture: the resized pixel (i, j) is the closed-form palette
-    index at ``(i*H//oh)*W + (j*W//ow)``, channels via the palette map."""
-    from ..operators.multimodal import (
-        GIF_PAL_ADDS, GIF_PAL_MULS, IMG_H, IMG_W,
-    )
-
-    n_out = out_h * out_w
-    chan = " ".join(
-        f"WHEN ch = {c} THEN ({m} * idx + {a}) & 255"
-        for c, (m, a) in enumerate(zip(GIF_PAL_MULS, GIF_PAL_ADDS))
-    )
-    mean_cols = ", ".join(
-        f"round(sum(CASE WHEN ch = {c} THEN v END)::DOUBLE / {n_out}.0 / 255.0, 6)"
-        f" AS mean_{name}"
-        for c, name in enumerate("rgb")
-    )
-    return f"""WITH
-mm AS (SELECT unnest(range({n})) AS media_id),
-gseed AS (
-  SELECT media_id,
-         ('0x' || substr(md5('gif:' || media_id), 1, 16))::UBIGINT AS s
-  FROM mm
-),
-grid AS (
-  SELECT ((i * {IMG_H}) // {out_h}) * {IMG_W} + ((j * {IMG_W}) // {out_w}) AS pxl
-  FROM (SELECT unnest(range({out_h})) AS i),
-       (SELECT unnest(range({out_w})) AS j)
-),
-ridx0 AS (
-  SELECT media_id, {sql64.add64('s', 'pxl::UBIGINT')} AS x
-  FROM gseed CROSS JOIN grid
-),
-ridx AS (
-  SELECT media_id, ({sql64.sm64('x')} & 255::UBIGINT)::BIGINT AS idx
-  FROM ridx0
-),
-rval AS (
-  SELECT media_id, ch, (CASE {chan} END)::BIGINT AS v
-  FROM ridx CROSS JOIN (SELECT unnest(range(3)) AS ch) cc
-)
-SELECT media_id, {mean_cols}, sum(v)::BIGINT AS px_sum
-FROM rval GROUP BY media_id"""
-
-
-def frame_sample_sql(n: int = 64, every_ms: int = 1000) -> str:
-    """Exact oracle for ``multimodal.frame_sample`` over the synthetic
-    media table's video rows."""
-    return f"""WITH {media_ctes(n)},
-seedh AS (
-  SELECT media_id, md5(payload_hex) AS sh, duration_ms
-  FROM m2 WHERE kind = 'video'
-),
-fr AS (
-  SELECT media_id, sh,
-         unnest(range(greatest(duration_ms // {every_ms}, 1))) AS frame_idx
-  FROM seedh
-)
-SELECT media_id, frame_idx::BIGINT AS frame_idx,
-       md5(sh || ':' || frame_idx) AS frame_hex
-FROM fr"""
-
-
-def image_resize_sql(
-    n: int = 64,
-    out_h: int = 8,
-    out_w: int = 8,
-    png: bool = False,
-) -> str:
-    """Exact oracle for ``multimodal.resize_images(method='nearest')`` +
-    ``resize_summary`` over the synthetic media table: the nearest-resized
-    pixel (i, j, c) is the fake-decoded value at flat index
-    ``((i*H//oh)*W + (j*W//ow))*3 + c`` — pure integer index math, so the
-    per-channel means and the integer checksum replay bit-exactly.
-    ``png=True`` seeds the pixels like :func:`image_features_sql`."""
-    from ..operators.multimodal import IMG_H, IMG_W
-
-    n_out = out_h * out_w
-    mean_cols = ", ".join(
-        f"round(sum(CASE WHEN ch = {c} THEN v END)::DOUBLE / {n_out}.0 / 255.0, 6)"
-        f" AS mean_{name}"
-        for c, name in enumerate("rgb")
-    )
-    return f"""WITH {_image_seed_ctes(n, png)},
-grid AS (
-  SELECT i, j, ch,
-         (((i * {IMG_H}) // {out_h}) * {IMG_W}
-          + ((j * {IMG_W}) // {out_w})) * 3 + ch AS p
-  FROM (SELECT unnest(range({out_h})) AS i),
-       (SELECT unnest(range({out_w})) AS j),
-       (SELECT unnest(range(3)) AS ch)
-),
-rval0 AS (
-  SELECT media_id, g.ch, {sql64.add64('s', 'g.p::UBIGINT')} AS x
-  FROM seed CROSS JOIN grid g
-),
-rval AS (
-  SELECT media_id, ch, ({sql64.sm64('x')} & 255::UBIGINT)::BIGINT AS v
-  FROM rval0
-)
-SELECT media_id, {mean_cols}, sum(v)::BIGINT AS px_sum
-FROM rval GROUP BY media_id"""
-
-
-def jpeg_features_sql(n: int = 64, prefix: str = "jpg:") -> str:
-    """Exact oracle for ``multimodal.image_features(fake=False)`` over
-    ``synth_jpeg_media`` (``prefix='jpg:'``, baseline SOF0) or
-    ``synth_jpeg_progressive_media`` (``prefix='jpgp:'``, SOF2 — the
-    progressive decode reassembles the identical coefficient array, so
-    only the seed differs): blocks are DC-only with quant step 16, so the
-    decoded plane value is the integer ``2k + 128`` and the YCbCr→RGB
-    transform is the decoder's own fixed-literal double math
-    (``floor(x + 0.5)``, left-associated sums, clamp after floor) —
-    replayed here verbatim. Every block contributes 64 identical pixels,
-    so aggregation weights each block by 64."""
-    from ..operators.multimodal import _BIN_DIV, _N_PIX, HIST_BINS, IMG_H
-
-    nb = (IMG_H // 8) ** 2  # blocks per image
-    mean_cols = ", ".join(
-        f"round(sum({c}) * 64.0 / {_N_PIX} / 255.0, 6) AS mean_{c}"
-        for c in ("r", "g", "b")
-    )
-    hist_cols = ", ".join(
-        f"round(coalesce(sum(CASE WHEN bin = {bi} THEN 64 END), 0)::DOUBLE"
-        f" / {_N_PIX}.0, 6) AS h{bi}"
-        for bi in range(HIST_BINS)
-    )
-    clamp = "greatest(least(floor({}), 255), 0)::BIGINT"
-    r_expr = clamp.format("y + 1.402::DOUBLE * (cr - 128) + 0.5")
-    g_expr = clamp.format(
-        "y - 0.344136::DOUBLE * (cb - 128) - 0.714136::DOUBLE * (cr - 128)"
-        " + 0.5"
-    )
-    b_expr = clamp.format("y + 1.772::DOUBLE * (cb - 128) + 0.5")
-    return f"""WITH
-mm AS (SELECT unnest(range({n})) AS media_id),
-seed AS (
-  SELECT media_id, {sql64.md5_u64(f"'{prefix}' || media_id")} AS s FROM mm
-),
-k0 AS (
-  SELECT media_id, p // 3 AS blk, p % 3 AS comp,
-         {sql64.add64('s', 'p::UBIGINT')} AS x
-  FROM seed CROSS JOIN (SELECT unnest(range({nb * 3})) AS p) pp
-),
-kv AS (
-  SELECT media_id, blk, comp,
-         ({sql64.sm64('x')} & 127::UBIGINT)::BIGINT - 64 AS k
-  FROM k0
-),
-ycc AS (
-  SELECT media_id, blk,
-         2 * max(CASE WHEN comp = 0 THEN k END) + 128 AS y,
-         2 * max(CASE WHEN comp = 1 THEN k END) + 128 AS cb,
-         2 * max(CASE WHEN comp = 2 THEN k END) + 128 AS cr
-  FROM kv GROUP BY media_id, blk
-),
-rgb AS (
-  SELECT media_id, blk, {r_expr} AS r, {g_expr} AS g, {b_expr} AS b
-  FROM ycc
-),
-binned AS (
-  SELECT media_id, r, g, b, least((r + g + b) // {_BIN_DIV},
-                                  {HIST_BINS - 1}) AS bin
-  FROM rgb
-)
-SELECT media_id, {mean_cols}, {hist_cols}
-FROM binned GROUP BY media_id"""
-
-
-def mjpeg_frames_sql(n: int = 64) -> str:
-    """Exact oracle for ``multimodal.video_frame_stats`` over
-    ``synth_mjpeg_media``: every decoded luma pixel of a DC-only
-    grayscale MJPEG frame is the integer ``2k + 128``, so per-frame
-    stats are pure integer sums; ``mean_y`` uses the decoder's own
-    explicit half-up expression (``floor(x * 1e6 + 0.5) / 1e6``) so the
-    doubles are bit-identical."""
-    from ..operators.multimodal import MJPEG_H, MJPEG_W
-
-    n_px = MJPEG_H * MJPEG_W
-    return f"""WITH
-mm AS (SELECT unnest(range({n})) AS media_id),
-seed AS (
-  SELECT media_id, {sql64.md5_u64("'avi:' || media_id")} AS s,
-         2 + media_id % 3 AS nf
-  FROM mm
-),
-kb AS (
-  SELECT media_id, p // 4 AS frame_idx,
-         {sql64.add64('s', 'p::UBIGINT')} AS x
-  FROM seed CROSS JOIN (SELECT unnest(range(16)) AS p) pp
-  WHERE p < nf * 4
-),
-kv AS (
-  SELECT media_id, frame_idx,
-         ({sql64.sm64('x')} & 127::UBIGINT)::BIGINT - 64 AS k
-  FROM kb
-),
-fr AS (
-  SELECT media_id, frame_idx,
-         sum(64 * (2 * k + 128))::BIGINT AS y_sum
-  FROM kv GROUP BY media_id, frame_idx
-)
-SELECT media_id, frame_idx::INT AS frame_idx, y_sum,
-       {n_px}::BIGINT AS n_px,
-       floor(y_sum::DOUBLE / {n_px} / 255.0 * 1000000 + 0.5) / 1000000
-         AS mean_y
-FROM fr"""
-
-
-def gif_video_frames_sql(n: int = 64) -> str:
-    """Exact oracle for ``multimodal.video_frame_stats`` over
-    ``synth_gif_video_media``: the grayscale palette makes decoded luma
-    == palette index, so per-frame composition is "last opaque write
-    wins" — frame 0 writes every pixel (transparent code 7 pixels keep
-    the background, entry 0 = luma 0), later frames write only the 8x6
-    rect at (4,3) where their code != 7. Replayed as a max_by over the
-    opaque-writes relation joined per (frame, pixel)."""
-    from ..operators.multimodal import GIFV_H, GIFV_RECT, GIFV_T, GIFV_W
-
-    left, top, rw, rh = GIFV_RECT
-    n_px = GIFV_W * GIFV_H
-    return f"""WITH
-mm AS (SELECT unnest(range({n})) AS media_id),
-seed AS (
-  SELECT media_id, {sql64.md5_u64("'gifv:' || media_id")} AS s,
-         2 + media_id % 3 AS nf
-  FROM mm
-),
-w0 AS (  -- frame 0: full screen
-  SELECT media_id, 0 AS f, p,
-         ({sql64.sm64(sql64.add64('s', 'p::UBIGINT'))}
-          & 255::UBIGINT)::BIGINT AS code
-  FROM seed CROSS JOIN (SELECT unnest(range({n_px})) AS p) pp
-),
-wf AS (  -- frames 1..nf-1: the rect, local pixel lp
-  SELECT media_id, f, lp,
-         ({sql64.sm64(sql64.add64('s', '(f * 65536 + lp)::UBIGINT'))}
-          & 255::UBIGINT)::BIGINT AS code
-  FROM seed
-  CROSS JOIN (SELECT unnest(range(1, 4)) AS f) ff
-  CROSS JOIN (SELECT unnest(range({rw * rh})) AS lp) pp
-  WHERE f < nf
-),
-writes AS (  -- opaque writes only (global pixel ids)
-  SELECT media_id, f, p, code FROM w0 WHERE code <> {GIFV_T}
-  UNION ALL
-  SELECT media_id, f,
-         ({top} + lp // {rw}) * {GIFV_W} + {left} + lp % {rw} AS p,
-         code
-  FROM wf WHERE code <> {GIFV_T}
-),
-grid AS (  -- every (media, frame, pixel) cell
-  SELECT media_id, f, p
-  FROM seed
-  CROSS JOIN (SELECT unnest(range(4)) AS f) ff
-  CROSS JOIN (SELECT unnest(range({n_px})) AS p) pp
-  WHERE f < nf
-),
-vals AS (  -- last opaque write at or before this frame, else bg (0)
-  SELECT g.media_id, g.f, g.p,
-         coalesce(max_by(w.code, w.f), 0) AS v
-  FROM grid g
-  LEFT JOIN writes w
-    ON w.media_id = g.media_id AND w.p = g.p AND w.f <= g.f
-  GROUP BY g.media_id, g.f, g.p
-),
-fr AS (
-  SELECT media_id, f AS frame_idx, sum(v)::BIGINT AS y_sum
-  FROM vals GROUP BY media_id, f
-)
-SELECT media_id, frame_idx::INT AS frame_idx, y_sum,
-       {n_px}::BIGINT AS n_px,
-       floor(y_sum::DOUBLE / {n_px} / 255.0 * 1000000 + 0.5) / 1000000
-         AS mean_y
-FROM fr"""
-
-
 # --- similarity-search oracles ---------------------------------------------
 #
 # Floating-point exactness: DuckDB's list_sum is NOT a plain left-to-right

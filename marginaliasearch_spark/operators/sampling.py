@@ -524,9 +524,9 @@ def chunk_documents(
     (never a fully-contained degenerate chunk). Empty docs emit no rows.
 
     Pure JVM: split → explode(sequence) → slice → array_join, a narrow
-    per-row expansion with no shuffle — rows out > rows in, exactly the
-    multimodal frame-sample shape. Deterministic, so the DuckDB twin
-    (generate_series + list slicing) reproduces it verbatim.
+    per-row expansion with no shuffle (rows out > rows in). Deterministic,
+    so the DuckDB twin (generate_series + list slicing) reproduces it
+    verbatim.
     """
     if not 0 <= overlap < max_tokens:
         raise ValueError("need 0 <= overlap < max_tokens")

@@ -268,9 +268,9 @@ def test_encode_sorted_tagged_picks_smaller():
 
 def test_decode_blocks_null_positions_rows_skip_position_decode():
     """Blocks whose positions are null (terms that need none, in a scan
-    shared with terms that do) decode to null position lists, and every
-    other row decodes exactly as in an all-positions decode — with and
-    without a candidate mask."""
+    shared with terms that do) or empty (the prio tier stores b"") decode
+    to null position lists, and every other row decodes exactly as in an
+    all-positions decode — with and without a candidate or reject mask."""
     import pandas as pd
 
     from marginaliasearch_spark.functions.blocks import (
@@ -293,16 +293,30 @@ def test_decode_blocks_null_positions_rows_skip_position_decode():
                  "tf_norm"],
     ).sort_values(["term_id", "doc_id"], ignore_index=True)
     blocks = pd.concat(list(encode_blocks(iter([pdf]), block_docs=8)))
-    mixed = blocks.copy()
-    mixed["positions"] = mixed["positions"].where(mixed["term_id"] != 5, None)
-    cands = np.sort(pdf["doc_id"].to_numpy().astype(np.uint64)[::3])
-    for c in (None, cands):
-        full = pd.concat(list(decode_blocks(iter([blocks]), True, candidates=c)))
-        got = pd.concat(list(decode_blocks(iter([mixed]), True, candidates=c)))
-        assert len(got) == len(full)
-        for f, g in zip(full.itertuples(), got.itertuples()):
-            assert (f.term_id, f.doc_id, f.tf) == (g.term_id, g.doc_id, g.tf)
-            if f.term_id == 5:
-                assert g.positions is None
-            else:
-                assert list(g.positions) == list(f.positions)
+    variants = []
+    for fill, terms in ((None, {5}), (b"", {3, 5, 9})):
+        v = blocks.copy()
+        v["positions"] = v["positions"].where(~v["term_id"].isin(terms), fill)
+        variants.append((v, terms))
+    # a prio-tier batch whose scan nulls one term's positions
+    v = variants[-1][0].copy()
+    v["positions"] = v["positions"].where(v["term_id"] != 5, None)
+    variants.append((v, {3, 5, 9}))
+    ids = np.sort(pdf["doc_id"].to_numpy().astype(np.uint64))
+    masks = [(None, None), (ids[::3], None), (None, ids[1::5]),
+             (ids[::3], ids[::6])]
+    for c, r in masks:
+        full = pd.concat(list(decode_blocks(
+            iter([blocks]), True, candidates=c, reject=r)))
+        if r is not None:
+            assert not full["doc_id"].isin(r.astype(np.int64)).any()
+        for v, terms in variants:
+            got = pd.concat(list(decode_blocks(
+                iter([v]), True, candidates=c, reject=r)))
+            assert len(got) == len(full)
+            for f, g in zip(full.itertuples(), got.itertuples()):
+                assert (f.term_id, f.doc_id, f.tf) == (g.term_id, g.doc_id, g.tf)
+                if f.term_id in terms:
+                    assert g.positions is None
+                else:
+                    assert list(g.positions) == list(f.positions)

@@ -158,3 +158,20 @@ def test_run_query_same_results_on_both_sites(spark, reader, monkeypatch, q, kw)
     assert driver
     assert driver == executor == wand == wand_executor
     assert not {c for c, _ in driver} & set(DELETED)
+
+
+@pytest.mark.parametrize("q, kw", QUERIES[:5])
+def test_tombstone_anti_join_fallback_same_results(spark, reader, monkeypatch, q, kw):
+    """More deleted ids than ``MAX_DRIVER_CANDIDATES``: the reader keeps no
+    reject mask and ``run_query`` anti-joins the tombstones instead, with
+    the same results as the mask."""
+    masked = _results(reader, q, **kw)
+    monkeypatch.setattr(
+        query_exec, "MAX_DRIVER_CANDIDATES", reader.deleted_ids.size - 1
+    )
+    fresh = IndexReader(spark, reader.paths)
+    assert fresh.deleted_ids is None
+    assert "LeftAnti" in _plan(run_query(fresh, q, k=30, **kw))
+    assert masked
+    assert _results(fresh, q, **kw) == _results(fresh, q, wand=True, **kw) == masked
+    assert not {c for c, _ in masked} & set(DELETED)

@@ -6,6 +6,9 @@ collected once per reader and dropped inside the postings decode, so a
 tombstoned index runs exactly the jobs a clean one does — no per-query
 re-aggregation or broadcast of the tombstone set. The corpus has 500
 conversations, the document count of the sf0.001 test data.
+
+``JOBS`` pins the absolute count per shape on the clean index, so a change
+that adds a job to every query fails here too.
 """
 
 import time
@@ -25,6 +28,7 @@ SHAPES = {
     "and_not": "word03 -word07",
     "or_and": "( word03 | word05 ) word02",
 }
+JOBS = {"single": 3, "and_not": 4, "or_and": 4}
 
 
 def _jobs_per_query(spark, reader, tag):
@@ -54,5 +58,5 @@ def counts(spark, tmp_path_factory):
 @pytest.mark.parametrize("shape", sorted(SHAPES))
 def test_tombstones_add_no_jobs(counts, shape):
     clean, tombstoned = counts
-    assert clean[shape] > 0
+    assert clean[shape] == JOBS[shape], clean
     assert tombstoned[shape] == clean[shape], (clean, tombstoned)
