@@ -850,11 +850,17 @@ def read_manifest(paths: IndexPaths) -> list[dict]:
     return out
 
 
+def committed_buckets(paths: IndexPaths) -> list[str]:
+    """The postings bucket directories a manifest names — the only ones a
+    reader may read (a bucket without one is a torn write)."""
+    return [paths.bucket_dir(m["partition_id"]) for m in read_manifest(paths)]
+
+
 def read_postings(spark: SparkSession, paths: IndexPaths) -> DataFrame:
     # basePath makes the nested part=N/lang=X directory structure resolve
     # as two partition columns while still reading ONLY committed buckets
     return spark.read.option("basePath", paths.postings).parquet(
-        *[paths.bucket_dir(m["partition_id"]) for m in read_manifest(paths)]
+        *committed_buckets(paths)
     )
 
 

@@ -7,14 +7,18 @@ Ranking) as one DataFrame DAG:
 - **plan** (driver, = ``SearchContext`` + ``CombinedIndexReader.createQueries``):
   look up per-term document frequencies in the lexicon and pick each OR
   path's rarest term as its driver (``CombinedIndexReader.java:94-97,
-  119-130`` — selectivity ordering is OURS to do);
+  119-130`` — selectivity ordering is OURS to do). The driver reads the
+  lexicon, the term bounds and block metadata straight from the parquet
+  files through pyarrow, with no Spark job;
 - **lookup** (= EntrySource + ReverseIndexRetainFilter): ONE filtered scan
   and ONE decode per posting tier reads every term the query names, then a
   ``groupBy(doc_id)`` pivot lays each term out as columns and keeps the
   docs where some OR path matched in full. The decode site follows the
-  scan's summed lexicon df: a small scan's block rows are fetched through
-  Arrow and decoded on the driver (the reference decodes in the process
-  that plans the query), a big one runs as a ``mapInPandas`` stage. Either
+  scan's summed lexicon df: a small scan's block rows are read through
+  pyarrow and decoded on the driver, without a Spark job (the reference
+  decodes in the process that plans the query); a big one runs as a
+  ``mapInPandas`` stage. A block cut or budget is data (:class:`BlockCut`)
+  that either scan applies as its filter. Either
   way the kernel drops the index's deletion tombstones, collected once per
   reader. When the other terms' lists are big, the rarest terms' doc ids
   are collected first and shipped to the decode, which skips blocks whose
@@ -40,13 +44,15 @@ min/max stats provide the scan pruning instead (SURVEY §2.6 O4 note).
 from __future__ import annotations
 
 import json
+import operator
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import cached_property, partial, reduce
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -63,7 +69,7 @@ from ..functions.scoring import (
     verbatim_bonus,
 )
 from ..plans.parser import ParsedQuery, parse_query
-from .index_build import IndexPaths, read_postings, read_prio
+from .index_build import IndexPaths, committed_buckets, read_postings, read_prio
 from .ingest import PRIORITY_FLAGS, ROLE_FLAG
 
 
@@ -197,14 +203,84 @@ MAX_DRIVER_CANDIDATES = 2_000_000
 PRUNE_DF_THRESHOLD = 50_000
 
 # A tier scan whose terms' summed lexicon df is at most this is decoded on
-# the driver: its block rows come back through one JVM-only Arrow fetch and
-# ``decode_blocks`` runs in-process, instead of in a ``mapInPandas`` stage
-# whose Python worker start-up (~130 ms per task) outweighs a small decode.
-# Measured crossover (4 vCPUs, local[4], 250k-doc index; decode + count,
-# median of 5): at summed df 10k / 50k / 200k / 1M the driver took
-# 0.26 / 0.32 / 0.80 / 3.61 s and mapInPandas 0.40 / 0.41 / 0.42 / 0.62 s;
-# at 60k mapInPandas already won (0.43 against 0.54 s).
+# the driver: pyarrow reads its block rows straight from the parquet files
+# (no Spark job) and ``decode_blocks`` runs in-process, instead of in a
+# ``mapInPandas`` stage whose Python worker start-up (~130 ms per task)
+# outweighs a small decode. Measured crossover (4 vCPUs, local[4], 250k-doc
+# index; decode + count, median of 5): at summed df 10k / 50k / 200k / 1M
+# the driver took 0.26 / 0.32 / 0.80 / 3.61 s and mapInPandas 0.40 / 0.41 /
+# 0.42 / 0.62 s; at 60k mapInPandas already won (0.43 against 0.54 s).
+# The same bound gates ``run_query_wand``: a query whose live terms sum to
+# at most this much df is decoded whole on the driver in tens of ms, less
+# than the threshold pass that would prune it costs.
 DRIVER_DECODE_MAX_DF = 50_000
+
+
+@dataclass(frozen=True)
+class BlockCut:
+    """The blocks of one term a scan keeps, as data: those whose
+    ``max_tf_norm`` is at least ``min_tf_norm`` (a block-max WAND cut) and,
+    when ``min_docs`` is set, whose ``min_doc`` is one of them (a block
+    budget, :meth:`IndexReader.block_budget`). :func:`_block_predicate`
+    turns it into a Spark column for the executor-site scan and into an
+    Arrow filter for the driver's fetch."""
+
+    min_tf_norm: float | None = None
+    min_docs: frozenset[int] | None = None
+
+    def predicate(self, field):
+        conds = []
+        if self.min_tf_norm is not None:
+            conds.append(field("max_tf_norm") >= self.min_tf_norm)
+        if self.min_docs is not None:
+            conds.append(field("min_doc").isin(sorted(self.min_docs)))
+        return reduce(operator.and_, conds)
+
+
+def _block_predicate(field, term_ids, block_filter, lang):
+    """The block rows of ``term_ids`` as one predicate over ``field``
+    (``F.col`` for a Spark scan, ``pyarrow.dataset.field`` for an Arrow
+    one). The term_id test prunes parquet row groups via min/max stats
+    (postings files are written sorted by term_id); a term in
+    ``block_filter`` keeps only the blocks of its :class:`BlockCut` — one
+    ``term_id = t AND ...`` disjunct each, so a ``max_tf_norm`` cut still
+    reaches the scan's pushed filters. Postings are written partitioned by
+    the doc's language, so ``lang`` prunes whole ``lang=...`` directories
+    at the scan (the per-language reverse index of the reference)."""
+    cut = sorted(t for t in (block_filter or {}) if t in term_ids)
+    uncut = sorted(set(term_ids) - set(cut))
+    tid = field("term_id")
+    pred = [tid.isin(uncut)] if uncut else []
+    pred += [(tid == t) & block_filter[t].predicate(field) for t in cut]
+    pred = reduce(operator.or_, pred)
+    if lang is not None:
+        pred = pred & (field("lang") == lang)
+    return pred
+
+
+# Spark's parquet writer stores a CRC in every page header; checking it is
+# the driver's stand-in for the ``.crc`` sidecar check Spark's local file
+# system makes, so a flipped bit fails the read instead of decoding wrong
+_PARQUET = ds.ParquetFileFormat(
+    default_fragment_scan_options=ds.ParquetFragmentScanOptions(
+        page_checksum_verification=True
+    )
+)
+
+
+def _parquet_view(path: str, partitioning=None) -> ds.Dataset:
+    """pyarrow view of one Spark-written parquet directory. Discovery skips
+    the ``_``/``.`` files Spark skips (``_SUCCESS``, ``.crc``) and keeps every
+    other file: an unreadable one fails the read that reaches it instead of
+    silently dropping its rows, and a page whose CRC does not match fails
+    it too."""
+    return ds.dataset(
+        path, format=_PARQUET, partitioning=partitioning, exclude_invalid_files=False
+    )
+
+
+# postings and the prio tier sit under lang=... directories
+_LANG_DIRS = ds.partitioning(pa.schema([("lang", pa.string())]), flavor="hive")
 
 
 def _collect_ids_u64(df: DataFrame, col: str = "doc_id") -> np.ndarray:
@@ -225,6 +301,7 @@ class IndexReader:
         self.spark = spark
         self.paths = paths
         self.postings = read_postings(spark, paths)
+        self._buckets = committed_buckets(paths)
         self.lexicon = spark.read.parquet(paths.lexicon)
         self.doc_stats = spark.read.parquet(paths.doc_stats)
         # optional priority tier (flagged occurrences only, much smaller);
@@ -249,10 +326,8 @@ class IndexReader:
         self.lang_doc_counts = {
             k: float(v) for k, v in stats.get("lang_doc_counts", {}).items()
         }
-        self.lexicon_lang = (
-            spark.read.parquet(paths.lexicon_lang)
-            if os.path.exists(os.path.join(paths.lexicon_lang, "_SUCCESS"))
-            else None
+        self.has_lexicon_lang = os.path.exists(
+            os.path.join(paths.lexicon_lang, "_SUCCESS")
         )
         # optional corpus-derived ngram lexicon (expansion segmentation,
         # reference NgramLexicon analogue — built by index_build.build_ngrams)
@@ -274,8 +349,39 @@ class IndexReader:
         self._stats_cache: dict[tuple, tuple[int, int] | None] = {}
         self._df_cache: dict[tuple[str | None, int], int] = {}
         self._bounds_cache: dict[int, float | None] = {}
-        self._term_bounds: DataFrame | None = None
+        self._views: dict[str, ds.Dataset] = {}
         self._searchset_cache: dict[str, DataFrame | None] = {}
+
+    def _view(self, table: str) -> ds.Dataset:
+        """pyarrow view of one index table ("lexicon", "lexicon_lang",
+        "term_bounds", "prio" or "postings") for the driver's own reads —
+        lexicon probes, term bounds, block budgets and driver-site block
+        fetches — which start no Spark job. Opened on first use (so opening
+        a reader pays nothing for it) and kept, like the snapshot. The
+        postings view covers the committed buckets ``self.postings`` reads,
+        merged-in symlinked buckets included."""
+        if table not in self._views:
+            if table == "postings":
+                view = ds.dataset([_parquet_view(b, _LANG_DIRS) for b in self._buckets])
+            elif table == "prio":
+                view = _parquet_view(self.paths.prio, _LANG_DIRS)
+            else:
+                view = _parquet_view(getattr(self.paths, table))
+            self._views[table] = view
+        return self._views[table]
+
+    def _lexicon_rows(self, col: str, values: list, lang: str | None) -> list[dict]:
+        """(term, term_id, df) of the lexicon rows whose ``col`` is in
+        ``values`` — of one language's lexicon when ``lang`` is set."""
+        pred = ds.field(col).isin(values)
+        table = "lexicon"
+        if lang is not None:
+            table, pred = "lexicon_lang", pred & (ds.field("lang") == lang)
+        return (
+            self._view(table)
+            .to_table(columns=["term", "term_id", "df"], filter=pred)
+            .to_pylist()
+        )
 
     def search_set(self, name: str) -> DataFrame | None:
         """Persisted search set by name (RankingSearchSet load-at-query);
@@ -336,18 +442,22 @@ class IndexReader:
 
     def term_bounds(self, term_ids: list[int]) -> dict[int, float]:
         """term_id → global max tf-norm (score UB = idf * max_tf_norm) from
-        the tiny term_bounds table — a driver-side pushed-IN probe, the
-        skip-list global-max analogue (SkipListReader block maxima).
+        the tiny term_bounds table — an IN filter read through pyarrow on
+        the driver, the skip-list global-max analogue (SkipListReader block
+        maxima).
         Memoized per reader (the snapshot is immutable)."""
         if not term_ids:
             return {}
         missing = [t for t in term_ids if t not in self._bounds_cache]
         if missing:
-            # opened on first use and kept: each open is a schema-inference
-            # job, and only AND-shaped WAND queries ever need the table
-            if self._term_bounds is None:
-                self._term_bounds = self.spark.read.parquet(self.paths.term_bounds)
-            rows = self._term_bounds.filter(F.col("term_id").isin(missing)).collect()
+            rows = (
+                self._view("term_bounds")
+                .to_table(
+                    columns=["term_id", "max_tf_norm"],
+                    filter=ds.field("term_id").isin(missing),
+                )
+                .to_pylist()
+            )
             found = {r["term_id"]: float(r["max_tf_norm"]) for r in rows}
             for t in missing:
                 self._bounds_cache[t] = found.get(t)
@@ -364,23 +474,21 @@ class IndexReader:
         """word → (term_id, df); missing words absent (df=0).
 
         Driver-side lexicon probe (SearchContext.java:167-178 numHits) —
-        a pushed-down IN filter over the lexicon table, tiny result.
-        ``lang`` scopes df to one language's lexicon (a word unused in that
-        language is 'missing' there, like the reference's per-language
-        WordLexicon lookup). Memoized per (lang, word) — the snapshot is
-        immutable, and one WAND query re-probes the same words three times.
+        an IN filter over the lexicon files read through pyarrow, tiny
+        result, no Spark job. ``lang`` scopes df to one language's lexicon
+        (a word unused in that language is 'missing' there, like the
+        reference's per-language WordLexicon lookup). Memoized per (lang,
+        word) — the snapshot is immutable, and one WAND query re-probes the
+        same words three times.
         """
         if not words:
             return {}
-        if lang is not None and self.lexicon_lang is None:
+        if lang is not None and not self.has_lexicon_lang:
             raise ValueError("index has no per-language lexicon")
         want = list(dict.fromkeys(words))
         missing = [w for w in want if (lang, w) not in self._stats_cache]
         if missing:
-            src = self.lexicon
-            if lang is not None:
-                src = self.lexicon_lang.filter(F.col("lang") == lang)
-            rows = src.filter(F.col("term").isin(missing)).collect()
+            rows = self._lexicon_rows("term", missing, lang)
             found = {r["term"]: (r["term_id"], r["df"]) for r in rows}
             for w in missing:
                 self._stats_cache[(lang, w)] = found.get(w)
@@ -395,16 +503,13 @@ class IndexReader:
     def _scan_df(self, term_ids: list[int], lang: str | None) -> int:
         """Summed lexicon df of ``term_ids`` — the postings a scan of them
         can read at most. Usually memoized by :meth:`term_stats`; ids it
-        never saw cost one pushed-IN lexicon probe."""
-        if self.lexicon_lang is None:
+        never saw cost one lexicon probe."""
+        if not self.has_lexicon_lang:
             lang = None
         missing = [t for t in term_ids if (lang, t) not in self._df_cache]
         if missing:
-            src = self.lexicon
-            if lang is not None:
-                src = self.lexicon_lang.filter(F.col("lang") == lang)
-            rows = src.filter(F.col("term_id").isin(missing)).select("term_id", "df")
-            found = {r["term_id"]: r["df"] for r in rows.collect()}
+            rows = self._lexicon_rows("term_id", missing, lang)
+            found = {r["term_id"]: r["df"] for r in rows}
             for t in missing:
                 self._df_cache[(lang, t)] = found.get(t, 0)
         return sum(self._df_cache[(lang, t)] for t in term_ids)
@@ -426,44 +531,49 @@ class IndexReader:
             lang=lang,
         ).drop("term_id")
 
+    def _tier_source(self, tier: str) -> str:
+        """The table a tier reads: "prio", or "postings" (also when the
+        index has no priority tier)."""
+        return "prio" if (tier == "prio" and self.prio is not None) else "postings"
+
     def _blocks(
         self,
         term_ids: list[int],
-        block_filter: dict[int, F.Column] | None,
+        block_filter: dict[int, BlockCut] | None,
         tier: str,
         lang: str | None,
     ) -> DataFrame:
-        """The block rows of ``term_ids`` in one tier. The term_id predicate
-        prunes parquet row groups via min/max stats (postings files are
-        written sorted by term_id); a term in ``block_filter`` keeps only
-        the blocks where its predicate holds — one ``term_id = t AND ...``
-        disjunct each, so a ``max_tf_norm`` cut still reaches the scan's
-        pushed filters."""
-        source = self.prio if (tier == "prio" and self.prio is not None) else self.postings
-        cut = sorted(t for t in (block_filter or {}) if t in term_ids)
-        uncut = sorted(set(term_ids) - set(cut))
-        tid = F.col("term_id")
-        pred = [tid.isin(uncut)] if uncut else []
-        pred += [(tid == t) & block_filter[t] for t in cut]
-        blocks = source.filter(reduce(lambda a, b: a | b, pred))
-        if lang is not None and "lang" in source.columns:
-            # postings are written partitioned by the doc's language, so a
-            # lang-scoped query prunes whole lang=... directories at the
-            # scan (PartitionFilters) instead of filtering after the join —
-            # the per-language reverse index of the reference
-            blocks = blocks.filter(F.col("lang") == lang)
-        return blocks
+        """The block rows of ``term_ids`` in one tier as a Spark scan, for
+        the executor-site decode (see :func:`_block_predicate`)."""
+        source = getattr(self, self._tier_source(tier))
+        if "lang" not in source.columns:
+            lang = None
+        return source.filter(_block_predicate(F.col, term_ids, block_filter, lang))
+
+    def _fetch(
+        self,
+        term_ids: list[int],
+        block_filter: dict[int, BlockCut] | None,
+        tier: str,
+        lang: str | None,
+        columns: list[str],
+    ) -> pa.Table:
+        """``columns`` of the same block rows as :meth:`_blocks`, read on
+        the driver through pyarrow — no Spark job. Row groups and ``lang=``
+        directories are pruned by the same predicate."""
+        pred = _block_predicate(ds.field, term_ids, block_filter, lang)
+        return self._view(self._tier_source(tier)).to_table(columns=columns, filter=pred)
 
     def block_budget(
         self,
         term_ids: list[int],
         top_blocks: int | None = None,
         first_blocks: int | None = None,
-        block_filter: dict[int, F.Column] | None = None,
+        block_filter: dict[int, BlockCut] | None = None,
         tier: str = "full",
         lang: str | None = None,
-    ) -> dict[int, F.Column]:
-        """Each term's block budget as a ``block_filter`` predicate for
+    ) -> dict[int, BlockCut]:
+        """Each term's block budget as a ``block_filter`` cut for
         :meth:`decode_terms`: ``top_blocks`` keeps its N highest-max_tf_norm
         blocks (the threshold-estimation phase of two-phase top-k),
         ``first_blocks`` its N lowest-doc-id blocks — with rank-stamped ids
@@ -471,24 +581,26 @@ class IndexReader:
         the reference's budgeted-scan semantics (IndexSearchBudget: a
         truncated scan is sound BECAUSE docID order is quality order).
 
-        One driver-side probe per term ranks its block metadata only
-        (max_tf_norm, min_doc — never the payload; a root-level top-N is a
-        single JVM job) and names each kept block by its ``min_doc``, so
-        the decode stays one plain scan at full parallelism. Blocks already
-        cut by ``block_filter`` are ranked out first, and its predicates
-        are kept.
+        One driver-side read of the terms' block metadata (max_tf_norm,
+        min_doc — never the payload) ranks each term's blocks and names the
+        kept ones by their ``min_doc``, so the decode stays one plain scan
+        at full parallelism. Blocks already cut by ``block_filter`` are
+        ranked out first, and its ``max_tf_norm`` floors are kept.
         """
+        meta = self._fetch(
+            term_ids, block_filter, tier, lang, ["term_id", "max_tf_norm", "min_doc"]
+        ).to_pandas()
         out = {}
         for t in term_ids:
-            meta = self._blocks([t], block_filter, tier, lang).select(
-                "max_tf_norm", "min_doc"
-            )
+            m = meta[meta["term_id"] == t]
             if top_blocks is not None:
-                meta = meta.orderBy(F.desc("max_tf_norm"), "min_doc").limit(top_blocks)
+                m = m.sort_values(
+                    ["max_tf_norm", "min_doc"], ascending=[False, True]
+                ).head(top_blocks)
             if first_blocks is not None:
-                meta = meta.orderBy("min_doc").limit(first_blocks)
-            keep = F.col("min_doc").isin(sorted(r["min_doc"] for r in meta.collect()))
-            out[t] = block_filter[t] & keep if t in (block_filter or {}) else keep
+                m = m.sort_values("min_doc").head(first_blocks)
+            cut = (block_filter or {}).get(t, BlockCut())
+            out[t] = replace(cut, min_docs=frozenset(m["min_doc"].tolist()))
         return out
 
     def decode_terms(
@@ -497,7 +609,7 @@ class IndexReader:
         candidates: np.ndarray | None = None,
         positions: tuple[int, ...] | list[int] = (),
         with_wtf: bool = False,
-        block_filter: dict[int, F.Column] | None = None,
+        block_filter: dict[int, BlockCut] | None = None,
         tier: str = "full",
         lang: str | None = None,
     ) -> DataFrame:
@@ -507,15 +619,15 @@ class IndexReader:
         :attr:`deleted_ids`).
 
         The candidate array (sorted uint64) prunes blocks before decode.
-        ``block_filter`` maps term_id → block predicate (a block-max WAND
-        cut such as ``max_tf_norm >= c``, whose score upper bound
-        idf * max_tf_norm cannot reach the current top-k threshold below
-        it, or a :meth:`block_budget`). Only the ``positions`` terms decode
-        their position lists; the other terms' rows carry null positions.
+        ``block_filter`` maps term_id → :class:`BlockCut` (a block-max WAND
+        cut ``max_tf_norm >= c``, whose score upper bound idf * max_tf_norm
+        cannot reach the current top-k threshold below it, or a
+        :meth:`block_budget`). Only the ``positions`` terms decode their
+        position lists; the other terms' rows carry null positions.
 
         The decode site follows the scan's size: up to
-        ``DRIVER_DECODE_MAX_DF`` summed df, the block rows are fetched and
-        decoded on the driver, and the result is a local relation; above
+        ``DRIVER_DECODE_MAX_DF`` summed df, pyarrow reads the block rows and
+        the driver decodes them, and the result is a local relation; above
         it, a ``mapInPandas`` stage decodes on the executors.
         """
         decoded = self._decode(
@@ -533,7 +645,7 @@ class IndexReader:
         self,
         term_ids: list[int],
         candidates: np.ndarray | None = None,
-        block_filter: dict[int, F.Column] | None = None,
+        block_filter: dict[int, BlockCut] | None = None,
         tier: str = "full",
         lang: str | None = None,
     ) -> np.ndarray:
@@ -552,13 +664,12 @@ class IndexReader:
         candidates: np.ndarray | None,
         positions: tuple[int, ...] | list[int],
         with_wtf: bool,
-        block_filter: dict[int, F.Column] | None,
+        block_filter: dict[int, BlockCut] | None,
         tier: str,
         lang: str | None,
     ) -> DataFrame | list[pd.DataFrame]:
         """The decode behind :meth:`decode_terms`: a ``mapInPandas``
         DataFrame (executor site), or the decoded frames (driver site)."""
-        blocks = self._blocks(term_ids, block_filter, tier, lang)
         pos = sorted(set(positions) & set(term_ids))
         # column pruning into the parquet scan: the positions payload (the
         # widest column) is only read when the query needs positions, and
@@ -567,16 +678,20 @@ class IndexReader:
         if with_wtf:
             cols.insert(4, "wtfs")
         if pos:
-            pcol = F.col("positions")
-            if len(pos) < len(set(term_ids)):
-                pcol = F.when(F.col("term_id").isin(pos), pcol).alias("positions")
-            cols.insert(4, pcol)
-        blocks = blocks.select(*cols)
+            cols.insert(4, "positions")
+        pos_subset = bool(pos) and len(pos) < len(set(term_ids))
         deleted = self.deleted_ids
         kernel = partial(decode_blocks, with_positions=bool(pos), with_wtf=with_wtf)
         if self._scan_df(term_ids, lang) <= DRIVER_DECODE_MAX_DF:
-            batch = blocks.toArrow().to_pandas()
+            batch = self._fetch(term_ids, block_filter, tier, lang, cols).to_pandas()
+            if pos_subset:
+                batch.loc[~batch["term_id"].isin(pos), "positions"] = None
             return list(kernel(iter([batch]), candidates=candidates, reject=deleted))
+        if pos_subset:
+            cols[cols.index("positions")] = F.when(
+                F.col("term_id").isin(pos), F.col("positions")
+            ).alias("positions")
+        blocks = self._blocks(term_ids, block_filter, tier, lang).select(*cols)
         sc = self.spark.sparkContext
         fn = partial(
             kernel,
@@ -787,11 +902,11 @@ def run_query(
     # tryRetainData + block max); block budgets only to the drivers, and
     # budget_blocks only on single-path queries
     first_blocks = budget_blocks if len(live_paths) == 1 else None
-    cuts: dict[str, dict[int, F.Column]] = {}
+    cuts: dict[str, dict[int, BlockCut]] = {}
     for tier, words in legs.items():
         prunable = {w for w in words if live_tier.get(w) == tier and w not in shared}
         cuts[tier] = {
-            stats[w][0]: F.col("max_tf_norm") >= c
+            stats[w][0]: BlockCut(min_tf_norm=c)
             for w, c in (_driver_min_tf_norm or {}).items()
             if w in prunable
         }
@@ -1353,9 +1468,12 @@ def run_query_wand(
     the unrounded kth can round into a tie and win the deterministic
     tie-break, so the cut must keep it.
 
-    Ineligible queries fall back to the plain pipeline. At 10^12-turn
-    scale this is the difference between scanning a head term's full
-    posting list and touching a handful of blocks.
+    Ineligible queries fall back to the plain pipeline, and so do queries
+    whose live terms sum to at most ``DRIVER_DECODE_MAX_DF`` df: the
+    driver decodes such a scan whole for less than phase 1 costs, and the
+    results are the same either way. At 10^12-turn scale the cut is the
+    difference between scanning a head term's full posting list and
+    touching a handful of blocks.
     """
     import math
 
@@ -1398,6 +1516,10 @@ def run_query_wand(
     live_paths = [p for p in paths if all(w in stats for w in p)]
     live = sorted({w for p in live_paths for w in p})
     if not live or n_corpus <= 0:
+        return run_query(reader, pq, k=k, **kw)
+    if sum(stats[w][1] for w in live) <= DRIVER_DECODE_MAX_DF:
+        # the driver decodes the whole unpruned scan in tens of ms, less
+        # than phase 1 (a query of its own) would cost to prune it
         return run_query(reader, pq, k=k, **kw)
     pure_or = all(len(set(p)) == 1 for p in live_paths)
 

@@ -212,7 +212,7 @@ def test_blocklist_tier_semantics(spark, built):
     assert got2 == base - {"conv2", "conv4"}  # NSFW_BLOCK_SMUT: both tiers
 
 
-def test_blocklist_wand_matches_plain(spark, built):
+def test_blocklist_wand_matches_plain(spark, built, wand_phase1):
     reader = built
     bl = _blocklist(spark, reader, ["conv2", "conv6"], ["conv12"])
     plain = [
@@ -230,6 +230,7 @@ def test_blocklist_wand_matches_plain(spark, built):
     assert plain == wand
     blocked = {"conv2", "conv6", "conv12"}
     assert not blocked & {c for c, _ in plain}
+    assert len(wand_phase1) == 1  # phase 1 ran
 
 
 # ---------------------------------------------------------------------------
@@ -286,7 +287,7 @@ def test_pagination_edges(spark, built):
     assert [r["conv_id"] for r in p0] == [r["conv_id"] for r in p1]
 
 
-def test_pagination_wand_gather(spark, built):
+def test_pagination_wand_gather(spark, built, wand_phase1):
     from marginaliasearch_spark.operators.query_exec import run_query_page
 
     reader = built
@@ -301,3 +302,4 @@ def test_pagination_wand_gather(spark, built):
     assert [(r["conv_id"], r["score"]) for r in plain] == [
         (r["conv_id"], r["score"]) for r in wand
     ]
+    assert len(wand_phase1) == 1  # phase 1 ran

@@ -172,10 +172,11 @@ class TestBm25Oracle:
             for (g_id, g_s), (e_id, e_s) in zip(got, expect):
                 assert abs(g_s - e_s) < 1e-9, (q, g_id, e_id)
 
-    def test_randomized_wand_equivalence_sweep(self, corpus_and_reader):
+    def test_randomized_wand_equivalence_sweep(self, corpus_and_reader, wand_phase1):
         """Random single/AND/OR/AND-of-OR shapes: block-max WAND must be
         EXACTLY the plain pipeline (same ids, same rounded scores) — the
-        θ-cut soundness property, fuzzed beyond test_wand's fixed shapes."""
+        θ-cut soundness property, fuzzed beyond test_wand's fixed shapes.
+        ``wand_phase1`` forces both phases on this driver-sized index."""
         import random
 
         from marginaliasearch_spark.operators.query_exec import run_query_wand
@@ -206,6 +207,7 @@ class TestBm25Oracle:
                 ).collect()
             ]
             assert plain == wand, q
+        assert len(wand_phase1) == 12  # phase 1 ran for every query
 
 
 class TestPhrase:
@@ -410,7 +412,7 @@ class TestAdvisoryTerms:
             i for i in range(1, 513) if i % 2 == 0 and (i % 509 == 0 or i % 510 == 0)
         }
 
-    def test_wand_matches_plain_with_advice(self, factor_index):
+    def test_wand_matches_plain_with_advice(self, factor_index, wand_phase1):
         from marginaliasearch_spark.operators.query_exec import run_query_wand
 
         a = run_query(factor_index, "factor2 ( factor3 )", k=20).collect()
@@ -418,6 +420,7 @@ class TestAdvisoryTerms:
         assert [(r["doc_id"], r["score"]) for r in a] == [
             (r["doc_id"], r["score"]) for r in b
         ]
+        assert len(wand_phase1) == 1  # phase 1 ran
 
 
 class TestTemporalBias:

@@ -5,8 +5,13 @@ WordLexicon.java:34-41), and lang-scoped queries take df/IDF from that
 language's statistics only — a bilingual corpus must not mix them."""
 
 import datetime
+import glob
 import math
+import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 import pytest
 
 from marginaliasearch_spark.operators import query_exec
@@ -107,30 +112,34 @@ def test_lang_prunes_postings_scan(spark, built, monkeypatch):
     assert df.count() == 4
 
 
-def test_lang_prunes_driver_fetch_scan(spark, built, monkeypatch):
-    """A driver-site decode fetches its block rows with the same scan, so
-    the language still reaches it as a partition filter."""
-    frame = type(built.postings)
-    fetched = []
-    to_arrow = frame.toArrow
-
-    def spy(df):
-        fetched.append(df._jdf.queryExecution().executedPlan().toString())
-        return to_arrow(df)
-
-    monkeypatch.setattr(frame, "toArrow", spy)
-    tid = built.term_stats(["shared"])["shared"][0]
-    df = built.decode_term(tid, lang="es").select("doc_id")
-    assert len(fetched) == 1
-    assert "PartitionFilters" in fetched[0]
-    assert "lang" in fetched[0].split("PartitionFilters")[1][:200]
+def test_lang_prunes_driver_fetch_scan(spark, built, tmp_path):
+    """A driver-site decode reads its block rows through pyarrow, and the
+    language prunes whole lang=... directories there too. On a copy of
+    the index whose lang=en postings files turn to garbage after the
+    reader listed them, an es-scoped decode still reads its 4 docs — it
+    opens no file outside lang=es — while an unscoped decode raises."""
+    root = str(tmp_path / "idx")
+    shutil.copytree(built.paths.root, root)
+    reader = IndexReader(spark, IndexPaths(root))
+    tid = reader.term_stats(["shared"])["shared"][0]
+    es_frags = reader._view("postings").get_fragments(filter=ds.field("lang") == "es")
+    assert {os.path.basename(os.path.dirname(f.path)) for f in es_frags} == {"lang=es"}
+    en_files = glob.glob(os.path.join(root, "postings", "*", "lang=en", "*.parquet"))
+    assert en_files
+    for f in en_files:
+        with open(f, "wb") as out:
+            out.write(b"not a parquet file")
+    df = reader.decode_term(tid, lang="es").select("doc_id")
+    assert "MapInPandas" not in df._jdf.queryExecution().optimizedPlan().toString()
     assert df.count() == 4
+    with pytest.raises(pa.ArrowInvalid):
+        reader.decode_term(tid)
 
 
-def test_wand_lang_scoped_equals_plain(spark, built):
+def test_wand_lang_scoped_equals_plain(spark, built, wand_phase1):
     """run_query_wand with lang= must stay exact: θ/idf come from the
     language's statistics, block cuts from the (conservative) global
-    bounds."""
+    bounds. ``wand_phase1`` forces both phases on this tiny index."""
     from marginaliasearch_spark.operators.query_exec import run_query_wand
 
     for q, lang, k in [("shared", "es", 3), ("shared rare", "es", 2), ("rare", "en", 1)]:
@@ -139,6 +148,7 @@ def test_wand_lang_scoped_equals_plain(spark, built):
         assert [(r["conv_id"], r["score"]) for r in plain] == [
             (r["conv_id"], r["score"]) for r in wand
         ]
+    assert len(wand_phase1) == 3  # phase 1 ran for every query
 
 
 def test_lang_token_query_syntax(spark, built):

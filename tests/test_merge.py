@@ -60,13 +60,17 @@ def _res(reader, q, **kw):
         ("?factor5 factor3", {}),
     ],
 )
-def test_merge_equals_full_build(spark, roots, q, kw):
+def test_merge_equals_full_build(spark, roots, request, q, kw):
     full_root, out_root = roots
     full = IndexReader(spark, IndexPaths(full_root))
     merged = IndexReader(spark, IndexPaths(out_root))
+    # a driver-sized WAND query skips phase 1; force both phases
+    phase1 = request.getfixturevalue("wand_phase1") if kw.get("wand") else None
     a, b = _res(full, q, **kw), _res(merged, q, **kw)
     assert a, f"query {q!r} must hit on the factor corpus"
     assert a == b
+    if phase1 is not None:
+        assert len(phase1) == 2  # phase 1 ran on both indexes
 
 
 def test_merge_statistics_additive(spark, roots):
@@ -254,7 +258,7 @@ class TestDeletion:
         assert cstats["doc_count"] == sstats["doc_count"]
         assert cstats["avg_len"] == sstats["avg_len"]
 
-    def test_wand_consistent_under_tombstones(self, spark, del_roots):
+    def test_wand_consistent_under_tombstones(self, spark, del_roots, wand_phase1):
         full_root, _, _, _ = del_roots
         reader = IndexReader(spark, IndexPaths(full_root))
         a = [
@@ -266,6 +270,7 @@ class TestDeletion:
             for r in run_query_wand(reader, "factor2 factor3", k=10).collect()
         ]
         assert a == b
+        assert len(wand_phase1) == 1  # phase 1 ran
 
     def test_double_delete_idempotent(self, spark, del_roots):
         from marginaliasearch_spark.operators.index_build import delete_convs

@@ -81,11 +81,12 @@ def test_run_search_auto_equals_plain(reader):
     )
 
 
-def test_run_search_qs_topic_routes_to_wand_same_results(reader):
+def test_run_search_qs_topic_routes_to_wand_same_results(reader, wand_phase1):
     plain = _pairs(run_query(reader, "word00 -word45", k=10).collect())
     wand = _pairs(run_query_wand(reader, "word00 -word45", k=10).collect())
     via_qs = _pairs(run_search(reader, "word00 -word45 qs=topic", k=10).collect())
     assert via_qs == wand == plain
+    assert len(wand_phase1) == 2  # phase 1 ran for both WAND calls
 
 
 def test_run_search_qs_sentence_forces_plain(reader):

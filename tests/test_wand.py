@@ -1,6 +1,11 @@
 """Block-max WAND two-phase top-k: must return exactly run_query's results
 while scanning strictly fewer posting blocks (the north-star's block-max
-pruning, re-expressed as a parquet scan predicate on max_tf_norm)."""
+pruning, re-expressed as a parquet scan predicate on max_tf_norm).
+
+Every scan of this small index is driver-sized, and ``run_query_wand``
+hands such a query to the plain pipeline without a threshold pass; the
+``wand_phase1`` fixture forces the executor site so both phases run, and
+each test checks that phase 1 did."""
 
 import math
 
@@ -38,10 +43,11 @@ def _pairs(rows):
         "word01 len>40",  # spec limit applies in both phases
     ],
 )
-def test_wand_equals_plain(spark, reader, query):
+def test_wand_equals_plain(spark, reader, query, wand_phase1):
     plain = _pairs(run_query(reader, query, k=10).collect())
     wand = _pairs(run_query_wand(reader, query, k=10).collect())
     assert wand == plain
+    assert len(wand_phase1) == 1  # phase 1 ran every time
 
 
 @pytest.mark.parametrize(
@@ -51,10 +57,11 @@ def test_wand_equals_plain(spark, reader, query):
         "( word01 | word02 | word40 ) -word45",
     ],
 )
-def test_wand_or_of_single_terms_equals_plain(spark, reader, query):
+def test_wand_or_of_single_terms_equals_plain(spark, reader, query, wand_phase1):
     plain = _pairs(run_query(reader, query, k=10).collect())
     wand = _pairs(run_query_wand(reader, query, k=10).collect())
     assert wand == plain
+    assert len(wand_phase1) == 1  # phase 1 ran every time
 
 
 @pytest.mark.parametrize(
@@ -66,13 +73,14 @@ def test_wand_or_of_single_terms_equals_plain(spark, reader, query):
         "word00 word01 -word45",  # exclusion applies in both phases
     ],
 )
-def test_wand_and_equals_plain(spark, reader, query):
+def test_wand_and_equals_plain(spark, reader, query, wand_phase1):
     """Pure-AND intersections use the residual per-term cut
     (θ - Σ other-terms' global UB) and must stay EXACT."""
     for k in (3, 10):
         plain = _pairs(run_query(reader, query, k=k).collect())
         wand = _pairs(run_query_wand(reader, query, k=k).collect())
         assert wand == plain
+    assert len(wand_phase1) == 2  # phase 1 ran every time
 
 
 @pytest.mark.parametrize(
@@ -84,7 +92,7 @@ def test_wand_and_equals_plain(spark, reader, query):
         "( word00 | word47 ) word01",  # one very rare alternative
     ],
 )
-def test_wand_mixed_and_of_or_equals_plain(spark, reader, query):
+def test_wand_mixed_and_of_or_equals_plain(spark, reader, query, wand_phase1):
     """Mixed AND-of-OR shapes (the expansion engine's default output) use
     per-path residual cuts — every term's scan gets the block-max cut of
     its most forgiving containing path — and must stay EXACT."""
@@ -92,26 +100,29 @@ def test_wand_mixed_and_of_or_equals_plain(spark, reader, query):
         plain = _pairs(run_query(reader, query, k=k).collect())
         wand = _pairs(run_query_wand(reader, query, k=k).collect())
         assert wand == plain
+    assert len(wand_phase1) == 2  # phase 1 ran every time
 
 
-def test_wand_mixed_rounded_equals_plain(spark, reader):
+def test_wand_mixed_rounded_equals_plain(spark, reader, wand_phase1):
     q = "( word00 | word30 ) word01"
     for r in (2, 4, 6):
         plain = _pairs(run_query(reader, q, k=10, round_score_to=r).collect())
         wand = _pairs(run_query_wand(reader, q, k=10, round_score_to=r).collect())
         assert wand == plain
+    assert len(wand_phase1) == 3  # phase 1 ran every time
 
 
-def test_wand_mixed_dead_alternative_falls_back_to_live_paths(spark, reader):
+def test_wand_mixed_dead_alternative_falls_back_to_live_paths(spark, reader, wand_phase1):
     """An OR alternative absent from the lexicon drops its paths; the cut
     must derive from the LIVE paths only and results must stay exact."""
     q = "( word00 | nosuchword ) word01"
     plain = _pairs(run_query(reader, q, k=10).collect())
     wand = _pairs(run_query_wand(reader, q, k=10).collect())
     assert wand == plain
+    assert len(wand_phase1) == 1  # phase 1 ran every time
 
 
-def test_wand_and_equals_plain_rounded(spark, reader):
+def test_wand_and_equals_plain_rounded(spark, reader, wand_phase1):
     """With round_score_to set, θ must widen by the rounding quantum so a
     doc that round-ties with the kth result is never pruned."""
     q = "word00 word01"
@@ -119,13 +130,15 @@ def test_wand_and_equals_plain_rounded(spark, reader):
         plain = _pairs(run_query(reader, q, k=10, round_score_to=r).collect())
         wand = _pairs(run_query_wand(reader, q, k=10, round_score_to=r).collect())
         assert wand == plain
+    assert len(wand_phase1) == 3  # phase 1 ran every time
 
 
-def test_wand_k_larger_than_result(spark, reader):
+def test_wand_k_larger_than_result(spark, reader, wand_phase1):
     q = "word45"
     assert _pairs(run_query_wand(reader, q, k=500).collect()) == _pairs(
         run_query(reader, q, k=500).collect()
     )
+    assert len(wand_phase1) == 1  # phase 1 ran every time
 
 
 def test_wand_cut_actually_prunes_blocks(spark, reader):

@@ -73,9 +73,10 @@ def main() -> None:
         (
             "Driver-site decode (`customer query -slow len>20`, k=10)",
             "The same query as it runs on this index: a scan of at most "
-            "`DRIVER_DECODE_MAX_DF` summed df fetches its block rows "
-            "through Arrow (one JVM-only job, while the query is planned) "
-            "and decodes them on the driver. Things to check: the plan "
+            "`DRIVER_DECODE_MAX_DF` summed df reads its block rows "
+            "straight from the parquet files through pyarrow (no Spark "
+            "job, while the query is planned) and decodes them on the "
+            "driver. Things to check: the plan "
             "starts at a `LocalTableScan` of the decoded rows — no "
             "`MapInPandas`, no Python stage; the pivot, filters, doc-stats "
             "join and `TakeOrderedAndProject` are those of the "
