@@ -62,7 +62,6 @@ from marginaliasearch_spark.operators.query_exec import (
     IndexReader,
     RankingParams,
     run_query,
-    run_query_wand,
 )
 from marginaliasearch_spark.plans.expansion import (
     NGRAM_MIN_COUNT as _NGRAM_MIN_COUNT,
@@ -692,25 +691,11 @@ def _search_conv(base: str, k: int = _K) -> Callable[[SparkSession, str], DataFr
     return fn
 
 
-def _search_wand(query: str, k: int = _K) -> Callable[[SparkSession, str], DataFrame]:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        reader = _get_reader(spark, sf_dir)
-        res = run_query_wand(
-            reader,
-            query,
-            k=k,
-            round_score_to=6,
-            tie_break=F.col("conv_id").cast("long"),
-        )
-        return res.select(F.col("conv_id").cast("long").alias("doc_id"), "score")
-
-    return fn
-
-
 def _search_qs(query: str, k: int = _K) -> Callable[[SparkSession, str], DataFrame]:
-    """Strategy-dispatching search — the query string carries a ``qs=``
-    execution-strategy override (QueryParser.java:238 QsTerm →
-    QueryFactory.parseQueryStrategy) routed through ``run_search``."""
+    """Search through ``run_search`` — the query string carries a ``qs=``
+    execution-strategy token (QueryParser.java:238 QsTerm →
+    QueryFactory.parseQueryStrategy), which the parser drops or folds into
+    the role gate."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         from marginaliasearch_spark.operators.query_exec import run_search
@@ -2579,24 +2564,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # positional ranking (first-position + verbatim + proximity, §5)
         "fulltext_positional": _search("batch scan", positional=True),
         "fulltext_proximity": _search("customer query slow", positional=True),
-        # block-max WAND two-phase top-k (exact; same oracle as plain BM25);
-        # the AND shape exercises the residual per-term cut on every leg of
-        # the intersection (SkipListReader block-max retain analogue)
-        "fulltext_wand": _search_wand("query -slow"),
-        "fulltext_wand_and": _search_wand("spark join -dup"),
-        # mixed AND-of-OR (the expansion engine's default output shape):
-        # per-path residual cuts pushed on EVERY term's scan
-        "fulltext_wand_or_and": _search_wand("( stream | vector ) scan"),
+        # the shapes a block-max WAND path once served (single with an
+        # exclusion, AND, and the expansion engine's default AND-of-OR);
+        # the one plain pipeline answers them, against the same oracles
+        "fulltext_wand": _search("query -slow"),
+        "fulltext_wand_and": _search("spark join -dup"),
+        "fulltext_wand_or_and": _search("( stream | vector ) scan"),
         # role gates (F8): driver docs cycle roles by doc_id % 4 (the
         # transcripts adapter), so in:user selects the %4==2 class and a
         # two-role gate is unsatisfiable on single-turn docs
         "fulltext_gate_pass": _search("spark join in:user"),
         "fulltext_gate_empty": _search("spark join in:system in:user"),
-        # qs= execution-strategy override (QueryParser.java:238 QsTerm):
-        # qs=topic forces the block-max WAND runner (exact-equal results,
-        # same oracle as the plain shape); qs=rf_user is the
-        # REQUIRE_FIELD_* analogue — folded into the role gate, so it
-        # shares fulltext_gate_pass's oracle
+        # qs= execution-strategy token (QueryParser.java:238 QsTerm):
+        # qs=topic is parsed and dropped (one physical pipeline, same
+        # oracle as the plain shape); qs=rf_user is the REQUIRE_FIELD_*
+        # analogue — folded into the role gate, so it shares
+        # fulltext_gate_pass's oracle
         "fulltext_qs_wand": _search_qs("spark join -dup qs=topic"),
         "fulltext_qs_gate": _search_qs("spark join qs=rf_user"),
         # conv:/-conv: doc-range retain/reject (F5)

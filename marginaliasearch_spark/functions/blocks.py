@@ -7,7 +7,9 @@ one term, docID-sorted, delta+varbyte compressed, carrying per-block
 ``max_tf_norm`` (per-block max of the BM25 tf-normalization factor). A
 block's score upper bound is ``idf(term) * max_tf_norm`` — idf is a per-term
 constant, so storing the idf-free factor keeps the document-frequency join
-OUT of the build's shuffle path (block-max WAND metadata at zero join cost).
+OUT of the build's shuffle path (block-max metadata at zero join cost). No
+query prunes on it; it stays in the block schema so that indexes built at
+any time merge with each other.
 Parquet/Iceberg min/max column stats on these columns give block skipping at
 scan time; the decode kernels additionally prune blocks against a candidate
 set, which is the reference's ``tryRetainData`` semantics

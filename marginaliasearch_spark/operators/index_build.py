@@ -66,7 +66,6 @@ class IndexPaths:
         self.lexicon = os.path.join(root, "lexicon")
         self.doc_stats = os.path.join(root, "doc_stats")
         self.lexicon_lang = os.path.join(root, "lexicon_lang")
-        self.term_bounds = os.path.join(root, "term_bounds")
         self.prio = os.path.join(root, "prio")
         self.ngrams = os.path.join(root, "ngrams")
         self.tombstones = os.path.join(root, "tombstones")
@@ -181,8 +180,8 @@ def build_index(
             schema="term_id long, term string, df long, ctf long, stem string",
         )
         lexicon.write.mode("overwrite").parquet(paths.lexicon)
-        # block_docs is recorded so the query side can size WAND probe
-        # budgets from the index's ACTUAL block geometry (not a constant)
+        # block_docs is recorded so a merge can check that both sides share
+        # one block geometry and a compaction re-encodes with it
         _write_json_atomic(
             paths.corpus_stats,
             {
@@ -299,15 +298,6 @@ def build_index(
             .partitionBy("lang")
             .parquet(paths.prio)
         )
-
-    # Step 3 — per-term score bounds for block-max WAND pruning: the global
-    # max tf-norm per term (score ub = idf * max_tf_norm). Tiny aggregation
-    # over block metadata only (no posting payload is read — column pruning).
-    if not os.path.exists(os.path.join(paths.term_bounds, "_SUCCESS")):
-        shutil.rmtree(paths.term_bounds, ignore_errors=True)
-        read_postings(spark, paths).groupBy("term_id").agg(
-            F.max("max_tf_norm").alias("max_tf_norm")
-        ).coalesce(1).write.mode("overwrite").parquet(paths.term_bounds)
     return paths
 
 
@@ -465,7 +455,7 @@ def merge_indexes(
       union of block rows IS the merged posting list; the reader's
       rarest-first/df-ordered plans never assumed one file per term.
     - **statistics re-aggregate additively** over vocab-sized tables:
-      lexicon df/ctf add per (term, lang), term_bounds take the max,
+      lexicon df/ctf add per (term, lang),
       corpus stats add (BM25 needs the merged N and df — adding them gives
       bit-identical scores to a from-scratch build, which the merge
       equality test pins).
@@ -529,21 +519,6 @@ def merge_indexes(
         .select("term_id", "term", "df", "ctf", "stem")
         .write.mode("overwrite")
         .parquet(out.lexicon)
-    )
-    # select the bound explicitly: an index written before term_bounds lost
-    # its n_blocks column still merges
-    bounds = [
-        spark.read.parquet(p.term_bounds).select("term_id", "max_tf_norm")
-        for p in (base, delta)
-    ]
-    (
-        bounds[0]
-        .unionByName(bounds[1])
-        .groupBy("term_id")
-        .agg(F.max("max_tf_norm").alias("max_tf_norm"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(out.term_bounds)
     )
     ng = [
         p.ngrams
@@ -619,7 +594,7 @@ def compact_index(
     to recompute tf_norm, and re-encoded through the BUILD's own
     ``encode_blocks`` shuffle — so a compacted index is byte-compatible
     with a from-scratch build's postings layout, block geometry is fully
-    regenerated (term_bounds included), and every symlink of a merged
+    regenerated, and every symlink of a merged
     index is replaced by real files. Statistics tables copy through
     unchanged (compaction moves bytes, it must not change any statistic —
     the equality test pins query results before/after).
@@ -814,10 +789,6 @@ def compact_index(
             .write.mode("overwrite")
             .parquet(out.lexicon)
         )
-    # block geometry changed: regenerate term_bounds from the NEW blocks
-    read_postings(spark, out).groupBy("term_id").agg(
-        F.max("max_tf_norm").alias("max_tf_norm")
-    ).coalesce(1).write.mode("overwrite").parquet(out.term_bounds)
     new_stats = dict(stats)
     if tomb is not None:
         # same grouping-sets formula as the build's corpus stats

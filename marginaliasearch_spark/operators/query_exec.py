@@ -8,8 +8,8 @@ Ranking) as one DataFrame DAG:
   look up per-term document frequencies in the lexicon and pick each OR
   path's rarest term as its driver (``CombinedIndexReader.java:94-97,
   119-130`` — selectivity ordering is OURS to do). The driver reads the
-  lexicon, the term bounds and block metadata straight from the parquet
-  files through pyarrow, with no Spark job;
+  lexicon and block metadata straight from the parquet files through
+  pyarrow, with no Spark job;
 - **lookup** (= EntrySource + ReverseIndexRetainFilter): ONE filtered scan
   and ONE decode per posting tier reads every term the query names, then a
   ``groupBy(doc_id)`` pivot lays each term out as columns and keeps the
@@ -17,9 +17,9 @@ Ranking) as one DataFrame DAG:
   scan's summed lexicon df: a small scan's block rows are read through
   pyarrow and decoded on the driver, without a Spark job (the reference
   decodes in the process that plans the query); a big one runs as a
-  ``mapInPandas`` stage. A block cut or budget is data (:class:`BlockCut`)
-  that either scan applies as its filter. Either
-  way the kernel drops the index's deletion tombstones, collected once per
+  ``mapInPandas`` stage. A block budget is data (the kept blocks'
+  ``min_doc``) that either scan applies as its filter. Either way the
+  kernel drops the index's deletion tombstones, collected once per
   reader. When the other terms' lists are big, the rarest terms' doc ids
   are collected first and shipped to the decode, which skips blocks whose
   [min_doc, max_doc] window misses all of them (skip-list forward
@@ -36,9 +36,11 @@ Ranking) as one DataFrame DAG:
   heap, ``ResultPriorityQueue``) with an optional per-group result cap
   (``row_number`` window = per-domain cap, ``IndexQueryExecution.java:162-177``).
 
-The time-budget / early-termination machinery (``IndexSearchBudget``) is
-deliberately omitted: this is a batch engine; block-max metadata + parquet
-min/max stats provide the scan pruning instead (SURVEY §2.6 O4 note).
+``IndexSearchBudget`` is kept in its work-bounded form only: ``run_query``'s
+opt-in ``budget_blocks`` scans the first N blocks of the driver term, in
+doc-id (= quality) order. Its clock (early termination after a time budget)
+is omitted: this is a batch engine, and the block windows and parquet
+min/max stats provide the scan pruning (SURVEY §2.6 O4 note).
 """
 
 from __future__ import annotations
@@ -46,7 +48,7 @@ from __future__ import annotations
 import json
 import operator
 import os
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from functools import cached_property, partial, reduce
 
 import numpy as np
@@ -210,31 +212,7 @@ PRUNE_DF_THRESHOLD = 50_000
 # index; decode + count, median of 5): at summed df 10k / 50k / 200k / 1M
 # the driver took 0.26 / 0.32 / 0.80 / 3.61 s and mapInPandas 0.40 / 0.41 /
 # 0.42 / 0.62 s; at 60k mapInPandas already won (0.43 against 0.54 s).
-# The same bound gates ``run_query_wand``: a query whose live terms sum to
-# at most this much df is decoded whole on the driver in tens of ms, less
-# than the threshold pass that would prune it costs.
 DRIVER_DECODE_MAX_DF = 50_000
-
-
-@dataclass(frozen=True)
-class BlockCut:
-    """The blocks of one term a scan keeps, as data: those whose
-    ``max_tf_norm`` is at least ``min_tf_norm`` (a block-max WAND cut) and,
-    when ``min_docs`` is set, whose ``min_doc`` is one of them (a block
-    budget, :meth:`IndexReader.block_budget`). :func:`_block_predicate`
-    turns it into a Spark column for the executor-site scan and into an
-    Arrow filter for the driver's fetch."""
-
-    min_tf_norm: float | None = None
-    min_docs: frozenset[int] | None = None
-
-    def predicate(self, field):
-        conds = []
-        if self.min_tf_norm is not None:
-            conds.append(field("max_tf_norm") >= self.min_tf_norm)
-        if self.min_docs is not None:
-            conds.append(field("min_doc").isin(sorted(self.min_docs)))
-        return reduce(operator.and_, conds)
 
 
 def _block_predicate(field, term_ids, block_filter, lang):
@@ -242,16 +220,16 @@ def _block_predicate(field, term_ids, block_filter, lang):
     (``F.col`` for a Spark scan, ``pyarrow.dataset.field`` for an Arrow
     one). The term_id test prunes parquet row groups via min/max stats
     (postings files are written sorted by term_id); a term in
-    ``block_filter`` keeps only the blocks of its :class:`BlockCut` — one
-    ``term_id = t AND ...`` disjunct each, so a ``max_tf_norm`` cut still
-    reaches the scan's pushed filters. Postings are written partitioned by
+    ``block_filter`` keeps only the blocks whose ``min_doc`` is in its set
+    (a block budget, :meth:`IndexReader.block_budget`) — one ``term_id = t
+    AND min_doc IN (...)`` disjunct each. Postings are written partitioned by
     the doc's language, so ``lang`` prunes whole ``lang=...`` directories
     at the scan (the per-language reverse index of the reference)."""
     cut = sorted(t for t in (block_filter or {}) if t in term_ids)
     uncut = sorted(set(term_ids) - set(cut))
     tid = field("term_id")
     pred = [tid.isin(uncut)] if uncut else []
-    pred += [(tid == t) & block_filter[t].predicate(field) for t in cut]
+    pred += [(tid == t) & field("min_doc").isin(sorted(block_filter[t])) for t in cut]
     pred = reduce(operator.or_, pred)
     if lang is not None:
         pred = pred & (field("lang") == lang)
@@ -336,30 +314,23 @@ class IndexReader:
             if os.path.exists(os.path.join(paths.ngrams, "_SUCCESS"))
             else None
         )
-        # actual block geometry of this index (older indexes predate the
-        # stat; fall back to the build default) — sizes WAND probe budgets
-        from ..functions.blocks import BLOCK_DOCS
-
-        self.block_docs = int(stats.get("block_docs", BLOCK_DOCS))
-        # driver-side memo of lexicon/bounds probes: a reader is pinned to
-        # one immutable index snapshot, so these tiny lookups never change
-        # — the Spark analogue of the reference keeping lexicon B-tree
-        # pages hot in its buffer pool (a WAND query alone probes the
-        # lexicon three times: wrapper + both phases)
+        # driver-side memo of lexicon probes: a reader is pinned to one
+        # immutable index snapshot, so these tiny lookups never change —
+        # the Spark analogue of the reference keeping lexicon B-tree pages
+        # hot in its buffer pool (a warm loop re-probes the same words)
         self._stats_cache: dict[tuple, tuple[int, int] | None] = {}
         self._df_cache: dict[tuple[str | None, int], int] = {}
-        self._bounds_cache: dict[int, float | None] = {}
         self._views: dict[str, ds.Dataset] = {}
         self._searchset_cache: dict[str, DataFrame | None] = {}
 
     def _view(self, table: str) -> ds.Dataset:
         """pyarrow view of one index table ("lexicon", "lexicon_lang",
-        "term_bounds", "prio" or "postings") for the driver's own reads —
-        lexicon probes, term bounds, block budgets and driver-site block
-        fetches — which start no Spark job. Opened on first use (so opening
-        a reader pays nothing for it) and kept, like the snapshot. The
-        postings view covers the committed buckets ``self.postings`` reads,
-        merged-in symlinked buckets included."""
+        "prio" or "postings") for the driver's own reads — lexicon probes,
+        block budgets and driver-site block fetches — which start no Spark
+        job. Opened on first use (so opening a reader pays nothing for it)
+        and kept, like the snapshot. The postings view covers the committed
+        buckets ``self.postings`` reads, merged-in symlinked buckets
+        included."""
         if table not in self._views:
             if table == "postings":
                 view = ds.dataset([_parquet_view(b, _LANG_DIRS) for b in self._buckets])
@@ -440,33 +411,6 @@ class IndexReader:
             self._year_range = (int(r["lo"]), int(r["hi"]))
         return self._year_range
 
-    def term_bounds(self, term_ids: list[int]) -> dict[int, float]:
-        """term_id → global max tf-norm (score UB = idf * max_tf_norm) from
-        the tiny term_bounds table — an IN filter read through pyarrow on
-        the driver, the skip-list global-max analogue (SkipListReader block
-        maxima).
-        Memoized per reader (the snapshot is immutable)."""
-        if not term_ids:
-            return {}
-        missing = [t for t in term_ids if t not in self._bounds_cache]
-        if missing:
-            rows = (
-                self._view("term_bounds")
-                .to_table(
-                    columns=["term_id", "max_tf_norm"],
-                    filter=ds.field("term_id").isin(missing),
-                )
-                .to_pylist()
-            )
-            found = {r["term_id"]: float(r["max_tf_norm"]) for r in rows}
-            for t in missing:
-                self._bounds_cache[t] = found.get(t)
-        return {
-            t: self._bounds_cache[t]
-            for t in term_ids
-            if self._bounds_cache[t] is not None
-        }
-
     # --- planning -----------------------------------------------------
     def term_stats(
         self, words: list[str], lang: str | None = None
@@ -478,8 +422,7 @@ class IndexReader:
         result, no Spark job. ``lang`` scopes df to one language's lexicon
         (a word unused in that language is 'missing' there, like the
         reference's per-language WordLexicon lookup). Memoized per (lang,
-        word) — the snapshot is immutable, and one WAND query re-probes the
-        same words three times.
+        word) — the snapshot is immutable.
         """
         if not words:
             return {}
@@ -539,7 +482,7 @@ class IndexReader:
     def _blocks(
         self,
         term_ids: list[int],
-        block_filter: dict[int, BlockCut] | None,
+        block_filter: dict[int, frozenset[int]] | None,
         tier: str,
         lang: str | None,
     ) -> DataFrame:
@@ -553,7 +496,7 @@ class IndexReader:
     def _fetch(
         self,
         term_ids: list[int],
-        block_filter: dict[int, BlockCut] | None,
+        block_filter: dict[int, frozenset[int]] | None,
         tier: str,
         lang: str | None,
         columns: list[str],
@@ -567,41 +510,27 @@ class IndexReader:
     def block_budget(
         self,
         term_ids: list[int],
-        top_blocks: int | None = None,
-        first_blocks: int | None = None,
-        block_filter: dict[int, BlockCut] | None = None,
+        first_blocks: int,
         tier: str = "full",
         lang: str | None = None,
-    ) -> dict[int, BlockCut]:
-        """Each term's block budget as a ``block_filter`` cut for
-        :meth:`decode_terms`: ``top_blocks`` keeps its N highest-max_tf_norm
-        blocks (the threshold-estimation phase of two-phase top-k),
-        ``first_blocks`` its N lowest-doc-id blocks — with rank-stamped ids
-        (functions/ids.py) those hold the best-quality documents, which is
-        the reference's budgeted-scan semantics (IndexSearchBudget: a
-        truncated scan is sound BECAUSE docID order is quality order).
+    ) -> dict[int, frozenset[int]]:
+        """Each term's block budget as a ``block_filter`` entry for
+        :meth:`decode_terms`: the ``min_doc`` of its ``first_blocks``
+        lowest-doc-id blocks — with rank-stamped ids (functions/ids.py)
+        those hold the best-quality documents, which is the reference's
+        budgeted-scan semantics (IndexSearchBudget: a truncated scan is
+        sound BECAUSE docID order is quality order).
 
-        One driver-side read of the terms' block metadata (max_tf_norm,
-        min_doc — never the payload) ranks each term's blocks and names the
-        kept ones by their ``min_doc``, so the decode stays one plain scan
-        at full parallelism. Blocks already cut by ``block_filter`` are
-        ranked out first, and its ``max_tf_norm`` floors are kept.
+        One driver-side read of the terms' block ``min_doc`` (never the
+        payload) names the kept blocks, so the decode stays one plain scan
+        at full parallelism.
         """
-        meta = self._fetch(
-            term_ids, block_filter, tier, lang, ["term_id", "max_tf_norm", "min_doc"]
-        ).to_pandas()
-        out = {}
-        for t in term_ids:
-            m = meta[meta["term_id"] == t]
-            if top_blocks is not None:
-                m = m.sort_values(
-                    ["max_tf_norm", "min_doc"], ascending=[False, True]
-                ).head(top_blocks)
-            if first_blocks is not None:
-                m = m.sort_values("min_doc").head(first_blocks)
-            cut = (block_filter or {}).get(t, BlockCut())
-            out[t] = replace(cut, min_docs=frozenset(m["min_doc"].tolist()))
-        return out
+        meta = self._fetch(term_ids, None, tier, lang, ["term_id", "min_doc"]).to_pandas()
+        kept = meta.sort_values("min_doc").groupby("term_id").head(first_blocks)
+        return {
+            t: frozenset(kept.loc[kept["term_id"] == t, "min_doc"].tolist())
+            for t in term_ids
+        }
 
     def decode_terms(
         self,
@@ -609,7 +538,7 @@ class IndexReader:
         candidates: np.ndarray | None = None,
         positions: tuple[int, ...] | list[int] = (),
         with_wtf: bool = False,
-        block_filter: dict[int, BlockCut] | None = None,
+        block_filter: dict[int, frozenset[int]] | None = None,
         tier: str = "full",
         lang: str | None = None,
     ) -> DataFrame:
@@ -619,11 +548,9 @@ class IndexReader:
         :attr:`deleted_ids`).
 
         The candidate array (sorted uint64) prunes blocks before decode.
-        ``block_filter`` maps term_id → :class:`BlockCut` (a block-max WAND
-        cut ``max_tf_norm >= c``, whose score upper bound idf * max_tf_norm
-        cannot reach the current top-k threshold below it, or a
-        :meth:`block_budget`). Only the ``positions`` terms decode their
-        position lists; the other terms' rows carry null positions.
+        ``block_filter`` maps term_id → the ``min_doc`` of the blocks it
+        keeps (a :meth:`block_budget`). Only the ``positions`` terms decode
+        their position lists; the other terms' rows carry null positions.
 
         The decode site follows the scan's size: up to
         ``DRIVER_DECODE_MAX_DF`` summed df, pyarrow reads the block rows and
@@ -645,7 +572,7 @@ class IndexReader:
         self,
         term_ids: list[int],
         candidates: np.ndarray | None = None,
-        block_filter: dict[int, BlockCut] | None = None,
+        block_filter: dict[int, frozenset[int]] | None = None,
         tier: str = "full",
         lang: str | None = None,
     ) -> np.ndarray:
@@ -664,7 +591,7 @@ class IndexReader:
         candidates: np.ndarray | None,
         positions: tuple[int, ...] | list[int],
         with_wtf: bool,
-        block_filter: dict[int, BlockCut] | None,
+        block_filter: dict[int, frozenset[int]] | None,
         tier: str,
         lang: str | None,
     ) -> DataFrame | list[pd.DataFrame]:
@@ -742,8 +669,6 @@ def run_query(
     lang: str | None = None,
     blocklist: DataFrame | None = None,
     safe_tier: int = 0,
-    _driver_top_blocks: int | None = None,
-    _driver_min_tf_norm: dict[str, float] | None = None,
 ) -> DataFrame:
     """Top-k BM25 search. Returns (doc_id, conv_id, score, ...) ascending by
     the reference's normalized score (lower = better).
@@ -885,7 +810,7 @@ def run_query(
     if lookups:
         legs.setdefault("full", set()).update(lookups)
     # a live term whose rows a lookup also reads keeps all its blocks: a
-    # block-max cut or a block budget would hide rows the lookup must see
+    # block budget would hide rows the lookup must see
     shared = {w for w in lookups if live_tier.get(w) == "full"}
     # a doc matching path p contains p's rarest term, so the drivers' doc
     # ids are a superset of every result; block budgets restrict only them
@@ -896,27 +821,16 @@ def run_query(
         }
     )
 
-    # per-tier block filters of the include terms whose blocks may be cut
-    # or budgeted: min_tf_norm cuts apply to EVERY such term (block-max
-    # pruning on each leg of an intersection, SkipListReader.java:87
-    # tryRetainData + block max); block budgets only to the drivers, and
-    # budget_blocks only on single-path queries
-    first_blocks = budget_blocks if len(live_paths) == 1 else None
-    cuts: dict[str, dict[int, BlockCut]] = {}
-    for tier, words in legs.items():
-        prunable = {w for w in words if live_tier.get(w) == tier and w not in shared}
-        cuts[tier] = {
-            stats[w][0]: BlockCut(min_tf_norm=c)
-            for w, c in (_driver_min_tf_norm or {}).items()
-            if w in prunable
-        }
-        budgeted = [stats[w][0] for w in drivers if w in prunable]
-        if budgeted and (_driver_top_blocks is not None or first_blocks is not None):
-            cuts[tier].update(
-                reader.block_budget(
-                    budgeted, _driver_top_blocks, first_blocks, cuts[tier], tier, lang
-                )
-            )
+    # per-tier block budgets: budget_blocks restricts only the drivers, and
+    # only on single-path queries
+    cuts: dict[str, dict[int, frozenset[int]]] = {}
+    if budget_blocks is not None and len(live_paths) == 1:
+        for tier in legs:
+            budgeted = [
+                stats[w][0] for w in drivers if live_tier[w] == tier and w not in shared
+            ]
+            if budgeted:
+                cuts[tier] = reader.block_budget(budgeted, budget_blocks, tier, lang)
 
     # ship the drivers' doc ids to the decode kernel only when the other
     # terms' posting lists are big enough that block skipping pays for the
@@ -933,7 +847,7 @@ def run_query(
             reader.decoded_ids(
                 sorted({stats[w][0] for w in words}),
                 candidates=conv_doc_ids,
-                block_filter=cuts[tier],
+                block_filter=cuts.get(tier),
                 tier=tier,
                 lang=lang,
             )
@@ -947,7 +861,7 @@ def run_query(
             candidates=cand_ids,
             positions=[stats[w][0] for w in need_pos & words],
             with_wtf=weighted,
-            block_filter=cuts[tier],
+            block_filter=cuts.get(tier),
             tier=tier,
             lang=lang,
         )
@@ -1024,17 +938,14 @@ def run_query(
         # into the decode seed above
         cand = cand.join(members, "doc_id", "left_semi")
     if reader.deleted_ids is None:
-        # deleted docs are dropped inside every decode (BOTH WAND phases
-        # run through here, so the phase-1 θ never counts one and the cut
-        # stays sound after deletions); only a set too big to collect is
-        # anti-joined instead
+        # deleted docs are dropped inside every decode; only a set too big
+        # to collect is anti-joined instead
         cand = cand.join(reader.tombstones, "doc_id", "left_anti")
     if blocklist is not None and safe_tier >= 1:
         # tiered safety blocklist (NsfwDomainFilter.isBlocked, nsfw-filter/
         # .../domain/NsfwDomainFilter.java:64-74): filter level t blocks
         # every list row with tier <= t; 0 disables. Applied at the same
-        # point as tombstones so both WAND phases mask identically and the
-        # phase-1 θ never counts a blocked doc. The list is a vertex-sized
+        # point as tombstones. The list is a vertex-sized
         # dim (the reference syncs ~10^4 rows from NSFW_DOMAINS hourly) —
         # broadcast anti-join, no shuffle of the candidate side.
         blocked = blocklist.where(F.col("tier") <= F.lit(safe_tier)).select(
@@ -1420,158 +1331,6 @@ def decorate_results(
     return out
 
 
-def run_query_wand(
-    reader: IndexReader,
-    query: str | ParsedQuery,
-    k: int = 10,
-    **kw,
-) -> DataFrame:
-    """Two-phase block-max top-k (the north-star's block-max WAND,
-    re-expressed for a batch engine) — EXACT same results as ``run_query``:
-
-    - **phase 1** runs the normal pipeline with the term's postings
-      restricted to its highest-``max_tf_norm`` blocks, yielding k valid
-      result scores. The kth of them is a *lower bound* θ on the true kth
-      best raw score (it is the kth best of a subset of the true candidate
-      set, with every exclusion/limit filter applied).
-    - **phase 2** re-runs the full pipeline with the scan predicate
-      ``max_tf_norm >= θ / idf`` pushed to the postings parquet scan — any
-      block whose score upper bound ``idf * max_tf_norm`` cannot reach θ is
-      skipped via row-group column stats, undecoded. A doc only in skipped
-      blocks has raw < θ ≤ true-kth-raw, so it cannot enter the top k.
-
-    Eligible shapes: ANY include tree — single term, pure OR, pure AND,
-    and mixed AND-of-OR (``( a | b ) c``, the expansion engine's default
-    output shape). No phrases / priority / positional ranking / group cap;
-    exclusions and spec limits are fine — both phases apply them
-    identically.
-
-    The general per-term cut (every enumerated OR-path's retain chain gets
-    block-max skipping in the reference, ``CombinedIndexReader.java:86-203``
-    + ``SkipListReader.java:87``): with ``UB_t = idf_t * global max
-    tf-norm`` (term_bounds table) and ``UB(p) = Σ_{t∈p} UB_t``, a block of
-    term t can hold a top-k doc only if SOME path p ∋ t could reach θ
-    through it::
-
-        idf_t * block_max_tf_norm >= θ - max_{p ∋ t} (UB(p) - UB_t)
-
-    so the scan cut is ``max_tf_norm >= (θ - max_residual_t) / idf_t``.
-    Soundness: if a doc's block is pruned on term t, then EVERY path
-    containing t sums below θ for that doc; a doc whose true best path
-    reaches θ therefore keeps that path un-pruned and scores exactly, and
-    the multi-path pipeline's max-over-surviving-paths is its true score.
-    Pure OR reduces to ``θ / idf_t`` (residual 0), pure AND to the single
-    path's ``θ - Σ_{u≠t} UB_u`` — the previous special cases.
-
-    When the caller rounds scores (``round_score_to``), θ is inverted from
-    the kth score widened by half a rounding quantum — a doc just below
-    the unrounded kth can round into a tie and win the deterministic
-    tie-break, so the cut must keep it.
-
-    Ineligible queries fall back to the plain pipeline, and so do queries
-    whose live terms sum to at most ``DRIVER_DECODE_MAX_DF`` df: the
-    driver decodes such a scan whole for less than phase 1 costs, and the
-    results are the same either way. At 10^12-turn scale the cut is the
-    difference between scanning a head term's full posting list and
-    touching a handful of blocks.
-    """
-    import math
-
-    pq = parse_query(query) if isinstance(query, str) else query
-    include = pq.all_include_terms()
-    paths = pq.include.paths() if pq.include is not None else []
-    eligible = (
-        len(include) >= 1
-        and bool(paths)
-        and not pq.phrases
-        and not pq.priority
-        and kw.get("group_cap") is None
-        and (
-            kw.get("ranking") is None
-            or not (
-                kw["ranking"].positional
-                or kw["ranking"].flag_score
-                or kw["ranking"].penalties
-                or kw["ranking"].weighted_counts
-                or kw["ranking"].temporal_bias is not None
-            )
-        )
-    )
-    if not eligible:
-        return run_query(reader, pq, k=k, **kw)
-    # lang-scoped queries are eligible too: idf/θ use the language's own
-    # stats (as the scorer does), while the per-term upper bounds stay the
-    # GLOBAL block maxima — an upper bound for any language slice, so the
-    # cut is merely conservative
-    lang = kw.get("lang")
-    if lang is None:
-        lang = pq.lang  # `lang:xx` query syntax (run_query does the same)
-    try:
-        stats = reader.term_stats(include, lang=lang)
-    except ValueError:  # pre-lang index
-        return run_query(reader, pq, k=k, **kw)
-    n_corpus = (
-        reader.lang_doc_counts.get(lang, 0.0) if lang is not None else reader.n_docs
-    )
-    live_paths = [p for p in paths if all(w in stats for w in p)]
-    live = sorted({w for p in live_paths for w in p})
-    if not live or n_corpus <= 0:
-        return run_query(reader, pq, k=k, **kw)
-    if sum(stats[w][1] for w in live) <= DRIVER_DECODE_MAX_DF:
-        # the driver decodes the whole unpruned scan in tens of ms, less
-        # than phase 1 (a query of its own) would cost to prune it
-        return run_query(reader, pq, k=k, **kw)
-    pure_or = all(len(set(p)) == 1 for p in live_paths)
-
-    def idf_of(w: str) -> float:
-        df_w = float(stats[w][1])
-        return math.log(1.0 + (n_corpus - df_w + 0.5) / (df_w + 0.5))
-
-    idfs = {w: idf_of(w) for w in live}
-    if any(v <= 0 for v in idfs.values()):
-        return run_query(reader, pq, k=k, **kw)
-    # phase 1 — threshold from each term's best blocks, budgeted from the
-    # index's ACTUAL block geometry (an index built with small blocks needs
-    # proportionally more of them to cover k candidates)
-    n_blocks = max(1, -(-2 * k // reader.block_docs))
-    kw1 = {**kw, "round_score_to": None}
-    probe = run_query(
-        reader, pq, k=k, _driver_top_blocks=n_blocks, **kw1
-    ).collect()
-    if len(probe) < k:
-        return run_query(reader, pq, k=k, **kw)  # tiny list: no cut possible
-    kth_score = probe[-1]["score"]
-    round_to = kw.get("round_score_to")
-    if round_to is not None:
-        # widen to the worst score that could still round-tie with the kth
-        kth_score = round(kth_score, round_to) + 0.5 * 10.0 ** (-round_to)
-    # relative epsilon guards the float round-trip through normalize() —
-    # pruning may only ever be conservative
-    theta_raw = (501.0 / (kth_score * kth_score) - 1.0) * (1.0 - 1e-9)
-    if pure_or:  # includes the single-term case (residual would equal θ)
-        cuts = {w: theta_raw / idfs[w] for w in live}
-    else:
-        bounds = reader.term_bounds([stats[w][0] for w in live])
-        if any(stats[w][0] not in bounds for w in live):
-            return run_query(reader, pq, k=k, **kw)
-        ub = {w: idfs[w] * bounds[stats[w][0]] for w in live}
-        ub_path = [sum(ub[w] for w in set(p)) for p in live_paths]
-        cuts = {}
-        for w in live:
-            # the most forgiving path containing w sets its residual
-            max_resid = max(
-                ub_p - ub[w]
-                for p, ub_p in zip(live_paths, ub_path)
-                if w in p
-            )
-            residual = theta_raw - max_resid
-            if residual > 0:
-                cuts[w] = residual / idfs[w]
-        if not cuts:
-            return run_query(reader, pq, k=k, **kw)  # no pruning possible
-    return run_query(reader, pq, k=k, _driver_min_tf_norm=cuts, **kw)
-
-
 def run_query_page(
     reader: IndexReader,
     query: str | ParsedQuery,
@@ -1590,8 +1349,7 @@ def run_query_page(
     Spark shape: the gather is the usual ``TakeOrderedAndProject``; the
     slice is ``GlobalLimit``+``Offset`` over the already-``total_limit``-
     sized relation — no extra shuffle, and deeper pages reuse the same
-    plan. The gather goes through :func:`run_search`, so ``qs=wand`` in
-    the query lets block-max pruning serve it for eligible shapes."""
+    plan."""
     res = run_search(reader, query, k=total_limit, **kw)
     start = max(0, (page - 1) * page_size)
     return res.offset(start).limit(page_size)
@@ -1603,23 +1361,12 @@ def run_search(
     k: int = 10,
     **kw,
 ) -> DataFrame:
-    """Strategy-dispatching entry point — honors the query's ``qs=``
-    execution-strategy override (``QueryParser.java:238`` QsTerm →
-    ``QueryFactory.java:246-258`` parseQueryStrategy; the index applies a
-    non-AUTO strategy via ``setQueryStrategy``, QueryFactory.java:214).
+    """The search entry point: :func:`run_query` on the query string.
 
-    Mapping (documented divergence: the reference's SENTENCE/TOPIC pick a
-    positional-vs-topic scan; our two physical strategies are the plain
-    decode pipeline and block-max WAND, which return EXACT-equal results):
-
-    - ``qs=sentence`` / ``qs=plain`` → :func:`run_query`
-    - ``qs=topic`` / ``qs=wand`` → :func:`run_query_wand` (falls back to
-      the plain pipeline for shapes WAND can't prune, same results)
-    - ``qs=rf_<role>`` → folded into the role gate by the parser
-      (REQUIRE_FIELD_* analogue) — strategy stays AUTO
-    - anything else → AUTO = plain pipeline (reference default)
+    The reference's ``qs=`` execution-strategy token (``QueryParser.java:238``
+    QsTerm → ``QueryFactory.java:246-258`` parseQueryStrategy) picks a
+    physical scan; there is one pipeline here, so the parser folds
+    ``qs=rf_<role>`` into the role gate (REQUIRE_FIELD_* analogue) and
+    drops every other ``qs=`` value.
     """
-    pq = parse_query(query) if isinstance(query, str) else query
-    if pq.strategy == "wand":
-        return run_query_wand(reader, pq, k=k, **kw)
-    return run_query(reader, pq, k=k, **kw)
+    return run_query(reader, query, k=k, **kw)

@@ -169,14 +169,6 @@ class ParsedQuery:
     # SetTerm; RankingSearchSet membership gate). Several set: tokens
     # intersect (each is its own membership constraint).
     sets: list[str] = field(default_factory=list)
-    # ``qs=<strategy>`` — execution-strategy override (QueryParser.java:238
-    # QsTerm → QueryFactory.parseQueryStrategy:246-258). The reference's
-    # values map here as: ``rf_<role>`` → a role gate (REQUIRE_FIELD_*
-    # analogue, folded into ``gates``), ``sentence``/``plain`` → the plain
-    # pipeline, ``topic``/``wand`` → block-max WAND; anything else → AUTO
-    # (the reference's ``default -> QueryStrategy.AUTO``). AUTO leaves the
-    # engine free to choose (``run_search`` picks the plain pipeline).
-    strategy: str = "auto"
 
     def all_include_terms(self) -> list[str]:
         terms: set[str] = set() if self.include is None else set(
@@ -255,18 +247,15 @@ def parse_query(q: str) -> ParsedQuery:
             # term stream, influencing nothing.
             continue
         if raw.lower().startswith("qs="):
+            # ``qs=<strategy>`` (QueryParser.java:238 QsTerm →
+            # QueryFactory.parseQueryStrategy:246-258) picks the
+            # reference's physical scan; there is one pipeline here, so
+            # only the REQUIRE_FIELD_* family has an effect: ``rf_<role>``
+            # becomes our role-flag gate (every matched term must carry the
+            # field/role flag). Every other value is parsed and dropped.
             val = raw[3:].lower()
             if val.startswith("rf_") and val[3:] in _QS_ROLES:
-                # REQUIRE_FIELD_* family → our role-flag gate (same
-                # index-side effect: every matched term must carry the
-                # field/role flag, QueryStrategy REQUIRE_FIELD_*)
                 out.gates.append(val[3:])
-            elif val in ("sentence", "plain"):
-                out.strategy = "plain"
-            elif val in ("topic", "wand"):
-                out.strategy = "wand"
-            else:  # reference: default -> QueryStrategy.AUTO
-                out.strategy = "auto"
             continue
         if raw.lower().startswith("-conv:"):
             out.convs_exclude.append(raw[6:])

@@ -20,11 +20,9 @@ from marginaliasearch_spark.operators.index_build import (
     merge_indexes,
 )
 from marginaliasearch_spark.operators.query_exec import (
-    BlockCut,
     IndexReader,
     RankingParams,
     run_query,
-    run_query_wand,
 )
 from marginaliasearch_spark.sources.transcripts import bm25_corpus
 
@@ -38,7 +36,7 @@ def reader(spark, tmp_path_factory):
     base, delta, out = (
         str(tmp_path_factory.mktemp(n)) for n in ("siteb", "sited", "sitem")
     )
-    # small blocks, so candidates and block cuts skip some of them
+    # small blocks, so candidates and block budgets skip some of them
     build_index(spark, corpus.filter(odd == 0), base, n_buckets=1, block_docs=16)
     build_index(spark, corpus.filter(odd == 1), delta, n_buckets=1, block_docs=16)
     merge_indexes(spark, base, delta, out)
@@ -90,7 +88,7 @@ def _case(reader, name):
         "positions_subset": {"positions": [t2]},
         "positions_all": {"positions": [t1, t2, t5]},
         "wtf": {"with_wtf": True},
-        "block_filter": {"block_filter": {t1: BlockCut(min_tf_norm=0.5)}},
+        "block_filter": {"block_filter": reader.block_budget([t1], 2)},
         "prio": {"tier": "prio", "candidates": ids[::2]},
         "lang": {"lang": lang, "candidates": ids[1::2], "with_wtf": True},
     }[name]
@@ -141,34 +139,28 @@ QUERIES = [
 ]
 
 
-def _results(reader, q, wand=False, **kw):
-    fn = run_query_wand if wand else run_query
+def _results(reader, q, **kw):
     return [
         (r["conv_id"], r["score"])
-        for r in fn(reader, q, k=30, round_score_to=9, **kw).collect()
+        for r in run_query(reader, q, k=30, round_score_to=9, **kw).collect()
     ]
 
 
 @pytest.mark.parametrize("q, kw", QUERIES)
 def test_run_query_same_results_on_both_sites(spark, reader, monkeypatch, q, kw):
     driver = _results(reader, q, **kw)
-    wand = _results(reader, q, wand=True, **kw)
     monkeypatch.setattr(query_exec, "DRIVER_DECODE_MAX_DF", -1)
     executor = _results(reader, q, **kw)
-    wand_executor = _results(reader, q, wand=True, **kw)
     assert driver
-    assert driver == executor == wand == wand_executor
+    assert driver == executor
     assert not {c for c, _ in driver} & set(DELETED)
 
 
 @pytest.mark.parametrize("q, kw", QUERIES[:5])
-def test_tombstone_anti_join_fallback_same_results(
-    spark, reader, monkeypatch, request, q, kw
-):
+def test_tombstone_anti_join_fallback_same_results(spark, reader, monkeypatch, q, kw):
     """More deleted ids than ``MAX_DRIVER_CANDIDATES``: the reader keeps no
     reject mask and ``run_query`` anti-joins the tombstones instead, with
-    the same results as the mask. The WAND leg runs both of its phases on
-    the executor site (a driver-sized WAND query skips phase 1)."""
+    the same results as the mask."""
     masked = _results(reader, q, **kw)
     monkeypatch.setattr(
         query_exec, "MAX_DRIVER_CANDIDATES", reader.deleted_ids.size - 1
@@ -176,37 +168,6 @@ def test_tombstone_anti_join_fallback_same_results(
     fresh = IndexReader(spark, reader.paths)
     assert fresh.deleted_ids is None
     assert "LeftAnti" in _plan(run_query(fresh, q, k=30, **kw))
-    plain = _results(fresh, q, **kw)
-    phase1 = request.getfixturevalue("wand_phase1")
     assert masked
-    assert plain == _results(fresh, q, wand=True, **kw) == masked
+    assert _results(fresh, q, **kw) == masked
     assert not {c for c, _ in masked} & set(DELETED)
-    assert len(phase1) == (0 if '"' in q else 1)  # phase 1 ran if eligible
-
-
-def test_driver_sized_wand_skips_phase_one(spark, reader, monkeypatch):
-    """A ``qs=wand`` query whose live terms sum to at most
-    ``DRIVER_DECODE_MAX_DF`` df is decoded whole on the driver:
-    ``run_query_wand`` hands it to the plain pipeline, with no phase 1,
-    no block budget and no term-bounds probe."""
-    q = "word01 word02"
-    stats = reader.term_stats(q.split())
-    assert sum(df for _, df in stats.values()) <= query_exec.DRIVER_DECODE_MAX_DF
-    calls = []
-    plain = query_exec.run_query
-
-    def spy(*args, **kw):
-        calls.append(kw)
-        return plain(*args, **kw)
-
-    def unused(*args, **kw):
-        raise AssertionError("the WAND threshold pass ran")
-
-    monkeypatch.setattr(query_exec, "run_query", spy)
-    monkeypatch.setattr(IndexReader, "block_budget", unused)
-    monkeypatch.setattr(IndexReader, "term_bounds", unused)
-    got = query_exec.run_search(reader, f"{q} qs=wand", k=10).collect()
-    assert len(calls) == 1
-    assert "_driver_top_blocks" not in calls[0]
-    assert "_driver_min_tf_norm" not in calls[0]
-    assert got == run_query(reader, q, k=10).collect()

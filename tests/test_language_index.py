@@ -136,19 +136,17 @@ def test_lang_prunes_driver_fetch_scan(spark, built, tmp_path):
         reader.decode_term(tid)
 
 
-def test_wand_lang_scoped_equals_plain(spark, built, wand_phase1):
-    """run_query_wand with lang= must stay exact: θ/idf come from the
-    language's statistics, block cuts from the (conservative) global
-    bounds. ``wand_phase1`` forces both phases on this tiny index."""
-    from marginaliasearch_spark.operators.query_exec import run_query_wand
-
+def test_wand_lang_scoped_equals_plain(spark, built):
+    """A lang-scoped top-k (the shapes block-max WAND once pruned) holds k
+    docs of that language and is the head of the same query's full
+    ranking."""
     for q, lang, k in [("shared", "es", 3), ("shared rare", "es", 2), ("rare", "en", 1)]:
-        plain = run_query(built, q, k=k, lang=lang).collect()
-        wand = run_query_wand(built, q, k=k, lang=lang).collect()
-        assert [(r["conv_id"], r["score"]) for r in plain] == [
-            (r["conv_id"], r["score"]) for r in wand
-        ]
-    assert len(wand_phase1) == 3  # phase 1 ran for every query
+        top, full = (
+            [(r["conv_id"], r["score"]) for r in run_query(built, q, k=n, lang=lang).collect()]
+            for n in (k, 20)
+        )
+        assert len(top) == k and all(c.startswith(lang) for c, _ in top), q
+        assert top == full[:k], q
 
 
 def test_lang_token_query_syntax(spark, built):
@@ -163,8 +161,6 @@ def test_lang_token_query_syntax(spark, built):
 
 
 def test_lang_token_wand_equals_plain(spark, built):
-    from marginaliasearch_spark.operators.query_exec import run_query_wand
-
     plain = run_query(built, "shared lang:es", k=5).collect()
-    wand = run_query_wand(built, "shared lang:es", k=5).collect()
-    assert wand == plain and plain
+    assert plain == run_query(built, "shared", k=5, lang="es").collect() and plain
+    assert {r["conv_id"] for r in plain} == {f"es{i}" for i in range(4)}

@@ -10,8 +10,8 @@ conversations, the document count of the sf0.001 test data.
 ``JOBS`` pins the absolute count per shape on the clean index, so a change
 that adds a job to every query fails here too. The lexicon probe and the
 block fetch of these driver-sized scans read the files through pyarrow and
-start no job. A ``qs=wand`` query this small skips its threshold pass, so
-it runs exactly the jobs of its plain AND twin.
+start no job. The parser drops a ``qs=wand`` token, so that query runs
+exactly the jobs of its plain AND twin.
 """
 
 import time

@@ -113,9 +113,7 @@ def test_single_term_selects_rows_without_pivot(spark, reader, executor_site):
     assert not [n for n in _nodes(plan) if n.nodeName() == "Aggregate"], text
 
 
-@pytest.mark.parametrize(
-    "kw", [{"budget_blocks": 1}, {"_driver_top_blocks": 1}]
-)
+@pytest.mark.parametrize("kw", [{"budget_blocks": 1}])
 def test_block_budget_is_a_scan_predicate(spark, reader, executor_site, kw):
     """A block budget reaches the decode as a block predicate of its one
     scan: no window, sort or shuffle of the payload below the decode."""

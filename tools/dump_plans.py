@@ -98,47 +98,6 @@ def main() -> None:
         )
     )
 
-    q_wand_and = run_query(
-        reader,
-        "customer query",
-        k=10,
-        _driver_min_tf_norm={"customer": 1.2, "query": 1.1},
-    )
-    sections.append(
-        (
-            "Block-max AND pruning (`customer query`, per-term θ-cuts)",
-            "The residual per-term cut (θ − Σ other-terms' UB, "
-            "run_query_wand phase 2) reaches `PushedFilters` of the ONE "
-            "postings scan as an `Or` of `And(EqualTo(term_id, t), "
-            "GreaterThanOrEqual(max_tf_norm, c_t))` disjuncts — every leg "
-            "of the intersection skips blocks whose score upper bound "
-            "cannot reach the phase-1 threshold, undecoded (SkipListReader "
-            "block-max retain).",
-            fmt(q_wand_and),
-        )
-    )
-
-    q_wand_mixed = run_query(
-        reader,
-        "( customer | batch ) query",
-        k=10,
-        _driver_min_tf_norm={"customer": 1.2, "batch": 1.3, "query": 1.1},
-    )
-    sections.append(
-        (
-            "Block-max mixed AND-of-OR pruning (`( customer | batch ) query`, per-path residual θ-cuts)",
-            "run_query_wand's general shape: every term gets the block-max "
-            "cut of its most forgiving containing path "
-            "(θ − max over paths ∋ t of (UB(path) − UB_t)) — check one "
-            "`GreaterThanOrEqual(max_tf_norm, ...)` per term, each ANDed "
-            "with its term_id, inside the `PushedFilters` of the single "
-            "postings scan (the reference applies skip-list block maxima "
-            "to every enumerated OR-path's retain chain, "
-            "CombinedIndexReader.createQueries).",
-            fmt(q_wand_mixed),
-        )
-    )
-
     lang_scan = reader.decode_term(
         reader.term_stats(["customer"])["customer"][0], lang="en"
     )
@@ -153,22 +112,6 @@ def main() -> None:
             "term_id equality stays in `PushedFilters` for row-group "
             "pruning inside the surviving partition.",
             fmt(lang_scan),
-        )
-    )
-
-    from pyspark.sql import functions as F
-
-    blocks = reader.postings.filter(
-        (F.col("term_id") == 42) & (F.col("max_tf_norm") >= 1.5)
-    ).select("doc_ids", "tfs")
-    sections.append(
-        (
-            "WAND-pruned postings scan (term_id = 42 AND max_tf_norm >= 1.5)",
-            "The block-max cut reaches `PushedFilters` as "
-            "`GreaterThanOrEqual(max_tf_norm, ...)` — blocks whose score upper "
-            "bound cannot reach the phase-1 threshold are skipped at the parquet "
-            "reader, undecoded.",
-            fmt(blocks),
         )
     )
 
